@@ -1,35 +1,13 @@
 """Measurement helpers that read only what Python, Spark and the OS
-already expose: percentiles, spans, /proc memory and the Spark status
+already expose: spans, /proc memory and CPU, and the Spark status
 store."""
 
 from __future__ import annotations
 
-import math
 import os
-import statistics
 import threading
 import time
 from contextlib import contextmanager
-
-
-class TooFewSamples(ValueError):
-    pass
-
-
-def percentile(values: list[float], p: float) -> float:
-    """Nearest-rank ``p``-th percentile, refused unless at least ten
-    samples lie beyond it: a tail estimate resting on fewer is noise."""
-    n = len(values)
-    rank = max(1, math.ceil(p / 100.0 * n))
-    if n - rank < 10:
-        raise TooFewSamples(f"p{p} of {n} samples has {n - rank} beyond it, needs 10")
-    return sorted(values)[rank - 1]
-
-
-def median(values: list[float]) -> float:
-    if not values:
-        raise TooFewSamples("no samples")
-    return statistics.median(values)
 
 
 # ---------------------------------------------------------------------------
@@ -71,6 +49,17 @@ class Tracer:
             rec["end"] = t2
             self._stack.pop()
             self.overhead_s += (t1 - t0) + (time.perf_counter() - t2)
+
+    @contextmanager
+    def overhead(self):
+        """Work a traced run adds outside the span bookkeeping (job-group
+        tags, status-store reads, output listings): its time counts as
+        tracing overhead."""
+        t = time.perf_counter()
+        try:
+            yield
+        finally:
+            self.overhead_s += time.perf_counter() - t
 
     def _request(self) -> str | None:
         return self.spans[self._stack[-1]]["request"] if self._stack else None
@@ -186,8 +175,9 @@ class RssSampler:
     the Python workers), polled from /proc on a background thread; the
     breakdown of the peak sample is kept alongside."""
 
-    def __init__(self, interval_s: float = 0.5) -> None:
-        self.interval_s = interval_s
+    INTERVAL_S = 0.5
+
+    def __init__(self) -> None:
         self.peak_kb = 0
         self.breakdown: dict[str, int] = {}
         self._stop = threading.Event()
@@ -207,7 +197,7 @@ class RssSampler:
             self.peak_kb, self.breakdown = total, parts
 
     def _loop(self) -> None:
-        while not self._stop.wait(self.interval_s):
+        while not self._stop.wait(self.INTERVAL_S):
             self.sample()
 
     def __enter__(self) -> "RssSampler":

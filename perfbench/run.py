@@ -20,12 +20,16 @@ import json  # noqa: E402
 import os  # noqa: E402
 import shutil  # noqa: E402
 import signal  # noqa: E402
+import statistics  # noqa: E402
 import subprocess  # noqa: E402
 import sys  # noqa: E402
 
 CHECKOUT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-#: setups per run; setup_s is their median
-SETUPS = 3
+WORKLOADS = ("ingest_backfill", "iot_queries")
+#: cold set-ups per run: this process's own and SETUPS - 1 in fresh
+#: processes after it; setup_s is their median (a cold set-up takes
+#: 8-12 s on 4 vCPUs, so a third would not fit the run budget)
+SETUPS = 2
 
 END_TO_END_UNITS = {
     "setup_s": "s",
@@ -33,48 +37,49 @@ END_TO_END_UNITS = {
     "throughput_per_s": "1/s",
 }
 
-
-def _registry_load_in_child() -> float:
-    """Seconds the declared-query registry takes to load in a fresh
-    interpreter (pyspark itself is imported first, untimed)."""
-    code = (
-        "import time, pyspark.sql\n"
-        "t = time.perf_counter()\n"
-        "from astarte_data_updater_plant_spark.plans.registry import queries_map\n"
-        "queries_map()\n"
-        "print(time.perf_counter() - t)\n"
-    )
-    env = dict(os.environ, PYTHONPATH=CHECKOUT)
-    out = subprocess.run(
-        [sys.executable, "-c", code], env=env, capture_output=True, text=True,
-        timeout=120, check=True,
-    )
-    return float(out.stdout.strip().splitlines()[-1])
+#: one cold set-up in a fresh interpreter, timed from its first line
+COLD_SET_UP = """
+import time
+origin = time.perf_counter()
+import json
+from perfbench.run import cold_set_up, shut_down
+spark, layers = cold_set_up(origin)
+print(json.dumps(layers), flush=True)
+shut_down(spark)
+"""
 
 
-def set_up(get_spark, queries_map) -> tuple[object, float, dict]:
-    """Start the engine cold: from process start, JVM launch included,
-    to a session and a loaded registry. Returns the session, the
-    set-up's seconds and its two layer times."""
+def cold_set_up(origin: float) -> tuple[object, dict]:
+    """Start the engine cold: from process start (``origin``), engine
+    import and JVM launch included, to a session and a loaded registry.
+    Returns the session and the set-up's times."""
+    from astarte_data_updater_plant_spark.plans.registry import queries_map
+    from astarte_data_updater_plant_spark.session import get_spark
+
     spark = get_spark("perfbench")
-    start_s = time.perf_counter() - PROCESS_START
+    start_s = time.perf_counter() - origin
     t = time.perf_counter()
     queries_map()
     load_s = time.perf_counter() - t
-    return spark, start_s + load_s, {"session.start_s": start_s, "registry.load_s": load_s}
+    return spark, {"setup_s": start_s + load_s, "session.start_s": start_s, "registry.load_s": load_s}
 
 
-def set_up_again(spark, get_spark) -> tuple[object, list[float]]:
-    """SETUPS - 1 more set-ups, after the workload so that its timed
-    operations run in the first application: restart the application
-    in the running JVM and load the registry in a fresh interpreter."""
-    samples = []
-    for _ in range(SETUPS - 1):
-        spark.stop()
-        t = time.perf_counter()
-        spark = get_spark("perfbench")
-        samples.append(time.perf_counter() - t + _registry_load_in_child())
-    return spark, samples
+def cold_set_up_in_child() -> dict:
+    """The times of one cold set-up in a fresh process, which stops its
+    JVM and waits for it before it exits."""
+    child = subprocess.Popen(
+        [sys.executable, "-c", COLD_SET_UP], env=dict(os.environ, PYTHONPATH=CHECKOUT),
+        stdout=subprocess.PIPE, text=True, start_new_session=True,
+    )
+    try:
+        out, _ = child.communicate(timeout=120)
+    except subprocess.TimeoutExpired:
+        os.killpg(child.pid, signal.SIGKILL)
+        child.wait()
+        raise
+    if child.returncode != 0:
+        raise RuntimeError(f"cold set-up exited with {child.returncode}")
+    return json.loads(out.strip().splitlines()[-1])
 
 
 def shut_down(spark) -> None:
@@ -108,7 +113,7 @@ def shut_down(spark) -> None:
 
 def main(argv: list[str]) -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
-    ap.add_argument("--workload", required=True)
+    ap.add_argument("--workload", required=True, choices=WORKLOADS)
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
@@ -116,18 +121,11 @@ def main(argv: list[str]) -> int:
 
     sys.path.insert(0, CHECKOUT)
     try:
-        from astarte_data_updater_plant_spark.plans.registry import queries_map
-        from astarte_data_updater_plant_spark.session import get_spark
+        import astarte_data_updater_plant_spark  # noqa: F401
     except ImportError as exc:
         print(f"perfbench: the engine is not importable from {CHECKOUT}: {exc}", file=sys.stderr)
         return 2
     from perfbench.measure import Tracer
-    from perfbench.workloads import WORKLOADS, Run
-
-    if args.workload not in WORKLOADS:
-        print(f"perfbench: unknown workload {args.workload!r}; one of {sorted(WORKLOADS)}",
-              file=sys.stderr)
-        return 2
 
     # one scratch root per run, inside the checkout: sources, output
     # trees, Spark local dirs and temp files all live here, and only
@@ -147,36 +145,45 @@ def main(argv: list[str]) -> int:
     tracer = Tracer(enabled=bool(args.trace))
     spark = None
     try:
-        with tracer.span("setup", request="setup"):
-            spark, cold_setup, setup_layers = set_up(get_spark, queries_map)
-        run = Run(spark, root, args.seed, args.seconds, tracer, PROCESS_START)
+        with tracer.span("setup", request="setup-0"):
+            spark, setup = cold_set_up(PROCESS_START)
+        setups = [setup]
+        from perfbench import workloads
+
+        run = workloads.Run(spark, root, args.seed, args.seconds, tracer, PROCESS_START)
         run.mark("setup")
-        result = WORKLOADS[args.workload](run)
-        with tracer.span("setup.again", request="setup"):
-            spark, more_setups = set_up_again(spark, get_spark)
-        setups = [cold_setup, *more_setups]
+        result = getattr(workloads, args.workload)(run)
+        shut_down(spark)
+        spark = None
+        run.mark("shutdown")
+        for i in range(1, SETUPS):
+            with tracer.span("setup", request=f"setup-{i}"):
+                setups.append(cold_set_up_in_child())
         run.mark("setups")
     finally:
         if spark is not None:
             shut_down(spark)
         os.chdir(CHECKOUT)
         shutil.rmtree(root, ignore_errors=True)
-    run.mark("shutdown")
 
-    e2e = dict(result["e2e"], setup_s=sorted(setups)[len(setups) // 2])
+    def setup_median(key: str) -> float:
+        return statistics.median(s[key] for s in setups)
+
+    e2e = dict(result["e2e"], setup_s=setup_median("setup_s"))
     detail = {
         "workload": args.workload,
         "seed": args.seed,
         "trace": args.trace,
         "free_disk_gb_at_start": round(free_gb, 2),
-        "setups_s": setups,
+        "setups": setups,
         "timeline_s": run.timeline,
         "end_to_end": e2e,
         **result["detail"],
         "mismatches": run.mismatches,
     }
     if tracer.enabled:
-        layers = dict(setup_layers, **result["layers"])
+        layers = dict(result["layers"])
+        layers.update({k: setup_median(k) for k in ("session.start_s", "registry.load_s")})
         ops = max(1, run.attempted)
         layers["trace.overhead_ms_per_op"] = tracer.overhead_s / ops * 1e3
         metrics = {k: {"value": v, "unit": _layer_unit(k)} for k, v in sorted(layers.items())}

@@ -15,7 +15,7 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from perfbench import traffic  # noqa: E402
-from perfbench.measure import Tracer, TooFewSamples, percentile, tree_cpu_s  # noqa: E402
+from perfbench.measure import Tracer, tree_cpu_s  # noqa: E402
 
 
 def test_generator_is_deterministic_per_seed():
@@ -81,16 +81,6 @@ def test_bson_encoder_round_trips_through_the_engine_decoder():
         decode_bson_payload(traffic.BAD_BSON)
 
 
-def test_percentile_needs_ten_samples_beyond_it():
-    assert percentile(list(range(200)), 95) == 189
-    with pytest.raises(TooFewSamples):
-        percentile(list(range(100)), 95)  # 5 samples beyond p95
-    with pytest.raises(TooFewSamples):
-        percentile(list(range(15)), 50)
-    with pytest.raises(TooFewSamples):
-        percentile([], 50)
-
-
 def test_self_time_subtracts_child_spans():
     tr = Tracer(enabled=True)
     with tr.span("op", request="r1"):
@@ -109,6 +99,13 @@ def test_disabled_tracer_records_nothing():
     with tr.span("op") as counts:
         assert counts is None
     assert tr.spans == [] and tr.overhead_s == 0.0
+
+
+def test_traced_only_work_counts_as_overhead():
+    tr = Tracer(enabled=True)
+    with tr.overhead():
+        time.sleep(0.05)
+    assert tr.overhead_s >= 0.05 and tr.spans == []
 
 
 def test_tree_cpu_counts_this_process():
