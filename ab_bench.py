@@ -27,9 +27,13 @@ Round 9 adds a ``corpus`` probe (VERDICT r8 lead item): BENCH_r07's
 +40%, outside the documented drift envelope) with no same-session
 attribution. The probe reproduces bench.py's corpus family EXACTLY —
 fresh JVM, queries_map, docs count, then warm-up + 5 timed runs of
-q47_dedup_keep_best with clear_fragments() before each (and NOT
-clear_hot_key_cache, matching the r7/r8 pinned methodology) — so an
+q47_dedup_keep_best with clear_memos() before each — so an
 interleaved A/B on the two trees isolates code from box drift.
+
+An arm is a source tree, so a switch that used to be an env knob is
+A/B'd as a tree: to re-run the AB_VERIFY_R30_r14.json comparison (q199
+with and without its verify pin), check out a copy whose
+``_verify_pin`` returns None and pass it as one arm.
 
 Usage:
   python ab_bench.py <labelA>=<treeA> <labelB>=<treeB> [reps] [out.json] [probes]
@@ -106,10 +110,9 @@ def probe(tree: str) -> None:
 
 def probe_corpus(tree: str) -> None:
     """bench.py's corpus family, byte-for-byte methodology: q47 with
-    fragments cleared before every run (the skew memo deliberately NOT
-    cleared — neither r7's nor r8's pinned corpus numbers cleared it)."""
+    every plan-time memo cleared before every run."""
     sys.path.insert(0, tree)
-    from astarte_data_updater_plant_spark.plans.fragments import clear_fragments
+    from astarte_data_updater_plant_spark.plans.fragments import clear_memos
     from astarte_data_updater_plant_spark.plans.registry import queries_map
     from astarte_data_updater_plant_spark.session import get_spark
     from astarte_data_updater_plant_spark.sources.tables import load_table
@@ -119,7 +122,7 @@ def probe_corpus(tree: str) -> None:
     n_docs = load_table(spark, SF_DIR, "documents").count()
 
     def one():
-        clear_fragments()
+        clear_memos()
         qmap["q47_dedup_keep_best"](spark, SF_DIR).write.format("noop").mode(
             "overwrite"
         ).save()
@@ -140,13 +143,12 @@ def probe_corpus(tree: str) -> None:
 def probe_heavy(tree: str) -> None:
     """bench.py's HEAVY methodology for the two borderline r11 entries
     (q47 +6.0%, q204 +5.8% preview-to-preview, both code-unchanged):
-    fragments AND the skew hot-key memo cleared before every run —
-    strictly colder than the corpus probe, matching the series the
-    heavy best-of bar is defined over (BASELINE.md r11 declaration).
-    Folded into the corpus adjudication session per VERDICT r11 ask #1."""
+    every plan-time memo cleared before every run, matching the series
+    the heavy best-of bar is defined over (BASELINE.md r11
+    declaration). Folded into the corpus adjudication session per
+    VERDICT r11 ask #1."""
     sys.path.insert(0, tree)
-    from astarte_data_updater_plant_spark.functions.skew import clear_hot_key_cache
-    from astarte_data_updater_plant_spark.plans.fragments import clear_fragments
+    from astarte_data_updater_plant_spark.plans.fragments import clear_memos
     from astarte_data_updater_plant_spark.plans.registry import queries_map
     from astarte_data_updater_plant_spark.session import get_spark
 
@@ -158,8 +160,7 @@ def probe_heavy(tree: str) -> None:
         ("q204_containment_pairs", "heavy_q204"),
     ):
         def one(q=qmap[name]):
-            clear_fragments()
-            clear_hot_key_cache()
+            clear_memos()
             q(spark, SF_DIR).write.format("noop").mode("overwrite").save()
 
         out[key] = _measure(one)

@@ -69,63 +69,14 @@ from typing import Iterable, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-__all__ = ["with_global_order", "global_ntile_expr", "clear_boundary_cache"]
+from ..plans.fragments import memo
+
+__all__ = ["with_global_order", "global_ntile_expr"]
 
 #: target sample keys per cut point (the same order of magnitude Spark's
 #: own range sampler uses); driver holds ~SAMPLES_PER_BUCKET * buckets
 #: key tuples regardless of table size
 SAMPLES_PER_BUCKET = 32
-
-#: memoized boundary lists, keyed (application, caller key, n_buckets).
-#: Correctness never depends on WHICH cut list is used — the bucket
-#: column is a pure per-row projection against whatever literals are
-#: baked into the plan, and phases 2-4 are exact for ANY bucketing —
-#: so a stale memo can only unbalance buckets, never corrupt a rank.
-#: That makes this a performance hint like the skew-probe memo
-#: (functions/skew._HOT_KEY_CACHE): callers with snapshot-stable
-#: inputs pass ``boundary_key`` and repeat plan builds skip the
-#: boundary-discovery Spark action entirely. On pinned-fragment
-#: inputs the probe is cheap (~50 ms), so the local win is small;
-#: the case that matters is an UNPINNED input at scale, where every
-#: rebuild would otherwise re-run the input's full lineage for the
-#: sample.
-_BOUNDARY_CACHE: dict = {}
-
-#: memoized bucket-assignment Columns, keyed exactly like
-#: _BOUNDARY_CACHE. Building the boundary-literal array is the
-#: DOMINANT plan-construction cost of this helper: B-1 struct
-#: literals x (lit + cast + alias per key field) is hundreds of py4j
-#: round trips — cProfile attributed 3.2s of q126+q170's 4.7s build
-#: time to the two blits list-comps (r13). A Column is an immutable
-#: JVM expression tree, and for a fixed ``boundary_key`` the sort
-#: expressions are fixed at the call site (the same assumption the
-#: boundary memo itself already makes), so the assembled bucket
-#: Column is reusable verbatim across plan builds within the
-#: application. Same hint-not-correctness contract as the boundary
-#: memo: the cached Column is a pure projection over the same
-#: literals the cache already pins.
-_BUCKET_COL_CACHE: dict = {}
-
-
-#: applicationId the memos were filled under — dead-session entries are
-#: unreachable (keys embed the appId) but would accumulate in a
-#: long-lived driver that restarts sessions (VERDICT r13 nit #4); the
-#: marker check in with_global_order evicts them on first use under a
-#: new session.
-_CACHE_APP: list = [None]
-
-
-def _evict_dead_session_entries(app_id: str) -> None:
-    if _CACHE_APP[0] != app_id:
-        _BOUNDARY_CACHE.clear()
-        _BUCKET_COL_CACHE.clear()
-        _CACHE_APP[0] = app_id
-
-
-def clear_boundary_cache() -> None:
-    _BOUNDARY_CACHE.clear()
-    _BUCKET_COL_CACHE.clear()
-
 
 def _normalize(sort_cols) -> list[Column]:
     """(col | str | (col, "desc")) -> ascending key Columns."""
@@ -151,7 +102,7 @@ def with_global_order(
     ntile: tuple[int, str] | None = None,
     cumsums: Iterable[tuple[str, str, str]] = (),
     num_partitions: int | None = None,
-    boundary_key: str | None = None,
+    boundary_key: tuple[str, str] | None = None,
 ) -> DataFrame:
     """Attach exact global-order columns without a single-partition sort.
 
@@ -163,95 +114,91 @@ def with_global_order(
     cumsums: ``(value_col, out_col, kind)`` with kind ``"inclusive"`` or
             ``"exclusive"`` — exact running SUM(value) over the global
             order (exclusive = sum of strictly-preceding rows, 0 first)
-    boundary_key: opt-in memo key for the discovered cut list (see
-            ``_BOUNDARY_CACHE``) — pass a stable per-call-site string
-            (e.g. ``f"{sf_dir}:q126"``) when the input is a snapshot
-            dataset, so repeated plan builds skip the boundary probe.
+    boundary_key: opt-in memo key ``(sf_dir, call_site)``, e.g.
+            ``(sf_dir, "q126")``, for an input derived from ``sf_dir``:
+            repeated plan builds over the same input snapshot reuse the
+            bucket column (plans/fragments.memo) and skip the boundary
+            probe action and the projection's ``.schema`` analysis.
     """
     cumsums = list(cumsums)
     if not (rank or total or ntile or cumsums):
         raise ValueError("request at least one output column")
     sc = _normalize(sort_cols)
     spark = df.sparkSession
-    _evict_dead_session_entries(spark.sparkContext.applicationId)
     n_buckets = num_partitions or int(
         spark.conf.get("spark.sql.shuffle.partitions", "32")
     )
-
-    # --- phase 1: deterministic boundary discovery (ONE bounded action)
-    ck = None
-    if boundary_key is not None:
-        ck = (spark.sparkContext.applicationId, boundary_key, n_buckets)
-    bucket = _BUCKET_COL_CACHE.get(ck) if ck is not None else None
-    if bucket is not None:
-        # fully warm call site: skip keyed-projection construction AND
-        # its ``.schema`` analysis round trip — r13 measured that the
-        # schema call re-analyzes the ENTIRE upstream plan on every
-        # plan build (q170's token pipeline, q126's corpus scan) even
-        # though its result is only consumed by the boundary probe and
-        # the bucket-literal casts, both already memoized under ck
-        # (guide SS7.3: planning is driver-side single-threaded work)
-        return _attach_order_outputs(
-            df, sc, bucket, rank, total, ntile, cumsums
+    if boundary_key is None:
+        bucket = _bucket_column(df, sc, n_buckets)
+    else:
+        # the memoized Column is a pure projection over the cut
+        # literals baked into it; phases 2-3 are exact for ANY cut
+        # list, so the memo is a performance hint, never a result input
+        sf_dir, site = boundary_key
+        bucket = memo(
+            spark, sf_dir, f"rank_bucket:{site}:{n_buckets}",
+            lambda: _bucket_column(df, sc, n_buckets),
         )
+    return _attach_order_outputs(df, sc, bucket, rank, total, ntile, cumsums)
+
+
+def _bucket_column(df: DataFrame, sc: list[Column], n_buckets: int) -> Column:
+    """Phase 1: ONE bounded probe action discovers the cut list, and
+    the bucket column compares each row's key struct against it."""
     keyed = df.select(*[c.alias(f"_gk{i}") for i, c in enumerate(sc)])
     key_fields = keyed.schema.fields
-    boundaries: list[tuple] | None = _BOUNDARY_CACHE.get(ck) if ck else None
-    if boundaries is None:
-        boundaries = []
-        if n_buckets > 1:
-            # bottom-k by xxhash64(key): a deterministic uniform sample
-            # of exactly min(n_rows, 32*B) rows in a single TakeOrdered
-            # action (per-partition top-k + driver merge) — no separate
-            # count() pass sizing a stride. Ties on the hash break on
-            # the full key (a total order), so the sample is bit-stable
-            # across retries.
-            k_names = [f.name for f in key_fields]
-            sample = (
-                keyed.withColumn("_gh", F.xxhash64(*[F.col(n) for n in k_names]))
-                .orderBy("_gh", *k_names)
-                .limit(n_buckets * SAMPLES_PER_BUCKET)
-                .drop("_gh")
-                .collect()
+    boundaries: list[tuple] = []
+    if n_buckets > 1:
+        # bottom-k by xxhash64(key): a deterministic uniform sample
+        # of exactly min(n_rows, 32*B) rows in a single TakeOrdered
+        # action (per-partition top-k + driver merge) — no separate
+        # count() pass sizing a stride. Ties on the hash break on
+        # the full key (a total order), so the sample is bit-stable
+        # across retries.
+        k_names = [f.name for f in key_fields]
+        sample = (
+            keyed.withColumn("_gh", F.xxhash64(*[F.col(n) for n in k_names]))
+            .orderBy("_gh", *k_names)
+            .limit(n_buckets * SAMPLES_PER_BUCKET)
+            .drop("_gh")
+            .collect()
+        )
+        # null-safe, matching Spark's ascending null ordering
+        # (nulls FIRST) so the driver-picked cuts agree with the
+        # executor-side struct comparison — a bare tuple(r) sort
+        # raises TypeError the moment a sampled key is null
+        # (surfaced by q223's gated-null weight, ADVICE r9)
+        sample.sort(
+            key=lambda r: tuple(
+                (v is not None, 0 if v is None else v) for v in r
             )
-            # null-safe, matching Spark's ascending null ordering
-            # (nulls FIRST) so the driver-picked cuts agree with the
-            # executor-side struct comparison — a bare tuple(r) sort
-            # raises TypeError the moment a sampled key is null
-            # (surfaced by q223's gated-null weight, ADVICE r9)
-            sample.sort(
-                key=lambda r: tuple(
-                    (v is not None, 0 if v is None else v) for v in r
-                )
-            )
-            # a 1-row (or all-identical-key) sample still yields ONE
-            # cut after dedupe: phases 2-4 are exact for ANY cut list,
-            # and a non-empty list keeps the bucket column a real
-            # expression — with boundaries=[] the bucket is lit(0),
-            # Catalyst constant-folds the window's partition spec away,
-            # and the plan regresses to the banned single-partition
-            # WindowExec (caught by the repo-wide sweep when r13's
-            # q145 histogram input collapsed to one distinct score)
-            if sample:
-                step = len(sample) / n_buckets
-                cuts = []
-                for i in range(1, n_buckets):
-                    t = tuple(sample[min(int(i * step), len(sample) - 1)])
-                    if not cuts or t != cuts[-1]:
-                        cuts.append(t)
-                boundaries = cuts
-            else:
-                # EMPTY input: synthesize one all-NULL sentinel cut so
-                # even an empty-snapshot plan keeps a real (non-foldable)
-                # bucket expression — phases 2-4 are exact for ANY cut
-                # list, and with boundaries=[] the lit(0) bucket would
-                # constant-fold the window's partition spec back into
-                # the banned single-partition WindowExec shape
-                # (ADVICE r13: the 1-row/all-tied guard above did not
-                # cover the zero-row sample)
-                boundaries = [tuple(None for _ in key_fields)]
-        if ck is not None:
-            _BOUNDARY_CACHE[ck] = boundaries
+        )
+        # a 1-row (or all-identical-key) sample still yields ONE
+        # cut after dedupe: phases 2-4 are exact for ANY cut list,
+        # and a non-empty list keeps the bucket column a real
+        # expression — with boundaries=[] the bucket is lit(0),
+        # Catalyst constant-folds the window's partition spec away,
+        # and the plan regresses to the banned single-partition
+        # WindowExec (caught by the repo-wide sweep when r13's
+        # q145 histogram input collapsed to one distinct score)
+        if sample:
+            step = len(sample) / n_buckets
+            cuts = []
+            for i in range(1, n_buckets):
+                t = tuple(sample[min(int(i * step), len(sample) - 1)])
+                if not cuts or t != cuts[-1]:
+                    cuts.append(t)
+            boundaries = cuts
+        else:
+            # EMPTY input: synthesize one all-NULL sentinel cut so
+            # even an empty-snapshot plan keeps a real (non-foldable)
+            # bucket expression — phases 2-4 are exact for ANY cut
+            # list, and with boundaries=[] the lit(0) bucket would
+            # constant-fold the window's partition spec back into
+            # the banned single-partition WindowExec shape
+            # (ADVICE r13: the 1-row/all-tied guard above did not
+            # cover the zero-row sample)
+            boundaries = [tuple(None for _ in key_fields)]
 
     key_struct = F.struct(
         *[c.alias(f"_gk{i}") for i, c in enumerate(sc)]
@@ -270,13 +217,8 @@ def with_global_order(
         )
         # bucket = number of cut points strictly below my key: a pure,
         # deterministic projection — every branch recomputes it equally
-        bucket = F.size(F.filter(blits, lambda b: b < key_struct))
-    else:
-        bucket = F.lit(0)
-    if ck is not None:
-        _BUCKET_COL_CACHE[ck] = bucket
-
-    return _attach_order_outputs(df, sc, bucket, rank, total, ntile, cumsums)
+        return F.size(F.filter(blits, lambda b: b < key_struct))
+    return F.lit(0)
 
 
 def _attach_order_outputs(
@@ -290,8 +232,8 @@ def _attach_order_outputs(
 ) -> DataFrame:
     """Phases 2-3 of ``with_global_order`` over a ready bucket column:
     keyed window for local position, ~B-row summary -> exclusive
-    offsets, broadcast-joined back. Split out so a fully-memoized call
-    site (boundaries AND bucket cached) skips phase 1 entirely."""
+    offsets, broadcast-joined back. Split out so a memoized bucket
+    column skips phase 1 entirely."""
     part = df.withColumn("_go_b", bucket)
 
     # --- phase 2: keyed window for local position / running sums --------

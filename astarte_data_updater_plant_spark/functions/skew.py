@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.fragments import memo
+
 DEFAULT_SALT = 16
 
 
@@ -68,16 +70,6 @@ SELF_PAIR_BUCKET_CAP = 256
 MAX_HOT_KEYS = 1024
 
 
-#: memoized hot-key probes, keyed like the fragment cache (application,
-#: caller-supplied key, cap) — same immutable-snapshot assumption, and
-#: cleared together with the fragments (plans/fragments.clear_fragments)
-_HOT_KEY_CACHE: dict = {}
-
-
-def clear_hot_key_cache() -> None:
-    _HOT_KEY_CACHE.clear()
-
-
 def guarded_self_pairs(
     bands: DataFrame,
     key_cols: list[str],
@@ -85,7 +77,7 @@ def guarded_self_pairs(
     *,
     cap: int = SELF_PAIR_BUCKET_CAP,
     n_salts: int = DEFAULT_SALT,
-    probe_key: str | None = None,
+    probe_key: tuple[str, str] | None = None,
     probe_bands: DataFrame | None = None,
     probe_scale: int = 1,
     pair_cond: Column | None = None,
@@ -121,7 +113,8 @@ def guarded_self_pairs(
     one cached aggregate): on a healthy corpus the guard costs nothing —
     the returned plan IS the plain self-join (measured: the always-on
     cold/hot split tripled q42 at sf0.1 guarding against a skew that
-    wasn't there).
+    wasn't there). ``probe_key`` ``(sf_dir, call_site)`` memoizes the
+    list per input snapshot of ``sf_dir`` (plans/fragments.memo).
     """
 
     def pairs(df: DataFrame, extra_key: list[str]) -> DataFrame:
@@ -137,11 +130,7 @@ def guarded_self_pairs(
             F.col(f"b.{id_col}").alias("doc_b"),
         )
 
-    ck = None
-    if probe_key is not None:
-        ck = (bands.sparkSession.sparkContext.applicationId, probe_key, cap)
-    hot_keys = _HOT_KEY_CACHE.get(ck) if ck is not None else None
-    if hot_keys is None:
+    def probe() -> list:
         # probe_bands lets callers supply a CHEAP deterministic sample
         # (e.g. 1/probe_scale of documents, filter pushed to the scan)
         # so a cold probe never has to materialize the full band frame;
@@ -156,15 +145,21 @@ def guarded_self_pairs(
         # (TakeOrdered, not a full sort) — correctness never depends on
         # the list, so truncation only leaves the (1025th-hottest and
         # colder) buckets on the plain-join path
-        hot_keys = [
+        return [
             r[:-1]
             for r in sizes.filter(F.col("__bsz") > thresh)
             .orderBy(F.col("__bsz").desc(), *key_cols)
             .limit(MAX_HOT_KEYS)
             .collect()
         ]
-        if ck is not None:
-            _HOT_KEY_CACHE[ck] = hot_keys
+
+    if probe_key is None:
+        hot_keys = probe()
+    else:
+        sf_dir, site = probe_key
+        hot_keys = memo(
+            bands.sparkSession, sf_dir, f"hot_keys:{site}:{cap}", probe
+        )
     if not hot_keys:
         return pairs(bands, []).distinct()
 

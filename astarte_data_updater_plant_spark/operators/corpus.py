@@ -130,7 +130,7 @@ def q110_sequence_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is large (n_docs / PACK_GROUP rows at corpus scale)
     offsets = with_global_order(
         totals, ["g"], cumsums=[("gt", "g_off", "exclusive")],
-    boundary_key=sf_dir + ":q110").select("g", "g_off")
+    boundary_key=(sf_dir, "q110")).select("g", "g_off")
     c = t.join(F.broadcast(offsets), "g").select(
         "doc_id", "n", (F.col("g_off") + F.col("cum_in")).alias("cum_before")
     )
@@ -875,7 +875,7 @@ def _df_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         with_global_order(
             df, [(F.col("df"), "desc"), "tok"], rank="tid",
-        boundary_key=sf_dir + ":q121")
+        boundary_key=(sf_dir, "q121"))
         .filter(F.col("tid") <= VOCAB_N)
         .select("tok", "tid")
     )
@@ -1079,7 +1079,7 @@ def q126_curriculum_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         ["score", "doc_id"],
         ntile=(N_TIERS, "tier"),
-    boundary_key=sf_dir + ":q126")
+    boundary_key=(sf_dir, "q126"))
     return (
         tiered.groupBy("tier")
         .agg(
@@ -1338,10 +1338,10 @@ def q135_zorder_fileskip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # single-partition window
     lin = with_global_order(
         z, ["y", "x", "event_id"], ntile=(N_ZFILES, "tile"),
-    boundary_key=sf_dir + ":q135a").select("x", "y", (F.col("tile") - 1).alias("file_id"))
+    boundary_key=(sf_dir, "q135a")).select("x", "y", (F.col("tile") - 1).alias("file_id"))
     zo = with_global_order(
         z, ["zkey", "event_id"], ntile=(N_ZFILES, "tile"),
-    boundary_key=sf_dir + ":q135b").select("x", "y", (F.col("tile") - 1).alias("file_id"))
+    boundary_key=(sf_dir, "q135b")).select("x", "y", (F.col("tile") - 1).alias("file_id"))
 
     def stats(df, layout):
         return df.groupBy("file_id").agg(
@@ -1623,7 +1623,7 @@ def q147_token_waterfill(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["n_tokens", "source"],
         rank="rk",
         cumsums=[("n_tokens", "cum", "inclusive")],
-    boundary_key=sf_dir + ":q147").crossJoin(F.broadcast(tot))
+    boundary_key=(sf_dir, "q147")).crossJoin(F.broadcast(tot))
     feasible = F.col("cum") + F.col("n_tokens") * (F.col("nsrc") - F.col("rk")) <= F.col("budget")
     scal = r.agg(
         F.coalesce(F.max(F.when(feasible, F.col("rk"))), F.lit(0)).alias("kstar"),
@@ -1879,7 +1879,7 @@ def q166_conformal_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the calibration fold is corpus-sized, so no single-partition window
     ranked = with_global_order(
         cal, ["nonconf_e6", "doc_id"], rank="rn", total="n_cal",
-    boundary_key=sf_dir + ":q166").select("nonconf_e6", "rn", "n_cal")
+    boundary_key=(sf_dir, "q166")).select("nonconf_e6", "rn", "n_cal")
     target_rn = F.least(
         F.ceil(
             (F.col("n_cal") + 1)
@@ -1972,7 +1972,7 @@ def q169_tokenizer_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         [(F.col("n"), "desc"), "tok"],
         rank="tid",
-    boundary_key=sf_dir + ":q169").select("tok", "tid")
+    boundary_key=(sf_dir, "q169")).select("tok", "tid")
     ids = toks.join(F.broadcast(vocab), "tok").select("doc_id", "pos", "tid")
     decoded = (
         ids.join(F.broadcast(vocab), "tid")
@@ -2096,7 +2096,7 @@ def q170_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         hist,
         [(F.col("f"), "desc")],
         cumsums=[("cnt", "excl", "exclusive")],
-        boundary_key=sf_dir + ":q170",
+        boundary_key=(sf_dir, "q170"),
     )
     # re-generate each tier's rank range in bounded chunks so one giant
     # tier (the hapax f=1 run is ~half a natural vocabulary) never
@@ -2207,7 +2207,7 @@ def q183_systematic_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     c = with_global_order(
         w, ["doc_id"], cumsums=[("weight", "cum_before", "exclusive")],
-    boundary_key=sf_dir + ":q183")
+    boundary_key=(sf_dir, "q183"))
     tot = w.agg(F.sum("weight").cast("decimal(38,0)").alias("wtot"))
     d38 = "decimal(38,0)"
     cum = F.col("cum_before").cast(d38)
@@ -2384,7 +2384,7 @@ def q193_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
             docs.select("doc_id", hk.alias("hk")),
             ["hk", "doc_id"],
             rank="position",
-        boundary_key=sf_dir + f":q193e{e}").select(
+        boundary_key=(sf_dir, f"q193e{e}")).select(
             F.lit(e).cast("long").alias("epoch"),
             "doc_id",
             "position",
@@ -2574,19 +2574,19 @@ def q197_rank_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         base.select("doc_id", "ttr_e6"),
         [("ttr_e6", "desc"), "doc_id"],
         rank="r_ttr",
-        boundary_key=sf_dir + ":q197t",
+        boundary_key=(sf_dir, "q197t"),
     ).select("doc_id", "r_ttr")
     r_clf = with_global_order(
         base.select("doc_id", "score"),
         [(F.col("score"), "desc"), "doc_id"],
         rank="r_clf",
-        boundary_key=sf_dir + ":q197c",
+        boundary_key=(sf_dir, "q197c"),
     ).select("doc_id", "r_clf")
     r_stop = with_global_order(
         base.select("doc_id", "stop_e6"),
         ["stop_e6", "doc_id"],
         rank="r_stop",
-        boundary_key=sf_dir + ":q197s",
+        boundary_key=(sf_dir, "q197s"),
     ).select("doc_id", "r_stop")
     rrf = (
         F.expr(f"CAST(1000000 DIV ({RRF_K} + r_ttr) AS BIGINT)")
@@ -2979,7 +2979,7 @@ def q221_negative_sampling_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     rk = with_global_order(
         base, [("r", "desc"), "token"], rank="rk",
-        boundary_key=sf_dir + ":q221",
+        boundary_key=(sf_dir, "q221"),
     )
     return (
         rk.crossJoin(F.broadcast(d))
@@ -3124,7 +3124,7 @@ def q223_neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     rk = with_global_order(
         base, [("r", "desc"), "source"], rank="rk",
-        boundary_key=sf_dir + ":q223",
+        boundary_key=(sf_dir, "q223"),
     )
     return (
         rk.crossJoin(F.broadcast(d))

@@ -39,7 +39,7 @@ from ..functions.text import (
     shingle_h32,
     shingles_from_tokens,
 )
-from ..plans.fragments import fragment
+from ..plans.fragments import fragment, input_signature
 from ..plans.registry import register
 from ..sources.tables import load_table
 
@@ -73,64 +73,41 @@ NGRAM_JACCARD_MIN = 0.5
 #: stage under the share with 2x headroom (guide SS5 "more partitions
 #: (smaller per-task state)"; SS2.5 partitioning derived from input
 #: size, not a constant).
-VERIFY_TASK_BYTES = int(
-    os.environ.get("SPARK_GRAFT_VERIFY_TASK_BYTES", str(128 << 20))
-)
+VERIFY_TASK_BYTES = 128 << 20
 
 #: hard ceiling on the pin (tasks): far above any measured need
 #: (q199's R=100 estimate is ~1.3k) while bounding the M x R shuffle
 #: block count (guide SS2.2)
 VERIFY_PIN_MAX = 4096
 
-#: measured Tungsten expansion of each operator's verify stage per
-#: byte of documents parquet, calibrated on the replicated bench
-#: corpus family (the series BENCH_SCALING tracks): q199's verify
-#: carries ~52 GB at R=30 over 18.6 MB of documents (C ~= 2800);
-#: q42's ~15 GB (30.1M pairs, Q45_COMPONENTS_AB_r12) gives C ~= 800.
-#: The estimate only sizes TASKS — a 2-3x miscalibration on another
-#: corpus still yields per-task buffers within a small multiple of
-#: the target, versus the unpinned plan's measured 1.5 GB/task — and
-#: the env override re-calibrates without a code change.
-#: q42-family default 0 = pin OFF: its estimated engage point (~R>=70
-#: of the bench corpus) sits past every scale this round measured, and
-#: the q204 finding (OPTIMIZATION_r14.md) shows verify joins can
-#: stream-execute at large sets sizes — a pin there would force an
-#: exchange the streaming plan never pays. The knob exists so a
-#: deployment that MEASURES an SMJ-flip on its corpus can turn it on
-#: without a code change; q199's pin ships ON because its SMJ shape
-#: and the pin's 35x spill cut are interleaved-A/B-proven at R=30.
-VERIFY_EXPANSION_Q42 = float(os.environ.get("SPARK_GRAFT_VERIFY_EXP_Q42", "0"))
-VERIFY_EXPANSION_Q199 = float(
-    os.environ.get("SPARK_GRAFT_VERIFY_EXP_Q199", "2800")
-)
-
-_DOCS_BYTES_CACHE: dict = {}
+#: measured Tungsten expansion of q199's verify stage per byte of
+#: documents parquet, calibrated on the replicated bench corpus family
+#: (the series BENCH_SCALING tracks): ~52 GB at R=30 over 18.6 MB of
+#: documents (C ~= 2800). The estimate only sizes TASKS — a 2-3x
+#: miscalibration on another corpus still yields per-task buffers
+#: within a small multiple of the target, versus the unpinned plan's
+#: measured 1.5 GB/task. The q42 family carries no pin: its estimated
+#: engage point (~R>=70 of the bench corpus) sits past every measured
+#: scale, and the q204 finding (OPTIMIZATION_r14.md) shows verify
+#: joins can stream-execute at large set sizes — a pin there would
+#: force an exchange the streaming plan never pays.
+VERIFY_EXPANSION_Q199 = 2800
 
 
 def _docs_bytes(sf_dir: str) -> int:
-    """On-disk bytes of the documents table — plan-time scale signal
-    (filesystem metadata only, no Spark action)."""
-    cached = _DOCS_BYTES_CACHE.get(sf_dir)
-    if cached is not None:
-        return cached
-    path = os.path.join(sf_dir, "documents.parquet")
-    total = 0
-    if os.path.isfile(path):
-        total = os.path.getsize(path)
-    else:
-        for root, _dirs, files in os.walk(path):
-            for f in files:
-                if not f.startswith(("_", ".")):
-                    try:
-                        total += os.path.getsize(os.path.join(root, f))
-                    except OSError:
-                        pass
-    _DOCS_BYTES_CACHE[sf_dir] = total
-    return total
+    """On-disk bytes of the documents table — plan-time scale signal,
+    summed from the memo's input-signature walk (filesystem metadata
+    only, no Spark action)."""
+    return sum(
+        size
+        for rel, size, _mtime in input_signature(sf_dir)
+        if rel.split(os.sep)[0] == "documents.parquet"
+        and not os.path.basename(rel).startswith(("_", "."))
+    )
 
 
-def _verify_pin(spark: SparkSession, sf_dir: str, expansion: float) -> int | None:
-    """Partition count for the verify joins at this data scale, or
+def _verify_pin(spark: SparkSession, sf_dir: str) -> int | None:
+    """Partition count for q199's verify joins at this data scale, or
     None when the default AQE posture already suffices.
 
     Engages ONLY past the session's initialPartitionNum — below it the
@@ -142,11 +119,7 @@ def _verify_pin(spark: SparkSession, sf_dir: str, expansion: float) -> int | Non
     side is far past the 10 MB adaptive broadcast threshold, so the
     joins are exchange-based with or without the pin — the repartition
     replaces an exchange, never adds one."""
-    if expansion <= 0:
-        return None
-    if os.environ.get("SPARK_GRAFT_VERIFY_PIN_DISABLE") == "1":
-        return None
-    est = _docs_bytes(sf_dir) * expansion
+    est = _docs_bytes(sf_dir) * VERIFY_EXPANSION_Q199
     n = int(math.ceil(est / VERIFY_TASK_BYTES))
     try:
         initial = int(
@@ -524,7 +497,7 @@ def _near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so the oracle's plain self-join is unchanged.
     candidates = guarded_self_pairs(
         banded, ["band", "bkey"], "doc_id",
-        probe_key=f"{sf_dir}:lsh_banded",
+        probe_key=(sf_dir, "lsh_banded"),
         pair_cond=(2 * F.col("a.n_sh") >= F.col("b.n_sh"))
         & (2 * F.col("b.n_sh") >= F.col("a.n_sh")),
     )
@@ -547,17 +520,9 @@ def _near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
     union = F.size("sh_a") + F.size("sh_b") - inter
     jac = inter.cast("double") / union
-    # scale-adaptive task-count pin on the two array-carrying verify
-    # stages (see _verify_pin): no-op below the initialPartitionNum
-    # threshold, replaces the joins' own exchanges above it
-    pin = _verify_pin(spark, sf_dir, VERIFY_EXPANSION_Q42)
-    if pin:
-        candidates = candidates.repartition(pin, "doc_a")
-    mid = candidates.join(sets_a, "doc_a")
-    if pin:
-        mid = mid.repartition(pin, "doc_b")
     return (
-        mid.join(sets_b, "doc_b")
+        candidates.join(sets_a, "doc_a")
+        .join(sets_b, "doc_b")
         .filter(jac >= 0.5)
         .select("doc_a", "doc_b", jac.alias("jaccard"))
     )
@@ -1260,7 +1225,7 @@ def q144_contrastive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["nk", "doc_id"],
         rank="rn",
         total="n",
-    boundary_key=sf_dir + ":q144").withColumn("succ", F.col("rn") % F.col("n") + 1)
+    boundary_key=(sf_dir, "q144")).withColumn("succ", F.col("rn") % F.col("n") + 1)
     neg = ring.join(
         ring.select(F.col("rn").alias("succ"), F.col("doc_id").alias("neg_id")),
         "succ",
@@ -2042,7 +2007,7 @@ def q199_prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("a.pos") < _slen(F.col("a.n")),
         ).otherwise(F.col("b.pos") < _slen(F.col("b.n")))
     candidates = guarded_self_pairs(
-        pref, ["psh"], "doc_id", probe_key=f"{sf_dir}:prefix_shingles",
+        pref, ["psh"], "doc_id", probe_key=(sf_dir, "prefix_shingles"),
         pair_cond=pair_cond,
     )
     if Q199_SEMI_PREFILTER:
@@ -2132,7 +2097,7 @@ def q199_prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # unpinned join1 reduce at 35 AQE-coalesced tasks paging 51.8 GB
     # while WRITING 104M array rows — per-task output, not input, is
     # what sizes these stages
-    pin = _verify_pin(spark, sf_dir, VERIFY_EXPANSION_Q199)
+    pin = _verify_pin(spark, sf_dir)
     if pin:
         candidates = candidates.repartition(pin, "doc_a")
     mid = candidates.join(sets_a, "doc_a")

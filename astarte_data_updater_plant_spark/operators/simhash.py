@@ -152,7 +152,7 @@ def _to_bands(fp: DataFrame) -> DataFrame:
 
 def simhash_band_candidates(
     fp: DataFrame,
-    probe_key: str | None = None,
+    probe_key: tuple[str, str] | None = None,
     probe_fp: DataFrame | None = None,
 ) -> DataFrame:
     """(doc_a, doc_b) candidate pairs from the 4x16-bit band equi-join
@@ -214,7 +214,7 @@ def q46_simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     fp = fragment(
         spark, sf_dir, "simhash_fp", lambda: simhash_fingerprints(spark, sf_dir)
     )
-    cand = simhash_band_candidates(fp, probe_key=f"{sf_dir}:simhash_bands")
+    cand = simhash_band_candidates(fp, probe_key=(sf_dir, "simhash_bands"))
 
     def nib_of(col: str, i: int):
         return F.instr(F.lit(_HEX), F.substring(F.col(col), i + 1, 1)) - 1
@@ -269,7 +269,7 @@ def q87_edit_distance_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     fp = fragment(
         spark, sf_dir, "simhash_fp", lambda: simhash_fingerprints(spark, sf_dir)
     )
-    cand = simhash_band_candidates(fp, probe_key=f"{sf_dir}:simhash_bands")
+    cand = simhash_band_candidates(fp, probe_key=(sf_dir, "simhash_bands"))
     docs = load_table(spark, sf_dir, "documents")
     da = docs.select(F.col("doc_id").alias("doc_a"), F.col("text").alias("text_a"))
     db = docs.select(F.col("doc_id").alias("doc_b"), F.col("text").alias("text_b"))

@@ -437,7 +437,7 @@ def q145_roc_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
         scnt,
         ["score"],
         cumsums=[("cnt", "excl", "exclusive")],
-        boundary_key=sf_dir + ":q145",
+        boundary_key=(sf_dir, "q145"),
     )
     # NON-NULL score assumption made explicit (ADVICE r13): this inner
     # equi-join would silently DROP a null-score histogram row (null
@@ -806,7 +806,7 @@ def q210_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
         ex,
         ["dim", "vfp", "vec_id"],
         rank="grank",
-        boundary_key=f"{sf_dir}:q210_qnorm",
+        boundary_key=(sf_dir, "q210_qnorm"),
     )
     nd = ex.groupBy("dim").agg(F.count(F.lit(1)).cast("long").alias("n_d"))
     lo = nd.select(F.col("dim").alias("lo_d"), F.col("n_d").alias("lo_n"))

@@ -1566,7 +1566,7 @@ def q208_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         g,
         ["event_type", "x"],
         cumsums=[("c1", "gcum1", "inclusive"), ("c2", "gcum2", "inclusive")],
-        boundary_key=f"{sf_dir}:q208_ks",
+        boundary_key=(sf_dir, "q208_ks"),
     )
     # per-type exclusive start offsets: bounded theta-join over the
     # per-type totals (a handful of rows), broadcast both ways

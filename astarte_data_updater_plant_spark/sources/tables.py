@@ -13,6 +13,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..plans.fragments import memo
+
 TABLES = (
     "region",
     "nation",
@@ -47,62 +49,23 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-#: raw parquet schema per (application, path) — every bare
-#: ``spark.read.parquet`` fires a one-task footer-inference job, so a
-#: query built N times (or referencing one table from N branches) pays
-#: N driver round-trips for a schema that cannot change within an
-#: application (snapshot inputs, same assumption as plans/fragments).
-#: With the memo, repeat loads pass the schema explicitly and plan
-#: builds after the first fire ZERO Spark jobs (asserted by
-#: tests/test_plans.test_global_order_inputs_pinned_single_evaluation).
-_SCHEMA_CACHE: dict = {}
-
-#: assembled leaf DataFrame per (application, path) — r13: with the
-#: schema memoized, the remaining per-load cost was pure driver-side
-#: py4j chatter re-assembling an identical immutable plan (the
-#: read.schema().parquet() call, the CPU_DENSE ``df.rdd
-#: .getNumPartitions()`` round trip, the NTZ-cast withColumn walk) on
-#: EVERY plan build — q05 pays it six times per build. A DataFrame is
-#: an immutable logical plan over a snapshot path (the same contract
-#: _SCHEMA_CACHE and plans/fragments already rely on), so the
-#: assembled leaf is reusable verbatim; this memoizes the PLAN object
-#: only — no data, no results, every action still recomputes from
-#: parquet (guide SS7.3: plan construction is driver-side,
-#: single-threaded, and does not parallelize on a cluster).
-_TABLE_CACHE: dict = {}
-
-#: applicationId the memos were filled under: entries are keyed by
-#: appId so a fresh JVM/session can never read a stale plan, but in a
-#: long-lived driver process that restarts sessions the dead session's
-#: entries would otherwise linger forever (VERDICT r13 nit #4) — one
-#: marker check evicts them the first time the new session loads a
-#: table.
-_CACHE_APP: list = [None]
-
-
-def _evict_dead_session_entries(app_id: str) -> None:
-    if _CACHE_APP[0] != app_id:
-        _SCHEMA_CACHE.clear()
-        _TABLE_CACHE.clear()
-        _CACHE_APP[0] = app_id
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    path = table_path(sf_dir, name)
-    app_id = spark.sparkContext.applicationId
-    _evict_dead_session_entries(app_id)
-    tck = (app_id, path)
-    cached = _TABLE_CACHE.get(tck)
-    if cached is not None:
-        return cached
-    df = _load_table_uncached(spark, sf_dir, name, path)
-    _TABLE_CACHE[tck] = df
-    return df
+    """The assembled leaf DataFrame of one table, memoized per input
+    snapshot (plans/fragments.memo). A repeat load skips the
+    footer-inference job of a bare ``spark.read.parquet`` and the
+    driver-side py4j chatter of re-assembling an identical plan (the
+    CPU_DENSE ``df.rdd.getNumPartitions()`` round trip, the NTZ-cast
+    withColumn walk) — q05 loads six tables per build, and plan builds
+    after the first fire ZERO Spark jobs (asserted by
+    tests/test_plans.test_global_order_inputs_pinned_single_evaluation).
+    Only the PLAN is memoized: every action still reads parquet."""
+    return memo(
+        spark, sf_dir, f"table:{name}",
+        lambda: _load_table_uncached(spark, sf_dir, name),
+    )
 
 
-def _load_table_uncached(
-    spark: SparkSession, sf_dir: str, name: str, path: str
-) -> DataFrame:
+def _load_table_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         # runtime confs, set defensively: the driver's session won't have
         # them. Both guard against the two ways the generator has emitted
@@ -110,14 +73,7 @@ def _load_table_uncached(
         # no timezone annotation).
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    path = table_path(sf_dir, name)
-    ck = (spark.sparkContext.applicationId, path)
-    schema = _SCHEMA_CACHE.get(ck)
-    if schema is None:
-        df = spark.read.parquet(path)
-        _SCHEMA_CACHE[ck] = df.schema
-    else:
-        df = spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(table_path(sf_dir, name))
     if name in CPU_DENSE:
         cores = spark.sparkContext.defaultParallelism
         if df.rdd.getNumPartitions() < cores:

@@ -10,6 +10,7 @@ directory and swap, which is the pattern below.
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 
@@ -22,7 +23,14 @@ def compact_property_log(
     """Fold the append-only property upsert/tombstone log into its LWW
     state table (queries.ex:87-155 as a batch job). Returns the number
     of live rows written."""
-    log = spark.read.parquet(log_path)
+    try:
+        log = spark.read.parquet(log_path)
+    except AnalysisException as e:
+        # a tree that never received a property write holds only the
+        # empty appends' _SUCCESS markers: no rows, hence no schema
+        if e.getCondition() != "UNABLE_TO_INFER_SCHEMA":
+            raise
+        return 0
     live = compact_properties(log.drop("bucket"))
     write_device_table(
         live,

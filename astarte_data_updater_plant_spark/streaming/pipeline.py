@@ -36,6 +36,7 @@ from ..catalog import Interface, fixture_interfaces
 from ..functions import matchers as _matchers_mod
 from ..functions import payloads as _payloads_mod
 from ..functions import text as _text_mod
+from ..storage.layout import PROPERTY_KEY, compact_properties
 from ..types import TYPED_COLUMNS
 from . import state_machine as _sm_mod
 from .state_machine import Catalog, DeviceState, process_device_messages
@@ -581,27 +582,24 @@ def properties_table(outputs: DataFrame) -> DataFrame:
     tombstone log: latest row per key wins (delete beats a same-instant
     set, Cassandra's tie rule), keys whose winner is a tombstone
     disappear. Idempotent and re-runnable; a delete-then-re-set
-    resurrects the key, exactly like consecutive CQL DELETE + INSERT."""
-    from pyspark.sql import Window
-
-    log = outputs.filter(
-        F.col("kind").isin("property_upsert", "property_delete")
-    ).withColumn("p", F.from_json("payload_json", PROPERTY_JSON_SCHEMA))
-    log = log.filter(
-        (F.col("kind") == "property_delete")
-        | ~F.coalesce(F.col("p.is_path_registry"), F.lit(False))
-    ).withColumn(
-        "lww_ts", F.coalesce(F.col("p.reception_timestamp"), F.col("timestamp"))
+    resurrects the key, exactly like consecutive CQL DELETE + INSERT.
+    The fold is storage.layout.compact_properties, the one LWW window
+    the maintenance job also runs over the sunk property log."""
+    log = (
+        outputs.filter(F.col("kind").isin("property_upsert", "property_delete"))
+        .withColumn("p", F.from_json("payload_json", PROPERTY_JSON_SCHEMA))
+        .filter(
+            (F.col("kind") == "property_delete")
+            | ~F.coalesce(F.col("p.is_path_registry"), F.lit(False))
+        )
+        .select(
+            *PROPERTY_KEY, "p",
+            F.coalesce(F.col("p.reception_timestamp"), F.col("timestamp"))
+            .alias("reception_timestamp"),
+            (F.col("kind") == "property_delete").alias("is_delete"),
+        )
     )
-    w = Window.partitionBy("realm", "device_id", "interface", "path").orderBy(
-        F.col("lww_ts").desc(),
-        (F.col("kind") == "property_delete").desc(),
-    )
-    live = (
-        log.withColumn("rn", F.row_number().over(w))
-        .filter((F.col("rn") == 1) & (F.col("kind") == "property_upsert"))
-    )
-    return live.select(
+    return compact_properties(log).select(
         "realm", "device_id",
         F.col("p.interface_id").alias("interface_id"),
         "interface",

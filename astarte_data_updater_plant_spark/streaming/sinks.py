@@ -28,6 +28,7 @@ from __future__ import annotations
 import time
 from typing import Callable
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -54,11 +55,14 @@ def with_retry(
     """Exponential-backoff retry (triggers_handler.ex:404-430): sleep
     2^n * base between attempts, exponent capped, re-raise after the
     final attempt so the streaming query fails visibly rather than
-    dropping a batch."""
+    dropping a batch. An AnalysisException (a missing path, a schema
+    mismatch) cannot heal by waiting, so it re-raises at once."""
     for attempt in range(max_exp + 1):
         try:
             fn()
             return
+        except AnalysisException:
+            raise
         except Exception:
             if attempt == max_exp:
                 raise

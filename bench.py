@@ -54,7 +54,7 @@ HEADLINE = (
 #: cross-artifact arithmetic.
 R1_SET = HEADLINE[:13]
 
-#: The expensive dedup family, timed COLD (fragments + skew memo
+#: The expensive dedup family, timed COLD (every plan-time memo
 #: cleared per run, like bench_scaling) at R=1: the headline set times
 #: these shapes warm-fragment (q42 at 0.44s vs 6.5s cold), so a
 #: regression in the heaviest operators was invisible to BENCH_r{N}
@@ -373,14 +373,14 @@ def corpus_pipeline_throughput(spark, sf_dir: str) -> dict:
     documents table, reported as docs/sec. This is the corpus-assembly
     counterpart to the ingest number: how fast the engine turns a raw
     crawl into a deduplicated corpus."""
-    from astarte_data_updater_plant_spark.plans.fragments import clear_fragments
+    from astarte_data_updater_plant_spark.plans.fragments import clear_memos
     from astarte_data_updater_plant_spark.sources.tables import load_table
 
     n_docs = load_table(spark, sf_dir, "documents").count()
     qmap = queries_map()
 
     def one():
-        clear_fragments()  # cold: rebuild shingle/band fragments each run
+        clear_memos()  # cold: rebuild every plan-time memo each run
         qmap["q47_dedup_keep_best"](spark, sf_dir).write.format("noop").mode(
             "overwrite"
         ).save()
@@ -464,15 +464,10 @@ def main() -> None:
 
         timings[name], iqrs[name], bests[name] = measure(one)
 
-    # heavy dedup family, COLD per run (fragments + skew memo rebuilt
+    # heavy dedup family, COLD per run (every plan-time memo rebuilt
     # each time, the bench_scaling methodology) — warm-fragment
     # headline timings can't see a regression in these shapes.
-    # clear_hot_key_cache: clear_fragments deliberately leaves the
-    # skew probe memo alone (fragments.py), so without this the runs
-    # after the first reused the memoized hot-key probe and were
-    # warmer than bench_scaling's cold points (ADVICE r8, medium)
-    from astarte_data_updater_plant_spark.functions.skew import clear_hot_key_cache
-    from astarte_data_updater_plant_spark.plans.fragments import clear_fragments
+    from astarte_data_updater_plant_spark.plans.fragments import clear_memos
 
     heavy: dict[str, float] = {}
     heavy_iqrs: dict[str, float] = {}
@@ -480,8 +475,7 @@ def main() -> None:
     for name in HEAVY:
 
         def one_cold(q=qmap[name]):
-            clear_fragments()
-            clear_hot_key_cache()
+            clear_memos()
             q(spark, sf_dir).write.format("noop").mode("overwrite").save()
 
         heavy[name], heavy_iqrs[name], heavy_bests[name] = measure(

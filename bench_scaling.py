@@ -32,7 +32,7 @@ Methodology
     while the geometry stays realistic.
   BOTH scale points (R=1 and R=10) pass through the same transform, so
   the ratio compares identical per-row work at 10x volume.
-- Every timed run is COLD: fragments and the skew-probe memo are
+- Every timed run is COLD: every plan-time memo is
   cleared first, so the ratio covers the full pipeline including
   signature/band materialization, and timing includes plan build (the
   two-phase rank helpers do their bounded boundary-sample action at
@@ -92,8 +92,11 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import statistics
+import subprocess
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -107,8 +110,7 @@ from pyspark.sql import functions as F
 # heap unless the caller overrides.
 os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "32g")
 
-from astarte_data_updater_plant_spark.functions.skew import clear_hot_key_cache
-from astarte_data_updater_plant_spark.plans.fragments import clear_fragments
+from astarte_data_updater_plant_spark.plans.fragments import clear_memos
 from astarte_data_updater_plant_spark.plans.registry import queries_map
 from astarte_data_updater_plant_spark.session import get_spark
 
@@ -361,13 +363,11 @@ def _stage_stats(spark) -> dict[int, dict]:
 
 def timed_runs(run, *, warmups: int = 1, runs: int = RUNS) -> dict:
     for _ in range(warmups):
-        clear_fragments()
-        clear_hot_key_cache()
+        clear_memos()
         run()
     ts = []
     for _ in range(runs):
-        clear_fragments()
-        clear_hot_key_cache()
+        clear_memos()
         t0 = time.perf_counter()
         run()
         ts.append(time.perf_counter() - t0)
@@ -445,8 +445,7 @@ def q199_ab(reps: int, rnd: str) -> None:
             for arm, vals in Q199_ARMS:
                 for k, v in zip(flags, vals):
                     setattr(_dedup, k, v)
-                clear_fragments()
-                clear_hot_key_cache()
+                clear_memos()
                 s0 = _spill_bytes(spark)
                 t0 = time.perf_counter()
                 qmap["q199_prefix_filter_jaccard"](spark, r2_dir).write.format(
@@ -577,8 +576,7 @@ def q45_ab(reps: int, rnd: str) -> None:
         ("q45", "q45_near_dup_components"),
         ("q47", "q47_dedup_keep_best"),
     ):
-        clear_fragments()
-        clear_hot_key_cache()
+        clear_memos()
         pre = _stage_stats(spark)
         s0 = _spill_bytes(spark)
         t0 = time.perf_counter()
@@ -607,8 +605,7 @@ def q45_ab(reps: int, rnd: str) -> None:
         for rep in range(reps):
             for arm, val in Q45_ARMS:
                 _dedup.Q42_INT_VERIFY = val
-                clear_fragments()
-                clear_hot_key_cache()
+                clear_memos()
                 s0 = _spill_bytes(spark)
                 t0 = time.perf_counter()
                 qmap["q47_dedup_keep_best"](spark, r2_dir).write.format(
@@ -691,8 +688,7 @@ def q199_index_ab(reps: int, rnd: str) -> None:
         for rep in range(reps):
             for arm, val in arms:
                 _dedup.Q199_INDEX_VERIFY = val
-                clear_fragments()
-                clear_hot_key_cache()
+                clear_memos()
                 s0 = _spill_bytes(spark)
                 t0 = time.perf_counter()
                 qmap["q199_prefix_filter_jaccard"](spark, r_dir).write.format(
@@ -751,8 +747,7 @@ def _cold_stage_run(spark, qfn, d: str) -> dict:
     """One cold run with the per-stage shuffle/spill diff captured:
     wall, total spill delta, and the fresh stages sorted by spill then
     by written records (top 8)."""
-    clear_fragments()
-    clear_hot_key_cache()
+    clear_memos()
     pre = _stage_stats(spark)
     s0 = _spill_bytes(spark)
     t0 = time.perf_counter()
@@ -847,8 +842,7 @@ def q204_ab(reps: int, rnd: str) -> None:
             for arm, vals in Q204_ARMS:
                 for k, v in zip(flags, vals):
                     setattr(_dedup, k, v)
-                clear_fragments()
-                clear_hot_key_cache()
+                clear_memos()
                 s0 = _spill_bytes(spark)
                 t0 = time.perf_counter()
                 try:
@@ -1030,8 +1024,8 @@ def decade3_point(name: str, scales: str) -> None:
 
 def _decade3_methodology(scales: str) -> str:
     return (
-        "one fresh subprocess per query; every point cold (fragments "
-        "+ hot-key memo cleared, warmups=0, "
+        "one fresh subprocess per query; every point cold (every "
+        "plan-time memo cleared, warmups=0, "
         f"{RUNS} timed runs, a 3rd raw added when a point reads "
         "sub-5s so first-touch outliers are demoted by the median — "
         "VERDICT r12 ask #3); per-x ratios computed within each "
@@ -1051,8 +1045,6 @@ def decade3_fresh(rnd: str) -> None:
     COMPLETES (ADVICE r12: one bad child must not lose the multi-hour
     sweep), and a crashed child's completed legs are salvaged from its
     last cumulative PROBE_JSON line."""
-    import subprocess
-
     scales = os.environ.get("SPARK_GRAFT_DECADE_SCALES", "10,30,100")
     rs = [int(x) for x in scales.split(",")]
     # SPARK_GRAFT_DECADE_QUERIES reorders/subsets the sweep (comma
@@ -1066,6 +1058,47 @@ def decade3_fresh(rnd: str) -> None:
         if n
     ]
     result: dict[str, dict] = {}
+    scratch_root = tempfile.mkdtemp(prefix="bench_scaling_local_")
+    try:
+        for name in names:
+            result[name] = _decade3_child(name, scales, rs, scratch_root)
+            # incremental merge: the artifact is valid after every
+            # query, not only after the full multi-hour sweep (ADVICE r12)
+            _merge_round_artifact(
+                rnd,
+                "decade3_fresh",
+                {
+                    "methodology": _decade3_methodology(scales),
+                    "scales": scales,
+                    "queries": dict(result),
+                },
+            )
+    finally:
+        shutil.rmtree(scratch_root, ignore_errors=True)
+    print(json.dumps(result))
+
+
+def run_child(
+    cmd: list[str], scratch_root: str, name: str, **kwargs
+) -> subprocess.CompletedProcess:
+    """``subprocess.run(cmd)`` with the child's SPARK_LOCAL_DIRS set to
+    a fresh directory under ``scratch_root``, deleted when the child
+    exits. A crashed child JVM leaves its shuffle scratch behind (r13:
+    q204's failed R=100 leg stranded a 39 GB blockmgr dir that halved
+    the disk for every later child); deleting only directories this
+    parent created never touches a concurrent session's scratch."""
+    local = tempfile.mkdtemp(prefix=f"{name}-", dir=scratch_root)
+    try:
+        return subprocess.run(
+            cmd, env={**os.environ, "SPARK_LOCAL_DIRS": local}, **kwargs
+        )
+    finally:
+        shutil.rmtree(local, ignore_errors=True)
+
+
+def _decade3_child(name: str, scales: str, rs: list[int], scratch_root: str) -> dict:
+    """One query's fresh-subprocess decade sweep, with a failed child's
+    completed legs salvaged from its last cumulative PROBE_JSON line."""
 
     def _last_probe(stdout: str) -> dict:
         lines = [
@@ -1076,83 +1109,57 @@ def decade3_fresh(rnd: str) -> None:
             return {}
         return json.loads(lines[-1][len("PROBE_JSON "):]).get("scales", {})
 
-    for name in names:
-        t0 = time.perf_counter()
-        block: dict = {}
-        try:
-            r = subprocess.run(
-                [sys.executable, os.path.abspath(__file__),
-                 "--decade3-point", name, scales],
-                capture_output=True, text=True, timeout=5400, check=True,
-            )
-            d = _last_probe(r.stdout)
-            if not d:
-                raise IndexError("no PROBE_JSON line in child stdout")
-        except (subprocess.CalledProcessError, subprocess.TimeoutExpired,
-                IndexError, json.JSONDecodeError) as e:
-            # an R=100 point that exceeds the local pool/disk is a
-            # finding, not a silent hole — record it honestly, and
-            # salvage whatever legs the child DID finish (its
-            # cumulative PROBE_JSON lines)
-            err_txt = getattr(e, "stderr", "") or ""
-            block["err"] = type(e).__name__
-            block["stderr_tail"] = err_txt[-800:]
-            # the named root exception is what makes a failed leg a
-            # finding instead of a mystery (r12's q204 record carried
-            # 'No space left on device' only because it was re-probed
-            # by hand): keep every distinct exception line
-            named = sorted(
-                {
-                    ln.strip()[:200]
-                    for ln in err_txt.splitlines()
-                    if ("Exception" in ln or "Error" in ln)
-                    and "at " != ln.strip()[:3]
-                }
-            )
-            if named:
-                block["named_exceptions"] = named[:8]
-            try:
-                d = _last_probe(getattr(e, "stdout", "") or "")
-            except json.JSONDecodeError:
-                d = {}
-            print(name, "FAILED", type(e).__name__,
-                  f"(salvaged legs: {sorted(d)})", flush=True)
-        block.update(d)
-        for lo, hi in zip(rs, rs[1:]):
-            klo, khi = f"r{lo}", f"r{hi}"
-            if klo in d and khi in d:
-                block[f"ratio_{khi}_over_{klo}_per_x"] = round(
-                    d[khi]["sec"] / d[klo]["sec"] / (hi / lo), 3
-                )
-        block["subprocess_wall_sec"] = round(time.perf_counter() - t0, 1)
-        # a crashed child JVM leaves its shuffle scratch behind
-        # (r13: q204's failed R=100 leg stranded a 39 GB blockmgr dir
-        # that halved the disk for every later child and killed q199's
-        # R=100 leg, which had succeeded the same day with clean
-        # scratch). The parent runs no Spark of its own and children
-        # are strictly serialized, so sweeping the stale dirs between
-        # children is safe.
-        import glob as _glob
-        import shutil as _shutil
-
-        for stale in _glob.glob("/tmp/blockmgr-*") + _glob.glob(
-            "/tmp/spark-*"
-        ):
-            _shutil.rmtree(stale, ignore_errors=True)
-        result[name] = block
-        print(name, json.dumps(block), flush=True)
-        # incremental merge: the artifact is valid after every query,
-        # not only after the full multi-hour sweep (ADVICE r12)
-        _merge_round_artifact(
-            rnd,
-            "decade3_fresh",
-            {
-                "methodology": _decade3_methodology(scales),
-                "scales": scales,
-                "queries": dict(result),
-            },
+    t0 = time.perf_counter()
+    block: dict = {}
+    try:
+        r = run_child(
+            [sys.executable, os.path.abspath(__file__),
+             "--decade3-point", name, scales],
+            scratch_root, name,
+            capture_output=True, text=True, timeout=5400, check=True,
         )
-    print(json.dumps(result))
+        d = _last_probe(r.stdout)
+        if not d:
+            raise IndexError("no PROBE_JSON line in child stdout")
+    except (subprocess.CalledProcessError, subprocess.TimeoutExpired,
+            IndexError, json.JSONDecodeError) as e:
+        # an R=100 point that exceeds the local pool/disk is a
+        # finding, not a silent hole — record it honestly, and
+        # salvage whatever legs the child DID finish (its
+        # cumulative PROBE_JSON lines)
+        err_txt = getattr(e, "stderr", "") or ""
+        block["err"] = type(e).__name__
+        block["stderr_tail"] = err_txt[-800:]
+        # the named root exception is what makes a failed leg a
+        # finding instead of a mystery (r12's q204 record carried
+        # 'No space left on device' only because it was re-probed
+        # by hand): keep every distinct exception line
+        named = sorted(
+            {
+                ln.strip()[:200]
+                for ln in err_txt.splitlines()
+                if ("Exception" in ln or "Error" in ln)
+                and "at " != ln.strip()[:3]
+            }
+        )
+        if named:
+            block["named_exceptions"] = named[:8]
+        try:
+            d = _last_probe(getattr(e, "stdout", "") or "")
+        except json.JSONDecodeError:
+            d = {}
+        print(name, "FAILED", type(e).__name__,
+              f"(salvaged legs: {sorted(d)})", flush=True)
+    block.update(d)
+    for lo, hi in zip(rs, rs[1:]):
+        klo, khi = f"r{lo}", f"r{hi}"
+        if klo in d and khi in d:
+            block[f"ratio_{khi}_over_{klo}_per_x"] = round(
+                d[khi]["sec"] / d[klo]["sec"] / (hi / lo), 3
+            )
+    block["subprocess_wall_sec"] = round(time.perf_counter() - t0, 1)
+    print(name, json.dumps(block), flush=True)
+    return block
 
 
 def main() -> None:
@@ -1228,7 +1235,7 @@ def main() -> None:
 
         # warmups=0: codegen/class-load for these exact plans is already
         # paid by the r1/r10 passes above; every timed run is still cold
-        # (fragments + skew memo cleared). The whole decade2 set is
+        # (every plan-time memo cleared). The whole decade2 set is
         # dedup-family, so every point gets the 4-run dispersion
         # methodology (r10 ask #3).
         n2 = DISPERSION_RUNS if name in DISPERSION_QUERIES else RUNS
@@ -1266,8 +1273,7 @@ def main() -> None:
     # linear generation, ~9x is the quadratic pathology.
     q204_raw, q204_spill = [], []
     for _ in range(5):
-        clear_fragments()
-        clear_hot_key_cache()
+        clear_memos()
         s0 = _spill_bytes(spark)
         t0 = time.perf_counter()
         qmap["q204_containment_pairs"](spark, r2_dir).write.format(
@@ -1284,8 +1290,7 @@ def main() -> None:
     # and by written records are both kept.
     q204_stages = {}
     for lbl, dd in (("r10", r10_dir), (f"r{r2}", r2_dir)):
-        clear_fragments()
-        clear_hot_key_cache()
+        clear_memos()
         pre = _stage_stats(spark)
         qmap["q204_containment_pairs"](spark, dd).write.format("noop").mode(
             "overwrite"

@@ -48,10 +48,10 @@ def main() -> None:
             # gotcha); clearing between queries trades rebuild time for
             # a bounded memory envelope
             from astarte_data_updater_plant_spark.plans.fragments import (
-                clear_fragments,
+                clear_memos,
             )
 
-            clear_fragments()
+            clear_memos()
         try:
             df = qs[name](spark, sf_dir)
             if name in osql:

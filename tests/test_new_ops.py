@@ -187,19 +187,19 @@ def test_q42_q45_q47_int_arm_matrix(spark, name, flag, degen_docs_dir):
     the degenerate corpus. Fragments are cleared per setting so the
     pinned pair/label fragments can't mask the arm under test."""
     from astarte_data_updater_plant_spark.operators import dedup
-    from astarte_data_updater_plant_spark.plans.fragments import clear_fragments
+    from astarte_data_updater_plant_spark.plans.fragments import clear_memos
 
     spec = QUERIES[name]
     saved = dedup.Q42_INT_VERIFY
     dedup.Q42_INT_VERIFY = flag
-    clear_fragments()
+    clear_memos()
     try:
         for d in ("/root/testdata/sf0.001", degen_docs_dir):
             ok, msg = compare(spec.fn(spark, d), spec.oracle, d)
             assert ok, f"{name} int={flag} @ {d}: {msg}"
     finally:
         dedup.Q42_INT_VERIFY = saved
-        clear_fragments()
+        clear_memos()
 
 
 @pytest.mark.parametrize(
@@ -224,13 +224,13 @@ def test_q204_int_arm_matrix(spark, flags, degen_docs_dir):
     corpus and the degenerate corpus, whatever each arm's adoption
     outcome."""
     from astarte_data_updater_plant_spark.operators import dedup
-    from astarte_data_updater_plant_spark.plans.fragments import clear_fragments
+    from astarte_data_updater_plant_spark.plans.fragments import clear_memos
 
     spec = QUERIES["q204_containment_pairs"]
     saved = {k: getattr(dedup, k) for k in flags}
     for k, v in flags.items():
         setattr(dedup, k, v)
-    clear_fragments()
+    clear_memos()
     try:
         for d in ("/root/testdata/sf0.001", degen_docs_dir):
             ok, msg = compare(spec.fn(spark, d), spec.oracle, d)
@@ -238,7 +238,7 @@ def test_q204_int_arm_matrix(spark, flags, degen_docs_dir):
     finally:
         for k, v in saved.items():
             setattr(dedup, k, v)
-        clear_fragments()
+        clear_memos()
 
 
 def test_q224_incremental_equals_full_recompute(spark, degen_docs_dir):

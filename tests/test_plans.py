@@ -301,12 +301,10 @@ def test_near_dup_pair_pipeline_budget(spark):
     """The q42 pair pipeline's cold budget, moved off the declared query
     when it became a checkpoint + sort (r14): the shape every consumer
     (q42/q45/q47/q128/q144/q191/q224) actually executes."""
-    from astarte_data_updater_plant_spark.functions.ranks import clear_boundary_cache
     from astarte_data_updater_plant_spark.operators.dedup import _near_dup_pairs
-    from astarte_data_updater_plant_spark.plans.fragments import clear_fragments
+    from astarte_data_updater_plant_spark.plans.fragments import clear_memos
 
-    clear_fragments()
-    clear_boundary_cache()
+    clear_memos()
     s = plan_summary(_near_dup_pairs(spark, SF_DIR))
     # the r13 declared budget minus the presentation sort's exchange
     assert s["exchanges"] <= 2, s["exchanges"]
@@ -317,17 +315,15 @@ def test_near_dup_pair_pipeline_budget(spark):
 
 @pytest.mark.parametrize("name", sorted(PLAN_BUDGETS))
 def test_headline_plan_budgets(spark, qs, name):
-    from astarte_data_updater_plant_spark.functions.ranks import clear_boundary_cache
-    from astarte_data_updater_plant_spark.plans.fragments import clear_fragments
+    from astarte_data_updater_plant_spark.plans.fragments import clear_memos
 
     # budgets are for the COLD plan: a pinned fragment left by an
     # earlier test replaces subtrees with InMemoryTableScan and shifts
-    # the exchange/join counts. The boundary memo must go too — a warm
-    # memo skips the probe action, so a freshly re-pinned fragment is
-    # UNMATERIALIZED at plan time and its size stats can demote a
+    # the exchange/join counts. The rank bucket memo must go too — a
+    # warm memo skips the probe action, so a freshly re-pinned fragment
+    # is UNMATERIALIZED at plan time and its size stats can demote a
     # broadcast join (observed on q126: 3 -> 2 broadcast joins)
-    clear_fragments()
-    clear_boundary_cache()
+    clear_memos()
     max_ex, min_bcast, max_shj, max_nl = PLAN_BUDGETS[name]
     s = plan_summary(qs[name](spark, SF_DIR))
     assert s["exchanges"] <= max_ex, f"{name}: exchanges {s['exchanges']} > {max_ex}"
@@ -382,12 +378,12 @@ def test_no_single_partition_windows_anywhere(spark, qs):
     through ONE task ("Moving all data to a single partition") — banned
     from every batch query; global rank/ntile/prefix-sum must go through
     functions/ranks.with_global_order (range-partitioned two-phase)."""
-    from astarte_data_updater_plant_spark.plans.fragments import clear_fragments
+    from astarte_data_updater_plant_spark.plans.fragments import clear_memos
     from astarte_data_updater_plant_spark.plans.inspect import (
         empty_partition_windows,
     )
 
-    clear_fragments()
+    clear_memos()
     for name, fn in sorted(qs.items()):
         if name.startswith("s"):
             continue
@@ -400,16 +396,15 @@ def test_global_order_inputs_pinned_single_evaluation(spark, qs, name):
     """The two with_global_order call sites the r5/r6 advice flagged
     (q110's group totals, q144's hash-ring keys) must evaluate their
     upstream at most once per application: the input is fragment()-
-    pinned and the boundary probe is memoized by boundary_key, so a
+    pinned and the bucket column is memoized by boundary_key, so a
     REBUILD of the query plan fires ZERO Spark jobs — the probe action
     (the only plan-build-time action) is served from the memo and every
     execution branch reads the pinned InMemoryTableScan instead of
-    re-running the upstream lineage."""
-    from astarte_data_updater_plant_spark.functions.ranks import clear_boundary_cache
-    from astarte_data_updater_plant_spark.plans.fragments import clear_fragments
+    re-running the upstream lineage. After clear_memos() the next build
+    fires the cold build's jobs, probe included, again."""
+    from astarte_data_updater_plant_spark.plans.fragments import clear_memos
 
-    clear_fragments()
-    clear_boundary_cache()
+    clear_memos()
     sc = spark.sparkContext
 
     # cold build: allowed its one bounded probe action per rank input
@@ -429,28 +424,29 @@ def test_global_order_inputs_pinned_single_evaluation(spark, qs, name):
         "upstream re-evaluated per build"
     )
 
+    # after clear_memos() the build is as cold as the first one
+    clear_memos()
+    sc.setJobGroup(f"{name}_cleared", "plan build after clear_memos")
+    qs[name](spark, SF_DIR)
+    sc.setJobGroup("other", "")
+    cold_jobs = sc.statusTracker().getJobIdsForGroup(f"{name}_cold")
+    cleared_jobs = sc.statusTracker().getJobIdsForGroup(f"{name}_cleared")
+    assert len(cleared_jobs) == len(cold_jobs) > 0, (cold_jobs, cleared_jobs)
+
 
 def test_memo_caches_are_performance_hints_only(spark, qs):
-    """The application-lifetime memos (_HOT_KEY_CACHE, _BOUNDARY_CACHE,
-    fragments, the parquet _SCHEMA_CACHE) are keyed on the
-    immutable-snapshot assumption. Correctness must NEVER depend on
-    which memo state is live: a warm-cache run and a fully-cleared
-    cold run of the same query must produce byte-identical results —
-    the guard-rail the r6 verdict asked for (a live lakehouse would
-    add version keys; on snapshot inputs clearing is the invalidation)."""
-    from astarte_data_updater_plant_spark.functions.ranks import clear_boundary_cache
-    from astarte_data_updater_plant_spark.functions.skew import clear_hot_key_cache
-    from astarte_data_updater_plant_spark.plans.fragments import clear_fragments
-    from astarte_data_updater_plant_spark.sources import tables as tb
+    """The plan-time memo (hot-key lists, rank bucket columns, pinned
+    fragments, table leaves) is a performance hint. Correctness must
+    NEVER depend on which memo state is live: a warm-memo run and a
+    fully-cleared cold run of the same query must produce
+    byte-identical results — the guard-rail the r6 verdict asked for."""
+    from astarte_data_updater_plant_spark.plans.fragments import clear_memos
 
-    # q42 exercises the skew probe; q126 exercises boundary memo +
-    # fragments; both read through the schema memo.
+    # q42 exercises the skew probe; q126 exercises the rank bucket memo
+    # + fragments; both read through the table memo.
     for name in ("q42_lsh_near_dup_pairs", "q126_curriculum_tiers"):
         warm = sorted(map(tuple, qs[name](spark, SF_DIR).collect()))
-        clear_fragments()
-        clear_boundary_cache()
-        clear_hot_key_cache()
-        tb._SCHEMA_CACHE.clear()
+        clear_memos()
         cold = sorted(map(tuple, qs[name](spark, SF_DIR).collect()))
         assert warm == cold, f"{name}: cleared caches changed the result"
 
@@ -463,15 +459,11 @@ def test_with_global_order_degenerate_key_stays_keyed(spark):
     away, regressing to the banned single-partition WindowExec. The
     helper now keeps one cut from a degenerate sample — exact for any
     cut list — so the plan stays keyed and the outputs stay right."""
-    from astarte_data_updater_plant_spark.functions.ranks import (
-        clear_boundary_cache,
-        with_global_order,
-    )
+    from astarte_data_updater_plant_spark.functions.ranks import with_global_order
     from astarte_data_updater_plant_spark.plans.inspect import (
         empty_partition_windows,
     )
 
-    clear_boundary_cache()
     # one row (the q145 shape: cumsum over a 1-row score histogram)
     one = spark.createDataFrame([(1.5, 7)], "score double, cnt long")
     out = with_global_order(
@@ -499,15 +491,11 @@ def test_with_global_order_empty_input_stays_keyed(spark):
     bucket folds to lit(0) and the plan regresses to the banned
     single-partition WindowExec shape (ADVICE r13: the degenerate-key
     guard did not cover the zero-row sample)."""
-    from astarte_data_updater_plant_spark.functions.ranks import (
-        clear_boundary_cache,
-        with_global_order,
-    )
+    from astarte_data_updater_plant_spark.functions.ranks import with_global_order
     from astarte_data_updater_plant_spark.plans.inspect import (
         empty_partition_windows,
     )
 
-    clear_boundary_cache()
     empty = spark.createDataFrame([], "score double, cnt long")
     out = with_global_order(
         empty, ["score"], rank="r", cumsums=[("cnt", "excl", "exclusive")]
@@ -518,27 +506,54 @@ def test_with_global_order_empty_input_stays_keyed(spark):
 
 def test_memo_caches_evict_on_new_application(spark):
     """Dead-session memo entries must not accumulate in a long-lived
-    driver that restarts sessions (VERDICT r13 nit #4): the first use
-    under a new applicationId clears entries keyed by the old one."""
-    from astarte_data_updater_plant_spark.functions import ranks
+    driver that restarts sessions (VERDICT r13 nit #4): the first miss
+    under a new applicationId drops every entry keyed by the old one."""
+    from astarte_data_updater_plant_spark.plans import fragments
     from astarte_data_updater_plant_spark.sources import tables
 
-    # seed both modules' memos under the live session
     tables.load_table(spark, SF_DIR, "documents")
-    assert tables._TABLE_CACHE
-    ranks._BOUNDARY_CACHE[("dead-app", "k", 4)] = []
-    ranks._BUCKET_COL_CACHE[("dead-app", "k", 4)] = object()
-    tables._SCHEMA_CACHE[("dead-app", "p")] = None
-    tables._TABLE_CACHE[("dead-app", "p")] = object()
-    # simulate "the memos were filled under a different application"
-    tables._CACHE_APP[0] = "dead-app"
-    ranks._CACHE_APP[0] = "dead-app"
-    tables.load_table(spark, SF_DIR, "documents")
-    one = spark.createDataFrame([(1.0, 1)], "score double, cnt long")
-    ranks.with_global_order(one, ["score"], rank="r")
-    assert ("dead-app", "p") not in tables._TABLE_CACHE
-    assert ("dead-app", "p") not in tables._SCHEMA_CACHE
-    assert ("dead-app", "k", 4) not in ranks._BOUNDARY_CACHE
-    assert ("dead-app", "k", 4) not in ranks._BUCKET_COL_CACHE
-    # and the live session's entries were refilled
-    assert tables._TABLE_CACHE
+    sig = fragments.input_signature(SF_DIR)
+    dead = ("dead-app", SF_DIR, sig, "table:documents")
+    fragments._MEMO_CACHE[dead] = object()
+    fragments.memo(spark, SF_DIR, "evict-probe", lambda: 1)
+    assert dead not in fragments._MEMO_CACHE
+    # the live session's entries stay
+    assert tables.load_table(spark, SF_DIR, "documents") is tables.load_table(
+        spark, SF_DIR, "documents"
+    )
+    assert all(k[0] == spark.sparkContext.applicationId for k in fragments._MEMO_CACHE)
+
+
+def test_memo_sees_republished_input(spark, tmp_path):
+    """A republished input misses the memo: after ``events.parquet``
+    grows from 1,000 to 5,000 rows under the same live session, both the
+    table leaf and a fragment() built over it see the new rows."""
+    import time
+
+    import pyarrow.parquet as pq
+
+    from astarte_data_updater_plant_spark.plans.fragments import fragment
+    from astarte_data_updater_plant_spark.sources.tables import load_table
+
+    src = pq.read_table("/root/testdata/sf0.01/events.parquet")
+    d = str(tmp_path)
+
+    def publish(n: int) -> None:
+        pq.write_table(src.slice(0, n), f"{d}/events.parquet")
+
+    def evens() -> int:
+        return fragment(
+            spark, d, "republish_probe",
+            lambda: load_table(spark, d, "events").filter("event_id % 2 = 0"),
+        ).count()
+
+    def expected_evens(n: int) -> int:
+        return sum(1 for v in src.column("event_id")[:n].to_pylist() if v % 2 == 0)
+
+    publish(1000)
+    assert load_table(spark, d, "events").count() == 1000
+    assert evens() == expected_evens(1000)
+    time.sleep(0.01)  # a distinct mtime_ns even on coarse clocks
+    publish(5000)
+    assert load_table(spark, d, "events").count() == 5000
+    assert evens() == expected_evens(5000)

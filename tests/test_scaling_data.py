@@ -11,10 +11,13 @@ regression can't silently invalidate a future round's curve.
 
 from __future__ import annotations
 
+import os
+import sys
+
 import duckdb
 import pytest
 
-from bench_scaling import build_scaled
+from bench_scaling import build_scaled, run_child
 
 SRC = "/root/testdata/sf0.001"
 
@@ -77,14 +80,37 @@ def test_near_dup_pairs_scale_exactly_linearly(spark, scaled):
     """Cross-copy shingle overlap must be ZERO: the q42 pair count at
     R=2 equals exactly 2x the R=1 count (each copy reproduces the
     original near-dup structure, no cross-copy cliques)."""
-    from astarte_data_updater_plant_spark.plans.fragments import clear_fragments
+    from astarte_data_updater_plant_spark.plans.fragments import clear_memos
     from astarte_data_updater_plant_spark.plans.registry import queries_map
 
     r1, r2 = scaled
     q42 = queries_map()["q42_lsh_near_dup_pairs"]
-    clear_fragments()
+    clear_memos()
     n1 = q42(spark, r1).count()
     n2 = q42(spark, r2).count()
-    clear_fragments()
+    clear_memos()
     assert n1 > 0
     assert n2 == 2 * n1
+
+
+def test_child_scratch_sweep_spares_other_sessions(tmp_path):
+    """A sweep child gets its own SPARK_LOCAL_DIRS under the parent's
+    root, and only that directory is deleted when the child exits: a
+    concurrent session's scratch outside the root survives."""
+    root = tmp_path / "root"
+    root.mkdir()
+    other = tmp_path / "blockmgr-concurrent"
+    other.mkdir()
+    (other / "shuffle_0_0_0.data").write_text("live")
+    child = (
+        "import os; d = os.environ['SPARK_LOCAL_DIRS']; "
+        "os.makedirs(os.path.join(d, 'blockmgr-child')); print(d)"
+    )
+    r = run_child(
+        [sys.executable, "-c", child], str(root), "q42",
+        capture_output=True, text=True, check=True,
+    )
+    local = r.stdout.strip()
+    assert os.path.dirname(local) == str(root)
+    assert not os.path.exists(local)
+    assert (other / "shuffle_0_0_0.data").read_text() == "live"

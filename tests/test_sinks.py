@@ -5,16 +5,20 @@ from __future__ import annotations
 
 import pytest
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
+from astarte_data_updater_plant_spark.storage.jobs import run_maintenance
 from astarte_data_updater_plant_spark.storage.layout import compact_properties
 from astarte_data_updater_plant_spark.streaming.pipeline import (
     MESSAGE_SCHEMA,
+    run_batch,
     run_stream,
 )
 from astarte_data_updater_plant_spark.streaming.sinks import (
     attach_sink,
     with_retry,
+    write_outputs_batch,
 )
 
 from .fixtures_flow import simple_flow_messages
@@ -70,6 +74,23 @@ def test_device_snapshots(spark, sunk_dir):
     assert snaps.count() == 0 or "connected" in snaps.columns
 
 
+def test_maintenance_on_telemetry_only_tree(spark, tmp_path):
+    """A sink tree that never received a property write has an empty
+    property log; maintenance reports zero live properties instead of
+    failing to infer the log's schema."""
+    from astarte_data_updater_plant_spark.sources.stream import (
+        events_as_messages,
+        telemetry_interface,
+    )
+
+    base = str(tmp_path / "tables")
+    msgs = events_as_messages(spark, "/root/testdata/sf0.001")
+    write_outputs_batch(run_batch(msgs, interfaces=(telemetry_interface(),)), base)
+    stats = run_maintenance(spark, base, F.current_timestamp())
+    assert stats["properties_live"] == 0
+    assert stats["datastreams_live"] > 0
+
+
 def test_with_retry_backs_off_then_raises():
     calls = []
 
@@ -90,3 +111,14 @@ def test_with_retry_backs_off_then_raises():
 
     with_retry(flaky, max_exp=5, base_sleep_s=0.0001)
     assert len(ok_after) == 3
+
+    # a non-transient analysis error is raised on the first attempt
+    analysis = []
+
+    def bad_schema():
+        analysis.append(1)
+        raise AnalysisException("schema mismatch")
+
+    with pytest.raises(AnalysisException):
+        with_retry(bad_schema, max_exp=3, base_sleep_s=0.0001)
+    assert len(analysis) == 1
