@@ -1,5 +1,5 @@
 """Micro-batch sinks: the reference's Cassandra writes + AMQP event
-publishes re-expressed as idempotent foreachBatch materializers.
+publishes re-expressed as foreachBatch materializers.
 
 Each micro-batch of the union output frame (pipeline.OUTPUT_SCHEMA)
 fans out to:
@@ -8,30 +8,39 @@ fans out to:
   (queries.ex:157-197) in the partitioned storage layout.
 - ``property_log`` — append-only upsert/tombstone log
   (queries.ex:87-155); ``storage.layout.compact_properties`` folds it
-  into the LWW state, so replays are harmless (same key, same
-  timestamp -> same winner).
+  into the LWW state.
 - ``events_log`` — the AMQP events exchange stand-in
   (triggers_handler.ex:377-459): one row per SimpleEvent, partitioned
   by event_type for consumer-side pruning.
 - ``dead_letters`` — the A30 error side-channel (impl.ex:463-524).
+- ``device_commands`` — clean-session / disconnect asks (A29).
 - ``devices`` — snapshot rows (queries.ex:460-510); latest snapshot
   per device wins at read time.
 
+The six writes share nothing but their input, as the reference's
+per-table inserts and event publishes do, so they run concurrently
+(``storage.jobs.run_concurrently``) over the micro-batch, which is
+cached and materialised once before the fan-out.
+
 Publish retry mirrors triggers_handler.ex:404-430: exponential
-backoff with exponent cap 10. Idempotence + at-least-once retry is
-the same delivery contract the reference offers (its AMQP publishes
-are retried and consumers dedup on event id).
+backoff with exponent cap 10. Delivery is at-least-once: a replayed
+micro-batch appends its rows again. Only ``property_log`` (same key,
+same timestamp -> same LWW winner) and ``devices`` (latest snapshot
+wins) absorb the duplicates; ``individual_datastreams``,
+``events_log``, ``dead_letters`` and ``device_commands`` keep them.
 """
 
 from __future__ import annotations
 
 import time
+from functools import partial
 from typing import Callable
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..storage.jobs import run_concurrently
 from ..storage.layout import write_device_table
 from .pipeline import (
     PROPERTY_JSON_SCHEMA,
@@ -93,41 +102,44 @@ def property_log_table(outputs: DataFrame) -> DataFrame:
 
 
 def write_outputs_batch(outputs: DataFrame, base_dir: str) -> None:
-    """Materialize one micro-batch into the storage layout. Each write
-    is wrapped in the publish retry; all writes are appends of
-    deterministic rows, so a retried batch only duplicates rows that
-    downstream LWW/dedup semantics already tolerate."""
+    """Materialize one micro-batch into the storage layout.
+
+    The input is cached and materialised by one action first, so the
+    fold behind it runs exactly once however the writes interleave.
+    The six table writes then run concurrently, each wrapped in the
+    publish retry. Every write finishes before the first failure is
+    re-raised, and only then is the input unpersisted. All writes are
+    appends, so a retried or replayed batch duplicates rows in every
+    table but ``property_log`` and ``devices`` (see the module notes)."""
     outputs = outputs.cache()
     try:
-        ds = datastream_table(outputs)
-        with_retry(lambda: write_device_table(ds, f"{base_dir}/individual_datastreams"))
-        plog = property_log_table(outputs)
-        with_retry(
+        # a shuffle-free action: count() would add a second job
+        outputs.write.format("noop").mode("overwrite").save()
+        writes = [
             lambda: write_device_table(
-                plog,
+                datastream_table(outputs), f"{base_dir}/individual_datastreams"
+            ),
+            lambda: write_device_table(
+                property_log_table(outputs),
                 f"{base_dir}/property_log",
                 order=("device_id", "interface", "path", "reception_timestamp"),
-            )
-        )
-        ev = events_table(outputs)
-        with_retry(
-            lambda: ev.repartition("event_type")
+            ),
+            lambda: events_table(outputs)
+            .repartition("event_type")
             .write.partitionBy("event_type")
             .mode("append")
-            .parquet(f"{base_dir}/events_log")
-        )
-        errs = errors_table(outputs)
-        with_retry(
-            lambda: errs.write.mode("append").parquet(f"{base_dir}/dead_letters")
-        )
-        cmds = commands_table(outputs)
-        with_retry(
-            lambda: cmds.write.mode("append").parquet(f"{base_dir}/device_commands")
-        )
-        snaps = device_snapshots_table(outputs)
-        with_retry(
-            lambda: snaps.write.mode("append").parquet(f"{base_dir}/devices")
-        )
+            .parquet(f"{base_dir}/events_log"),
+            lambda: errors_table(outputs)
+            .write.mode("append")
+            .parquet(f"{base_dir}/dead_letters"),
+            lambda: commands_table(outputs)
+            .write.mode("append")
+            .parquet(f"{base_dir}/device_commands"),
+            lambda: device_snapshots_table(outputs)
+            .write.mode("append")
+            .parquet(f"{base_dir}/devices"),
+        ]
+        run_concurrently(outputs.sparkSession, [partial(with_retry, w) for w in writes])
     finally:
         outputs.unpersist()
 

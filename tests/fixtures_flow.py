@@ -8,6 +8,7 @@ import zlib
 from datetime import datetime, timezone
 
 from astarte_data_updater_plant_spark.functions.payloads import encode_document
+from astarte_data_updater_plant_spark.streaming.pipeline import MESSAGE_SCHEMA
 
 REALM = "autotestrealm"
 DEVICE = "f0VMRgIBAQAAAAAAAAAAAA"
@@ -87,3 +88,11 @@ def simple_flow_messages() -> list[dict]:
         dict(base, message_id="m14", reception_timestamp=_t(13), msg_type="disconnection"),
     ]
     return msgs
+
+
+def messages_frame(spark, msgs: list[dict] | None = None):
+    """``msgs`` (default: the simple flow) as a MESSAGE_SCHEMA frame."""
+    return spark.createDataFrame(
+        [tuple(m[f.name] for f in MESSAGE_SCHEMA.fields) for m in msgs or simple_flow_messages()],
+        MESSAGE_SCHEMA,
+    )

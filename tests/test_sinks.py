@@ -3,6 +3,10 @@ partitioned storage tables, then read back and check semantics."""
 
 from __future__ import annotations
 
+import glob
+import os
+import time
+
 import pytest
 
 from pyspark.errors import AnalysisException
@@ -21,24 +25,91 @@ from astarte_data_updater_plant_spark.streaming.sinks import (
     write_outputs_batch,
 )
 
-from .fixtures_flow import simple_flow_messages
+from .fixtures_flow import messages_frame, simple_flow_messages
 
 
 @pytest.fixture(scope="module")
 def sunk_dir(spark, tmp_path_factory):
+    """The simple flow streamed through run_stream -> attach_sink as two
+    source files, one micro-batch each (split in reception order, so
+    the device state carried across the batches sees the whole flow)."""
     base = tmp_path_factory.mktemp("sinks")
     src = str(base / "src")
     out = str(base / "tables")
     ckpt = str(base / "ckpt")
-    msgs = simple_flow_messages()
-    spark.createDataFrame(
-        [tuple(m[f.name] for f in MESSAGE_SCHEMA.fields) for m in msgs],
-        MESSAGE_SCHEMA,
-    ).write.parquet(src)
-    stream = spark.readStream.schema(MESSAGE_SCHEMA).parquet(src)
+    msgs = sorted(simple_flow_messages(), key=lambda m: m["reception_timestamp"])
+    files: list[str] = []
+    for half in (msgs[:7], msgs[7:]):
+        messages_frame(spark, half).coalesce(1).write.mode("append").parquet(src)
+        (new,) = set(glob.glob(f"{src}/part-*.parquet")) - set(files)
+        files.append(new)
+    # the file source orders by mtime: stamp the files in write order
+    now = time.time()
+    for i, f in enumerate(files):
+        os.utime(f, (now - 2.0 * (len(files) - i),) * 2)
+    stream = (
+        spark.readStream.schema(MESSAGE_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
     query = attach_sink(run_stream(stream), out, ckpt)
     query.awaitTermination(600)
+    assert len(query.recentProgress) == 2
     return out
+
+
+def _table_counts(spark, base: str) -> dict:
+    """Row counts of the tables run_stream and run_batch both feed, the
+    event and dead-letter channels per class (devices is batch-only:
+    the streaming fold emits no snapshots)."""
+    def per(table: str, col: str) -> dict:
+        df = spark.read.parquet(f"{base}/{table}")
+        return {r[col]: r["count"] for r in df.groupBy(col).count().collect()}
+
+    def rows(table: str) -> int:
+        try:
+            return spark.read.parquet(f"{base}/{table}").count()
+        except AnalysisException as e:  # only empty appends: no schema
+            assert e.getCondition() == "UNABLE_TO_INFER_SCHEMA"
+            return 0
+
+    return {
+        "individual_datastreams": rows("individual_datastreams"),
+        "property_log": rows("property_log"),
+        "device_commands": rows("device_commands"),
+        "events_log": per("events_log", "event_type"),
+        "dead_letters": per("dead_letters", "error"),
+    }
+
+
+def test_stream_sink_matches_batch_sink(spark, sunk_dir, tmp_path):
+    """foreachBatch -> write_outputs_batch over two micro-batches lands
+    the same rows as one write_outputs_batch over run_batch."""
+    batch = str(tmp_path / "batch")
+    write_outputs_batch(run_batch(messages_frame(spark)), batch)
+    got, want = _table_counts(spark, sunk_dir), _table_counts(spark, batch)
+    assert got == want
+    assert got["individual_datastreams"] > 0 and got["dead_letters"]
+
+
+def test_failed_write_is_raised_after_the_others_land(spark, tmp_path):
+    """One table write failing (a regular file where dead_letters/
+    should be) fails the batch with that error, but only after the
+    other five writes have completed, and the input is unpersisted."""
+    base = tmp_path / "tables"
+    base.mkdir()
+    (base / "dead_letters").write_text("not a directory")
+    outputs = run_batch(messages_frame(spark))
+    with pytest.raises(Exception, match="dead_letters"):
+        write_outputs_batch(outputs, str(base))
+    for table in (
+        "individual_datastreams", "property_log", "events_log",
+        "device_commands", "devices",
+    ):
+        assert (base / table / "_SUCCESS").is_file(), table
+    assert spark.read.parquet(str(base / "individual_datastreams")).count() > 0
+    level = outputs.storageLevel
+    assert not (level.useMemory or level.useDisk)
 
 
 def test_datastreams_landed_partitioned(spark, sunk_dir):
@@ -88,7 +159,9 @@ def test_maintenance_on_telemetry_only_tree(spark, tmp_path):
     write_outputs_batch(run_batch(msgs, interfaces=(telemetry_interface(),)), base)
     stats = run_maintenance(spark, base, F.current_timestamp())
     assert stats["properties_live"] == 0
-    assert stats["datastreams_live"] > 0
+    assert not os.path.exists(f"{base}/individual_properties")
+    vacuumed = spark.read.parquet(f"{base}/individual_datastreams_vacuumed").count()
+    assert stats["datastreams_live"] == vacuumed > 0
 
 
 def test_with_retry_backs_off_then_raises():
