@@ -27,7 +27,7 @@ from __future__ import annotations
 import math
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.ranks import with_global_order
@@ -249,6 +249,17 @@ def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _int32_shingles() -> Column:
+    """The ``shingles`` array with 4-byte elements, for the exact-verify
+    joins of q42, q199 and q204. Shingle hashes are 32-bit values
+    (``shingle_h32``) held in array<bigint>, so x -> (x - 2^31) cast to
+    int is a bijection: array_intersect sizes, and hence every Jaccard
+    and containment score, are unchanged, while the array-carrying
+    verify rows pack at half the bytes (Q199_CANDGEN_AB_r11.json,
+    Q45_COMPONENTS_AB_r12.json, Q204_ATTRIB_AB_r13.json)."""
+    return F.transform("shingles", lambda x: (x - F.lit(2147483648)).cast("int"))
+
+
 def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, h0..h7): 8 min-wise hashes over the shingle set —
     array_min over a transform, per row, shuffle-free.
@@ -380,35 +391,6 @@ _NEAR_DUP_CTES_SQL = f"""
 """
 
 
-#: r12 arm (VERDICT r11 ask #3 — attack the components/election family
-#: q45/q47, whose R=30 cost is dominated by the shared q42 pair
-#: pipeline: decade2 r30 medians q42 72.3s vs q45 85.4s vs q47 98.3s,
-#: and r10's q47_variance probe attributed the family's dispersion to
-#: a stable ~41 GB/run spill): ride the q199 INT trick through q42's
-#: verify joins. Shingle hashes are 32-bit values in array<bigint>;
-#: the verify only needs intersection/union SIZES, so both sides map
-#: x -> (x - 2^31) cast to INT — a bijection, so array_intersect
-#: cardinality (hence jaccard, hence the pair set, hence q45's
-#: components and q47's election) is preserved exactly. UnsafeRow
-#: packs array elements at element width, so the array-carrying
-#: verify rows halve their in-flight bytes, the same mechanism the
-#: r11 q199 A/B measured as a deterministic 39.5% spill cut.
-#: ADOPTED r12 (Q45_COMPONENTS_AB_r12.json, strict legacy/int
-#: interleave x4 at R=30 in one session, q47 end-to-end): spill
-#: 42.7 GB/run median -> ZERO in all four int reps — the narrowed
-#: verify rows fit the unified pool outright at this scale — at
-#: wall-clock parity (median 84.4s vs 87.1s, 0.969x, inside the
-#: family's dispersion envelope). The same session's attribution pass
-#: localizes why this is the right arm: q45's cold R=30 wall is 98%
-#: the q42 pair pipeline ("pairs_and_seed" 116.6s of 118.5s; the
-#: label-propagation loop converges in 2 rounds costing 1.5s total),
-#: and the run's ~43 GB spill sits in exactly two 34-task stages that
-#: shuffle the 30.1M array-carrying verify rows (23.1 + 20.5 GB).
-#: Parity of both arm settings is pinned by
-#: tests/test_new_ops.py::test_q42_q45_q47_int_arm_matrix.
-Q42_INT_VERIFY = True
-
-
 @register(
     "q42_lsh_near_dup_pairs",
     f"""
@@ -421,11 +403,10 @@ Q42_INT_VERIFY = True
     "Jaccard (int arithmetic, hash-stable) verifies, threshold 0.5. "
     "At 100 TB each stage remains a keyed shuffle; band-bucket sizes "
     "stay bounded because identical shingle signatures imply "
-    "near-identical documents. r12: the verify arrays ride as "
-    "int-narrowed 4-byte elements (Q42_INT_VERIFY, a lossless "
-    "bijection on the 32-bit shingle hashes) — adopted after an "
-    "interleaved R=30 A/B on the q47 consumer cut the verify-shuffle "
-    "spill from ~43 GB/run to deterministic zero at wall parity "
+    "near-identical documents. The verify arrays ride as "
+    "int-narrowed 4-byte elements (a lossless bijection on the 32-bit "
+    "shingle hashes), which cut the q47 consumer's verify-shuffle "
+    "spill from ~43 GB/run to zero at wall parity at R=30 "
     "(Q45_COMPONENTS_AB_r12.json).",
 )
 def q42_lsh_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -505,16 +486,7 @@ def _near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # intersect them as arrays — candidate count is tiny relative to
     # the corpus, so carrying the arrays through two keyed joins beats
     # re-exploding the whole shingle stream
-    if Q42_INT_VERIFY:
-        # 32-bit hash values: (x - 2^31) cast to int is a bijection,
-        # so array_intersect/size (hence jaccard) are preserved
-        # exactly while the verify rows' array elements pack at 4
-        # bytes instead of 8 (see the toggle doc above)
-        sh_verify = F.transform(
-            "shingles", lambda x: (x - F.lit(2147483648)).cast("int")
-        )
-    else:
-        sh_verify = F.col("shingles")
+    sh_verify = _int32_shingles()
     sets_a = sa.select(F.col("doc_id").alias("doc_a"), sh_verify.alias("sh_a"))
     sets_b = sa.select(F.col("doc_id").alias("doc_b"), sh_verify.alias("sh_b"))
     inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
@@ -667,20 +639,7 @@ _COMPONENT_CTES_SQL = """
 """
 
 
-#: per-build attribution log for q45's iterative label propagation
-#: (VERDICT r11 ask #3): (stage, seconds, label_sum_decrease) appended
-#: per driver-side action inside ``_labels`` — "pairs_and_seed" covers the
-#: whole q42 pair pipeline + edge/seed materialization, then one row
-#: per propagate+jump round. Driver-side list, bounded by the 32-round
-#: safety cap; read by bench_scaling's --q45-ab attribution block.
-#: Only populated on a COLD build (the converged label table is a
-#: pinned fragment, so warm consumers never re-enter the loop).
-Q45_ITER_STATS: list[tuple] = []
-
-
-def _min_label_propagation(
-    pairs: DataFrame, stats: list | None = None, seed_t0: float | None = None
-) -> DataFrame:
+def _min_label_propagation(pairs: DataFrame) -> DataFrame:
     """Connected-component labels for an undirected edge list.
 
     ``pairs`` is any two-column (a, b) pair frame; returns
@@ -691,12 +650,7 @@ def _min_label_propagation(
     localCheckpoint each round — no driver-side graph, no quadratic
     closure. Shared by q45 (full corpus) and q224 (the reduced
     touched-components graph), so the incremental operator provably
-    runs the SAME machinery on a much smaller input. Optional
-    ``stats`` list receives (stage, seconds, label_sum_decrease) rows —
-    q45's Q45_ITER_STATS attribution hook (zero decrease == converged
-    round; see the monotone-sum convergence probe below)."""
-    import time as _time
-
+    runs the SAME machinery on a much smaller input."""
     cols = pairs.columns
     edges = (
         pairs.union(pairs.select(cols[1], cols[0]))
@@ -755,15 +709,7 @@ def _min_label_propagation(
         ).collect()[0][0]
 
     prev_sum = _label_sum(labels)
-    if stats is not None and seed_t0 is not None:
-        # the seed's sum probe is the first ACTION (it materializes the
-        # lazy seed checkpoint): everything timed into it is the pair
-        # pipeline + edge materialization + seed + first probe
-        stats.append(
-            ("pairs_and_seed", round(_time.perf_counter() - seed_t0, 3), None)
-        )
-    for _it in range(32):  # safety bound far above log2(corpus)
-        t_it0 = _time.perf_counter()
+    for _ in range(32):  # safety bound far above log2(corpus)
         # propagate: every vertex takes the min label over itself and
         # its neighbors — one keyed equi-join + partial/final min agg
         nbr = (
@@ -795,19 +741,11 @@ def _min_label_propagation(
             .localCheckpoint(eager=False)
         )
         new_sum = _label_sum(jumped)
-        # exact change indicator (see the monotonicity argument above);
-        # the stats row records the total label DECREASE this round —
-        # zero iff the round was a no-op — instead of the old
-        # changed-row count (same zero/non-zero semantics, and the
-        # magnitude additionally says how far from the fixpoint the
-        # round landed)
+        # exact change indicator (see the monotonicity argument above):
+        # the label sum stops decreasing iff the round was a no-op
         delta = 0 if prev_sum is None else int(prev_sum - new_sum)
         labels = jumped
         prev_sum = new_sum
-        if stats is not None:
-            stats.append(
-                (f"iter_{_it}", round(_time.perf_counter() - t_it0, 3), delta)
-            )
         if delta == 0:
             break
     return labels
@@ -837,14 +775,8 @@ def _min_label_propagation(
 )
 def q45_near_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _labels() -> DataFrame:
-        import time as _time
-
-        Q45_ITER_STATS.clear()
-        t_pairs0 = _time.perf_counter()
         pairs = _near_dup_pairs(spark, sf_dir).select("doc_a", "doc_b")
-        return _min_label_propagation(
-            pairs, stats=Q45_ITER_STATS, seed_t0=t_pairs0
-        )
+        return _min_label_propagation(pairs)
 
     # pinned: the iterative loop runs ACTIONS at build time, and four
     # consumers re-derive it per session (q45 itself, q47's election,
@@ -1699,175 +1631,6 @@ def q198_dedup_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: operating points
 PREFIX_JACCARD_MIN = 0.6
 
-#: q199 spill experiment (VERDICT r8 ask #4 / r10 item #3): when True,
-#: the verify stage semi-join-prefilters ``sets`` to documents that
-#: actually appear in a surviving candidate pair, so the two
-#: array-carrying joins shuffle only candidate docs' shingle arrays
-#: instead of the whole corpus's. The candidate pair list — just two
-#: LONG columns — is localCheckpoint'd so feeding both the prefilter
-#: and the verify join never recomputes the self-join; AQE is free to
-#: broadcast the (typically tiny) candidate-doc-id side of the semi
-#: join, which removes the full-array shuffle entirely. Identical
-#: results by construction (the verify join's keys are unchanged —
-#: only non-matching build rows are shed early); parity is pinned by
-#: test_q199_slim_arm_matches_oracle.
-#:
-#: REFUTED at R=30 (BENCH_SCALING_r10 ``q199_slim_experiment``,
-#: strict default/slim ×4 interleave in one session): slim is 1.19×
-#: SLOWER (median 227.6s vs 191.1s, best-of 215.4 vs 180.2) and
-#: spills 3.6× MORE (median 312 GB/run vs 88 GB/run). Cause: at
-#: t=0.6 on this corpus most documents survive the candidate filter,
-#: so the semi join sheds few build rows while the eager
-#: localCheckpoint materializes the full candidate list and the
-#: distinct + semi join add two extra shuffles of their own — the
-#: default plan's single-pass verify join is already the right shape.
-#: The toggle stays for reproducibility; default remains OFF.
-Q199_SEMI_PREFILTER = False
-
-#: q199 verify-join strategy experiment (r10, from the per-stage spill
-#: attribution of the R=30 run): the two verify joins dominate the
-#: operator's spill — each is a 256-task sort-merge reduce stage that
-#: reads only ~13 GB of shuffle yet spills 70-75 GB, because SMJ must
-#: SORT rows carrying the full shingle arrays and Tungsten's in-memory
-#: array rows inflate ~5x over the compressed shuffle format. When
-#: True, both verify joins carry a ``shuffle_hash`` hint with the
-#: COMPACT side as the build: the (doc_a, doc_b) two-LONG candidate
-#: table builds the first hash map, the one-row-per-doc ``sets_b``
-#: builds the second, and the array-carrying probe side STREAMS with
-#: no sort at all. Join keys, filters, and output are unchanged —
-#: result-identical by construction; parity pinned at sf0.001 +
-#: degenerate corpus by test_q199_hash_verify_matches_oracle. The
-#: build ROW counts are bounded (candidates are filter-bounded pairs
-#: of longs; sets_b is one row per document) but sets_b's build rows
-#: carry the full shingle arrays, so its per-partition hash maps are
-#: bounded in rows, NOT in bytes — consistent with the observed
-#: build-map IOException cascade below (ADVICE r10).
-#:
-#: REFUTED at R=30 (r10 interleaved A/B, plan verified to carry both
-#: ShuffledHashJoins): per-run spill did NOT drop — 92.8 GB hash vs
-#: 87.6 GB default — because on typical runs the operator's spill is
-#: dominated by the candidate-GENERATION stage (the ~89 GB map-side
-#: stage in the per-stage attribution), not the verify sorts, which
-#: only spill on adverse GC interleavings (the 260+ GB outlier runs);
-#: wall clock showed no win (hash 283s between interleaved defaults
-#: of 451s cold / 170s warm) and the hash arm's rep-2 died in a
-#: shuffle-file IOException cascade under build-map memory pressure.
-#: Toggle stays for reproducibility; default remains OFF.
-#:
-#: r11 re-attribution CORRECTS the r10 reading of the "~89 GB
-#: map-side stage": per-stage metrics on a fresh R=30 run show the
-#: candidate self-join + pair distinct spills only ~1.5 GB (171M raw
-#: pair rows, two longs each) — the ~86 GB spill sits in the 35-task
-#: stage that attaches ``sh_a`` to the 104M distinct candidate pairs
-#: and SHUFFLE-WRITES the array-carrying rows by doc_b for the second
-#: verify join (reads 1.1 GB of compact pairs, writes 12.9 GB
-#: compressed, pages ~830 Tungsten bytes/row = 86 GB through spill;
-#: the reduce-side verify sort itself spilled ZERO on the probe run).
-#: The r11 arms attacked it from three sides — fewer pairs (ASYM,
-#: adopted), narrower rows (INT, adopted), no reduce sort (HASH2,
-#: refuted: the sort wasn't the spiller) — see the toggles below.
-Q199_HASH_VERIFY = False
-
-#: r11 arm A — asymmetric AllPairs prefixes (Bayardo et al. WWW'07
-#: s3.1 "exploiting the threshold during indexing"; Xiao et al.
-#: WWW'08): a pair (x, y) with J >= t and |x| <= |y| has overlap
-#: alpha >= ceil(2t/(1+t) * |x|), so the SMALLER side of any
-#: surviving pair only needs its first |x| - ceil(2t/(1+t)*|x|) + 1
-#: shingles in the join window (~0.25n at t = 0.6) while the larger
-#: side keeps the full Jaccard prefix (~0.4n). Implemented as one
-#: extra lossless predicate in the self-join condition (the smaller
-#: side's pos must fall inside its SHORT prefix; ties broken by
-#: doc_id, matching the a.doc_id < b.doc_id pair identity), so the
-#: prefix frame, the skew guard, and the hot-key probe are all
-#: unchanged — only per-bucket pair fan-out shrinks (expected
-#: ~0.625x: short*long instead of long*long). Losslessness: with
-#: alpha_true = ceil(t/(1+t)(|x|+|y|)), the prefix lemma guarantees a
-#: common element inside BOTH (n - alpha_true + 1)-prefixes, and the
-#: pair's FIRST common element precedes it in the shared order, so
-#: the first-common-element row both exists in the joined window and
-#: passes the positional filter. ADOPTED r11: interleaved R=30 A/B
-#: (Q199_CANDGEN_AB_r11 / BENCH_SCALING_r11 q199_candgen_experiment)
-#: measured 0.928x wall vs legacy (median 173.0s vs 186.4s; two of
-#: the three interleaved reps beat legacy's best run — ADVICE r11
-#: corrected an earlier over-claim here) with total spill
-#: unchanged — on this corpus the DISTINCT candidate set barely
-#: shrinks (most candidate pairs also collide inside the short
-#: window), so the win is the pre-distinct join fan-out, not the
-#: wide-row shuffle. Default ON.
-Q199_ASYM_PREFIX = True
-
-#: r11 arm B — narrow verify rows: shingle hashes are 32-bit values
-#: (shingle_h32) riding in array<bigint>; the verify join only needs
-#: intersection/union SIZES, so both sides map x -> (x - 2^31) cast
-#: to INT (a bijection — array_intersect cardinality is preserved
-#: exactly) before the arrays are attached to candidate pairs.
-#: UnsafeRow packs array elements at element width (unlike top-level
-#: fields), so every stage that pages the array-carrying verify rows
-#: through Tungsten memory halves its bytes/row. ADOPTED r11: the
-#: interleaved R=30 A/B measured a DETERMINISTIC 39.5% spill cut
-#: (53.34 GB per run, byte-identical across reps, vs legacy's
-#: ~88 GB) — the named r10 target was exactly this spill — at
-#: wall-clock parity (medians inside the family's +-30% dispersion
-#: envelope; the arm's best run, 132.7s, was the fastest of all 15).
-#: Default ON.
-Q199_INT_VERIFY = True
-
-#: r11 arm C — the surviving half of the refuted Q199_HASH_VERIFY:
-#: hint ONLY the second verify join as shuffle_hash with the
-#: one-row-per-doc sets_b as build side, so the array-carrying probe
-#: rows shuffle by doc_b but never SORT on the reduce side. The
-#: first join stays SMJ — r10's failure mode was building a hash map
-#: over the 104M-pair side; sets_b's build is bounded in rows (one
-#: per doc) though not in bytes (rows carry the arrays).
-#:
-#: REFUTED r11 (interleaved R=30 A/B, Q199_CANDGEN_AB_r11): wall
-#: 1.076x vs legacy and spill 0.994x — no win, because the per-stage
-#: attribution shows the reduce-side verify SORT does not spill on
-#: typical runs; the ~86 GB sits in the shuffle WRITE of the
-#: array-carrying rows (Tungsten page spill at ~830 B/row), which a
-#: hash join on the reduce side cannot remove. That write is what
-#: Q199_INT_VERIFY halves. Toggle stays for reproducibility; default
-#: OFF.
-Q199_HASH2_VERIFY = False
-
-#: r12 arm D — the last untried lossless verify shape (VERDICT r11 ask
-#: #5): ARRAY-FREE verify. Instead of attaching both shingle ARRAYS to
-#: every candidate pair (the 53.3 GB/run residual spill lives in the
-#: shuffle WRITE of those array-carrying rows), count the intersection
-#: from the exploded inverted index: candidates (two LONGs) join the
-#: (doc, shingle) stream on doc_a, the result joins the same stream on
-#: (doc_b, shingle), and a groupBy(doc_a, doc_b) COUNT is the exact
-#: n_shared — only long-rows ever shuffle, no arrays in flight.
-#: Set sizes ride the exploded stream (n_sh), so union size needs no
-#: further join. Pairs with zero common shingles drop out of the inner
-#: joins, which is output-identical (they cannot pass t = 0.6).
-#: The a-priori arithmetic is against it — the first join's output is
-#: candidate_pairs x avg|A| rows (~5.4e9 at R=30: 104M pairs x ~52
-#: shingles/doc) shuffled by (doc_b, shingle), ~130 GB of 24-byte rows
-#: vs the array plan's ~104M 400-byte rows — but the array plan's rows
-#: page through Tungsten at ~5x their compressed width while the long
-#: rows stay flat, so the probe decides.
-#: REFUTED r12 (Q199_INDEX_AB_r12.json, strict adopted/index x3
-#: interleave at R=10 in one session): 5.69x wall (median 498.3s vs
-#: 87.5s) and 511x spill (median 343.7 GB vs 0.67 GB per run — the
-#: adopted arm's spill is byte-identical across reps, the INT
-#: signature) — the exploded (doc_b, shingle) shuffle costs far more
-#: than the array rows it replaces, exactly as the row arithmetic
-#: predicted, and the gap can only widen at R=30 (~5.4e9 rows). The
-#: R=30 escalation is therefore not run. THE q199 CHAPTER CLOSES with
-#: this arm: across r10-r12 the verify was attacked from every
-#: lossless side — fewer pairs (ASYM, adopted), narrower rows (INT,
-#: adopted), no reduce sort (HASH2, refuted: the sort wasn't the
-#: spiller), early build-side shedding (SEMI, refuted), hash-for-sort
-#: on both joins (HASH_VERIFY, refuted), and no arrays at all (INDEX,
-#: refuted here). The residual verify-shuffle spill (0.67 GB/run at
-#: R=10, 53.3 GB at R=30 after the r11 INT cut) is
-#: the price of shipping exact-verify evidence to the reducers, and
-#: the r8 analysis stands: it is a shared-local-pool artifact that
-#: executor-isolated clusters absorb structurally. Toggle stays for
-#: reproducibility; default OFF.
-Q199_INDEX_VERIFY = False
-
 
 def _ordered_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, os: array<struct<df, sh>>, n): every document's shingle
@@ -1937,15 +1700,14 @@ def _ordered_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     "explode, skew-guarded self-join, array-intersect verify "
     "on candidates only); the per-doc rarest-first sort rides "
     "array_sort over a collected struct array — per-document "
-    "state, never a global order. r11 adds two adopted, "
-    "oracle-equality-pinned physical arms (Q199_CANDGEN_AB_r11): "
-    "asymmetric AllPairs prefixes (the smaller side of a pair only "
-    "joins through its n - ceil(2t/(1+t)*n) + 1 shortest prefix — "
-    "0.928x wall at R=30) and int-narrowed verify arrays (32-bit "
-    "shingle hashes ride as 4-byte ints through the verify joins — "
-    "a deterministic 39.5% spill cut on the array-carrying shuffle, "
-    "the stage the r10/r11 per-stage attributions name as the "
-    "operator's dominant memory cost).",
+    "state, never a global order. Two lossless refinements ride on "
+    "top (Q199_CANDGEN_AB_r11.json): asymmetric AllPairs prefixes "
+    "(the smaller side of a pair only joins through its "
+    "n - ceil(2t/(1+t)*n) + 1 shortest prefix — 0.928x wall at "
+    "R=30) and int-narrowed verify arrays (32-bit shingle hashes "
+    "ride as 4-byte ints through the verify joins — a deterministic "
+    "39.5% spill cut on the array-carrying shuffle, the operator's "
+    "dominant memory cost).",
 )
 def q199_prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     sets = fragment(
@@ -1988,84 +1750,35 @@ def q199_prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (5 * F.col("b.n") >= 3 * F.col("a.n"))
         & (8 * ub >= 3 * (F.col("a.n") + F.col("b.n")))
     )
-    if Q199_ASYM_PREFIX:
-        # the smaller side of a pair only needs its SHORT prefix
-        # (n - ceil(2t/(1+t)*n) + 1); the epsilon keeps float noise
-        # from over-rounding the ceil, which would shorten the prefix
-        # past the lossless bound (the safe direction is a longer one)
-        frac = 2 * PREFIX_JACCARD_MIN / (1 + PREFIX_JACCARD_MIN)
+    # Asymmetric prefixes (Bayardo et al. WWW'07 s3.1; Xiao et al.
+    # WWW'08), a third lossless in-join filter: a pair (x, y) with
+    # J >= t and |x| <= |y| has overlap >= ceil(2t/(1+t)*|x|), so the
+    # SMALLER side (ties broken by doc_id, the pair identity) only
+    # needs its SHORT prefix n - ceil(2t/(1+t)*n) + 1. The prefix lemma
+    # puts a common element inside both sides' prefixes, and the
+    # pair's FIRST common element precedes it in the shared order, so
+    # that row exists in the joined window and passes this filter
+    # (Q199_CANDGEN_AB_r11.json). The epsilon keeps float noise from
+    # over-rounding the ceil, which would shorten the prefix past the
+    # lossless bound (the safe direction is a longer one).
+    frac = 2 * PREFIX_JACCARD_MIN / (1 + PREFIX_JACCARD_MIN)
 
-        def _slen(nc):
-            return nc - F.ceil(F.lit(frac) * nc - F.lit(1e-9)) + 1
+    def _slen(nc):
+        return nc - F.ceil(F.lit(frac) * nc - F.lit(1e-9)) + 1
 
-        pair_cond = pair_cond & F.when(
-            (F.col("a.n") < F.col("b.n"))
-            | (
-                (F.col("a.n") == F.col("b.n"))
-                & (F.col("a.doc_id") < F.col("b.doc_id"))
-            ),
-            F.col("a.pos") < _slen(F.col("a.n")),
-        ).otherwise(F.col("b.pos") < _slen(F.col("b.n")))
+    pair_cond = pair_cond & F.when(
+        (F.col("a.n") < F.col("b.n"))
+        | (
+            (F.col("a.n") == F.col("b.n"))
+            & (F.col("a.doc_id") < F.col("b.doc_id"))
+        ),
+        F.col("a.pos") < _slen(F.col("a.n")),
+    ).otherwise(F.col("b.pos") < _slen(F.col("b.n")))
     candidates = guarded_self_pairs(
         pref, ["psh"], "doc_id", probe_key=(sf_dir, "prefix_shingles"),
         pair_cond=pair_cond,
     )
-    if Q199_SEMI_PREFILTER:
-        # materialize the (doc_a, doc_b) LONG pairs once so both
-        # consumers below share them without re-running the self-join
-        candidates = candidates.localCheckpoint(eager=True)
-        cand_docs = (
-            candidates.select(F.col("doc_a").alias("doc_id"))
-            .union(candidates.select(F.col("doc_b").alias("doc_id")))
-            .distinct()
-        )
-        sets = sets.join(cand_docs, "doc_id", "left_semi")
-    if Q199_INDEX_VERIFY:
-        # arm D — array-free verify from the exploded inverted index
-        # (see toggle doc): only long-rows shuffle, n_shared is a
-        # groupBy COUNT over (candidate ⨝ index ⨝ index) collisions
-        flat = fragment(
-            spark, sf_dir, "doc_shingles_flat",
-            lambda: _doc_shingles(spark, sf_dir),
-        )
-        sa_flat = flat.select(
-            F.col("doc_id").alias("doc_a"),
-            F.col("shingle").alias("sh"),
-            F.col("n_sh").alias("na"),
-        )
-        sb_flat = flat.select(
-            F.col("doc_id").alias("doc_b"),
-            F.col("shingle").alias("sh"),
-            F.col("n_sh").alias("nb"),
-        )
-        shared = (
-            candidates.join(sa_flat, "doc_a")
-            .join(sb_flat, ["doc_b", "sh"])
-            .groupBy("doc_a", "doc_b")
-            .agg(
-                F.count(F.lit(1)).alias("n_shared"),
-                # set sizes are constant per doc — min is just a pick
-                F.min("na").alias("na"),
-                F.min("nb").alias("nb"),
-            )
-        )
-        jac_idx = F.col("n_shared").cast("double") / (
-            F.col("na") + F.col("nb") - F.col("n_shared")
-        )
-        return _declared_pair_order(
-            shared.filter(jac_idx >= PREFIX_JACCARD_MIN)
-            .select("doc_a", "doc_b", jac_idx.alias("jaccard")),
-            "doc_a", "doc_b",
-        )
-    if Q199_INT_VERIFY:
-        # 32-bit hash values: (x - 2^31) cast to int is a bijection,
-        # so array_intersect/size are preserved exactly while the
-        # verify rows' array elements pack at 4 bytes instead of 8
-        sh_verify = F.transform(
-            "shingles", lambda x: (x - F.lit(2147483648)).cast("int")
-        )
-    else:
-        sh_verify = F.col("shingles")
+    sh_verify = _int32_shingles()
     sets_a = sets.select(
         F.col("doc_id").alias("doc_a"), sh_verify.alias("sh_a")
     )
@@ -2075,23 +1788,6 @@ def q199_prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
     union = F.size("sh_a") + F.size("sh_b") - inter
     jac = inter.cast("double") / union
-    if Q199_HASH_VERIFY:
-        # hash-build on the compact side of each verify join so the
-        # array-carrying side STREAMS instead of sorting (see toggle
-        # doc above): candidates (two LONGs) build the first map,
-        # one-row-per-doc sets_b the second
-        return _declared_pair_order(
-            candidates.hint("shuffle_hash")
-            .join(sets_a, "doc_a")
-            .join(sets_b.hint("shuffle_hash"), "doc_b")
-            .filter(jac >= PREFIX_JACCARD_MIN)
-            .select("doc_a", "doc_b", jac.alias("jaccard")),
-            "doc_a", "doc_b",
-        )
-    # arm C: build the second join's hash map from the one-row-per-doc
-    # sets_b so the array-carrying probe rows shuffle but never sort;
-    # the first join stays SMJ (its sorted side is the compact pairs)
-    sets_b2 = sets_b.hint("shuffle_hash") if Q199_HASH2_VERIFY else sets_b
     # scale-adaptive task-count pin on the two array-carrying verify
     # stages (see _verify_pin): the r14 R=30 re-probe measured the
     # unpinned join1 reduce at 35 AQE-coalesced tasks paging 51.8 GB
@@ -2104,7 +1800,7 @@ def q199_prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     if pin:
         mid = mid.repartition(pin, "doc_b")
     return _declared_pair_order(
-        mid.join(sets_b2, "doc_b")
+        mid.join(sets_b, "doc_b")
         .filter(jac >= PREFIX_JACCARD_MIN)
         .select("doc_a", "doc_b", jac.alias("jaccard")),
         "doc_a", "doc_b",
@@ -2120,52 +1816,6 @@ def q199_prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 CONTAIN_MIN = 0.8
 #: ignore tiny shingle sets (trivially contained)
 CONTAIN_MIN_SH = 8
-
-#: r13 arm (VERDICT r12 ask #1a — q204 was the one operator that could
-#: not complete the R=100 leg: zero spill at R=30, then
-#: `No space left on device` past the box's ~230 GB free disk at
-#: R=100, while its verify joins still shipped raw array<bigint>
-#: shingles): ride the proven Q42_INT_VERIFY / Q199_INT_VERIFY
-#: bijection through q204's verify arrays. Shingle hashes are 32-bit
-#: values; containment only needs |A intersect B| and |A|, so mapping
-#: both pinned sets x -> (x - 2^31) cast to INT preserves
-#: array_intersect cardinality exactly while the array-carrying
-#: verify rows pack elements at 4 bytes instead of 8 — the mechanism
-#: that zeroed q47's 42.7 GB/run R=30 spill and cut q199's by 39.5%.
-#: Parity of both arm settings is pinned by
-#: tests/test_new_ops.py::test_q204_int_arm_matrix.
-#: ADOPTED r13 (Q204_ATTRIB_AB_r13.json, strict legacy/int/int+probe
-#: interleave x3 at R=60 in one session): wall median 731.8s ->
-#: 363.4s (0.497x), spill 1.09 TB/run median -> deterministic ZERO
-#: in all three int reps. The same sitting's per-stage attribution
-#: adjudicates the R=30 -> R=100 discontinuity as PLAN/POOL-THRESHOLD
-#: crossing, not candidate growth: at R=30 BOTH arms spill zero (the
-#: verify rows stay pool-resident and the small sides broadcast —
-#: total shuffle-written records just 1.2-2.6M); at R=60 the legacy
-#: plan flips to three 256-task sort/shuffle stages carrying 541M
-#: array-laden verify rows (spill 396.8 + 376.3 + 300.8 GB, total
-#: written records 574.3M), where the INT arm's narrowed rows keep
-#: the flip from spilling at all (33.1M written records, 0 bytes
-#: spilled at half the wall).
-Q204_INT_VERIFY = True
-
-#: r13 companion arm, default OFF pending adjudication: narrow the
-#: exploded probe/index JOIN KEY itself (the flat inverted index's
-#: bigint `shingle` and the probe prefix's exploded copy) through the
-#: same bijection before the candidate join. Unlike the verify arrays
-#: this touches the operator's highest-record-count shuffle (every
-#: (doc, shingle) posting rides it), so the candidate join's shuffle
-#: bytes drop ~25% (8-byte key -> 4 in 24-ish-byte rows) — but the
-#: transform runs per posting rather than per candidate, so it's a
-#: wall-vs-bytes trade the interleaved A/B must referee (parity of
-#: both settings is pinned by the same arm-matrix test either way).
-#: NOT SEPARABLE at r13 (Q204_ATTRIB_AB_r13.json, same strict x3
-#: interleave): 347.4s vs the int arm's 363.4s median (0.956x) with
-#: overlapping raw ranges ([341.2, 372.6] vs [343.3, 405.1]) and
-#: identical zero spill — inside the family's dispersion envelope,
-#: so the extra per-posting transform isn't adjudicated a win.
-#: Stays off.
-Q204_INT_PROBE = False
 
 
 @register(
@@ -2216,10 +1866,10 @@ Q204_INT_PROBE = False
     "floor is applied on the probe side BEFORE the join. The "
     "oracle states the same result via the naive all-sharing-"
     "pairs join scored in both directions — equality IS the "
-    "losslessness proof. r13: the verify arrays ride int-narrowed "
-    "(Q204_INT_VERIFY, the same lossless 32-bit bijection q42/q199 "
-    "adopted) — the r12 R=100 leg died on shuffle-spill disk "
-    "exhaustion with the raw 8-byte arrays in flight.",
+    "losslessness proof. The verify arrays ride int-narrowed (the "
+    "same lossless 32-bit bijection as q42/q199): at R=60 that took "
+    "the verify spill from 1.09 TB/run to zero at half the wall "
+    "(Q204_ATTRIB_AB_r13.json).",
 )
 def q204_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     sets = fragment(
@@ -2237,27 +1887,15 @@ def q204_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lossless one for containment, and the index side can take NO
     # prefix at all: |A intersect B| / |A| >= t constrains only A, so
     # any posting of an arbitrarily large B may be the one A's prefix
-    # hits — there is no q199-style ASYM shortening left on either
-    # side, only physical narrowing (the INT arms below)
-    if Q204_INT_PROBE:
-        # narrow the candidate JOIN KEY itself (the operator's
-        # highest-record-count shuffle) through the same 32-bit
-        # bijection as the verify arrays; key equality is preserved,
-        # so the candidate pair set is unchanged
-        probe_sh = lambda s: (s["sh"] - F.lit(2147483648)).cast("int")  # noqa: E731
-        index_sh = (
-            (F.col("shingle") - F.lit(2147483648)).cast("int")
-        ).alias("shingle")
-    else:
-        probe_sh = lambda s: s["sh"]  # noqa: E731
-        index_sh = F.col("shingle")
+    # hits — there is no q199-style asymmetric shortening on either
+    # side, only the int-narrowed verify arrays below
     probe = (
         ordered.filter(n >= CONTAIN_MIN_SH)
         .select(
             F.col("doc_id").alias("contained_doc"),
             F.col("n").alias("n_a"),
             F.explode(
-                F.slice(F.transform("os", probe_sh), F.lit(1), plen)
+                F.slice(F.transform("os", lambda s: s["sh"]), F.lit(1), plen)
             ).alias("shingle"),
         )
     )
@@ -2269,7 +1907,7 @@ def q204_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         probe.join(
             flat.select(
                 F.col("doc_id").alias("container_doc"),
-                index_sh,
+                "shingle",
                 F.col("n_sh").alias("n_b"),
             ),
             "shingle",
@@ -2281,16 +1919,7 @@ def q204_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("contained_doc", "container_doc")
         .distinct()
     )
-    if Q204_INT_VERIFY:
-        # 32-bit hash values: (x - 2^31) cast to int is a bijection,
-        # so array_intersect/size (hence containment) are preserved
-        # exactly while the pinned verify sets' array elements pack
-        # at 4 bytes instead of 8 (see the toggle doc above)
-        sh_verify = F.transform(
-            "shingles", lambda x: (x - F.lit(2147483648)).cast("int")
-        )
-    else:
-        sh_verify = F.col("shingles")
+    sh_verify = _int32_shingles()
     sets_a = sets.select(
         F.col("doc_id").alias("contained_doc"),
         sh_verify.alias("sh_a"),

@@ -53,37 +53,12 @@ SELF_PAIR_BUCKET_CAP=256, ~0.6M candidate pairs). q42 is timed on it so
 just semantics-checked at n=1000 (tests/test_skew.py).
 
 Usage:  python bench_scaling.py [round_number]
-        python bench_scaling.py --q199-ab [reps] [round_number]
-            standalone interleaved A/B of the r11 q199 candidate/verify
-            arms at R=SPARK_GRAFT_SCALE_R2; writes
-            Q199_CANDGEN_AB_r{N}.json, which the main run merges into
-            BENCH_SCALING_r{N}.json if present (so the long arm
-            adjudication and the decade sweep can run as two sittings)
-        python bench_scaling.py --q45-ab [reps] [round_number]
-            r12: q45/q47 per-stage + per-iteration attribution at R=30,
-            then strict legacy/int interleave of the Q42_INT_VERIFY arm
-            on q47; writes Q45_COMPONENTS_AB_r{N}.json and merges into
-            the round artifact
-        python bench_scaling.py --q199-index-ab [reps] [round_number]
-            r12: the last q199 arm (array-free verify) vs the shipped
-            default, interleaved at R=SPARK_GRAFT_Q199_PROBE_R
-            (default 10); writes Q199_INDEX_AB_r{N}.json + merge
         python bench_scaling.py --decade3-fresh [round_number]
-            r12: the whole heavy family + ingest at R=10/30/100, ONE
-            FRESH SUBPROCESS PER QUERY (zero in-session pollution);
-            merges 'decade3_fresh' into the round artifact; r13: each
-            query's block lands in the artifact as it completes, and a
-            crashed child's finished legs are salvaged
-        python bench_scaling.py --q204-ab [reps] [round_number]
-            r13: per-stage attribution of q204 at R=30 vs
-            R=SPARK_GRAFT_Q204_R (default 60) for the legacy and INT
-            arms, then legacy/int/int+probe strict interleave; writes
-            Q204_ATTRIB_AB_r{N}.json + merge (VERDICT r12 ask #1)
-        python bench_scaling.py --q199-r100-attrib [round_number]
-            r13: instrumented q199 run at R=30 then R=100 with the
-            per-stage spill table, so the superlinearity is measured
-            where it matters (VERDICT r12 ask #2); run as its own
-            sitting
+            the whole heavy family + ingest at R=10/30/100, ONE FRESH
+            SUBPROCESS PER QUERY (zero in-session pollution); merges
+            'decade3_fresh' into the round artifact; each query's block
+            lands in the artifact as it completes, and a crashed
+            child's finished legs are salvaged
 Env:    SPARK_GRAFT_SCALE_SRC (default /root/testdata/sf0.1)
         SPARK_GRAFT_SCALE_DIR (default /tmp/scaledata)
 """
@@ -304,37 +279,17 @@ def build_hot_corpus(spark, scaled10: str, out: str) -> dict:
     return {"n_hot_docs": int(n_hot)}
 
 
-def _spill_bytes(spark) -> int | None:
-    """Cumulative (memory+disk) shuffle/sort spill across all stages the
-    app status store currently retains, or None if the py4j surface
-    moved. Deltas around a run isolate that run's spill; stage eviction
-    (spark.ui.retainedStages) can only UNDERSTATE a delta, never fake
-    one, so a multi-GB reading is trustworthy evidence of spill."""
+def _stage_stats(spark) -> dict[int, dict] | None:
+    """Per-stage shuffle/spill snapshot from the app status store,
+    keyed by stageId, or None if the py4j surface moved. Diffing two
+    snapshots around one run isolates that run's stages
+    (``_fresh_stages``); stage eviction (spark.ui.retainedStages) can
+    only UNDERSTATE a run's spill, never fake it, so a multi-GB reading
+    is trustworthy evidence of spill."""
     try:
         # core AppStatusStore (NOT sharedState().statusStore(), which is
         # the SQL-plan store and has no stage metrics); Spark 4 removed
         # the default args from stageList, so pass the full signature
-        gw = spark.sparkContext._gateway
-        store = spark.sparkContext._jsc.sc().statusStore()
-        sl = store.stageList(
-            gw.jvm.java.util.ArrayList(), False, False,
-            gw.new_array(gw.jvm.double, 0), gw.jvm.java.util.ArrayList(),
-        )
-        it = sl.iterator()
-        tot = 0
-        while it.hasNext():
-            s = it.next()
-            tot += int(s.memoryBytesSpilled()) + int(s.diskBytesSpilled())
-        return tot
-    except Exception:
-        return None
-
-
-def _stage_stats(spark) -> dict[int, dict]:
-    """Per-stage shuffle/spill snapshot from the app status store,
-    keyed by stageId — diffing snapshots around one run isolates that
-    run's stages. Returns {} if the py4j surface moved."""
-    try:
         gw = spark.sparkContext._gateway
         store = spark.sparkContext._jsc.sc().statusStore()
         sl = store.stageList(
@@ -347,18 +302,26 @@ def _stage_stats(spark) -> dict[int, dict]:
             s = it.next()
             out[int(s.stageId())] = {
                 "tasks": int(s.numCompleteTasks()),
-                "spill_gb": round(
-                    (int(s.memoryBytesSpilled()) + int(s.diskBytesSpilled()))
-                    / 1e9,
-                    2,
-                ),
+                "spill_bytes": int(s.memoryBytesSpilled())
+                + int(s.diskBytesSpilled()),
                 "shuf_write_gb": round(int(s.shuffleWriteBytes()) / 1e9, 2),
                 "write_recs_m": round(int(s.shuffleWriteRecords()) / 1e6, 1),
                 "read_recs_m": round(int(s.shuffleReadRecords()) / 1e6, 1),
             }
         return out
     except Exception:
-        return {}
+        return None
+
+
+def _fresh_stages(pre: dict | None, post: dict | None) -> list[dict] | None:
+    """The stages in ``post`` that ``pre`` did not hold, largest spill
+    first (then most written records), or None if either snapshot
+    failed."""
+    if pre is None or post is None:
+        return None
+    fresh = [v for k, v in post.items() if k not in pre]
+    fresh.sort(key=lambda v: (-v["spill_bytes"], -v["write_recs_m"]))
+    return fresh
 
 
 def timed_runs(run, *, warmups: int = 1, runs: int = RUNS) -> dict:
@@ -400,107 +363,6 @@ def ingest_point(spark, sf_dir: str) -> dict:
     return {"msgs": n, **m, "msgs_per_sec": round(n / m["sec"])}
 
 
-#: the r11 q199 candidate/verify arms (operators/dedup.py toggles):
-#: each arm isolated against the pre-r11 plan, plus the composed
-#: candidate default. Flag order matches (ASYM, INT, HASH2).
-Q199_ARMS = (
-    ("legacy", (False, False, False)),
-    ("asym", (True, False, False)),
-    ("int", (False, True, False)),
-    ("hash2", (False, False, True)),
-    ("combo", (True, True, True)),
-    # the SHIPPED default (ASYM + INT, HASH2 off) — present so the
-    # adjudicated configuration is reproducible from this committed
-    # tuple, not only from the ad-hoc confirmation session that
-    # produced Q199_CANDGEN_AB_r11's 'adopted' arm (ADVICE r11)
-    ("adopted", (True, True, False)),
-)
-
-
-def q199_ab(reps: int, rnd: str) -> None:
-    """Interleaved same-session A/B of the r11 q199 arms at R=r2.
-
-    Strict Q199_ARMS-order x reps interleave in ONE
-    session so box drift hits every arm equally; per-run wall clock
-    AND spill delta (app status store) recorded. Parity of every arm
-    is pinned by tests/test_new_ops.py::test_q199_r11_arm_matrix — this
-    block adjudicates adopt-or-refute on wall + spill only, exactly
-    like r10's two (refuted) verify-side arms."""
-    from astarte_data_updater_plant_spark.operators import dedup as _dedup
-
-    src = os.environ.get("SPARK_GRAFT_SCALE_SRC", "/root/testdata/sf0.1")
-    root = os.environ.get("SPARK_GRAFT_SCALE_DIR", "/tmp/scaledata")
-    r2 = int(os.environ.get("SPARK_GRAFT_SCALE_R2", "30"))
-    r2_dir = f"{root}/r{r2}"
-    spark = get_spark("q199_candgen_ab")
-    build_scaled(spark, src, r2_dir, r2)
-    qmap = queries_map()
-    flags = ("Q199_ASYM_PREFIX", "Q199_INT_VERIFY", "Q199_HASH2_VERIFY")
-    saved = {k: getattr(_dedup, k) for k in flags}
-    res: dict[str, dict] = {
-        arm: {"raw": [], "spill": []} for arm, _ in Q199_ARMS
-    }
-    try:
-        for rep in range(reps):
-            for arm, vals in Q199_ARMS:
-                for k, v in zip(flags, vals):
-                    setattr(_dedup, k, v)
-                clear_memos()
-                s0 = _spill_bytes(spark)
-                t0 = time.perf_counter()
-                qmap["q199_prefix_filter_jaccard"](spark, r2_dir).write.format(
-                    "noop"
-                ).mode("overwrite").save()
-                res[arm]["raw"].append(round(time.perf_counter() - t0, 3))
-                s1 = _spill_bytes(spark)
-                res[arm]["spill"].append(
-                    None if s0 is None or s1 is None else s1 - s0
-                )
-                print(
-                    f"rep {rep} {arm}: {res[arm]['raw'][-1]}s "
-                    f"spill {res[arm]['spill'][-1]}",
-                    flush=True,
-                )
-    finally:
-        for k, v in saved.items():
-            setattr(_dedup, k, v)
-    out: dict = {
-        "r": r2,
-        "reps": reps,
-        "interleave": ",".join(a for a, _ in Q199_ARMS) + f" x{reps}",
-        "arms": {},
-    }
-    for arm, _ in Q199_ARMS:
-        raw, spill = res[arm]["raw"], res[arm]["spill"]
-        out["arms"][arm] = {
-            "raw": raw,
-            "median": round(statistics.median(raw), 3),
-            "best": min(raw),
-            "spill_per_run": spill,
-            "spill_median": (
-                None if None in spill else int(statistics.median(spill))
-            ),
-        }
-    base = out["arms"]["legacy"]
-    for arm, _ in Q199_ARMS[1:]:
-        out["arms"][arm]["ratio_vs_legacy"] = round(
-            out["arms"][arm]["median"] / base["median"], 3
-        )
-        if base["spill_median"] and out["arms"][arm]["spill_median"] is not None:
-            out["arms"][arm]["spill_ratio_vs_legacy"] = round(
-                out["arms"][arm]["spill_median"] / base["spill_median"], 3
-            )
-    path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)),
-        f"Q199_CANDGEN_AB_r{int(rnd):02d}.json"
-        if rnd.isdigit()
-        else "Q199_CANDGEN_AB.json",
-    )
-    with open(path, "w") as fh:
-        json.dump(out, fh, indent=1)
-    print(json.dumps(out))
-
-
 def _round_artifact_path(rnd: str) -> str:
     return os.path.join(
         os.path.dirname(os.path.abspath(__file__)),
@@ -513,9 +375,8 @@ def _round_artifact_path(rnd: str) -> str:
 def _merge_round_artifact(rnd: str, key: str, value) -> None:
     """Fold one experiment block into the round's BENCH_SCALING
     artifact, creating it if the full sweep hasn't run this round —
-    the targeted r12 modes (q45 arm A/B, q199 index probe, fresh
-    decade3) each land under their own key so the round artifact is
-    assembled incrementally instead of requiring one multi-hour
+    ``--decade3-fresh`` lands under its own key so the round artifact
+    is assembled incrementally instead of requiring one multi-hour
     sitting."""
     path = _round_artifact_path(rnd)
     data: dict = {}
@@ -534,435 +395,6 @@ def _merge_round_artifact(rnd: str, key: str, value) -> None:
     data[key] = value
     with open(path, "w") as fh:
         json.dump(data, fh, indent=1)
-
-
-#: the r12 q45/q47 arm (operators/dedup.py Q42_INT_VERIFY): ride the
-#: q199 INT bijection through q42's verify joins, attacking the
-#: components/election family's dominant shared stage
-Q45_ARMS = (("legacy", False), ("int", True))
-
-
-def q45_ab(reps: int, rnd: str) -> None:
-    """VERDICT r11 ask #3: per-stage attribution of q45/q47 at R=30,
-    then ONE named arm (Q42_INT_VERIFY) adjudicated by a strict
-    interleaved same-session A/B on q47 end-to-end.
-
-    Attribution pass: one cold run each of q45 and q47 with (a) the
-    per-stage shuffle/spill diff from the app status store and (b)
-    dedup.Q45_ITER_STATS — the driver-side per-round log of the label
-    propagation loop ("pairs_and_seed" = the whole q42 pair pipeline +
-    edge/seed materialization, then one row per propagate+jump round;
-    the "changed" field is the round's total label-sum decrease since
-    r13's monotone-sum convergence probe, zero iff the round was a
-    no-op) — so the spill-vs-compute and which-iteration questions are
-    answered by measurement, not plan reading.
-
-    A/B pass: legacy/int x reps strict interleave, q47 cold per run,
-    wall + spill delta per run — the same adjudication protocol as the
-    r11 q199 arms. Parity of both settings is pinned by
-    tests/test_new_ops.py::test_q42_q45_q47_int_arm_matrix."""
-    from astarte_data_updater_plant_spark.operators import dedup as _dedup
-
-    src = os.environ.get("SPARK_GRAFT_SCALE_SRC", "/root/testdata/sf0.1")
-    root = os.environ.get("SPARK_GRAFT_SCALE_DIR", "/tmp/scaledata")
-    r2 = int(os.environ.get("SPARK_GRAFT_SCALE_R2", "30"))
-    r2_dir = f"{root}/r{r2}"
-    spark = get_spark("q45_components_ab")
-    build_scaled(spark, src, r2_dir, r2)
-    qmap = queries_map()
-
-    attribution: dict[str, dict] = {}
-    for lbl, qname in (
-        ("q45", "q45_near_dup_components"),
-        ("q47", "q47_dedup_keep_best"),
-    ):
-        clear_memos()
-        pre = _stage_stats(spark)
-        s0 = _spill_bytes(spark)
-        t0 = time.perf_counter()
-        qmap[qname](spark, r2_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        sec = round(time.perf_counter() - t0, 3)
-        s1 = _spill_bytes(spark)
-        post = _stage_stats(spark)
-        fresh = [v for k, v in post.items() if k not in pre]
-        fresh.sort(key=lambda v: (-v["spill_gb"], -v["write_recs_m"]))
-        attribution[lbl] = {
-            "sec": sec,
-            "spill_bytes": None if s0 is None or s1 is None else s1 - s0,
-            "iter_stats": [
-                {"stage": s, "sec": t, "changed": c}
-                for s, t, c in _dedup.Q45_ITER_STATS
-            ],
-            "top_stages": fresh[:8],
-        }
-        print("attribution", lbl, json.dumps(attribution[lbl]), flush=True)
-
-    res: dict[str, dict] = {a: {"raw": [], "spill": []} for a, _ in Q45_ARMS}
-    saved = _dedup.Q42_INT_VERIFY
-    try:
-        for rep in range(reps):
-            for arm, val in Q45_ARMS:
-                _dedup.Q42_INT_VERIFY = val
-                clear_memos()
-                s0 = _spill_bytes(spark)
-                t0 = time.perf_counter()
-                qmap["q47_dedup_keep_best"](spark, r2_dir).write.format(
-                    "noop"
-                ).mode("overwrite").save()
-                res[arm]["raw"].append(round(time.perf_counter() - t0, 3))
-                s1 = _spill_bytes(spark)
-                res[arm]["spill"].append(
-                    None if s0 is None or s1 is None else s1 - s0
-                )
-                print(
-                    f"rep {rep} {arm}: {res[arm]['raw'][-1]}s "
-                    f"spill {res[arm]['spill'][-1]}",
-                    flush=True,
-                )
-    finally:
-        _dedup.Q42_INT_VERIFY = saved
-    out: dict = {
-        "r": r2,
-        "reps": reps,
-        "measured_query": "q47_dedup_keep_best",
-        "interleave": ",".join(a for a, _ in Q45_ARMS) + f" x{reps}",
-        "attribution": attribution,
-        "arms": {},
-    }
-    for arm, _ in Q45_ARMS:
-        raw, spill = res[arm]["raw"], res[arm]["spill"]
-        out["arms"][arm] = {
-            "raw": raw,
-            "median": round(statistics.median(raw), 3),
-            "best": min(raw),
-            "spill_per_run": spill,
-            "spill_median": (
-                None if None in spill else int(statistics.median(spill))
-            ),
-        }
-    base = out["arms"]["legacy"]
-    for arm, _ in Q45_ARMS[1:]:
-        out["arms"][arm]["ratio_vs_legacy"] = round(
-            out["arms"][arm]["median"] / base["median"], 3
-        )
-        if base["spill_median"] and out["arms"][arm]["spill_median"] is not None:
-            out["arms"][arm]["spill_ratio_vs_legacy"] = round(
-                out["arms"][arm]["spill_median"] / base["spill_median"], 3
-            )
-    path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)),
-        f"Q45_COMPONENTS_AB_r{int(rnd):02d}.json"
-        if rnd.isdigit()
-        else "Q45_COMPONENTS_AB.json",
-    )
-    with open(path, "w") as fh:
-        json.dump(out, fh, indent=1)
-    _merge_round_artifact(rnd, "q45_components_experiment", out)
-    print(json.dumps(out))
-
-
-def q199_index_ab(reps: int, rnd: str) -> None:
-    """VERDICT r11 ask #5, the last q199 arm: array-free verify
-    (Q199_INDEX_VERIFY) vs the shipped adopted default, strict
-    interleave in one session at R=SPARK_GRAFT_Q199_PROBE_R (default
-    10 — a deliberate small-scale probe first, because the row
-    arithmetic predicts candidate_pairs x avg|doc| exploded rows; the
-    R=30 protocol is only worth its ~2h if the probe is competitive).
-    Wall + spill per run; parity pinned by
-    tests/test_new_ops.py::test_q199_index_verify_matches_oracle."""
-    from astarte_data_updater_plant_spark.operators import dedup as _dedup
-
-    src = os.environ.get("SPARK_GRAFT_SCALE_SRC", "/root/testdata/sf0.1")
-    root = os.environ.get("SPARK_GRAFT_SCALE_DIR", "/tmp/scaledata")
-    r = int(os.environ.get("SPARK_GRAFT_Q199_PROBE_R", "10"))
-    r_dir = f"{root}/r{r}"
-    spark = get_spark("q199_index_ab")
-    build_scaled(spark, src, r_dir, r)
-    qmap = queries_map()
-    arms = (("adopted", False), ("index", True))
-    res: dict[str, dict] = {a: {"raw": [], "spill": []} for a, _ in arms}
-    saved = _dedup.Q199_INDEX_VERIFY
-    try:
-        for rep in range(reps):
-            for arm, val in arms:
-                _dedup.Q199_INDEX_VERIFY = val
-                clear_memos()
-                s0 = _spill_bytes(spark)
-                t0 = time.perf_counter()
-                qmap["q199_prefix_filter_jaccard"](spark, r_dir).write.format(
-                    "noop"
-                ).mode("overwrite").save()
-                res[arm]["raw"].append(round(time.perf_counter() - t0, 3))
-                s1 = _spill_bytes(spark)
-                res[arm]["spill"].append(
-                    None if s0 is None or s1 is None else s1 - s0
-                )
-                print(
-                    f"rep {rep} {arm}: {res[arm]['raw'][-1]}s "
-                    f"spill {res[arm]['spill'][-1]}",
-                    flush=True,
-                )
-    finally:
-        _dedup.Q199_INDEX_VERIFY = saved
-    out: dict = {
-        "r": r,
-        "reps": reps,
-        "interleave": ",".join(a for a, _ in arms) + f" x{reps}",
-        "arms": {},
-    }
-    for arm, _ in arms:
-        raw, spill = res[arm]["raw"], res[arm]["spill"]
-        out["arms"][arm] = {
-            "raw": raw,
-            "median": round(statistics.median(raw), 3),
-            "best": min(raw),
-            "spill_per_run": spill,
-            "spill_median": (
-                None if None in spill else int(statistics.median(spill))
-            ),
-        }
-    base = out["arms"]["adopted"]
-    out["arms"]["index"]["ratio_vs_adopted"] = round(
-        out["arms"]["index"]["median"] / base["median"], 3
-    )
-    if base["spill_median"] and out["arms"]["index"]["spill_median"] is not None:
-        out["arms"]["index"]["spill_ratio_vs_adopted"] = round(
-            out["arms"]["index"]["spill_median"] / base["spill_median"], 3
-        )
-    path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)),
-        f"Q199_INDEX_AB_r{int(rnd):02d}.json"
-        if rnd.isdigit()
-        else "Q199_INDEX_AB.json",
-    )
-    with open(path, "w") as fh:
-        json.dump(out, fh, indent=1)
-    _merge_round_artifact(rnd, "q199_index_probe", out)
-    print(json.dumps(out))
-
-
-def _cold_stage_run(spark, qfn, d: str) -> dict:
-    """One cold run with the per-stage shuffle/spill diff captured:
-    wall, total spill delta, and the fresh stages sorted by spill then
-    by written records (top 8)."""
-    clear_memos()
-    pre = _stage_stats(spark)
-    s0 = _spill_bytes(spark)
-    t0 = time.perf_counter()
-    qfn(spark, d).write.format("noop").mode("overwrite").save()
-    sec = round(time.perf_counter() - t0, 3)
-    s1 = _spill_bytes(spark)
-    post = _stage_stats(spark)
-    fresh = [v for k, v in post.items() if k not in pre]
-    fresh.sort(key=lambda v: (-v["spill_gb"], -v["write_recs_m"]))
-    return {
-        "sec": sec,
-        "spill_bytes": None if s0 is None or s1 is None else s1 - s0,
-        "top_stages": fresh[:8],
-        "write_recs_m_total": round(sum(v["write_recs_m"] for v in fresh), 1),
-    }
-
-
-#: the r13 q204 arms (operators/dedup.py toggles): verify-array INT
-#: narrowing (the proven q42/q199 bijection) and the companion
-#: candidate-join-key narrowing. Flag order: (VERIFY, PROBE).
-Q204_ARMS = (
-    ("legacy", (False, False)),
-    ("int", (True, False)),
-    ("int+probe", (True, True)),
-)
-
-
-def q204_ab(reps: int, rnd: str) -> None:
-    """VERDICT r12 ask #1: adjudicate q204's INT arms and attribute
-    the R=30 -> R=100 spill discontinuity at an intermediate scale.
-
-    Attribution pass: one cold run per (arm in legacy/int, scale in
-    R=30/R=INTER) with the per-stage shuffle/spill diff, so two
-    questions get measured answers: (a) does the candidate stage's
-    shuffle-record count grow linearly with data (pool-threshold
-    crossing) or superlinearly (prefix-filter degradation)? (b) which
-    stages hold the spill, and does the INT narrowing drain exactly
-    the array-carrying verify stages as it did for q42/q47?
-
-    A/B pass: legacy/int/int+probe x reps strict interleave at
-    R=INTER (default 60), q204 cold per run, wall + spill per run —
-    the family's standard adjudication protocol. Parity of all arm
-    settings is pinned by tests/test_new_ops.py::
-    test_q204_int_arm_matrix."""
-    from astarte_data_updater_plant_spark.operators import dedup as _dedup
-
-    src = os.environ.get("SPARK_GRAFT_SCALE_SRC", "/root/testdata/sf0.1")
-    root = os.environ.get("SPARK_GRAFT_SCALE_DIR", "/tmp/scaledata")
-    r_inter = int(os.environ.get("SPARK_GRAFT_Q204_R", "60"))
-    spark = get_spark("q204_attrib_ab")
-    build_scaled(spark, src, f"{root}/r30", 30)
-    build_scaled(spark, src, f"{root}/r{r_inter}", r_inter)
-    qmap = queries_map()
-    qfn = qmap["q204_containment_pairs"]
-    flags = ("Q204_INT_VERIFY", "Q204_INT_PROBE")
-    saved = {k: getattr(_dedup, k) for k in flags}
-
-    attribution: dict[str, dict] = {}
-    try:
-        for arm, vals in (("legacy", (False, False)), ("int", (True, False))):
-            for k, v in zip(flags, vals):
-                setattr(_dedup, k, v)
-            for r in (30, r_inter):
-                key = f"{arm}_r{r}"
-                try:
-                    attribution[key] = _cold_stage_run(
-                        spark, qfn, f"{root}/r{r}"
-                    )
-                except Exception as e:  # noqa: BLE001 — a disk-exhausted
-                    # leg is a finding; keep the other arms/scales
-                    attribution[key] = {
-                        "err": type(e).__name__, "msg": str(e)[-600:]
-                    }
-                print("attribution", key,
-                      json.dumps(attribution[key]), flush=True)
-        # record-growth per-x for the candidate pipeline: total written
-        # records should scale ~linearly with R if the prefix filter
-        # holds; the per-stage tables let the reader see which stage
-        # deviates
-        for arm in ("legacy", "int"):
-            lo = attribution[f"{arm}_r30"].get("write_recs_m_total")
-            hi = attribution[f"{arm}_r{r_inter}"].get("write_recs_m_total")
-            if lo and hi is not None:
-                attribution[f"{arm}_records_growth_per_x"] = round(
-                    hi / lo / (r_inter / 30.0), 3
-                )
-
-        res: dict[str, dict] = {
-            a: {"raw": [], "spill": []} for a, _ in Q204_ARMS
-        }
-        for rep in range(reps):
-            for arm, vals in Q204_ARMS:
-                for k, v in zip(flags, vals):
-                    setattr(_dedup, k, v)
-                clear_memos()
-                s0 = _spill_bytes(spark)
-                t0 = time.perf_counter()
-                try:
-                    qfn(spark, f"{root}/r{r_inter}").write.format(
-                        "noop"
-                    ).mode("overwrite").save()
-                except Exception as e:  # noqa: BLE001 — keep the
-                    # interleave going; an erred rep is recorded, not
-                    # fatal (disk-exhaustion class)
-                    res[arm].setdefault("errs", []).append(
-                        f"rep {rep}: {type(e).__name__}"
-                    )
-                    print(f"rep {rep} {arm}: ERR {type(e).__name__}",
-                          flush=True)
-                    continue
-                res[arm]["raw"].append(round(time.perf_counter() - t0, 3))
-                s1 = _spill_bytes(spark)
-                res[arm]["spill"].append(
-                    None if s0 is None or s1 is None else s1 - s0
-                )
-                print(
-                    f"rep {rep} {arm}: {res[arm]['raw'][-1]}s "
-                    f"spill {res[arm]['spill'][-1]}",
-                    flush=True,
-                )
-    finally:
-        for k, v in saved.items():
-            setattr(_dedup, k, v)
-    out: dict = {
-        "r": r_inter,
-        "reps": reps,
-        "measured_query": "q204_containment_pairs",
-        "interleave": ",".join(a for a, _ in Q204_ARMS) + f" x{reps}",
-        "attribution": attribution,
-        "arms": {},
-    }
-    for arm, _ in Q204_ARMS:
-        raw, spill = res[arm]["raw"], res[arm]["spill"]
-        out["arms"][arm] = {
-            "raw": raw,
-            "median": round(statistics.median(raw), 3) if raw else None,
-            "best": min(raw) if raw else None,
-            "spill_per_run": spill,
-            "spill_median": (
-                None
-                if not spill or None in spill
-                else int(statistics.median(spill))
-            ),
-        }
-        if res[arm].get("errs"):
-            out["arms"][arm]["errs"] = res[arm]["errs"]
-    base = out["arms"]["legacy"]
-    for arm, _ in Q204_ARMS[1:]:
-        if base["median"] and out["arms"][arm]["median"] is not None:
-            out["arms"][arm]["ratio_vs_legacy"] = round(
-                out["arms"][arm]["median"] / base["median"], 3
-            )
-        if base["spill_median"] and out["arms"][arm]["spill_median"] is not None:
-            out["arms"][arm]["spill_ratio_vs_legacy"] = round(
-                out["arms"][arm]["spill_median"] / base["spill_median"], 3
-            )
-    path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)),
-        f"Q204_ATTRIB_AB_r{int(rnd):02d}.json"
-        if rnd.isdigit()
-        else "Q204_ATTRIB_AB.json",
-    )
-    with open(path, "w") as fh:
-        json.dump(out, fh, indent=1)
-    _merge_round_artifact(rnd, "q204_attrib_ab", out)
-    print(json.dumps(out))
-
-
-def q199_r100_attrib(rnd: str) -> None:
-    """VERDICT r12 ask #2: measure (not extrapolate) q199's R=100
-    superlinearity. One fresh-process instrumented run at R=30 then
-    R=100 with the per-stage shuffle/spill diff, so the per-stage
-    growth ratios name WHICH stage's spill grows faster than data.
-    Run this as its own sitting (fresh interpreter = the cold
-    condition); disk free is recorded around the R=100 leg because
-    the box's spill headroom is the known failure mode."""
-    import shutil as _shutil
-
-    src = os.environ.get("SPARK_GRAFT_SCALE_SRC", "/root/testdata/sf0.1")
-    root = os.environ.get("SPARK_GRAFT_SCALE_DIR", "/tmp/scaledata")
-    spark = get_spark("q199_r100_attrib")
-    qmap = queries_map()
-    qfn = qmap["q199_prefix_filter_jaccard"]
-    out: dict = {"measured_query": "q199_prefix_filter_jaccard"}
-    for r in (30, 100):
-        d = f"{root}/r{r}"
-        build_scaled(spark, src, d, r)
-        out[f"disk_free_gb_before_r{r}"] = round(
-            _shutil.disk_usage("/tmp").free / 1e9, 1
-        )
-        try:
-            out[f"r{r}"] = _cold_stage_run(spark, qfn, d)
-        except Exception as e:  # noqa: BLE001 — record the failure mode
-            out[f"r{r}"] = {"err": type(e).__name__, "msg": str(e)[-600:]}
-            print(f"r{r} FAILED", type(e).__name__, flush=True)
-            break
-        print(f"r{r}", json.dumps(out[f"r{r}"]), flush=True)
-    if "sec" in out.get("r30", {}) and "sec" in out.get("r100", {}):
-        out["wall_per_x"] = round(
-            out["r100"]["sec"] / out["r30"]["sec"] / (100 / 30), 3
-        )
-        lo, hi = out["r30"], out["r100"]
-        if lo.get("spill_bytes") and hi.get("spill_bytes") is not None:
-            out["spill_per_x"] = round(
-                hi["spill_bytes"] / lo["spill_bytes"] / (100 / 30), 3
-            )
-        if lo.get("write_recs_m_total"):
-            out["records_per_x"] = round(
-                hi["write_recs_m_total"]
-                / lo["write_recs_m_total"]
-                / (100 / 30),
-                3,
-            )
-    _merge_round_artifact(rnd, "q199_r100_attribution", out)
-    print(json.dumps(out))
 
 
 #: fresh-process decade sweep set (VERDICT r11 ask #2): the full heavy
@@ -1163,32 +595,20 @@ def _decade3_child(name: str, scales: str, rs: list[int], scratch_root: str) -> 
 
 
 def main() -> None:
-    if len(sys.argv) > 1 and sys.argv[1] == "--q45-ab":
-        reps = int(sys.argv[2]) if len(sys.argv) > 2 else 4
-        q45_ab(reps, sys.argv[3] if len(sys.argv) > 3 else "0")
-        return
-    if len(sys.argv) > 1 and sys.argv[1] == "--q199-index-ab":
-        reps = int(sys.argv[2]) if len(sys.argv) > 2 else 3
-        q199_index_ab(reps, sys.argv[3] if len(sys.argv) > 3 else "0")
-        return
-    if len(sys.argv) > 1 and sys.argv[1] == "--q204-ab":
-        reps = int(sys.argv[2]) if len(sys.argv) > 2 else 3
-        q204_ab(reps, sys.argv[3] if len(sys.argv) > 3 else "0")
-        return
-    if len(sys.argv) > 1 and sys.argv[1] == "--q199-r100-attrib":
-        q199_r100_attrib(sys.argv[2] if len(sys.argv) > 2 else "0")
-        return
-    if len(sys.argv) > 1 and sys.argv[1] == "--decade3-fresh":
+    rnd = sys.argv[1] if len(sys.argv) > 1 else "0"
+    if rnd == "--decade3-fresh":
         decade3_fresh(sys.argv[2] if len(sys.argv) > 2 else "0")
         return
-    if len(sys.argv) > 1 and sys.argv[1] == "--decade3-point":
+    if rnd == "--decade3-point":
         decade3_point(sys.argv[2], sys.argv[3])
         return
-    if len(sys.argv) > 1 and sys.argv[1] == "--q199-ab":
-        reps = int(sys.argv[2]) if len(sys.argv) > 2 else 3
-        q199_ab(reps, sys.argv[3] if len(sys.argv) > 3 else "0")
-        return
-    rnd = sys.argv[1] if len(sys.argv) > 1 else "0"
+    if rnd.startswith("--"):
+        # a mistyped or retired option must not start the multi-hour
+        # sweep under a round label like "--q199ab"
+        raise SystemExit(
+            f"unknown option {rnd}\n"
+            "usage: python bench_scaling.py [round_number | --decade3-fresh [round_number]]"
+        )
     src = os.environ.get("SPARK_GRAFT_SCALE_SRC", "/root/testdata/sf0.1")
     root = os.environ.get("SPARK_GRAFT_SCALE_DIR", "/tmp/scaledata")
     r1_dir, r10_dir = f"{root}/r1", f"{root}/r10"
@@ -1274,14 +694,16 @@ def main() -> None:
     q204_raw, q204_spill = [], []
     for _ in range(5):
         clear_memos()
-        s0 = _spill_bytes(spark)
+        pre = _stage_stats(spark)
         t0 = time.perf_counter()
         qmap["q204_containment_pairs"](spark, r2_dir).write.format(
             "noop"
         ).mode("overwrite").save()
         q204_raw.append(round(time.perf_counter() - t0, 3))
-        s1 = _spill_bytes(spark)
-        q204_spill.append(None if s0 is None or s1 is None else s1 - s0)
+        fresh = _fresh_stages(pre, _stage_stats(spark))
+        q204_spill.append(
+            None if fresh is None else sum(v["spill_bytes"] for v in fresh)
+        )
     # per-stage probe (one extra untimed cold run per decade): the
     # candidate stage's shuffle-write RECORD count is the quantity
     # that would grow superlinearly if the containment prefix filter
@@ -1295,10 +717,8 @@ def main() -> None:
         qmap["q204_containment_pairs"](spark, dd).write.format("noop").mode(
             "overwrite"
         ).save()
-        post = _stage_stats(spark)
-        fresh = [v for k, v in post.items() if k not in pre]
-        fresh.sort(key=lambda v: (-v["spill_gb"], -v["write_recs_m"]))
-        q204_stages[lbl] = fresh[:6]
+        fresh = _fresh_stages(pre, _stage_stats(spark))
+        q204_stages[lbl] = None if fresh is None else fresh[:6]
     q204_var = {
         "r": r2,
         "r30_raw": q204_raw,
@@ -1448,23 +868,8 @@ def main() -> None:
         "adversarial_q42": adversarial,
         **adversarial_pp,
     }
-    # merge the standalone q199 arm adjudication if it ran this round.
-    # isfile (not exists): with a non-digit round label the join above
-    # would name the repo directory itself, os.path.exists would pass,
-    # and json.load(open(dir)) would raise IsADirectoryError AFTER the
-    # whole multi-hour run but BEFORE the results were written
-    # (ADVICE r11)
-    if rnd.isdigit():
-        ab_path = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)),
-            f"Q199_CANDGEN_AB_r{int(rnd):02d}.json",
-        )
-        if os.path.isfile(ab_path):
-            with open(ab_path) as fh:
-                out["q199_candgen_experiment"] = json.load(fh)
     path = _round_artifact_path(rnd)
-    # carry over experiment blocks merged by the targeted modes in an
-    # earlier sitting (q45 arm A/B, q199 index probe, fresh decade3) —
+    # carry over blocks merged in an earlier sitting (--decade3-fresh):
     # the full sweep must extend the round artifact, not clobber it
     if os.path.isfile(path):
         with open(path) as fh:

@@ -60,185 +60,13 @@ def degen_docs_dir(tmp_path_factory):
         "q41_minhash_signatures",
         "q42_lsh_near_dup_pairs",
         "q45_near_dup_components",
+        "q47_dedup_keep_best",
     ],
 )
 def test_dedup_additions_degenerate_parity(spark, name, degen_docs_dir):
     spec = QUERIES[name]
     ok, msg = compare(spec.fn(spark, degen_docs_dir), spec.oracle, degen_docs_dir)
     assert ok, f"{name}: {msg}"
-
-
-def test_q199_slim_arm_matches_oracle(spark, degen_docs_dir):
-    """The Q199_SEMI_PREFILTER experimental arm (semi-join prefilter of
-    ``sets`` to candidate docs, candidates localCheckpoint'd) must be
-    result-identical to the default arm's oracle on both the shared
-    sf0.001 corpus and the degenerate corpus — the physical plan is the
-    only thing allowed to differ (BENCH_SCALING r10 spill experiment)."""
-    from astarte_data_updater_plant_spark.operators import dedup
-
-    spec = QUERIES["q199_prefix_filter_jaccard"]
-    dedup.Q199_SEMI_PREFILTER = True
-    try:
-        for d in ("/root/testdata/sf0.001", degen_docs_dir):
-            ok, msg = compare(spec.fn(spark, d), spec.oracle, d)
-            assert ok, f"slim arm @ {d}: {msg}"
-    finally:
-        dedup.Q199_SEMI_PREFILTER = False
-
-
-def test_q199_hash_verify_matches_oracle(spark, degen_docs_dir):
-    """The Q199_HASH_VERIFY experimental arm (shuffle_hash hints on the
-    two verify joins: candidates build the first map, sets_b the
-    second, the array-carrying side streams with no sort) must be
-    result-identical to the default arm's oracle on both the shared
-    sf0.001 corpus and the degenerate corpus — the join STRATEGY is
-    the only thing allowed to differ (r10 per-stage spill attribution:
-    the two SMJ verify sorts are the operator's dominant spill)."""
-    from astarte_data_updater_plant_spark.operators import dedup
-
-    spec = QUERIES["q199_prefix_filter_jaccard"]
-    dedup.Q199_HASH_VERIFY = True
-    try:
-        for d in ("/root/testdata/sf0.001", degen_docs_dir):
-            ok, msg = compare(spec.fn(spark, d), spec.oracle, d)
-            assert ok, f"hash-verify arm @ {d}: {msg}"
-    finally:
-        dedup.Q199_HASH_VERIFY = False
-
-
-@pytest.mark.parametrize(
-    "flags",
-    [
-        # the pre-r11 plan (all three adopted arms off) must stay
-        # result-identical — the toggles are physical-only
-        {"Q199_ASYM_PREFIX": False, "Q199_INT_VERIFY": False,
-         "Q199_HASH2_VERIFY": False},
-        # each arm isolated against the other two off
-        {"Q199_ASYM_PREFIX": True, "Q199_INT_VERIFY": False,
-         "Q199_HASH2_VERIFY": False},
-        {"Q199_ASYM_PREFIX": False, "Q199_INT_VERIFY": True,
-         "Q199_HASH2_VERIFY": False},
-        {"Q199_ASYM_PREFIX": False, "Q199_INT_VERIFY": False,
-         "Q199_HASH2_VERIFY": True},
-    ],
-    ids=["legacy", "asym", "int", "hash2"],
-)
-def test_q199_r11_arm_matrix_matches_oracle(spark, flags, degen_docs_dir):
-    """The r11 candidate/verify arms — asymmetric AllPairs prefix
-    (adopted), int-narrowed verify arrays (adopted), sets_b-build
-    shuffle_hash on the second verify join (refuted, default off) —
-    must each be result-identical whatever the adoption outcome; this
-    matrix pins every arm and the legacy all-off plan on both the
-    shared sf0.001 corpus and the degenerate corpus. ASYM is
-    the only arm that changes the candidate SET (it drops pairs whose
-    only shared prefix elements sit past the smaller side's short
-    prefix — lossless for J >= t by the prefix lemma), so oracle
-    equality here is its zero-recall-loss proof at test scale."""
-    from astarte_data_updater_plant_spark.operators import dedup
-
-    spec = QUERIES["q199_prefix_filter_jaccard"]
-    saved = {k: getattr(dedup, k) for k in flags}
-    for k, v in flags.items():
-        setattr(dedup, k, v)
-    try:
-        for d in ("/root/testdata/sf0.001", degen_docs_dir):
-            ok, msg = compare(spec.fn(spark, d), spec.oracle, d)
-            assert ok, f"{flags} @ {d}: {msg}"
-    finally:
-        for k, v in saved.items():
-            setattr(dedup, k, v)
-
-
-def test_q199_index_verify_matches_oracle(spark, degen_docs_dir):
-    """The r12 Q199_INDEX_VERIFY arm (array-free verify: n_shared
-    counted from the exploded inverted index via two long-row joins +
-    groupBy, no shingle arrays in flight — the last untried lossless
-    verify shape, VERDICT r11 ask #5) must be result-identical to the
-    oracle on both the shared sf0.001 corpus and the degenerate
-    corpus, whatever the adoption outcome. Zero-shared candidate pairs
-    drop out of the inner index joins, which the oracle's
-    all-sharing-pairs CTE also never emits — equality pins that too."""
-    from astarte_data_updater_plant_spark.operators import dedup
-
-    spec = QUERIES["q199_prefix_filter_jaccard"]
-    saved = dedup.Q199_INDEX_VERIFY
-    dedup.Q199_INDEX_VERIFY = True
-    try:
-        for d in ("/root/testdata/sf0.001", degen_docs_dir):
-            ok, msg = compare(spec.fn(spark, d), spec.oracle, d)
-            assert ok, f"index-verify arm @ {d}: {msg}"
-    finally:
-        dedup.Q199_INDEX_VERIFY = saved
-
-
-@pytest.mark.parametrize("flag", [False, True], ids=["legacy", "int"])
-@pytest.mark.parametrize(
-    "name",
-    ["q42_lsh_near_dup_pairs", "q45_near_dup_components",
-     "q47_dedup_keep_best"],
-)
-def test_q42_q45_q47_int_arm_matrix(spark, name, flag, degen_docs_dir):
-    """The r12 Q42_INT_VERIFY arm (int-narrowed verify arrays riding
-    the q199 INT bijection through q42's pair verify — the named attack
-    on the q45/q47 family's dominant shared stage, VERDICT r11 ask #3)
-    must be result-identical for the whole consumer chain: the pair
-    set (q42), the components built on it (q45), and the election
-    (q47), in BOTH arm settings, on both the shared sf0.001 corpus and
-    the degenerate corpus. Fragments are cleared per setting so the
-    pinned pair/label fragments can't mask the arm under test."""
-    from astarte_data_updater_plant_spark.operators import dedup
-    from astarte_data_updater_plant_spark.plans.fragments import clear_memos
-
-    spec = QUERIES[name]
-    saved = dedup.Q42_INT_VERIFY
-    dedup.Q42_INT_VERIFY = flag
-    clear_memos()
-    try:
-        for d in ("/root/testdata/sf0.001", degen_docs_dir):
-            ok, msg = compare(spec.fn(spark, d), spec.oracle, d)
-            assert ok, f"{name} int={flag} @ {d}: {msg}"
-    finally:
-        dedup.Q42_INT_VERIFY = saved
-        clear_memos()
-
-
-@pytest.mark.parametrize(
-    "flags",
-    [
-        {"Q204_INT_VERIFY": False, "Q204_INT_PROBE": False},
-        {"Q204_INT_VERIFY": True, "Q204_INT_PROBE": False},
-        {"Q204_INT_VERIFY": False, "Q204_INT_PROBE": True},
-        {"Q204_INT_VERIFY": True, "Q204_INT_PROBE": True},
-    ],
-    ids=["legacy", "int", "probe", "int+probe"],
-)
-def test_q204_int_arm_matrix(spark, flags, degen_docs_dir):
-    """The r13 q204 arms (VERDICT r12 ask #1a): int-narrowed verify
-    arrays (the proven q42/q199 bijection, ridden through the one
-    operator that died on spill-disk at R=100) and the companion
-    candidate-join-key narrowing. Both transforms are 32-bit
-    bijections, so the candidate pair set, every array_intersect
-    cardinality, and hence the containment scores must be
-    result-identical in all four settings — pinned against the
-    oracle's naive all-sharing-pairs join on both the shared sf0.001
-    corpus and the degenerate corpus, whatever each arm's adoption
-    outcome."""
-    from astarte_data_updater_plant_spark.operators import dedup
-    from astarte_data_updater_plant_spark.plans.fragments import clear_memos
-
-    spec = QUERIES["q204_containment_pairs"]
-    saved = {k: getattr(dedup, k) for k in flags}
-    for k, v in flags.items():
-        setattr(dedup, k, v)
-    clear_memos()
-    try:
-        for d in ("/root/testdata/sf0.001", degen_docs_dir):
-            ok, msg = compare(spec.fn(spark, d), spec.oracle, d)
-            assert ok, f"{flags} @ {d}: {msg}"
-    finally:
-        for k, v in saved.items():
-            setattr(dedup, k, v)
-        clear_memos()
 
 
 def test_q224_incremental_equals_full_recompute(spark, degen_docs_dir):

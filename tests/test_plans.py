@@ -557,3 +557,33 @@ def test_memo_sees_republished_input(spark, tmp_path):
     publish(5000)
     assert load_table(spark, d, "events").count() == 5000
     assert evens() == expected_evens(5000)
+
+
+def test_no_module_level_boolean_toggles():
+    """No engine module carries a module-level ALL-CAPS name bound to a
+    ``True``/``False`` literal: each operator builds one plan. To try a
+    plan alternative, A/B it as a second source tree through
+    ``ab_bench.py`` instead of adding a toggle to the engine."""
+    import ast
+    import pathlib
+    import re
+
+    import astarte_data_updater_plant_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    caps = re.compile(r"[A-Z][A-Z0-9_]*")
+    hits = []
+    for path in sorted(root.rglob("*.py")):
+        for node in ast.parse(path.read_text()).body:
+            if isinstance(node, ast.Assign):
+                targets, value = node.targets, node.value
+            elif isinstance(node, ast.AnnAssign):
+                targets, value = [node.target], node.value
+            else:
+                continue
+            if not (isinstance(value, ast.Constant) and isinstance(value.value, bool)):
+                continue
+            for t in targets:
+                if isinstance(t, ast.Name) and caps.fullmatch(t.id):
+                    hits.append(f"{path.relative_to(root)}:{node.lineno} {t.id}")
+    assert not hits, hits

@@ -17,6 +17,7 @@ import sys
 import duckdb
 import pytest
 
+import bench_scaling
 from bench_scaling import build_scaled, run_child
 
 SRC = "/root/testdata/sf0.001"
@@ -114,3 +115,20 @@ def test_child_scratch_sweep_spares_other_sessions(tmp_path):
     assert os.path.dirname(local) == str(root)
     assert not os.path.exists(local)
     assert (other / "shuffle_0_0_0.data").read_text() == "live"
+
+
+def test_unknown_option_is_a_usage_error(monkeypatch):
+    """An unrecognised ``--`` argument, such as a retired experiment
+    mode's flag, exits with a usage error instead of starting the
+    multi-hour sweep under that string as its round label."""
+
+    def _no_sweep(*_a, **_k):
+        raise AssertionError("the sweep started")
+
+    monkeypatch.setattr(bench_scaling, "get_spark", _no_sweep)
+    monkeypatch.setattr(sys, "argv", ["bench_scaling.py", "--q199-ab"])
+    with pytest.raises(SystemExit) as exc:
+        bench_scaling.main()
+    assert exc.value.code != 0
+    assert "unknown option --q199-ab" in str(exc.value.code)
+    assert "usage:" in str(exc.value.code)
