@@ -30,6 +30,12 @@ fresh JVM, queries_map, docs count, then warm-up + 5 timed runs of
 q47_dedup_keep_best with clear_memos() before each — so an
 interleaved A/B on the two trees isolates code from box drift.
 
+The ``ingest_cycle`` probe times the production ingest path one step
+at a time (fold, sink, maintenance) over sf0.1's events: one cold
+cycle, the first run of that code in the JVM, then warm ones, with the
+Spark jobs of each step and the parquet files the sink and maintenance
+wrote. A sink or storage layout change is A/B'd with it as two trees.
+
 An arm is a source tree, so a switch that used to be an env knob is
 A/B'd as a tree: to re-run the AB_VERIFY_R30_r14.json comparison (q199
 with and without its verify pin), check out a copy whose
@@ -37,17 +43,21 @@ with and without its verify pin), check out a copy whose
 
 Usage:
   python ab_bench.py <labelA>=<treeA> <labelB>=<treeB> [reps] [out.json] [probes]
-    probes: comma list from {main, corpus, heavy}; default main
+    probes: comma list from {main, corpus, heavy, rank, ingest_cycle};
+    default main
   python ab_bench.py --probe <tree> [kind]   # internal, one subprocess
 """
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
+import shutil
 import statistics
 import subprocess
 import sys
+import tempfile
 import time
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -190,6 +200,78 @@ def probe_rank(tree: str) -> None:
     print("PROBE_JSON " + json.dumps(out))
 
 
+def probe_ingest_cycle(tree: str) -> None:
+    """One ingest cycle as the production path runs it, cold and then
+    warm: run_batch over events_as_messages(sf0.1), the fold
+    materialised with cache()+count(), write_outputs_batch and
+    run_maintenance, each cycle into a fresh tree. Reports each step's
+    seconds and Spark jobs (one job group per step) and the parquet
+    files the sink and maintenance wrote, so a sink or maintenance
+    change is A/B'd as two trees."""
+    sys.path.insert(0, tree)
+    from pyspark.sql import functions as F
+
+    from astarte_data_updater_plant_spark.session import get_spark
+    from astarte_data_updater_plant_spark.sources.stream import (
+        events_as_messages,
+        telemetry_interface,
+    )
+    from astarte_data_updater_plant_spark.storage.jobs import run_maintenance
+    from astarte_data_updater_plant_spark.streaming.pipeline import run_batch
+    from astarte_data_updater_plant_spark.streaming.sinks import write_outputs_batch
+
+    spark = get_spark("ab_probe_ingest_cycle")
+    sc = spark.sparkContext
+    msgs = events_as_messages(spark, SF_DIR).persist()
+    n = msgs.count()
+    now = F.lit("2020-01-01").cast("timestamp")
+
+    def files(path: str) -> int:
+        return sum(
+            name.endswith(".parquet") for _r, _d, names in os.walk(path) for name in names
+        )
+
+    groups = itertools.count()
+
+    def step(rec: dict, name: str, action) -> None:
+        group = f"ab-{name}-{next(groups)}"
+        sc.setJobGroup(group, group)
+        t0 = time.perf_counter()
+        try:
+            action()
+        finally:
+            sc.setJobGroup("other", "")
+        rec[f"{name}_s"] = round(time.perf_counter() - t0, 3)
+        rec[f"{name}_jobs"] = len(sc.statusTracker().getJobIdsForGroup(group))
+
+    def cycle() -> dict:
+        base = tempfile.mkdtemp(prefix="ab_ingest_cycle_")
+        rec: dict = {}
+        try:
+            outputs = run_batch(msgs, interfaces=(telemetry_interface(),)).cache()
+            step(rec, "fold", outputs.count)
+            step(rec, "sink", lambda: write_outputs_batch(outputs, base))
+            rec["sink_files"] = files(base)
+            outputs.unpersist()
+            step(rec, "maintenance", lambda: run_maintenance(spark, base, now))
+            rec["maintenance_files"] = files(base) - rec["sink_files"]
+        finally:
+            shutil.rmtree(base, ignore_errors=True)
+        return rec
+
+    cold = cycle()
+    warm = [cycle() for _ in range(RUNS)]
+    out = {
+        "tree": tree,
+        "ingest_cycle_msgs": n,
+        "cycle_cold": cold,
+        "cycle_warm": {k: statistics.median(r[k] for r in warm) for k in cold},
+        "cycle_warm_raw": warm,
+    }
+    msgs.unpersist()
+    print("PROBE_JSON " + json.dumps(out))
+
+
 #: THE probe-kind registry: kind -> (probe entrypoint, summary specs
 #: as (summary_key, family, value_key) triples). main() validates
 #: requested kinds against it and the --probe dispatcher resolves
@@ -221,6 +303,17 @@ PROBES = {
             ("heavy_q47_sec_best", "heavy_q47", "best"),
             ("heavy_q204_sec", "heavy_q204", "sec"),
             ("heavy_q204_sec_best", "heavy_q204", "best"),
+        ),
+    ),
+    "ingest_cycle": (
+        probe_ingest_cycle,
+        tuple(
+            (f"{fam}_{key}", fam, key)
+            for fam in ("cycle_cold", "cycle_warm")
+            for key in (
+                "fold_s", "sink_s", "maintenance_s",
+                "sink_jobs", "maintenance_jobs", "sink_files", "maintenance_files",
+            )
         ),
     ),
     "rank": (

@@ -1,8 +1,12 @@
 """Periodic maintenance jobs — the background work Cassandra did
 implicitly (tombstone GC, TTL expiry) made explicit and schedulable.
 
-Each job is a pure batch Spark job over the storage layout written by
+Each job is a pure batch Spark job over the logs written by
 ``streaming.sinks``: idempotent, safe to re-run, partition-parallel.
+The sink appends its device logs as sorted runs; these jobs are the
+only writers of the clustered ``(realm, bucket)`` layout
+(``storage.layout``), the compaction step of Cassandra's flush and
+compact.
 On a lakehouse (Delta/Iceberg) these become MERGE/DELETE statements
 with identical semantics; on plain parquet they rewrite to a fresh
 directory and swap, which is the pattern below.
@@ -18,12 +22,17 @@ from __future__ import annotations
 from concurrent.futures import ThreadPoolExecutor
 from typing import Any, Callable, Sequence
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.util import inheritable_thread_target
 
-from .layout import compact_properties, live_view, write_device_table
+from .layout import (
+    DATASTREAM_LOG_SCHEMA,
+    PROPERTY_LOG_SCHEMA,
+    compact_properties,
+    live_view,
+    write_device_table,
+)
 
 
 def run_concurrently(
@@ -54,16 +63,21 @@ def compact_property_log(
 ) -> int:
     """Fold the append-only property upsert/tombstone log into its LWW
     state table (queries.ex:87-155 as a batch job). Returns the number
-    of live rows written."""
-    try:
-        log = spark.read.parquet(log_path)
-    except AnalysisException as e:
-        # a tree that never received a property write holds only the
-        # empty appends' _SUCCESS markers: no rows, hence no schema
-        if e.getCondition() != "UNABLE_TO_INFER_SCHEMA":
-            raise
+    of live rows written; a log holding no rows writes nothing.
+
+    One exchange: the log is hash-partitioned on ``(realm, bucket)``
+    and the LWW window is keyed with ``bucket`` too (a function of
+    ``device_id``, so the winners are the same), which leaves the rows
+    already partitioned the way ``write_device_table`` lays them out."""
+    log = spark.read.schema(PROPERTY_LOG_SCHEMA).parquet(log_path)
+    # the scan's own file listing, no Spark job; the row Observation of
+    # write_counted cannot complete over a scan of no files
+    if not log.inputFiles():
         return 0
-    live = compact_properties(log.drop("bucket"))
+    live = compact_properties(
+        log.repartition("realm", "bucket"),
+        key=("realm", "bucket", "device_id", "interface", "path"),
+    )
     return write_counted(
         live,
         out_path,
@@ -76,11 +90,13 @@ def vacuum_datastreams(
     spark: SparkSession, path: str, now: Column, out_path: str
 ) -> int:
     """Drop TTL-expired datastream rows (queries.ex:299-306,
-    impl.ex:527-533): scan+filter+rewrite, partition-parallel. Returns
-    rows retained."""
-    df = spark.read.parquet(path)
-    live = live_view(df, now).drop("bucket")
-    return write_counted(live, out_path, mode="overwrite")
+    impl.ex:527-533): scan+filter+rewrite into the clustered layout, one
+    exchange. Returns rows retained; a log holding no rows writes
+    nothing."""
+    df = spark.read.schema(DATASTREAM_LOG_SCHEMA).parquet(path)
+    if not df.inputFiles():
+        return 0
+    return write_counted(live_view(df, now), out_path, mode="overwrite")
 
 
 def run_maintenance(spark: SparkSession, base_dir: str, now: Column) -> dict:

@@ -4,10 +4,10 @@ publishes re-expressed as foreachBatch materializers.
 Each micro-batch of the union output frame (pipeline.OUTPUT_SCHEMA)
 fans out to:
 
-- ``individual_datastreams`` — append-only device table
-  (queries.ex:157-197) in the partitioned storage layout.
+- ``individual_datastreams`` — append-only device log
+  (queries.ex:157-197).
 - ``property_log`` — append-only upsert/tombstone log
-  (queries.ex:87-155); ``storage.layout.compact_properties`` folds it
+  (queries.ex:87-155); ``storage.jobs.compact_property_log`` folds it
   into the LWW state.
 - ``events_log`` — the AMQP events exchange stand-in
   (triggers_handler.ex:377-459): one row per SimpleEvent, partitioned
@@ -16,6 +16,14 @@ fans out to:
 - ``device_commands`` — clean-session / disconnect asks (A29).
 - ``devices`` — snapshot rows (queries.ex:460-510); latest snapshot
   per device wins at read time.
+
+Both device logs go through ``storage.layout.append_device_log``,
+Cassandra's memtable flush: no shuffle, each micro-batch appends one
+sorted run per (input partition, realm), with the device bucket as a
+data column (``storage.layout.DATASTREAM_LOG_SCHEMA`` and
+``PROPERTY_LOG_SCHEMA`` declare what lands). Clustering them into
+``(realm, bucket)`` directories is left to maintenance
+(``storage.jobs``), the compaction step.
 
 The six writes share nothing but their input, as the reference's
 per-table inserts and event publishes do, so they run concurrently
@@ -41,7 +49,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..storage.jobs import run_concurrently
-from ..storage.layout import write_device_table
+from ..storage.layout import append_device_log
 from .pipeline import (
     PROPERTY_JSON_SCHEMA,
     commands_table,
@@ -116,13 +124,11 @@ def write_outputs_batch(outputs: DataFrame, base_dir: str) -> None:
         # a shuffle-free action: count() would add a second job
         outputs.write.format("noop").mode("overwrite").save()
         writes = [
-            lambda: write_device_table(
+            lambda: append_device_log(
                 datastream_table(outputs), f"{base_dir}/individual_datastreams"
             ),
-            lambda: write_device_table(
-                property_log_table(outputs),
-                f"{base_dir}/property_log",
-                order=("device_id", "interface", "path", "reception_timestamp"),
+            lambda: append_device_log(
+                property_log_table(outputs), f"{base_dir}/property_log"
             ),
             lambda: events_table(outputs)
             .repartition("event_type")

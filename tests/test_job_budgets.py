@@ -14,19 +14,26 @@ import itertools
 
 from pyspark.sql import functions as F
 
-from astarte_data_updater_plant_spark.storage.jobs import run_maintenance
+from astarte_data_updater_plant_spark.storage.jobs import (
+    compact_property_log,
+    run_maintenance,
+    vacuum_datastreams,
+)
 from astarte_data_updater_plant_spark.streaming.pipeline import run_batch
 from astarte_data_updater_plant_spark.streaming.sinks import write_outputs_batch
 
 from .fixtures_flow import messages_frame
 
 JOB_BUDGETS = {
-    # 9 write jobs (two per shuffled device/event table, one per plain
-    # table) plus the one action that materialises the input
-    "write_outputs_batch": 10,
-    # two rewrites; their row counts are observed during the writes,
-    # not read back
-    "run_maintenance": 9,
+    # one job per table write, two for the shuffled events_log, plus
+    # the one action that materialises the input: the device logs are
+    # appended without a shuffle
+    "write_outputs_batch": 8,
+    # two rewrites of one shuffle each, two jobs apiece; the logs are
+    # read with declared schemas and partitioned by realm only, so no
+    # footer-inference or parallel-listing job runs, and the row counts
+    # are observed during the writes, not read back
+    "run_maintenance": 4,
 }
 
 _GROUPS = itertools.count()
@@ -94,3 +101,46 @@ def test_sink_runs_the_fold_once(spark, tmp_path):
     assert len(folds) == 1
     fold_done = folds[0].completionTime().get().getTime()
     assert readers and all(r.submissionTime().get().getTime() >= fold_done for r in readers)
+
+
+def _plan_nodes(spark, action) -> list[list[str]]:
+    """The executed plan of each SQL execution ``action`` runs, as the
+    names of its nodes (AQE's final plan, query stages included)."""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def ids() -> set[int]:
+        execs = store.executionsList().iterator()
+        out = set()
+        while execs.hasNext():
+            out.add(execs.next().executionId())
+        return out
+
+    before = ids()
+    action()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    plans = []
+    for eid in sorted(ids() - before):
+        nodes = store.planGraph(eid).allNodes()
+        plans.append([nodes.apply(i).name() for i in range(nodes.size())])
+    return plans
+
+
+def test_maintenance_rewrites_shuffle_once(spark, tmp_path):
+    """Compaction and vacuum each run as one plan with exactly one
+    Exchange: the LWW window and the (realm, bucket) layout share the
+    compaction's, and the vacuum's scan feeds the layout's directly."""
+    base = str(tmp_path / "tables")
+    write_outputs_batch(run_batch(messages_frame(spark)), base)
+    for rewrite in (
+        lambda: compact_property_log(
+            spark, f"{base}/property_log", f"{base}/individual_properties"
+        ),
+        lambda: vacuum_datastreams(
+            spark,
+            f"{base}/individual_datastreams",
+            F.lit("2020-01-01").cast("timestamp"),
+            f"{base}/individual_datastreams_vacuumed",
+        ),
+    ):
+        (plan,) = _plan_nodes(spark, rewrite)
+        assert plan.count("Exchange") == 1, plan

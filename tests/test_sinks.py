@@ -5,15 +5,23 @@ from __future__ import annotations
 
 import glob
 import os
+import re
 import time
+from collections import Counter
 
+import pyarrow.parquet as pq
 import pytest
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from astarte_data_updater_plant_spark.storage.jobs import run_maintenance
-from astarte_data_updater_plant_spark.storage.layout import compact_properties
+from astarte_data_updater_plant_spark.storage.layout import (
+    DATASTREAM_LOG_SCHEMA,
+    PROPERTY_LOG_SCHEMA,
+    compact_properties,
+    read_device_table,
+)
 from astarte_data_updater_plant_spark.streaming.pipeline import (
     MESSAGE_SCHEMA,
     run_batch,
@@ -25,7 +33,7 @@ from astarte_data_updater_plant_spark.streaming.sinks import (
     write_outputs_batch,
 )
 
-from .fixtures_flow import messages_frame, simple_flow_messages
+from .fixtures_flow import DEVICE, messages_frame, simple_flow_messages
 
 
 @pytest.fixture(scope="module")
@@ -113,10 +121,82 @@ def test_failed_write_is_raised_after_the_others_land(spark, tmp_path):
 
 
 def test_datastreams_landed_partitioned(spark, sunk_dir):
+    """The datastream log is partitioned by realm directory; the device
+    bucket is a column inside the files, not a directory."""
     ds = spark.read.parquet(f"{sunk_dir}/individual_datastreams")
     assert ds.count() > 0
     assert {"realm", "bucket"} <= set(ds.columns)
     assert ds.filter(F.col("integer_value").isNotNull()).count() > 0
+    files = glob.glob(f"{sunk_dir}/individual_datastreams/realm=*/*.parquet")
+    assert files
+    file_columns = pq.read_schema(files[0]).names
+    assert "bucket" in file_columns and "realm" not in file_columns
+
+
+@pytest.mark.parametrize(
+    "table, schema",
+    [
+        ("individual_datastreams", DATASTREAM_LOG_SCHEMA),
+        ("property_log", PROPERTY_LOG_SCHEMA),
+    ],
+)
+def test_logs_land_with_their_declared_schema(spark, sunk_dir, table, schema):
+    """Maintenance reads the logs with the declared schemas: they must
+    be exactly what the sink writes, or a column would be dropped."""
+    landed = spark.read.parquet(f"{sunk_dir}/{table}").schema
+    assert {(f.name, f.dataType) for f in landed} == {
+        (f.name, f.dataType) for f in schema
+    }
+
+
+@pytest.fixture(scope="module")
+def batch_tree(spark, tmp_path_factory):
+    """The simple flow and the sf0.001 telemetry, two realms, through
+    one sink batch and one maintenance cycle. Returns the tree and the
+    sink input's partition count."""
+    from astarte_data_updater_plant_spark.catalog import fixture_interfaces
+    from astarte_data_updater_plant_spark.sources.stream import (
+        events_as_messages,
+        telemetry_interface,
+    )
+
+    base = str(tmp_path_factory.mktemp("batch") / "tables")
+    msgs = messages_frame(spark).unionByName(
+        events_as_messages(spark, "/root/testdata/sf0.001")
+    )
+    interfaces = (*fixture_interfaces(), telemetry_interface())
+    outputs = run_batch(msgs, interfaces=interfaces).cache()
+    outputs.count()
+    write_outputs_batch(outputs, base)
+    partitions = outputs.rdd.getNumPartitions()
+    outputs.unpersist()
+    # a cutoff before every expiry: the vacuum keeps every row
+    run_maintenance(spark, base, F.lit("1970-01-01").cast("timestamp"))
+    return base, partitions
+
+
+def _log_files(base: str, table: str) -> list[str]:
+    return glob.glob(f"{base}/{table}/**/*.parquet", recursive=True)
+
+
+@pytest.mark.parametrize("table", ["individual_datastreams", "property_log"])
+def test_logs_are_sorted_runs_per_partition_and_realm(spark, batch_tree, sunk_dir, table):
+    """A log batch is one sorted run per (input partition, realm): no
+    bucket directories, at most partitions x realms files, and rows in
+    each file ordered by (bucket, device_id, interface, path,
+    reception_timestamp)."""
+    base, partitions = batch_tree
+    for tree in (base, sunk_dir):
+        assert not glob.glob(f"{tree}/{table}/**/bucket=*", recursive=True)
+    files = _log_files(base, table)
+    realms = spark.read.parquet(f"{base}/{table}").select("realm").distinct().count()
+    assert 0 < len(files) <= partitions * realms
+    files += _log_files(sunk_dir, table)
+    key = ("bucket", "device_id", "interface", "path", "reception_timestamp")
+    for f in files:
+        rows = pq.read_table(f, columns=list(key)).to_pylist()
+        ordered = [tuple((r[k] is not None, r[k]) for k in key) for r in rows]
+        assert ordered == sorted(ordered), f
 
 
 def test_property_log_compacts_to_lww(spark, sunk_dir):
@@ -162,6 +242,53 @@ def test_maintenance_on_telemetry_only_tree(spark, tmp_path):
     assert not os.path.exists(f"{base}/individual_properties")
     vacuumed = spark.read.parquet(f"{base}/individual_datastreams_vacuumed").count()
     assert stats["datastreams_live"] == vacuumed > 0
+
+
+def _scan_filters(df, kind: str) -> str:
+    """The ``PartitionFilters`` or ``PushedFilters`` list of the scan
+    (cut at ``spark.sql.maxMetadataStringLength``)."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return re.search(rf"{kind}: \[([^\]]*)", plan).group(1)
+
+
+def test_point_read_same_rows_from_log_and_maintained_table(spark, batch_tree):
+    """read_device_table returns a device's rows from the log, where
+    bucket is a pushed-down column, and from the vacuumed table, where
+    it is a directory, alike."""
+    base, _ = batch_tree
+    log = spark.read.parquet(f"{base}/individual_datastreams")
+    devices = {DEVICE} | {
+        r.device_id for r in log.filter(F.col("device_id") != DEVICE)
+        .select("device_id").distinct().limit(2).collect()
+    }
+    assert len(devices) == 3
+    for device in devices:
+        got = {}
+        for table in ("individual_datastreams", "individual_datastreams_vacuumed"):
+            df = read_device_table(spark, f"{base}/{table}", device_id=device)
+            got[table] = Counter(map(tuple, df.select(*sorted(df.columns)).collect()))
+            pruned_by = "PushedFilters" if table == "individual_datastreams" else "PartitionFilters"
+            assert "bucket" in _scan_filters(df, pruned_by)
+        assert got["individual_datastreams"] == got["individual_datastreams_vacuumed"]
+        assert got["individual_datastreams"], device
+
+
+def test_maintenance_on_property_only_tree(spark, tmp_path):
+    """The mirror of the telemetry-only tree: with only property
+    traffic the datastream log holds no rows, and maintenance reports
+    zero live datastreams instead of failing to infer its schema."""
+    base = str(tmp_path / "tables")
+    msgs = [
+        m for m in simple_flow_messages()
+        if m["interface"] in (None, "com.test.LCDMonitor")
+    ]
+    write_outputs_batch(run_batch(messages_frame(spark, msgs)), base)
+    assert not _log_files(base, "individual_datastreams")
+    stats = run_maintenance(spark, base, F.current_timestamp())
+    assert stats["datastreams_live"] == 0
+    assert not os.path.exists(f"{base}/individual_datastreams_vacuumed")
+    props = spark.read.parquet(f"{base}/individual_properties").count()
+    assert stats["properties_live"] == props > 0
 
 
 def test_with_retry_backs_off_then_raises():

@@ -3,17 +3,20 @@
 from __future__ import annotations
 
 import datetime as dt
+import glob
 
+import pyarrow.parquet as pq
 import pytest
 
 from pyspark.sql import functions as F
 
+from astarte_data_updater_plant_spark.storage.jobs import vacuum_datastreams
 from astarte_data_updater_plant_spark.storage.layout import (
+    append_device_log,
     compact_properties,
     device_bucket,
     live_view,
     read_device_table,
-    vacuum_expired,
     write_device_table,
 )
 
@@ -39,7 +42,7 @@ def table_dir(spark, tmp_path_factory):
         "realm string, device_id string, interface string, path string,"
         " reception_timestamp timestamp, double_value double",
     )
-    write_device_table(df, path, n_buckets=8)
+    write_device_table(df.withColumn("bucket", device_bucket(F.col("device_id"), 8)), path)
     return path
 
 
@@ -71,6 +74,17 @@ def test_device_point_read_prunes_to_one_bucket(spark, table_dir):
     assert df.select("bucket").distinct().first().bucket == expected_bucket
 
 
+def test_device_table_files_keep_their_order(table_dir):
+    """Rows inside every file of the clustered layout are ordered by
+    (device_id, interface, path, reception_timestamp)."""
+    key = ["device_id", "interface", "path", "reception_timestamp"]
+    files = glob.glob(f"{table_dir}/realm=*/bucket=*/*.parquet")
+    assert files
+    for f in files:
+        rows = [tuple(r.values()) for r in pq.read_table(f, columns=key).to_pylist()]
+        assert rows == sorted(rows), f
+
+
 def test_compact_properties_lww_and_tombstones(spark):
     rows = [
         # key set twice -> latest value wins
@@ -99,21 +113,19 @@ def test_ttl_live_view_and_vacuum(spark, tmp_path):
     src = str(tmp_path / "ttl_src")
     out = str(tmp_path / "ttl_out")
     rows = [
-        ("r", "d1", _ts(0), _ts(100)),   # expired at cutoff 200
-        ("r", "d1", _ts(0), _ts(300)),   # live
-        ("r", "d2", _ts(0), None),       # no TTL -> live forever
+        ("r", "d1", "i", "/p", _ts(0), _ts(100)),   # expired at cutoff 200
+        ("r", "d1", "i", "/p", _ts(0), _ts(300)),   # live
+        ("r", "d2", "i", "/p", _ts(0), None),       # no TTL -> live forever
     ]
     df = spark.createDataFrame(
         rows,
-        "realm string, device_id string, reception_timestamp timestamp,"
-        " expires_at timestamp",
+        "realm string, device_id string, interface string, path string,"
+        " reception_timestamp timestamp, expires_at timestamp",
     )
-    write_device_table(
-        df, src, order=("device_id", "reception_timestamp"), n_buckets=4
-    )
+    append_device_log(df, src)
     cutoff = F.lit(_ts(200))
     assert live_view(spark.read.parquet(src), cutoff).count() == 2
-    vacuum_expired(spark, src, cutoff, out)
+    assert vacuum_datastreams(spark, src, cutoff, out) == 2
     back = spark.read.parquet(out)
     assert back.count() == 2
     assert back.filter(F.col("expires_at").isNotNull()).count() == 1
