@@ -13,11 +13,39 @@ s72 additionally runs the windowed aggregate through Structured
 Streaming (file source, complete mode) and hash-checks the streaming
 result against the same batch oracle — streaming/batch unification on
 real execution, not by construction.
+
+Every streaming scenario (s72-s103) is a replayable source, an
+incremental plan and a sink with a checkpoint. The source and sink
+halves are spelled once, by these driver-side helpers:
+
+- ``_ordered_files(frames, prefix)`` writes each frame as exactly one
+  parquet file, and ``_time_sliced_files`` writes n event-time slices
+  in one partitioned write. Both place their files through
+  ``_move_stamped``, which stamps mtimes strictly increasing in list
+  order: Spark's file stream source orders by mtime, not by name.
+- ``_file_stream(spark, schema, src_dir)`` reads such a directory one
+  file per micro-batch, so micro-batch k is exactly file k.
+- ``_shuffle_width(spark)`` pins ``spark.sql.shuffle.partitions`` to
+  the default parallelism and restores it on exit. A stream fixes its
+  stateful shuffle width when it starts, and a plain session's 200
+  partitions cost ~6x on the grouped-state stages at test scale.
+- ``_run_to_memory(df, name, mode)`` drains a stream into the memory
+  table ``name``: it stops a live query of that name, starts an
+  availableNow query with a fresh checkpoint inside
+  ``_shuffle_width``, and waits with the checked ``_await_stream``,
+  which stops the query and raises when the deadline passes.
+
+Scenarios that sink through ``foreachBatch`` or a parquet path (s87,
+s91, s92, s96) start their query inside ``_shuffle_width`` themselves.
 """
 
 from __future__ import annotations
 
+import glob
 import os
+import shutil
+import time
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -76,6 +104,118 @@ def _await_stream(query, timeout_sec: int = 600) -> None:
             raise RuntimeError(
                 f"stream query did not finish within {timeout_sec}s"
             )
+
+
+def _move_stamped(moves: list[tuple[str, str]]) -> None:
+    """Move each ``(src, dst)`` file and stamp ``dst`` with its list
+    position, so the file stream source reads the files in list order.
+    ``shutil.move`` keeps the writing tasks' arbitrary completion
+    mtimes (observed at sf0.1: slice 1 ran as batch 0, so every data
+    message dead-lettered before its device's introspection)."""
+    base = time.time()
+    for idx, (src, dst) in enumerate(moves):
+        shutil.move(src, dst)
+        _stamp_ordered(dst, idx, base)
+
+
+def _ordered_files(frames: list[DataFrame], prefix: str) -> str:
+    """Write each frame as exactly one parquet file ``{i:03d}.parquet``
+    whose source order is its list position; returns the directory."""
+    src_dir = scratch_dir(prefix=prefix)
+    stage_dir = os.path.join(src_dir, "_staged")
+    moves = []
+    for i, frame in enumerate(frames):
+        stage = os.path.join(stage_dir, str(i))
+        frame.coalesce(1).write.parquet(stage)
+        (part,) = glob.glob(os.path.join(stage, "part-*.parquet"))
+        moves.append((part, os.path.join(src_dir, f"{i:03d}.parquet")))
+    _move_stamped(moves)
+    shutil.rmtree(stage_dir)
+    return src_dir
+
+
+def _time_sliced_files(df, ts_col: str, n_slices: int = 4, prefix: str = "slices_") -> str:
+    """Write df as n time-range files whose SOURCE ORDER equals event-
+    time order (so one file per trigger yields time-ordered micro-
+    batches). One partitioned write — a filter+write per slice would
+    recompute the upstream plan once per slice."""
+    lo, hi = df.agg(F.min(ts_col), F.max(ts_col)).first()
+    span = (hi - lo).total_seconds() + 1.0
+    src_dir = scratch_dir(prefix=prefix)
+    stage_dir = os.path.join(src_dir, "_staged")
+    slice_col = F.least(
+        F.floor(
+            (ts_micros(ts_col) - ts_micros(F.lit(lo)))
+            / F.lit(span * 1_000_000.0 / n_slices)
+        ),
+        F.lit(n_slices - 1),
+    ).cast("int")
+    (
+        df.withColumn("slice", slice_col)
+        .repartition("slice")
+        .write.partitionBy("slice")
+        .parquet(stage_dir)
+    )
+    moves = []
+    for i in range(n_slices):
+        parts = glob.glob(os.path.join(stage_dir, f"slice={i}", "part-*.parquet"))
+        for j, part in enumerate(sorted(parts)):
+            moves.append((part, os.path.join(src_dir, f"{i:03d}_{j}.parquet")))
+    _move_stamped(moves)
+    shutil.rmtree(stage_dir)
+    return src_dir
+
+
+def _ntile_slices(df: DataFrame) -> list[DataFrame]:
+    """df cut into the three NTILE(3) slices of the global (ts,
+    event_id) order, through the range-partitioned two-phase rank: a
+    bare Window.orderBy would sort every event on one task."""
+    tiled = with_global_order(df, ["ts", "event_id"], ntile=(3, "tile"))
+    return [tiled.filter(F.col("tile") == i).drop("tile") for i in (1, 2, 3)]
+
+
+def _file_stream(spark: SparkSession, schema, src_dir: str) -> DataFrame:
+    """The file stream over ``src_dir``, one file per micro-batch."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src_dir)
+    )
+
+
+@contextmanager
+def _shuffle_width(spark: SparkSession):
+    """Pin the shuffle width to the machine's parallelism while the
+    block runs: a stream fixes its stateful shuffle width at start, and
+    the driver's plain session defaults to 200 partitions, a 6x
+    overhead for the grouped-state stages at test scale."""
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(spark.sparkContext.defaultParallelism))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
+
+
+def _run_to_memory(df: DataFrame, name: str, mode: str = "append") -> DataFrame:
+    """Drain the stream ``df`` into the memory table ``name`` with a
+    pinned shuffle width and a checked timeout; returns the table."""
+    spark = df.sparkSession
+    for q in spark.streams.active:
+        if q.name == name:
+            q.stop()
+    with _shuffle_width(spark):
+        query = (
+            df.writeStream.outputMode(mode)
+            .format("memory")
+            .queryName(name)
+            .option("checkpointLocation", scratch_dir(prefix=f"{name}_ckpt_"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        _await_stream(query)
+    return spark.table(name)
 
 
 @register(
@@ -164,21 +304,8 @@ def s72_stream_hourly_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("value").cast("decimal(8,4)")).cast("double").alias("sum_value"),
         )
     )
-    qname = "s72_stream_hourly"
-    for q in spark.streams.active:
-        if q.name == qname:
-            q.stop()
-    query = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(qname)
-        .option("checkpointLocation", scratch_dir(prefix="s72_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_stream(query)
     return (
-        spark.table(qname)
+        _run_to_memory(agg, "s72_stream_hourly", "complete")
         .select(
             F.col("w.start").alias("window_start"),
             "event_type",
@@ -187,53 +314,6 @@ def s72_stream_hourly_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("window_start", "event_type")
     )
-
-
-def _time_sliced_files(df, ts_col: str, n_slices: int = 4, prefix: str = "slices_") -> str:
-    """Write df as n time-range files whose SOURCE ORDER equals event-
-    time order (so maxFilesPerTrigger=1 yields time-ordered micro-
-    batches). One partitioned write — a filter+write per slice would
-    recompute the upstream plan once per slice.
-
-    Spark's file stream source batches files by MODIFICATION TIME, not
-    path: shutil.move preserves the parquet tasks' arbitrary
-    write-completion mtimes, so the slices must be explicitly
-    re-stamped in slice order or micro-batches arrive out of order
-    (observed at sf0.1: slice 1 ran as batch 0, so every data message
-    dead-lettered before its device's introspection was seen)."""
-    import glob
-    import os
-    import shutil
-    import time as _time
-
-    lo, hi = df.agg(F.min(ts_col), F.max(ts_col)).first()
-    span = (hi - lo).total_seconds() + 1.0
-    src_dir = scratch_dir(prefix=prefix)
-    stage_dir = os.path.join(src_dir, "_staged")
-    slice_col = F.least(
-        F.floor(
-            (ts_micros(ts_col) - ts_micros(F.lit(lo)))
-            / F.lit(span * 1_000_000.0 / n_slices)
-        ),
-        F.lit(n_slices - 1),
-    ).cast("int")
-    (
-        df.withColumn("slice", slice_col)
-        .repartition("slice")
-        .write.partitionBy("slice")
-        .parquet(stage_dir)
-    )
-    base = _time.time()
-    seq = 0
-    for i in range(n_slices):
-        parts = glob.glob(os.path.join(stage_dir, f"slice={i}", "part-*.parquet"))
-        for j, part_file in enumerate(sorted(parts)):
-            dst = os.path.join(src_dir, f"{i:03d}_{j}.parquet")
-            shutil.move(part_file, dst)
-            _stamp_ordered(dst, seq, base)
-            seq += 1
-    shutil.rmtree(stage_dir)
-    return src_dir
 
 
 @register(
@@ -262,40 +342,16 @@ def s73_stream_ingest_datastreams(spark: SparkSession, sf_dir: str) -> DataFrame
     # per-device intro precedes its data (intro ts = min(ts) - 1s), so
     # time-ordered batches preserve the reference's FIFO guarantee
     src_dir = _time_sliced_files(msgs, "reception_timestamp", prefix="s73_src_")
-
-    # scope the stateful shuffle width to the machine: the driver's
-    # plain session defaults to 200 partitions, a 6x overhead for the
-    # grouped-state stage at test scale (restored after the drain)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
+    out = run_stream(
+        _file_stream(spark, MESSAGE_SCHEMA, src_dir),
+        interfaces=(telemetry_interface(),),
     )
-    try:
-        stream = (
-            spark.readStream.schema(MESSAGE_SCHEMA)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src_dir)
-        )
-        out = run_stream(stream, interfaces=(telemetry_interface(),))
-        ds = datastream_table(out).select(
-            "device_id", "path", "value_timestamp", "double_value"
-        )
-        qname = "s73_stream_ingest"
-        for q in spark.streams.active:
-            if q.name == qname:
-                q.stop()
-        query = (
-            ds.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(qname)
-            .option("checkpointLocation", scratch_dir(prefix="s73_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_stream(query)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.table(qname).orderBy("device_id", "path", "value_timestamp")
+    ds = datastream_table(out).select(
+        "device_id", "path", "value_timestamp", "double_value"
+    )
+    return _run_to_memory(ds, "s73_stream_ingest").orderBy(
+        "device_id", "path", "value_timestamp"
+    )
 
 
 @register(
@@ -336,21 +392,8 @@ def s74_stream_redelivery_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         deduped.groupBy("event_type", "user_id")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    qname = "s74_per_user"
-    for q in spark.streams.active:
-        if q.name == qname:
-            q.stop()
-    query = (
-        per_user.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(qname)
-        .option("checkpointLocation", scratch_dir(prefix="s74_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_stream(query)
     return (
-        spark.table(qname)
+        _run_to_memory(per_user, "s74_per_user", "complete")
         .groupBy("event_type")
         .agg(
             F.sum("n").cast("long").alias("n_unique"),
@@ -417,38 +460,14 @@ def s76_stream_watermarked_windows(spark: SparkSession, sf_dir: str) -> DataFram
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     ev = load_table(spark, sf_dir, "events").select("event_id", "ts", "event_type")
     src_dir = _time_sliced_files(ev, "ts", prefix="s76_src_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
+    stream = _file_stream(spark, ev.schema, src_dir)
+    agg = (
+        stream.withWatermark("ts", "1 hour")
+        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+        .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    try:
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src_dir)
-        )
-        agg = (
-            stream.withWatermark("ts", "1 hour")
-            .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-            .agg(F.count(F.lit(1)).alias("n_events"))
-        )
-        qname = "s76_watermarked"
-        for q in spark.streams.active:
-            if q.name == qname:
-                q.stop()
-        query = (
-            agg.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(qname)
-            .option("checkpointLocation", scratch_dir(prefix="s76_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_stream(query)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return (
-        spark.table(qname)
+        _run_to_memory(agg, "s76_watermarked")
         .select(F.col("w.start").alias("window_start"), "event_type", "n_events")
         .orderBy("window_start", "event_type")
     )
@@ -483,61 +502,34 @@ def s77_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "ts", "user_id", "event_type"
     )
     src_dir = _time_sliced_files(ev, "ts", prefix="s77_src_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
+    purchases = (
+        _file_stream(spark, ev.schema, src_dir)
+        .filter(F.col("event_type") == "purchase")
+        .select(
+            F.col("user_id").alias("p_user"),
+            F.col("event_id").alias("purchase_id"),
+            F.col("ts").alias("p_ts"),
+        )
+        .withWatermark("p_ts", "1 hour")
     )
-    try:
-        def side():
-            return (
-                spark.readStream.schema(ev.schema)
-                .option("maxFilesPerTrigger", "1")
-                .parquet(src_dir)
-            )
-
-        purchases = (
-            side()
-            .filter(F.col("event_type") == "purchase")
-            .select(
-                F.col("user_id").alias("p_user"),
-                F.col("event_id").alias("purchase_id"),
-                F.col("ts").alias("p_ts"),
-            )
-            .withWatermark("p_ts", "1 hour")
+    clicks = (
+        _file_stream(spark, ev.schema, src_dir)
+        .filter(F.col("event_type") == "click")
+        .select(
+            F.col("user_id").alias("c_user"),
+            F.col("event_id").alias("click_id"),
+            F.col("ts").alias("c_ts"),
         )
-        clicks = (
-            side()
-            .filter(F.col("event_type") == "click")
-            .select(
-                F.col("user_id").alias("c_user"),
-                F.col("event_id").alias("click_id"),
-                F.col("ts").alias("c_ts"),
-            )
-            .withWatermark("c_ts", "1 hour")
-        )
-        joined = purchases.join(
-            clicks,
-            F.expr(
-                "p_user = c_user AND c_ts >= p_ts - INTERVAL 1 HOUR AND c_ts < p_ts"
-            ),
-        )
-        qname = "s77_interval_join"
-        for q in spark.streams.active:
-            if q.name == qname:
-                q.stop()
-        query = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(qname)
-            .option("checkpointLocation", scratch_dir(prefix="s77_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_stream(query)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+        .withWatermark("c_ts", "1 hour")
+    )
+    joined = purchases.join(
+        clicks,
+        F.expr(
+            "p_user = c_user AND c_ts >= p_ts - INTERVAL 1 HOUR AND c_ts < p_ts"
+        ),
+    )
     return (
-        spark.table(qname)
+        _run_to_memory(joined, "s77_interval_join")
         .select(F.col("p_user").alias("user_id"), "purchase_id", "click_id")
         .orderBy("purchase_id", "click_id")
     )
@@ -591,38 +583,14 @@ def s78_stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     ev = load_table(spark, sf_dir, "events").select("event_id", "ts", "user_id")
     src_dir = _time_sliced_files(ev, "ts", prefix="s78_src_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
+    stream = _file_stream(spark, ev.schema, src_dir)
+    agg = (
+        stream.withWatermark("ts", "1 hour")
+        .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
+        .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    try:
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src_dir)
-        )
-        agg = (
-            stream.withWatermark("ts", "1 hour")
-            .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
-            .agg(F.count(F.lit(1)).alias("n_events"))
-        )
-        qname = "s78_session_windows"
-        for q in spark.streams.active:
-            if q.name == qname:
-                q.stop()
-        query = (
-            agg.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(qname)
-            .option("checkpointLocation", scratch_dir(prefix="s78_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_stream(query)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return (
-        spark.table(qname)
+        _run_to_memory(agg, "s78_session_windows")
         .select(
             "user_id",
             F.col("w.start").alias("session_start"),
@@ -666,28 +634,11 @@ def s79_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_mktsegment").alias("segment"),
     )
     src_dir = _time_sliced_files(ev, "ts", prefix="s79_src_")
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
+    stream = _file_stream(spark, ev.schema, src_dir)
     joined = stream.join(
         F.broadcast(cust), stream.user_id == cust.c_custkey
     ).select("event_id", "user_id", "customer_name", "segment", "event_type", "value")
-    qname = "s79_static_join"
-    for q in spark.streams.active:
-        if q.name == qname:
-            q.stop()
-    query = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(qname)
-        .option("checkpointLocation", scratch_dir(prefix="s79_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_stream(query)
-    return spark.table(qname).orderBy("event_id")
+    return _run_to_memory(joined, "s79_static_join").orderBy("event_id")
 
 
 @register(
@@ -713,10 +664,6 @@ def s79_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "distinct event set, which the oracle states trivially.",
 )
 def s80_stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
-    import os
-    import shutil
-
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
@@ -727,37 +674,13 @@ def s80_stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     # in later micro-batches with unchanged event times
     for f in sorted(glob.glob(os.path.join(src_dir, "*.parquet"))):
         shutil.copy(f, os.path.join(src_dir, "z_replay_" + os.path.basename(f)))
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
+    stream = _file_stream(spark, ev.schema, src_dir)
+    deduped = (
+        stream.withWatermark("ts", "1 hour")
+        .dropDuplicatesWithinWatermark(["event_id"])
+        .select("event_id", "user_id", "event_type", "value")
     )
-    try:
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src_dir)
-        )
-        deduped = (
-            stream.withWatermark("ts", "1 hour")
-            .dropDuplicatesWithinWatermark(["event_id"])
-            .select("event_id", "user_id", "event_type", "value")
-        )
-        qname = "s80_dedup"
-        for q in spark.streams.active:
-            if q.name == qname:
-                q.stop()
-        query = (
-            deduped.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(qname)
-            .option("checkpointLocation", scratch_dir(prefix="s80_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_stream(query)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.table(qname).orderBy("event_id")
+    return _run_to_memory(deduped, "s80_dedup").orderBy("event_id")
 
 
 @register(
@@ -793,38 +716,14 @@ def s81_stream_sliding_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     ev = load_table(spark, sf_dir, "events").select("event_id", "ts", "event_type")
     src_dir = _time_sliced_files(ev, "ts", prefix="s81_src_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
+    stream = _file_stream(spark, ev.schema, src_dir)
+    agg = (
+        stream.withWatermark("ts", "1 hour")
+        .groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"), "event_type")
+        .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    try:
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src_dir)
-        )
-        agg = (
-            stream.withWatermark("ts", "1 hour")
-            .groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"), "event_type")
-            .agg(F.count(F.lit(1)).alias("n_events"))
-        )
-        qname = "s81_sliding"
-        for q in spark.streams.active:
-            if q.name == qname:
-                q.stop()
-        query = (
-            agg.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(qname)
-            .option("checkpointLocation", scratch_dir(prefix="s81_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_stream(query)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return (
-        spark.table(qname)
+        _run_to_memory(agg, "s81_sliding")
         .select(F.col("w.start").alias("window_start"), "event_type", "n_events")
         .orderBy("window_start", "event_type")
     )
@@ -876,62 +775,35 @@ def s82_stream_outer_interval_join(spark: SparkSession, sf_dir: str) -> DataFram
         "event_id", "ts", "user_id", "event_type"
     )
     src_dir = _time_sliced_files(ev, "ts", prefix="s82_src_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
+    purchases = (
+        _file_stream(spark, ev.schema, src_dir)
+        .filter(F.col("event_type") == "purchase")
+        .select(
+            F.col("user_id").alias("p_user"),
+            F.col("event_id").alias("purchase_id"),
+            F.col("ts").alias("p_ts"),
+        )
+        .withWatermark("p_ts", "1 hour")
     )
-    try:
-        def side():
-            return (
-                spark.readStream.schema(ev.schema)
-                .option("maxFilesPerTrigger", "1")
-                .parquet(src_dir)
-            )
-
-        purchases = (
-            side()
-            .filter(F.col("event_type") == "purchase")
-            .select(
-                F.col("user_id").alias("p_user"),
-                F.col("event_id").alias("purchase_id"),
-                F.col("ts").alias("p_ts"),
-            )
-            .withWatermark("p_ts", "1 hour")
+    clicks = (
+        _file_stream(spark, ev.schema, src_dir)
+        .filter(F.col("event_type") == "click")
+        .select(
+            F.col("user_id").alias("c_user"),
+            F.col("event_id").alias("click_id"),
+            F.col("ts").alias("c_ts"),
         )
-        clicks = (
-            side()
-            .filter(F.col("event_type") == "click")
-            .select(
-                F.col("user_id").alias("c_user"),
-                F.col("event_id").alias("click_id"),
-                F.col("ts").alias("c_ts"),
-            )
-            .withWatermark("c_ts", "1 hour")
-        )
-        joined = purchases.join(
-            clicks,
-            F.expr(
-                "p_user = c_user AND c_ts >= p_ts - INTERVAL 1 HOUR AND c_ts < p_ts"
-            ),
-            "leftOuter",
-        )
-        qname = "s82_outer_join"
-        for q in spark.streams.active:
-            if q.name == qname:
-                q.stop()
-        query = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(qname)
-            .option("checkpointLocation", scratch_dir(prefix="s82_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_stream(query)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+        .withWatermark("c_ts", "1 hour")
+    )
+    joined = purchases.join(
+        clicks,
+        F.expr(
+            "p_user = c_user AND c_ts >= p_ts - INTERVAL 1 HOUR AND c_ts < p_ts"
+        ),
+        "leftOuter",
+    )
     return (
-        spark.table(qname)
+        _run_to_memory(joined, "s82_outer_join")
         .select(F.col("p_user").alias("user_id"), "purchase_id", "click_id")
         .orderBy("purchase_id", "click_id")
     )
@@ -1181,9 +1053,6 @@ RECRAWL_REV_RESIDUE = 7
     "dups that exposed the ambiguity).",
 )
 def s85_stream_snapshot_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
     from pyspark.sql import Window
 
     def min_per_hash(df: DataFrame) -> DataFrame:
@@ -1212,52 +1081,15 @@ def s85_stream_snapshot_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    src_dir = scratch_dir(prefix="s85_src_")
-    base = __import__("time").time()
-    for i, snap in enumerate((docs, recrawl)):
-        stage = os.path.join(src_dir, f"_stage{i}")
-        snap.coalesce(1).write.parquet(stage)
-        import glob as _glob
-
-        (part,) = _glob.glob(os.path.join(stage, "part-*.parquet"))
-        dst = os.path.join(src_dir, f"{i:03d}.parquet")
-        shutil.move(part, dst)
-        # the file stream source orders by mtime, not path — stamp the
-        # snapshots explicitly so snapshot 1 is ALWAYS batch 0
-        _stamp_ordered(dst, i, base)
-        shutil.rmtree(stage)
-
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
+    # snapshot 1 is ALWAYS batch 0
+    src_dir = _ordered_files([docs, recrawl], "s85_src_")
+    stream = _file_stream(spark, docs.schema, src_dir)
+    kept = (
+        stream.withColumn("text_hash", F.md5(F.col("text").cast("binary")))
+        .dropDuplicates(["text_hash"])
+        .select("doc_id", "text_hash")
     )
-    try:
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src_dir)
-        )
-        kept = (
-            stream.withColumn("text_hash", F.md5(F.col("text").cast("binary")))
-            .dropDuplicates(["text_hash"])
-            .select("doc_id", "text_hash")
-        )
-        qname = "s85_dedup"
-        for q in spark.streams.active:
-            if q.name == qname:
-                q.stop()
-        query = (
-            kept.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(qname)
-            .option("checkpointLocation", scratch_dir(prefix="s85_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_stream(query)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.table(qname).orderBy("doc_id")
+    return _run_to_memory(kept, "s85_dedup").orderBy("doc_id")
 
 
 # -- s86: error-channel taxonomy under the hash gate -------------------------
@@ -1370,28 +1202,18 @@ def s86_error_taxonomy(spark: SparkSession, sf_dir: str) -> DataFrame:
     "per-batch merge cost is one keyed shuffle of store+batch.",
 )
 def s87_foreachbatch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
-    import os
-    import shutil
-    import time
-
     from pyspark.sql import Window
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    src_dir = scratch_dir(prefix="s87_src_")
-    base = time.time()
-    for i in range(3):
-        sl = ev.filter((F.col("event_id") % 3 == i) | (F.col("event_id") % 5 == i))
-        stage = os.path.join(src_dir, f"_stage{i}")
-        sl.coalesce(1).write.parquet(stage)
-        (part,) = glob.glob(os.path.join(stage, "part-*.parquet"))
-        dst = os.path.join(src_dir, f"{i:03d}.parquet")
-        shutil.move(part, dst)
-        # file stream source orders by mtime — stamp slice order
-        _stamp_ordered(dst, i, base)
-        shutil.rmtree(stage)
+    src_dir = _ordered_files(
+        [
+            ev.filter((F.col("event_id") % 3 == i) | (F.col("event_id") % 5 == i))
+            for i in range(3)
+        ],
+        "s87_src_",
+    )
 
     store_root = scratch_dir(prefix="s87_store_")
     current = {"path": None}
@@ -1416,26 +1238,15 @@ def s87_foreachbatch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         lww.write.mode("overwrite").parquet(version_dir)
         current["path"] = version_dir
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
-    )
-    try:
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src_dir)
-        )
+    with _shuffle_width(spark):
         query = (
-            stream.writeStream.foreachBatch(merge_batch)
+            _file_stream(spark, ev.schema, src_dir)
+            .writeStream.foreachBatch(merge_batch)
             .option("checkpointLocation", scratch_dir(prefix="s87_ckpt_"))
             .trigger(availableNow=True)
             .start()
         )
         _await_stream(query)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-
     return (
         spark.read.parquet(current["path"])
         .select(
@@ -1494,11 +1305,6 @@ _S88_THRESH = 100.0
     "state with changelog checkpointing.",
 )
 def s88_stream_streak_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
-    import os
-    import shutil
-    import time
-
     import pandas as pd
 
     def streak_fold(key, pdf_iter, state):
@@ -1521,59 +1327,16 @@ def s88_stream_streak_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "value"
     )
-    from pyspark.sql import Window
-
-    # time-sliced via the range-partitioned two-phase NTILE — the bare
-    # Window.orderBy it replaces sorted every event on one task
-    sliced = with_global_order(
-        ev, ["ts", "event_id"], ntile=(3, "tile")
-    ).withColumn("slice", F.col("tile") - 1).drop("tile")
-    src_dir = scratch_dir(prefix="s88_src_")
-    base = time.time()
-    for i in range(3):
-        stage = os.path.join(src_dir, f"_stage{i}")
-        sliced.filter(F.col("slice") == i).drop("slice").coalesce(1).write.parquet(
-            stage
-        )
-        (part,) = glob.glob(os.path.join(stage, "part-*.parquet"))
-        dst = os.path.join(src_dir, f"{i:03d}.parquet")
-        shutil.move(part, dst)
-        _stamp_ordered(dst, i, base)
-        shutil.rmtree(stage)
-
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
+    src_dir = _ordered_files(_ntile_slices(ev), "s88_src_")
+    stream = _file_stream(spark, ev.schema, src_dir)
+    out = stream.groupBy("user_id").applyInPandasWithState(
+        streak_fold,
+        outputStructType="user_id BIGINT, event_id BIGINT, streak_len BIGINT",
+        stateStructType="n BIGINT",
+        outputMode="append",
+        timeoutConf="NoTimeout",
     )
-    try:
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src_dir)
-        )
-        out = stream.groupBy("user_id").applyInPandasWithState(
-            streak_fold,
-            outputStructType="user_id BIGINT, event_id BIGINT, streak_len BIGINT",
-            stateStructType="n BIGINT",
-            outputMode="append",
-            timeoutConf="NoTimeout",
-        )
-        qname = "s88_streaks"
-        for q in spark.streams.active:
-            if q.name == qname:
-                q.stop()
-        query = (
-            out.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(qname)
-            .option("checkpointLocation", scratch_dir(prefix="s88_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_stream(query)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.table(qname).orderBy("event_id")
+    return _run_to_memory(out, "s88_streaks").orderBy("event_id")
 
 
 # -- s89: streaming 3-sigma alerting on exact running stats ------------------
@@ -1625,34 +1388,12 @@ _S89_MIN_N = 5
     "device fleet actually needs, in one keyed stateful operator.",
 )
 def s89_stream_anomaly_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
-    import os
-    import shutil
-    import time
-
     import pandas as pd
-    from pyspark.sql import Window
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "value"
     )
-    # time-sliced via the range-partitioned two-phase NTILE — the bare
-    # Window.orderBy it replaces sorted every event on one task
-    sliced = with_global_order(
-        ev, ["ts", "event_id"], ntile=(3, "tile")
-    ).withColumn("slice", F.col("tile") - 1).drop("tile")
-    src_dir = scratch_dir(prefix="s89_src_")
-    base = time.time()
-    for i in range(3):
-        stage = os.path.join(src_dir, f"_stage{i}")
-        sliced.filter(F.col("slice") == i).drop("slice").coalesce(1).write.parquet(
-            stage
-        )
-        (part,) = glob.glob(os.path.join(stage, "part-*.parquet"))
-        dst = os.path.join(src_dir, f"{i:03d}.parquet")
-        shutil.move(part, dst)
-        _stamp_ordered(dst, i, base)
-        shutil.rmtree(stage)
+    src_dir = _ordered_files(_ntile_slices(ev), "s89_src_")
 
     def stats_fold(key, pdf_iter, state):
         df = pd.concat(list(pdf_iter)).sort_values(["ts", "event_id"])
@@ -1678,41 +1419,17 @@ def s89_stream_anomaly_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
+    stream = _file_stream(spark, ev.schema, src_dir)
+    out = stream.groupBy("user_id").applyInPandasWithState(
+        stats_fold,
+        outputStructType=(
+            "user_id BIGINT, event_id BIGINT, n_prior BIGINT, is_alert BIGINT"
+        ),
+        stateStructType="n BIGINT, sx BIGINT, sxx BIGINT",
+        outputMode="append",
+        timeoutConf="NoTimeout",
     )
-    try:
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src_dir)
-        )
-        out = stream.groupBy("user_id").applyInPandasWithState(
-            stats_fold,
-            outputStructType=(
-                "user_id BIGINT, event_id BIGINT, n_prior BIGINT, is_alert BIGINT"
-            ),
-            stateStructType="n BIGINT, sx BIGINT, sxx BIGINT",
-            outputMode="append",
-            timeoutConf="NoTimeout",
-        )
-        qname = "s89_alerts"
-        for q in spark.streams.active:
-            if q.name == qname:
-                q.stop()
-        query = (
-            out.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(qname)
-            .option("checkpointLocation", scratch_dir(prefix="s89_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_stream(query)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.table(qname).orderBy("event_id")
+    return _run_to_memory(out, "s89_alerts").orderBy("event_id")
 
 
 # ---------------------------------------------------------------------------
@@ -1803,39 +1520,16 @@ def s90_kafka_frame_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     msgs = events_as_messages(spark, sf_dir)
     frames = _kafka_frames_from_messages(msgs)
     src_dir = _time_sliced_files(frames, "timestamp", prefix="s90_src_")
-
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
+    stream = _file_stream(spark, KAFKA_FRAME_SCHEMA, src_dir)
+    out = run_stream(
+        parse_wire_frames(stream), interfaces=(telemetry_interface(),)
     )
-    try:
-        stream = (
-            spark.readStream.schema(KAFKA_FRAME_SCHEMA)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src_dir)
-        )
-        out = run_stream(
-            parse_wire_frames(stream), interfaces=(telemetry_interface(),)
-        )
-        ds = datastream_table(out).select(
-            "device_id", "path", "value_timestamp", "double_value"
-        )
-        qname = "s90_kafka_ingest"
-        for q in spark.streams.active:
-            if q.name == qname:
-                q.stop()
-        query = (
-            ds.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(qname)
-            .option("checkpointLocation", scratch_dir(prefix="s90_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_stream(query)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.table(qname).orderBy("device_id", "path", "value_timestamp")
+    ds = datastream_table(out).select(
+        "device_id", "path", "value_timestamp", "double_value"
+    )
+    return _run_to_memory(ds, "s90_kafka_ingest").orderBy(
+        "device_id", "path", "value_timestamp"
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1866,11 +1560,6 @@ def s90_kafka_frame_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     "re-expressed as checkpoint + WAL + idempotent sink).",
 )
 def s91_checkpoint_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
-    import os
-    import shutil
-    import time
-
     from ..streaming.pipeline import MESSAGE_SCHEMA, run_stream
 
     msgs = events_as_messages(spark, sf_dir)
@@ -1881,18 +1570,9 @@ def s91_checkpoint_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     files = sorted(glob.glob(os.path.join(staged, "*.parquet")))
     half = len(files) // 2
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
-    )
-
     def run_once() -> None:
         # fresh reader/plan objects each time: a restart, not a resume
-        stream = (
-            spark.readStream.schema(MESSAGE_SCHEMA)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src_dir)
-        )
+        stream = _file_stream(spark, MESSAGE_SCHEMA, src_dir)
         ds = datastream_table(
             run_stream(stream, interfaces=(telemetry_interface(),))
         ).select("device_id", "path", "value_timestamp", "double_value")
@@ -1906,18 +1586,14 @@ def s91_checkpoint_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         _await_stream(q)
 
-    try:
-        for f in files[:half]:
-            shutil.move(f, os.path.join(src_dir, os.path.basename(f)))
+    def publish(batch: list[str]) -> None:
+        _move_stamped([(f, os.path.join(src_dir, os.path.basename(f))) for f in batch])
+
+    with _shuffle_width(spark):
+        publish(files[:half])
         run_once()  # first life: consumes the first half, then terminates
-        base = time.time()
-        for i, f in enumerate(files[half:]):
-            dst = os.path.join(src_dir, os.path.basename(f))
-            shutil.move(f, dst)
-            _stamp_ordered(dst, i, base)
+        publish(files[half:])
         run_once()  # second life: same checkpoint, restored device state
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return (
         spark.read.parquet(out_dir)
         .select("device_id", "path", "value_timestamp", "double_value")
@@ -1955,27 +1631,8 @@ def s91_checkpoint_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     "micro-batch.",
 )
 def s92_dim_refresh_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
-    import os
-    import shutil
-    import time
-
     ev = load_table(spark, sf_dir, "events").select("event_id", "ts", "event_type")
-    sliced = with_global_order(
-        ev, ["ts", "event_id"], ntile=(3, "tile")
-    ).withColumn("slice", F.col("tile") - 1).drop("tile")
-    src_dir = scratch_dir(prefix="s92_src_")
-    base = time.time()
-    stage_root = scratch_dir(prefix="s92_stage_")
-    for i in range(3):
-        stage = os.path.join(stage_root, f"_stage{i}")
-        sliced.filter(F.col("slice") == i).drop("slice").coalesce(1).write.parquet(
-            stage
-        )
-        (part,) = glob.glob(os.path.join(stage, "part-*.parquet"))
-        dst = os.path.join(src_dir, f"{i:03d}.parquet")
-        shutil.move(part, dst)
-        _stamp_ordered(dst, i, base)
+    src_dir = _ordered_files(_ntile_slices(ev), "s92_src_")
 
     # version 1 of the dimension: event_type -> 'type#v1'
     dim_dir = scratch_dir(prefix="s92_dim_")
@@ -2003,25 +1660,15 @@ def s92_dim_refresh_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         out_rows.extend((int(r["event_id"]), r["label"]) for r in rows)
         write_dim(int(epoch_id) + 2)
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
-    )
-    try:
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src_dir)
-        )
+    with _shuffle_width(spark):
         q = (
-            stream.writeStream.foreachBatch(sink)
+            _file_stream(spark, ev.schema, src_dir)
+            .writeStream.foreachBatch(sink)
             .option("checkpointLocation", scratch_dir(prefix="s92_ckpt_"))
             .trigger(availableNow=True)
             .start()
         )
         _await_stream(q)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return spark.createDataFrame(
         sorted(out_rows), "event_id long, label string"
     ).orderBy("event_id")
@@ -2060,37 +1707,12 @@ def s93_stream_object_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     iface = object_interface()
     msgs = events_as_object_messages(spark, sf_dir)
     src_dir = _time_sliced_files(msgs, "reception_timestamp", prefix="s93_src_")
-
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
+    stream = _file_stream(spark, MESSAGE_SCHEMA, src_dir)
+    out = run_stream(stream, interfaces=(iface,))
+    obj = object_table(out, iface).select(
+        "device_id", "path", "reception_timestamp", "v_kind", "v_reading"
     )
-    try:
-        stream = (
-            spark.readStream.schema(MESSAGE_SCHEMA)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src_dir)
-        )
-        out = run_stream(stream, interfaces=(iface,))
-        obj = object_table(out, iface).select(
-            "device_id", "path", "reception_timestamp", "v_kind", "v_reading"
-        )
-        qname = "s93_stream_object"
-        for q in spark.streams.active:
-            if q.name == qname:
-                q.stop()
-        query = (
-            obj.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(qname)
-            .option("checkpointLocation", scratch_dir(prefix="s93_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_stream(query)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.table(qname).orderBy(
+    return _run_to_memory(obj, "s93_stream_object").orderBy(
         "device_id", "reception_timestamp", "v_kind"
     )
 
@@ -2126,40 +1748,18 @@ def s94_stream_complete_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "ts", "user_id", "event_type", "value"
     )
     src_dir = _time_sliced_files(ev, "ts", prefix="s94_src_")
-
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
+    stream = _file_stream(spark, ev.schema, src_dir)
+    agg = stream.groupBy("event_type").agg(
+        F.count(F.lit(1)).cast("long").alias("n_events"),
+        F.sum(F.round(F.col("value") * 100).cast("long"))
+        .cast("long")
+        .alias("sum_v_e2"),
     )
-    try:
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src_dir)
-        )
-        agg = stream.groupBy("event_type").agg(
-            F.count(F.lit(1)).cast("long").alias("n_events"),
-            F.sum(F.round(F.col("value") * 100).cast("long"))
-            .cast("long")
-            .alias("sum_v_e2"),
-        )
-        qname = "s94_complete_totals"
-        for q in spark.streams.active:
-            if q.name == qname:
-                q.stop()
-        query = (
-            agg.select("event_type", "n_events", "sum_v_e2")
-            .writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(qname)
-            .option("checkpointLocation", scratch_dir(prefix="s94_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_stream(query)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.table(qname).orderBy("event_type")
+    return _run_to_memory(
+        agg.select("event_type", "n_events", "sum_v_e2"),
+        "s94_complete_totals",
+        "complete",
+    ).orderBy("event_type")
 
 
 # ---------------------------------------------------------------------------
@@ -2213,11 +1813,6 @@ def s94_stream_complete_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the batch oracle over the union of all snapshots.",
 )
 def s95_stream_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
-    import os
-    import shutil
-    import time as _time
-
     from ..functions.text import shingles_from_tokens
     from ..operators.dedup import DECONTAM_BENCH_MOD
 
@@ -2240,55 +1835,23 @@ def s95_stream_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 3 crawl snapshots of the training docs, mtime-ordered so batch
     # order is deterministic (the file stream source orders by mtime)
     train = raw.filter(F.col("doc_id") % DECONTAM_BENCH_MOD != 0)
-    src_dir = scratch_dir(prefix="s95_src_")
-    base = _time.time()
-    for i in range(3):
-        stage = os.path.join(src_dir, f"_stage{i}")
-        train.filter(F.col("doc_id") % 3 == i).coalesce(1).write.parquet(stage)
-        (part,) = glob.glob(os.path.join(stage, "part-*.parquet"))
-        dst = os.path.join(src_dir, f"{i:03d}.parquet")
-        shutil.move(part, dst)
-        _stamp_ordered(dst, i, base)
-        shutil.rmtree(stage)
-
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
+    src_dir = _ordered_files(
+        [train.filter(F.col("doc_id") % 3 == i) for i in range(3)], "s95_src_"
     )
-    try:
-        stream = (
-            spark.readStream.schema(train.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src_dir)
+    stream = _file_stream(spark, train.schema, src_dir)
+    n_shared = F.size(F.array_intersect(F.col("sh"), F.col("bench_sh")))
+    gated = (
+        doc_shingles(stream)
+        .filter(F.size("sh") > 0)
+        .crossJoin(bench)
+        .select(
+            "doc_id",
+            F.size("sh").cast("long").alias("n_shingles"),
+            n_shared.cast("long").alias("n_shared"),
+            (n_shared * 10 >= F.size("sh")).alias("contaminated"),
         )
-        n_shared = F.size(F.array_intersect(F.col("sh"), F.col("bench_sh")))
-        gated = (
-            doc_shingles(stream)
-            .filter(F.size("sh") > 0)
-            .crossJoin(bench)
-            .select(
-                "doc_id",
-                F.size("sh").cast("long").alias("n_shingles"),
-                n_shared.cast("long").alias("n_shared"),
-                (n_shared * 10 >= F.size("sh")).alias("contaminated"),
-            )
-        )
-        qname = "s95_decontam"
-        for q in spark.streams.active:
-            if q.name == qname:
-                q.stop()
-        query = (
-            gated.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(qname)
-            .option("checkpointLocation", scratch_dir(prefix="s95_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_stream(query)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.table(qname).orderBy("doc_id")
+    )
+    return _run_to_memory(gated, "s95_decontam").orderBy("doc_id")
 
 
 # -- s96: streaming incremental near-dup dedup against a growing index -------
@@ -2415,11 +1978,6 @@ def _s96_oracle() -> str:
     "the oracle replays the whole ladder as unrolled per-batch CTEs.",
 )
 def s96_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
-    import os
-    import shutil
-    import time as _time
-
     from pyspark.sql import Window
 
     from ..functions.text import minhash_perm, shingle_h32, shingles_from_tokens
@@ -2466,16 +2024,9 @@ def s96_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id", F.col("bb.band").alias("band"), F.col("bb.bkey").alias("bkey")
         )
 
-    src_dir = scratch_dir(prefix="s96_src_")
-    base = _time.time()
-    for i in range(3):
-        stage = os.path.join(src_dir, f"_stage{i}")
-        raw.filter(F.col("doc_id") % 3 == i).coalesce(1).write.parquet(stage)
-        (part,) = glob.glob(os.path.join(stage, "part-*.parquet"))
-        dst = os.path.join(src_dir, f"{i:03d}.parquet")
-        shutil.move(part, dst)
-        _stamp_ordered(dst, i, base)
-        shutil.rmtree(stage)
+    src_dir = _ordered_files(
+        [raw.filter(F.col("doc_id") % 3 == i) for i in range(3)], "s96_src_"
+    )
 
     idx_root = scratch_dir(prefix="s96_idx_")
     out_root = scratch_dir(prefix="s96_out_")
@@ -2563,26 +2114,15 @@ def s96_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         new_idx.write.mode("overwrite").parquet(idx_dir)
         current["path"] = idx_dir
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
-    )
-    try:
-        stream = (
-            spark.readStream.schema(raw.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src_dir)
-        )
+    with _shuffle_width(spark):
         query = (
-            stream.writeStream.foreachBatch(dedup_batch)
+            _file_stream(spark, raw.schema, src_dir)
+            .writeStream.foreachBatch(dedup_batch)
             .option("checkpointLocation", scratch_dir(prefix="s96_ckpt_"))
             .trigger(availableNow=True)
             .start()
         )
         _await_stream(query)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-
     verdicts = spark.read.parquet(*sorted(glob.glob(os.path.join(out_root, "v*"))))
     return verdicts.orderBy("doc_id")
 
@@ -2651,11 +2191,6 @@ def s96_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "every per-batch emission is pinned, not just the final one.",
 )
 def s97_stream_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
-    import os
-    import shutil
-    import time as _time
-
     import pandas as pd
 
     from ..functions.text import shingle_h32
@@ -2688,63 +2223,23 @@ def s97_stream_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type", "ts", "event_id",
         shingle_h32(F.col("user_id").cast("string")).alias("h"),
     )
-    sliced = (
-        with_global_order(ev, ["ts", "event_id"], ntile=(3, "tile"))
-        .withColumn("slice", F.col("tile") - 1)
-        .select("event_type", "h", "slice")
+    slices = [s.select("event_type", "h") for s in _ntile_slices(ev)]
+    src_dir = _ordered_files(slices, "s97_src_")
+    stream = _file_stream(spark, slices[0].schema, src_dir)
+    out = stream.groupBy("event_type").applyInPandasWithState(
+        kmv_fold,
+        outputStructType="event_type STRING, seq BIGINT, k BIGINT, kth_hash BIGINT",
+        stateStructType="seq BIGINT, hs ARRAY<BIGINT>",
+        outputMode="append",
+        timeoutConf="NoTimeout",
     )
-    src_dir = scratch_dir(prefix="s97_src_")
-    base = _time.time()
-    for i in range(3):
-        stage = os.path.join(src_dir, f"_stage{i}")
-        sliced.filter(F.col("slice") == i).drop("slice").coalesce(1).write.parquet(
-            stage
-        )
-        (part,) = glob.glob(os.path.join(stage, "part-*.parquet"))
-        dst = os.path.join(src_dir, f"{i:03d}.parquet")
-        shutil.move(part, dst)
-        _stamp_ordered(dst, i, base)
-        shutil.rmtree(stage)
-
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
-    )
-    try:
-        stream = (
-            spark.readStream.schema(sliced.drop("slice").schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src_dir)
-        )
-        out = stream.groupBy("event_type").applyInPandasWithState(
-            kmv_fold,
-            outputStructType="event_type STRING, seq BIGINT, k BIGINT, kth_hash BIGINT",
-            stateStructType="seq BIGINT, hs ARRAY<BIGINT>",
-            outputMode="append",
-            timeoutConf="NoTimeout",
-        )
-        qname = "s97_kmv"
-        for q in spark.streams.active:
-            if q.name == qname:
-                q.stop()
-        query = (
-            out.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(qname)
-            .option("checkpointLocation", scratch_dir(prefix="s97_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_stream(query)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     est = F.when(
         F.col("k") < k_cap, F.col("k").cast("double")
     ).otherwise(
         F.round((F.col("k") - 1) * F.lit(KMV_DOMAIN) / F.col("kth_hash"), 6)
     )
     return (
-        spark.table(qname)
+        _run_to_memory(out, "s97_kmv")
         .withColumn("est_distinct", est)
         .select("event_type", "seq", "k", "kth_hash", "est_distinct")
         .orderBy("event_type", "seq")
@@ -2812,31 +2307,12 @@ _S98_H = 500_000
     "(per-device mean-centered CUSUM).",
 )
 def s98_stream_cusum_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
-    import os
-    import shutil
-    import time
-
     import pandas as pd
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "value"
     )
-    sliced = with_global_order(
-        ev, ["ts", "event_id"], ntile=(3, "tile")
-    ).withColumn("slice", F.col("tile") - 1).drop("tile")
-    src_dir = scratch_dir(prefix="s98_src_")
-    base = time.time()
-    for i in range(3):
-        stage = os.path.join(src_dir, f"_stage{i}")
-        sliced.filter(F.col("slice") == i).drop("slice").coalesce(1).write.parquet(
-            stage
-        )
-        (part,) = glob.glob(os.path.join(stage, "part-*.parquet"))
-        dst = os.path.join(src_dir, f"{i:03d}.parquet")
-        shutil.move(part, dst)
-        _stamp_ordered(dst, i, base)
-        shutil.rmtree(stage)
+    src_dir = _ordered_files(_ntile_slices(ev), "s98_src_")
 
     def cusum_fold(key, pdf_iter, state):
         df = pd.concat(list(pdf_iter)).sort_values(["ts", "event_id"])
@@ -2863,42 +2339,18 @@ def s98_stream_cusum_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
+    stream = _file_stream(spark, ev.schema, src_dir)
+    out = stream.groupBy("user_id").applyInPandasWithState(
+        cusum_fold,
+        outputStructType=(
+            "user_id BIGINT, event_id BIGINT, s_up BIGINT, s_down BIGINT, "
+            "up_alert BIGINT, down_alert BIGINT"
+        ),
+        stateStructType="su BIGINT, sd BIGINT",
+        outputMode="append",
+        timeoutConf="NoTimeout",
     )
-    try:
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src_dir)
-        )
-        out = stream.groupBy("user_id").applyInPandasWithState(
-            cusum_fold,
-            outputStructType=(
-                "user_id BIGINT, event_id BIGINT, s_up BIGINT, s_down BIGINT, "
-                "up_alert BIGINT, down_alert BIGINT"
-            ),
-            stateStructType="su BIGINT, sd BIGINT",
-            outputMode="append",
-            timeoutConf="NoTimeout",
-        )
-        qname = "s98_cusum"
-        for q in spark.streams.active:
-            if q.name == qname:
-                q.stop()
-        query = (
-            out.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(qname)
-            .option("checkpointLocation", scratch_dir(prefix="s98_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_stream(query)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.table(qname).orderBy("event_id")
+    return _run_to_memory(out, "s98_cusum").orderBy("event_id")
 
 
 # -- s99: streaming Misra-Gries heavy hitters (mergeable summary) -------------
@@ -3014,11 +2466,6 @@ def _mg_oracle() -> str:
     "is multiset-deterministic.",
 )
 def s99_stream_mg_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
-    import os
-    import shutil
-    import time as _time
-
     import pandas as pd
 
     m_cap = int(MG_M)
@@ -3056,63 +2503,23 @@ def s99_stream_mg_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_type", "ts", "event_id", "user_id"
     )
-    sliced = (
-        with_global_order(ev, ["ts", "event_id"], ntile=(3, "tile"))
-        .withColumn("slice", F.col("tile") - 1)
-        .select("event_type", "user_id", "slice")
+    slices = [s.select("event_type", "user_id") for s in _ntile_slices(ev)]
+    src_dir = _ordered_files(slices, "s99_src_")
+    stream = _file_stream(spark, slices[0].schema, src_dir)
+    out = stream.groupBy("event_type").applyInPandasWithState(
+        mg_fold,
+        outputStructType=(
+            "event_type STRING, seq BIGINT, user_id BIGINT,"
+            " mg_count BIGINT, err_bound BIGINT"
+        ),
+        stateStructType=(
+            "seq BIGINT, users ARRAY<BIGINT>, counts ARRAY<BIGINT>,"
+            " err BIGINT"
+        ),
+        outputMode="append",
+        timeoutConf="NoTimeout",
     )
-    src_dir = scratch_dir(prefix="s99_src_")
-    base = _time.time()
-    for i in range(3):
-        stage = os.path.join(src_dir, f"_stage{i}")
-        sliced.filter(F.col("slice") == i).drop("slice").coalesce(1).write.parquet(
-            stage
-        )
-        (part,) = glob.glob(os.path.join(stage, "part-*.parquet"))
-        dst = os.path.join(src_dir, f"{i:03d}.parquet")
-        shutil.move(part, dst)
-        _stamp_ordered(dst, i, base)
-        shutil.rmtree(stage)
-
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
-    )
-    try:
-        stream = (
-            spark.readStream.schema(sliced.drop("slice").schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src_dir)
-        )
-        out = stream.groupBy("event_type").applyInPandasWithState(
-            mg_fold,
-            outputStructType=(
-                "event_type STRING, seq BIGINT, user_id BIGINT,"
-                " mg_count BIGINT, err_bound BIGINT"
-            ),
-            stateStructType=(
-                "seq BIGINT, users ARRAY<BIGINT>, counts ARRAY<BIGINT>,"
-                " err BIGINT"
-            ),
-            outputMode="append",
-            timeoutConf="NoTimeout",
-        )
-        qname = "s99_mg"
-        for q in spark.streams.active:
-            if q.name == qname:
-                q.stop()
-        query = (
-            out.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(qname)
-            .option("checkpointLocation", scratch_dir(prefix="s99_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_stream(query)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.table(qname).orderBy("event_type", "seq", "user_id")
+    return _run_to_memory(out, "s99_mg").orderBy("event_type", "seq", "user_id")
 
 
 # -- s100: streaming Bloom-filter dedup gate (bounded state) ------------------
@@ -3209,11 +2616,6 @@ BLOOM_K = 4
     f"occupancy — is pinned exactly.",
 )
 def s100_stream_bloom_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
-    import os
-    import shutil
-    import time as _time
-
     import pandas as pd
 
     from ..functions.text import shingle_h32
@@ -3264,64 +2666,25 @@ def s100_stream_bloom_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             for j in range(k_seeds)
         ]
     )
-    sliced = (
-        with_global_order(
-            ev.select("event_type", "ts", "event_id", pos.alias("pos")),
-            ["ts", "event_id"],
-            ntile=(3, "tile"),
+    slices = [
+        s.select("event_type", "pos")
+        for s in _ntile_slices(
+            ev.select("event_type", "ts", "event_id", pos.alias("pos"))
         )
-        .withColumn("slice", F.col("tile") - 1)
-        .select("event_type", "pos", "slice")
+    ]
+    src_dir = _ordered_files(slices, "s100_src_")
+    stream = _file_stream(spark, slices[0].schema, src_dir)
+    out = stream.groupBy("event_type").applyInPandasWithState(
+        bloom_fold,
+        outputStructType=(
+            "event_type STRING, seq BIGINT, n_arrived BIGINT,"
+            " n_dup_flagged BIGINT, n_new_bits BIGINT, n_bits_total BIGINT"
+        ),
+        stateStructType="seq BIGINT, bits ARRAY<INT>",
+        outputMode="append",
+        timeoutConf="NoTimeout",
     )
-    src_dir = scratch_dir(prefix="s100_src_")
-    base = _time.time()
-    for i in range(3):
-        stage = os.path.join(src_dir, f"_stage{i}")
-        sliced.filter(F.col("slice") == i).drop("slice").coalesce(1).write.parquet(
-            stage
-        )
-        (part,) = glob.glob(os.path.join(stage, "part-*.parquet"))
-        dst = os.path.join(src_dir, f"{i:03d}.parquet")
-        shutil.move(part, dst)
-        _stamp_ordered(dst, i, base)
-        shutil.rmtree(stage)
-
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
-    )
-    try:
-        stream = (
-            spark.readStream.schema(sliced.drop("slice").schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src_dir)
-        )
-        out = stream.groupBy("event_type").applyInPandasWithState(
-            bloom_fold,
-            outputStructType=(
-                "event_type STRING, seq BIGINT, n_arrived BIGINT,"
-                " n_dup_flagged BIGINT, n_new_bits BIGINT, n_bits_total BIGINT"
-            ),
-            stateStructType="seq BIGINT, bits ARRAY<INT>",
-            outputMode="append",
-            timeoutConf="NoTimeout",
-        )
-        qname = "s100_bloom"
-        for q in spark.streams.active:
-            if q.name == qname:
-                q.stop()
-        query = (
-            out.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(qname)
-            .option("checkpointLocation", scratch_dir(prefix="s100_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_stream(query)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.table(qname).orderBy("event_type", "seq")
+    return _run_to_memory(out, "s100_bloom").orderBy("event_type", "seq")
 
 # ---------------------------------------------------------------------------
 # s101 — streaming bottom-k uniform sample (bounded-state reservoir)
@@ -3400,11 +2763,6 @@ RESERVOIR_K = 16
     f"the shared md5-h32 family, JVM-side.",
 )
 def s101_stream_bottomk_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
-    import os
-    import shutil
-    import time as _time
-
     import pandas as pd
 
     from ..functions.text import shingle_h32
@@ -3444,64 +2802,23 @@ def s101_stream_bottomk_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = load_table(spark, sf_dir, "events")
     h = shingle_h32(F.concat(F.col("event_id").cast("string"), F.lit(":rs")))
-    sliced = (
-        with_global_order(
-            ev.select("event_type", "ts", "event_id", h.alias("h")),
-            ["ts", "event_id"],
-            ntile=(3, "tile"),
-        )
-        .withColumn("slice", F.col("tile") - 1)
-        .select("event_type", "event_id", "h", "slice")
+    slices = [
+        s.select("event_type", "event_id", "h")
+        for s in _ntile_slices(ev.select("event_type", "ts", "event_id", h.alias("h")))
+    ]
+    src_dir = _ordered_files(slices, "s101_src_")
+    stream = _file_stream(spark, slices[0].schema, src_dir)
+    out = stream.groupBy("event_type").applyInPandasWithState(
+        bottomk_fold,
+        outputStructType=(
+            "event_type STRING, seq BIGINT, n_arrived BIGINT,"
+            " sample_k BIGINT, max_h BIGINT, n_new_members BIGINT"
+        ),
+        stateStructType="seq BIGINT, hs ARRAY<BIGINT>, ids ARRAY<BIGINT>",
+        outputMode="append",
+        timeoutConf="NoTimeout",
     )
-    src_dir = scratch_dir(prefix="s101_src_")
-    base = _time.time()
-    for i in range(3):
-        stage = os.path.join(src_dir, f"_stage{i}")
-        sliced.filter(F.col("slice") == i).drop("slice").coalesce(1).write.parquet(
-            stage
-        )
-        (part,) = glob.glob(os.path.join(stage, "part-*.parquet"))
-        dst = os.path.join(src_dir, f"{i:03d}.parquet")
-        shutil.move(part, dst)
-        _stamp_ordered(dst, i, base)
-        shutil.rmtree(stage)
-
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
-    )
-    try:
-        stream = (
-            spark.readStream.schema(sliced.drop("slice").schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src_dir)
-        )
-        out = stream.groupBy("event_type").applyInPandasWithState(
-            bottomk_fold,
-            outputStructType=(
-                "event_type STRING, seq BIGINT, n_arrived BIGINT,"
-                " sample_k BIGINT, max_h BIGINT, n_new_members BIGINT"
-            ),
-            stateStructType="seq BIGINT, hs ARRAY<BIGINT>, ids ARRAY<BIGINT>",
-            outputMode="append",
-            timeoutConf="NoTimeout",
-        )
-        qname = "s101_bottomk"
-        for q in spark.streams.active:
-            if q.name == qname:
-                q.stop()
-        query = (
-            out.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(qname)
-            .option("checkpointLocation", scratch_dir(prefix="s101_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_stream(query)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.table(qname).orderBy("event_type", "seq")
+    return _run_to_memory(out, "s101_bottomk").orderBy("event_type", "seq")
 
 
 # -- s102: per-user record-high tracker (monotone high-water state) ----------
@@ -3546,10 +2863,6 @@ def s101_stream_bottomk_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     "map line for line.)",
 )
 def s102_stream_record_highs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
-    import shutil
-    import time as _time
-
     import pandas as pd
 
     def record_fold(key, pdf_iter, state):
@@ -3583,58 +2896,19 @@ def s102_stream_record_highs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "value"
     )
-    sliced = with_global_order(
-        ev, ["ts", "event_id"], ntile=(3, "tile")
-    ).withColumn("slice", F.col("tile") - 1).drop("tile")
-    src_dir = scratch_dir(prefix="s102_src_")
-    base = _time.time()
-    for i in range(3):
-        stage = os.path.join(src_dir, f"_stage{i}")
-        sliced.filter(F.col("slice") == i).drop("slice").coalesce(1).write.parquet(
-            stage
-        )
-        (part,) = glob.glob(os.path.join(stage, "part-*.parquet"))
-        dst = os.path.join(src_dir, f"{i:03d}.parquet")
-        shutil.move(part, dst)
-        _stamp_ordered(dst, i, base)
-        shutil.rmtree(stage)
-
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
+    src_dir = _ordered_files(_ntile_slices(ev), "s102_src_")
+    stream = _file_stream(spark, ev.schema, src_dir)
+    out = stream.groupBy("user_id").applyInPandasWithState(
+        record_fold,
+        outputStructType=(
+            "user_id BIGINT, event_id BIGINT, is_record BOOLEAN, "
+            "n_records BIGINT"
+        ),
+        stateStructType="mx DOUBLE, n BIGINT",
+        outputMode="append",
+        timeoutConf="NoTimeout",
     )
-    try:
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src_dir)
-        )
-        out = stream.groupBy("user_id").applyInPandasWithState(
-            record_fold,
-            outputStructType=(
-                "user_id BIGINT, event_id BIGINT, is_record BOOLEAN, "
-                "n_records BIGINT"
-            ),
-            stateStructType="mx DOUBLE, n BIGINT",
-            outputMode="append",
-            timeoutConf="NoTimeout",
-        )
-        qname = "s102_record_highs"
-        for q in spark.streams.active:
-            if q.name == qname:
-                q.stop()
-        query = (
-            out.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(qname)
-            .option("checkpointLocation", scratch_dir(prefix="s102_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_stream(query)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.table(qname).orderBy("event_id")
+    return _run_to_memory(out, "s102_record_highs").orderBy("event_id")
 
 
 # -- s103: point-in-time SCD2 enrichment of a live stream --------------------
@@ -3687,10 +2961,6 @@ _S103_BAND = 25.0
     "topology there is.",
 )
 def s103_stream_scd2_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
-    import shutil
-    import time as _time
-
     from pyspark.sql import Window
 
     ev = load_table(spark, sf_dir, "events").select(
@@ -3712,27 +2982,8 @@ def s103_stream_scd2_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     second = halved.filter(F.col("half") == 2).select(
         "event_id", "ts", "user_id"
     )
-    sliced = with_global_order(
-        second, ["ts", "event_id"], ntile=(3, "tile")
-    ).withColumn("slice", F.col("tile") - 1).drop("tile")
-    src_dir = scratch_dir(prefix="s103_src_")
-    base = _time.time()
-    for i in range(3):
-        stage = os.path.join(src_dir, f"_stage{i}")
-        sliced.filter(F.col("slice") == i).drop("slice").coalesce(1).write.parquet(
-            stage
-        )
-        (part,) = glob.glob(os.path.join(stage, "part-*.parquet"))
-        dst = os.path.join(src_dir, f"{i:03d}.parquet")
-        shutil.move(part, dst)
-        _stamp_ordered(dst, i, base)
-        shutil.rmtree(stage)
-
-    stream = (
-        spark.readStream.schema(second.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
+    src_dir = _ordered_files(_ntile_slices(second), "s103_src_")
+    stream = _file_stream(spark, second.schema, src_dir)
     enriched = stream.join(
         F.broadcast(dim),
         (stream.user_id == dim.user_id)
@@ -3745,17 +2996,4 @@ def s103_stream_scd2_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("band").alias("band_at_event"),
         F.col("band").isNotNull().alias("enriched"),
     )
-    qname = "s103_scd2_enrich"
-    for q in spark.streams.active:
-        if q.name == qname:
-            q.stop()
-    query = (
-        enriched.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(qname)
-        .option("checkpointLocation", scratch_dir(prefix="s103_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_stream(query)
-    return spark.table(qname).orderBy("event_id")
+    return _run_to_memory(enriched, "s103_scd2_enrich").orderBy("event_id")

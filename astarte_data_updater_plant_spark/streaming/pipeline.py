@@ -377,11 +377,33 @@ def _messages_from_pdf(pdf: pd.DataFrame) -> list[dict]:
     return msgs
 
 
+def _with_device_bucket(messages: DataFrame) -> tuple[DataFrame, int]:
+    """``messages`` with the fold's ``__bucket`` column, a consistent
+    hash of ``(realm, device_id)``, and the bucket count: 2x the
+    session's parallelism, enough slack to absorb stragglers without
+    paying the per-task fixed cost (closure deserialization, worker
+    round-trip) too many times; measured fastest at sf0.1 vs 1x (-10%)
+    and 4x (-23%)."""
+    n_buckets = 2 * messages.sparkSession.sparkContext.defaultParallelism
+    bucket = F.pmod(F.xxhash64("realm", "device_id"), F.lit(n_buckets)).cast("int")
+    return messages.withColumn("__bucket", bucket), n_buckets
+
+
+def _messages_by_device(pdf: pd.DataFrame) -> dict[tuple[str, str], list[dict]]:
+    """One Arrow->python conversion for a whole bucket, then a
+    single-pass regroup by ``(realm, device_id)``, each device's
+    messages in fold order: pandas per-device groupby slicing costs
+    more than the fold itself at ~70 msgs/device."""
+    by_dev: dict[tuple[str, str], list[dict]] = {}
+    for m in _messages_from_pdf(_sorted_for_fold(pdf)):
+        by_dev.setdefault((m["realm"], m["device_id"]), []).append(m)
+    return by_dev
+
+
 def run_batch(
     messages: DataFrame,
     interfaces: tuple[Interface, ...] | None = None,
     max_retention_s: int | None = None,
-    n_buckets: int | None = None,
 ) -> DataFrame:
     """Batch mode: one shuffle on the device bucket, state folded per
     device inside each bucket, union output frame returned.
@@ -397,13 +419,8 @@ def run_batch(
     processes each device's messages in (reception_timestamp,
     message_id) order — identical semantics to per-device grouping.
 
-    ``n_buckets`` sizes the shuffle: default 2x the session's
-    parallelism — enough slack to absorb stragglers without paying the
-    per-task fixed cost (closure deserialization, worker round-trip)
-    too many times; measured fastest at sf0.1 vs 1x (-10%) and 4x
-    (-23%). Scale up only to bound per-bucket memory: pick
-    ``n_buckets >= total_messages / messages_per_task_budget`` when a
-    bucket's messages would not fit a task comfortably.
+    The bucket count is 2x the session's parallelism, so it grows with
+    the cluster; per-bucket memory shrinks as cores are added.
 
     ``max_retention_s`` is the realm-wide
     ``datastream_maximum_storage_retention`` (kv_store realm_config,
@@ -412,19 +429,11 @@ def run_batch(
     at handler init (impl.ex:83-86).
     """
     ifaces = interfaces or fixture_interfaces()
-    if n_buckets is None:
-        n_buckets = 2 * messages.sparkSession.sparkContext.defaultParallelism
 
     def fold(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         catalog = Catalog(ifaces)
-        # one Arrow->python conversion for the whole bucket, then a
-        # single-pass python regroup: pandas per-device groupby slicing
-        # costs more than the fold itself at ~70 msgs/device
-        by_dev: dict[tuple[str, str], list[dict]] = {}
-        for m in _messages_from_pdf(_sorted_for_fold(pdf)):
-            by_dev.setdefault((m["realm"], m["device_id"]), []).append(m)
         rec = _Recorder()
-        for (realm, device_id), dev_msgs in by_dev.items():
+        for (realm, device_id), dev_msgs in _messages_by_device(pdf).items():
             state = DeviceState(
                 realm=realm, device_id=device_id, max_retention_s=max_retention_s
             )
@@ -436,7 +445,7 @@ def run_batch(
             )
         return rec.frame()
 
-    bucket = F.pmod(F.xxhash64("realm", "device_id"), F.lit(n_buckets)).cast("int")
+    tagged, n_buckets = _with_device_bucket(messages)
     # Pin the shuffle with an explicit repartition(n, col): the fold is
     # Python-CPU-bound, so partition count must track CORES, not shuffle
     # bytes — message batches are small on the wire and AQE's
@@ -446,8 +455,7 @@ def run_batch(
     # coalescing, and it already satisfies the groupBy's clustered
     # distribution, so no second exchange is inserted.
     return (
-        messages.withColumn("__bucket", bucket)
-        .repartition(n_buckets, "__bucket")
+        tagged.repartition(n_buckets, "__bucket")
         .groupBy("__bucket")
         .applyInPandas(fold, schema=OUTPUT_SCHEMA)
     )
@@ -474,8 +482,7 @@ def _stream_fold(ifaces: tuple[Interface, ...], max_retention_s: int | None = No
         by_dev: dict[tuple[str, str], list[dict]] = {}
         if chunks:  # NoTimeout => invocations always carry data, but guard
             whole = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
-            for m in _messages_from_pdf(_sorted_for_fold(whole)):
-                by_dev.setdefault((m["realm"], m["device_id"]), []).append(m)
+            by_dev = _messages_by_device(whole)
         rec = _Recorder()
         for (realm, device_id), dev_msgs in by_dev.items():
             state = states.get((realm, device_id))
@@ -495,7 +502,6 @@ def run_stream(
     messages: DataFrame,
     interfaces: tuple[Interface, ...] | None = None,
     max_retention_s: int | None = None,
-    n_buckets: int | None = None,
 ) -> DataFrame:
     """Streaming mode: applyInPandasWithState keyed by a consistent-
     hash device BUCKET; each bucket's GroupState carries the dict of
@@ -507,18 +513,14 @@ def run_stream(
     grouping paid one tiny pandas frame + one state pickle per device
     per micro-batch (measured 6x slower than batch at sf0.1). Device
     folds stay serial inside their bucket, so per-device FIFO
-    semantics are identical. Size ``n_buckets`` (default 2x
-    parallelism, matching run_batch) so one bucket's devices' states
-    fit a task; more buckets = more parallelism AND smaller per-bucket
-    state, so the knob scales both ways.
+    semantics are identical. The buckets are run_batch's (2x
+    parallelism); the stateful shuffle's width is
+    ``spark.sql.shuffle.partitions`` when the stream starts.
     """
     ifaces = interfaces or fixture_interfaces()
-    if n_buckets is None:
-        n_buckets = 2 * messages.sparkSession.sparkContext.defaultParallelism
-    bucket = F.pmod(F.xxhash64("realm", "device_id"), F.lit(n_buckets)).cast("int")
+    tagged, _ = _with_device_bucket(messages)
     return (
-        messages.withColumn("__bucket", bucket)
-        .groupBy("__bucket")
+        tagged.groupBy("__bucket")
         .applyInPandasWithState(
             _stream_fold(ifaces, max_retention_s),
             outputStructType=OUTPUT_SCHEMA,

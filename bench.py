@@ -191,7 +191,8 @@ def stream_ingest_throughput(spark, sf_dir: str) -> dict:
     the r7 fold rework (_dumps fast path, vectorized bucket pre-sort,
     dict dedup window, direct-append recorder) cut the single-thread
     fold+frame from ~5.7s to ~3.5s at sf0.1. The grid still favors
-    16 partitions / 64 buckets (re-probed r7 in fresh subprocesses:
+    16 partitions / 64 buckets, run_stream's 2x-parallelism bucket
+    count on 32 cores (re-probed r7 in fresh subprocesses:
     32/64, 32/128, 24/96 all slower; a 1:1 token-bucket mapping that
     gives each task exactly one state key measured a wash, so per-key
     invocation overhead is NOT significant). RocksDB and tmpfs
@@ -216,9 +217,7 @@ def stream_ingest_throughput(spark, sf_dir: str) -> dict:
     src = _time_sliced_files(msgs, "reception_timestamp", prefix="bench_stream_src_")
 
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    stream_parts = os.environ.get("SPARK_GRAFT_STREAM_PARTS", "16")
-    stream_buckets = os.environ.get("SPARK_GRAFT_STREAM_BUCKETS")
-    spark.conf.set("spark.sql.shuffle.partitions", stream_parts)
+    spark.conf.set("spark.sql.shuffle.partitions", "16")
 
     # checkpoint dirs are collected here and removed AFTER measure()
     # returns: measure() times the whole callable externally, so any
@@ -233,11 +232,7 @@ def stream_ingest_throughput(spark, sf_dir: str) -> dict:
             .parquet(src)
         )
         ds = datastream_table(
-            run_stream(
-                stream,
-                interfaces=(telemetry_interface(),),
-                n_buckets=int(stream_buckets) if stream_buckets else None,
-            )
+            run_stream(stream, interfaces=(telemetry_interface(),))
         )
         ckpt = tempfile.mkdtemp(prefix="bench_stream_ckpt_")
         ckpts.append(ckpt)

@@ -139,27 +139,61 @@ def test_streaming_parity(spark, tmp_path):
     assert props == {"/weekSchedule/2/start"}
 
 
-def test_time_sliced_files_mtime_order(spark, sf_dir):
-    """Micro-batch order comes from file MTIME, not filename: the
-    slicer must stamp strictly increasing mtimes in slice order, or
-    the file stream source replays slices out of order (observed at
+def _time_slices(msgs):
+    from astarte_data_updater_plant_spark.operators.ingest import _time_sliced_files
+
+    return _time_sliced_files(msgs, "reception_timestamp", prefix="test_mtime_"), None
+
+
+def _ordered(msgs):
+    from pyspark.sql import functions as F
+
+    from astarte_data_updater_plant_spark.operators.ingest import _ordered_files
+
+    third = F.pmod(F.xxhash64("message_id"), F.lit(3))
+    frames = [msgs.filter(third == i) for i in range(3)]
+    return _ordered_files(frames, "test_ordered_"), frames
+
+
+@pytest.mark.parametrize(
+    "writer", [_time_slices, _ordered], ids=["time_sliced", "ordered"]
+)
+def test_time_sliced_files_mtime_order(spark, sf_dir, writer):
+    """Micro-batch order comes from file MTIME, not filename: both
+    source writers must stamp strictly increasing mtimes in file order,
+    or the file stream source replays slices out of order (observed at
     sf0.1: slice 1 ran as batch 0 and every data message dead-lettered
-    before its device's introspection)."""
+    before its device's introspection). Each file is one whole slice:
+    the time slices are disjoint, consecutive ranges, and ordered file
+    i holds exactly frame i's rows."""
     import glob
     import os
 
-    from astarte_data_updater_plant_spark.operators.ingest import _time_sliced_files
+    from pyspark.sql import functions as F
+
     from astarte_data_updater_plant_spark.sources.stream import events_as_messages
 
     msgs = events_as_messages(spark, sf_dir)
-    src = _time_sliced_files(msgs, "reception_timestamp", prefix="test_mtime_")
+    src, frames = writer(msgs)
     files = sorted(glob.glob(os.path.join(src, "*.parquet")))
-    assert len(files) == 4
+    assert sorted(os.listdir(src)) == [os.path.basename(f) for f in files]
+    assert len(files) == (4 if frames is None else len(frames))
     mtimes = [os.path.getmtime(f) for f in files]
-    assert mtimes == sorted(mtimes)
+    assert all(a < b for a, b in zip(mtimes, mtimes[1:]))
     assert len(set(int(m * 1000) for m in mtimes)) == len(files), (
         "mtimes must be distinct at the source's ms granularity"
     )
+    if frames is None:
+        ts = F.col("reception_timestamp")
+        bounds = [
+            spark.read.parquet(f).agg(F.min(ts), F.max(ts)).first() for f in files
+        ]
+        assert all(hi < lo for (_, hi), (lo, _) in zip(bounds, bounds[1:]))
+    else:
+        for f, frame in zip(files, frames):
+            got = spark.read.parquet(f)
+            assert got.count() == frame.count() > 0
+            assert got.exceptAll(frame).count() == 0
 
 
 def test_stamp_ordered_rejects_out_of_range_idx(tmp_path):
@@ -179,6 +213,52 @@ def test_stamp_ordered_rejects_out_of_range_idx(tmp_path):
         _stamp_ordered(str(p), 1024, time.time())
     with pytest.raises(AssertionError, match="idx=-1"):
         _stamp_ordered(str(p), -1, time.time())
+
+
+def test_await_stream_timeout_stops_the_query(spark, tmp_path):
+    """A stream still running at the deadline raises instead of handing
+    a half-filled sink to the caller, and is stopped, not leaked."""
+    from astarte_data_updater_plant_spark.operators.ingest import _await_stream
+
+    query = (
+        spark.readStream.format("rate")
+        .option("rowsPerSecond", 1)
+        .option("numPartitions", 1)
+        .load()
+        .writeStream.format("noop")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    with pytest.raises(RuntimeError, match="within 1s"):
+        _await_stream(query, timeout_sec=1)
+    assert query.id not in {q.id for q in spark.streams.active}
+
+
+def test_run_to_memory_reraises_and_restores_shuffle_width(spark, tmp_path):
+    """A micro-batch that fails in a Python UDF surfaces from the drain,
+    and the pinned shuffle width is still restored afterwards."""
+    from pyspark.errors import StreamingQueryException
+    from pyspark.sql import functions as F
+
+    from astarte_data_updater_plant_spark.operators.ingest import (
+        _file_stream,
+        _run_to_memory,
+    )
+
+    src = str(tmp_path / "src")
+    spark.range(3).write.parquet(src)
+    boom = F.udf(lambda v: v // 0, "long")
+    stream = _file_stream(spark, "id LONG", src).select(boom("id").alias("x"))
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    before = str(spark.sparkContext.defaultParallelism + 3)
+    spark.conf.set(key, before)
+    try:
+        with pytest.raises(StreamingQueryException, match="ZeroDivisionError"):
+            _run_to_memory(stream, "test_run_to_memory_raises")
+        assert spark.conf.get(key) == before
+    finally:
+        spark.conf.set(key, prev)
 
 
 def test_sorted_for_fold_rejects_null_message_id():

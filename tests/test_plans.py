@@ -587,3 +587,51 @@ def test_no_module_level_boolean_toggles():
                 if isinstance(t, ast.Name) and caps.fullmatch(t.id):
                     hits.append(f"{path.relative_to(root)}:{node.lineno} {t.id}")
     assert not hits, hits
+
+
+def test_streaming_scenarios_share_one_file_stream_harness():
+    """``operators/ingest.py`` spells each half of its file-stream
+    harness once: the memory sink only in ``_run_to_memory``, the
+    shuffle-width pin only in ``_shuffle_width``, the one-file-per-batch
+    reader only in ``_file_stream``, and the mtime stamp only in
+    ``_move_stamped``, which every ordered source goes through. A
+    scenario that hand-copies one of them again fails here."""
+    import ast
+    import pathlib
+
+    import astarte_data_updater_plant_spark.operators.ingest as ingest
+
+    def is_memory_sink(node):
+        return (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "format"
+            and [getattr(a, "value", None) for a in node.args] == ["memory"]
+        )
+
+    def is_const(value):
+        return lambda node: isinstance(node, ast.Constant) and node.value == value
+
+    def is_stamp(node):
+        return (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Name)
+            and node.func.id == "_stamp_ordered"
+        )
+
+    mechanisms = {
+        "memory sink": (is_memory_sink, "_run_to_memory"),
+        "shuffle width": (is_const("spark.sql.shuffle.partitions"), "_shuffle_width"),
+        "file reader": (is_const("maxFilesPerTrigger"), "_file_stream"),
+        "mtime stamp": (is_stamp, "_move_stamped"),
+    }
+    tree = ast.parse(pathlib.Path(ingest.__file__).read_text())
+    hits = {name: [] for name in mechanisms}
+    for top in tree.body:
+        owner = getattr(top, "name", f"<module line {top.lineno}>")
+        for node in ast.walk(top):
+            for name, (matches, _) in mechanisms.items():
+                if matches(node):
+                    hits[name].append(owner)
+    for name, (_, helper) in mechanisms.items():
+        assert hits[name] == [helper], f"{name}: {hits[name]}"
