@@ -19,7 +19,7 @@ methodology) that measures, from the tree under test:
 It also re-measures ingest a SECOND time inside the same (now warm)
 probe process, to quantify how much of the bench.py-vs-bench_scaling
 gap is JVM/python-worker warmth rather than code (bench_scaling's
-ingest_point runs ~40 min into a session; bench.py's family runs
+ingest points run ~40 min into a session; bench.py's family runs
 ~90 s into a fresh one).
 
 Round 9 adds a ``corpus`` probe (VERDICT r8 lead item): BENCH_r07's
@@ -36,6 +36,14 @@ cycle, the first run of that code in the JVM, then warm ones, with the
 Spark jobs of each step and the parquet files the sink and maintenance
 wrote. A sink or storage layout change is A/B'd with it as two trees.
 
+The probes run ``harness.py``'s family code (batch ingest, the corpus
+q47 run, the cold or warm per-query run), loaded by path from this
+file's directory, against the arm's engine: each probe process puts
+the arm's tree first on sys.path before the engine is imported, so an
+arm that predates ``harness.py`` is measured with the same methodology
+as the current one. Each probe's record names the engine ``__file__``
+it imported.
+
 An arm is a source tree, so a switch that used to be an env knob is
 A/B'd as a tree: to re-run the AB_VERIFY_R30_r14.json comparison (q199
 with and without its verify pin), check out a copy whose
@@ -50,7 +58,7 @@ Usage:
 
 from __future__ import annotations
 
-import itertools
+import importlib.util
 import json
 import os
 import shutil
@@ -61,146 +69,74 @@ import tempfile
 import time
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-RUNS = 5
+
+# The methodology comes from this file's directory and the engine from
+# the arm's tree: load the harness by path, never through ``import``,
+# which would resolve against whichever tree is first on sys.path.
+_spec = importlib.util.spec_from_file_location(
+    "harness", os.path.join(os.path.dirname(os.path.abspath(__file__)), "harness.py")
+)
+harness = importlib.util.module_from_spec(_spec)
+_spec.loader.exec_module(harness)
 
 
-def _measure(run, warmups: int = 1, runs: int = RUNS) -> dict:
-    for _ in range(warmups):
-        run()
-    raw = []
-    for _ in range(runs):
-        t0 = time.perf_counter()
-        run()
-        raw.append(time.perf_counter() - t0)
+def _engine(tree: str):
+    """The engine package of ``tree``, imported with ``tree`` first on
+    sys.path, before anything else in this process imports it."""
+    sys.path.insert(0, tree)
+    import astarte_data_updater_plant_spark
+
+    return astarte_data_updater_plant_spark
+
+
+def probe(spark) -> dict:
+    ingest, ingest_warm = harness.batch_ingest(spark, SF_DIR, blocks=2)
     return {
-        "sec": round(statistics.median(raw), 3),
-        "best": round(min(raw), 3),
-        "raw": [round(t, 3) for t in raw],
+        "ingest_msgs": ingest["msgs"],
+        "ingest": ingest,
+        # second block in the SAME process: quantifies pure warmth uplift
+        "ingest_warm": ingest_warm,
+        "q170": harness.timed(harness.query_run(spark, SF_DIR, "q170_zipf_fit")),
     }
 
 
-def probe(tree: str) -> None:
-    sys.path.insert(0, tree)
-    from astarte_data_updater_plant_spark.plans.registry import queries_map
-    from astarte_data_updater_plant_spark.session import get_spark
-    from astarte_data_updater_plant_spark.sources.stream import (
-        events_as_messages,
-        telemetry_interface,
-    )
-    from astarte_data_updater_plant_spark.streaming.pipeline import run_batch
-
-    spark = get_spark("ab_probe")
-    qmap = queries_map()
-    out: dict = {"tree": tree}
-
-    msgs = events_as_messages(spark, SF_DIR).persist()
-    n = msgs.count()
-
-    def ingest():
-        run_batch(msgs, interfaces=(telemetry_interface(),)).write.format(
-            "noop"
-        ).mode("overwrite").save()
-
-    m = _measure(ingest)
-    out["ingest_msgs"] = n
-    out["ingest"] = {**m, "msgs_per_sec": round(n / m["sec"])}
-    # second block in the SAME process: quantifies pure warmth uplift
-    m2 = _measure(ingest, warmups=0)
-    out["ingest_warm"] = {**m2, "msgs_per_sec": round(n / m2["sec"])}
-    msgs.unpersist()
-
-    def q170():
-        qmap["q170_zipf_fit"](spark, SF_DIR).write.format("noop").mode(
-            "overwrite"
-        ).save()
-
-    out["q170"] = _measure(q170)
-    print("PROBE_JSON " + json.dumps(out))
+def probe_corpus(spark) -> dict:
+    """bench.py's corpus family: q47 with every plan-time memo cleared
+    before every run."""
+    return {"corpus": harness.corpus(spark, SF_DIR)}
 
 
-def probe_corpus(tree: str) -> None:
-    """bench.py's corpus family, byte-for-byte methodology: q47 with
-    every plan-time memo cleared before every run."""
-    sys.path.insert(0, tree)
-    from astarte_data_updater_plant_spark.plans.fragments import clear_memos
-    from astarte_data_updater_plant_spark.plans.registry import queries_map
-    from astarte_data_updater_plant_spark.session import get_spark
-    from astarte_data_updater_plant_spark.sources.tables import load_table
-
-    spark = get_spark("ab_probe_corpus")
-    qmap = queries_map()
-    n_docs = load_table(spark, SF_DIR, "documents").count()
-
-    def one():
-        clear_memos()
-        qmap["q47_dedup_keep_best"](spark, SF_DIR).write.format("noop").mode(
-            "overwrite"
-        ).save()
-
-    m = _measure(one)
-    out = {
-        "tree": tree,
-        "corpus": {
-            **m,
-            "docs": n_docs,
-            "docs_per_sec": round(n_docs / m["sec"]),
-            "docs_per_sec_best": round(n_docs / m["best"]),
-        },
-    }
-    print("PROBE_JSON " + json.dumps(out))
-
-
-def probe_heavy(tree: str) -> None:
+def probe_heavy(spark) -> dict:
     """bench.py's HEAVY methodology for the two borderline r11 entries
     (q47 +6.0%, q204 +5.8% preview-to-preview, both code-unchanged):
     every plan-time memo cleared before every run, matching the series
     the heavy best-of bar is defined over (BASELINE.md r11
     declaration). Folded into the corpus adjudication session per
     VERDICT r11 ask #1."""
-    sys.path.insert(0, tree)
-    from astarte_data_updater_plant_spark.plans.fragments import clear_memos
-    from astarte_data_updater_plant_spark.plans.registry import queries_map
-    from astarte_data_updater_plant_spark.session import get_spark
-
-    spark = get_spark("ab_probe_heavy")
-    qmap = queries_map()
-    out: dict = {"tree": tree}
-    for name, key in (
-        ("q47_dedup_keep_best", "heavy_q47"),
-        ("q204_containment_pairs", "heavy_q204"),
-    ):
-        def one(q=qmap[name]):
-            clear_memos()
-            q(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-
-        out[key] = _measure(one)
-    print("PROBE_JSON " + json.dumps(out))
+    return {
+        key: harness.timed(harness.query_run(spark, SF_DIR, name, cold=True))
+        for name, key in (
+            ("q47_dedup_keep_best", "heavy_q47"),
+            ("q204_containment_pairs", "heavy_q204"),
+        )
+    }
 
 
-def probe_rank(tree: str) -> None:
+def probe_rank(spark) -> dict:
     """bench.py's HEADLINE methodology for the two-phase-rank consumers
     the r13 histogram-rank rewrite touches (q170 zipf fit, q145 ROC
     AUC): warm fragments (the headline set times these shapes
     warm-fragment), 1 warm-up + 5 timed noop runs each."""
-    sys.path.insert(0, tree)
-    from astarte_data_updater_plant_spark.plans.registry import queries_map
-    from astarte_data_updater_plant_spark.session import get_spark
-
-    spark = get_spark("ab_probe_rank")
-    qmap = queries_map()
-    out: dict = {"tree": tree}
-    for name, key in (
-        ("q170_zipf_fit", "rank_q170"),
-        ("q145_roc_auc", "rank_q145"),
-    ):
-        def one(q=qmap[name]):
-            q(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-
-        out[key] = _measure(one)
-    print("PROBE_JSON " + json.dumps(out))
+    return {
+        key: harness.timed(harness.query_run(spark, SF_DIR, name))
+        for name, key in (
+            ("q170_zipf_fit", "rank_q170"),
+            ("q145_roc_auc", "rank_q145"),
+        )
+    }
 
 
-def probe_ingest_cycle(tree: str) -> None:
+def probe_ingest_cycle(spark) -> dict:
     """One ingest cycle as the production path runs it, cold and then
     warm: run_batch over events_as_messages(sf0.1), the fold
     materialised with cache()+count(), write_outputs_batch and
@@ -208,10 +144,8 @@ def probe_ingest_cycle(tree: str) -> None:
     seconds and Spark jobs (one job group per step) and the parquet
     files the sink and maintenance wrote, so a sink or maintenance
     change is A/B'd as two trees."""
-    sys.path.insert(0, tree)
     from pyspark.sql import functions as F
 
-    from astarte_data_updater_plant_spark.session import get_spark
     from astarte_data_updater_plant_spark.sources.stream import (
         events_as_messages,
         telemetry_interface,
@@ -220,8 +154,6 @@ def probe_ingest_cycle(tree: str) -> None:
     from astarte_data_updater_plant_spark.streaming.pipeline import run_batch
     from astarte_data_updater_plant_spark.streaming.sinks import write_outputs_batch
 
-    spark = get_spark("ab_probe_ingest_cycle")
-    sc = spark.sparkContext
     msgs = events_as_messages(spark, SF_DIR).persist()
     n = msgs.count()
     now = F.lit("2020-01-01").cast("timestamp")
@@ -231,18 +163,11 @@ def probe_ingest_cycle(tree: str) -> None:
             name.endswith(".parquet") for _r, _d, names in os.walk(path) for name in names
         )
 
-    groups = itertools.count()
-
     def step(rec: dict, name: str, action) -> None:
-        group = f"ab-{name}-{next(groups)}"
-        sc.setJobGroup(group, group)
         t0 = time.perf_counter()
-        try:
-            action()
-        finally:
-            sc.setJobGroup("other", "")
+        jobs = harness.in_group(spark, action)
         rec[f"{name}_s"] = round(time.perf_counter() - t0, 3)
-        rec[f"{name}_jobs"] = len(sc.statusTracker().getJobIdsForGroup(group))
+        rec[f"{name}_jobs"] = len(jobs)
 
     def cycle() -> dict:
         base = tempfile.mkdtemp(prefix="ab_ingest_cycle_")
@@ -260,15 +185,22 @@ def probe_ingest_cycle(tree: str) -> None:
         return rec
 
     cold = cycle()
-    warm = [cycle() for _ in range(RUNS)]
-    out = {
-        "tree": tree,
+    warm = [cycle() for _ in range(harness.RUNS)]
+    msgs.unpersist()
+    return {
         "ingest_cycle_msgs": n,
         "cycle_cold": cold,
         "cycle_warm": {k: statistics.median(r[k] for r in warm) for k in cold},
         "cycle_warm_raw": warm,
     }
-    msgs.unpersist()
+
+
+def run_probe(tree: str, kind: str) -> None:
+    """One probe in this process: ``tree``'s engine and session, this
+    file's harness; prints the probe's record as a PROBE_JSON line."""
+    engine = _engine(tree)
+    spark = engine.get_spark(f"ab_probe_{kind}")
+    out = {"tree": tree, "engine": engine.__file__, **PROBES[kind][0](spark)}
     print("PROBE_JSON " + json.dumps(out))
 
 
@@ -409,6 +341,6 @@ if __name__ == "__main__":
             raise SystemExit(
                 f"unknown probe kind {kind!r}; known: {sorted(PROBES)}"
             )
-        PROBES[kind][0](sys.argv[2])
+        run_probe(sys.argv[2], kind)
     else:
         main()

@@ -138,24 +138,31 @@ def _time_sliced_files(df, ts_col: str, n_slices: int = 4, prefix: str = "slices
     """Write df as n time-range files whose SOURCE ORDER equals event-
     time order (so one file per trigger yields time-ordered micro-
     batches). One partitioned write — a filter+write per slice would
-    recompute the upstream plan once per slice."""
-    lo, hi = df.agg(F.min(ts_col), F.max(ts_col)).first()
-    span = (hi - lo).total_seconds() + 1.0
-    src_dir = scratch_dir(prefix=prefix)
-    stage_dir = os.path.join(src_dir, "_staged")
-    slice_col = F.least(
-        F.floor(
-            (ts_micros(ts_col) - ts_micros(F.lit(lo)))
-            / F.lit(span * 1_000_000.0 / n_slices)
-        ),
-        F.lit(n_slices - 1),
-    ).cast("int")
-    (
-        df.withColumn("slice", slice_col)
-        .repartition("slice")
-        .write.partitionBy("slice")
-        .parquet(stage_dir)
-    )
+    recompute the upstream plan once per slice. The bounds and the
+    write share one evaluation of df: it is cached for the two actions,
+    which would otherwise each run its plan (over events_as_messages,
+    the BSON encoding of every event)."""
+    df = df.persist()
+    try:
+        lo, hi = df.agg(F.min(ts_col), F.max(ts_col)).first()
+        span = (hi - lo).total_seconds() + 1.0
+        src_dir = scratch_dir(prefix=prefix)
+        stage_dir = os.path.join(src_dir, "_staged")
+        slice_col = F.least(
+            F.floor(
+                (ts_micros(ts_col) - ts_micros(F.lit(lo)))
+                / F.lit(span * 1_000_000.0 / n_slices)
+            ),
+            F.lit(n_slices - 1),
+        ).cast("int")
+        (
+            df.withColumn("slice", slice_col)
+            .repartition("slice")
+            .write.partitionBy("slice")
+            .parquet(stage_dir)
+        )
+    finally:
+        df.unpersist()
     moves = []
     for i in range(n_slices):
         parts = glob.glob(os.path.join(stage_dir, f"slice={i}", "part-*.parquet"))

@@ -65,12 +65,8 @@ def get_spark(app_name: str = "astarte_data_updater_plant_spark") -> SparkSessio
         # with capture off on the plan-heavy queries (q170 0.65x
         # median, q126 0.66x best; /tmp ab_dfdebug_build probe, 4
         # alternating fresh-JVM reps). Static conf, so it must be set
-        # here at build time; env-overridable for interactive
-        # debugging sessions that want enriched error call sites.
-        .config(
-            "spark.python.sql.dataFrameDebugging.enabled",
-            os.environ.get("SPARK_GRAFT_DF_DEBUG", "false"),
-        )
+        # here at build time.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # Untagged parquet timestamp[us] must read as TIMESTAMP, not
         # TIMESTAMP_NTZ: the session TZ is UTC so the instants are

@@ -21,11 +21,13 @@ from __future__ import annotations
 
 import base64
 import json
+import sys
 from datetime import datetime
 from typing import Any, Iterator
 
 import pandas as pd
 
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -48,18 +50,10 @@ from .state_machine import Catalog, DeviceState, process_device_messages
 # registration makes cloudpickle embed the definitions in the task
 # payload — the same mechanism spark-submit users get from --py-files,
 # without requiring deploy-time configuration.
-try:
-    from pyspark import cloudpickle  # bundled with pyspark
-
-    for _m in (_types_mod, _catalog_mod, _payloads_mod, _matchers_mod, _text_mod, _sm_mod):
-        cloudpickle.register_pickle_by_value(_m)
-    _state_dumps = cloudpickle.dumps
-    _state_loads = cloudpickle.loads
-except Exception:  # pragma: no cover - cloudpickle API moved
-    import pickle as _pickle
-
-    _state_dumps = _pickle.dumps
-    _state_loads = _pickle.loads
+for _m in (_types_mod, _catalog_mod, _payloads_mod, _matchers_mod, _text_mod, _sm_mod):
+    cloudpickle.register_pickle_by_value(_m)
+_state_dumps = cloudpickle.dumps
+_state_loads = cloudpickle.loads
 
 #: A1 message_stream schema (FIXTURES.md)
 MESSAGE_SCHEMA = T.StructType(
@@ -739,11 +733,4 @@ def _spark_type_of(mapping) -> T.DataType:
 # The grouped-map closures also reference THIS module's helpers
 # (_output_records, _messages_from_pdf, ...), so it must ship by value
 # with them; registered last so every definition above is in place.
-try:
-    import sys as _sys
-
-    from pyspark import cloudpickle as _cp
-
-    _cp.register_pickle_by_value(_sys.modules[__name__])
-except Exception:  # pragma: no cover
-    pass
+cloudpickle.register_pickle_by_value(sys.modules[__name__])

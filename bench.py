@@ -12,15 +12,15 @@ measured, so driver-side collect never flatters a slow plan.
 
 from __future__ import annotations
 
-import gc
 import json
 import os
 import shutil
-import statistics
 import sys
-import time
+import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from harness import RUNS, batch_ingest, corpus, noop, query_run, timed
 
 from astarte_data_updater_plant_spark.plans.registry import queries_map
 from astarte_data_updater_plant_spark.session import get_spark
@@ -88,50 +88,6 @@ WARMUP = (
 )
 
 
-#: timed executions per measured block; the median of 5 is reported
-#: (best-of-N understated steady state and could not be compared
-#: across rounds — r5's q23/q26 "regressions" were unattributable
-#: box noise) and the IQR rides along so a drift can be told apart
-#: from dispersion
-RUNS = 5
-
-
-def measure(run, *, warmups: int = 1, runs: int = RUNS) -> tuple[float, float, float]:
-    """(median, IQR, min) of ``runs`` timed executions of ``run()``.
-
-    The median is the reported estimator; the min rides along because
-    rounds 1-5 reported best-of-N, so the min is the only number
-    directly comparable to those rounds' history.
-
-    Isolation per measured block (the r5 verdict's attributability
-    ask): collect driver + JVM garbage first so one family's heap
-    pressure doesn't bill the next, then ``warmups`` untimed passes to
-    absorb codegen/class-loading, then the timed loop."""
-    gc.collect()
-    try:
-        from pyspark.sql import SparkSession
-
-        SparkSession.getActiveSession().sparkContext._jvm.System.gc()
-    except Exception:
-        pass
-    for _ in range(warmups):
-        run()
-    ts = sorted(_timed(run) for _ in range(runs))
-    med = statistics.median(ts)
-    if len(ts) >= 4:
-        q1, _q2, q3 = statistics.quantiles(ts, n=4)
-        iqr = q3 - q1
-    else:
-        iqr = ts[-1] - ts[0]
-    return round(med, 3), round(iqr, 3), round(ts[0], 3)
-
-
-def _timed(run) -> float:
-    t0 = time.perf_counter()
-    run()
-    return time.perf_counter() - t0
-
-
 def ingest_throughput(spark, sf_dir: str) -> dict:
     """Full state-machine ingest (BSON decode -> per-device fold ->
     datastream rows) over the events table, reported as msgs/sec.
@@ -142,34 +98,14 @@ def ingest_throughput(spark, sf_dir: str) -> dict:
     number; this measurement gives the same pipeline a concrete
     single-node figure to track round-over-round.
     """
-    from astarte_data_updater_plant_spark.sources.stream import (
-        events_as_messages,
-        telemetry_interface,
-    )
-    from astarte_data_updater_plant_spark.streaming.pipeline import run_batch
-
-    # cache the synthesized message stream so the timed section
-    # measures the ENGINE (shuffle + BSON decode + fold + output), not
-    # the bench fixture's message synthesis
-    msgs = events_as_messages(spark, sf_dir).persist()
-    try:
-        n_msgs = msgs.count()
-
-        def one():
-            run_batch(msgs, interfaces=(telemetry_interface(),)).write.format(
-                "noop"
-            ).mode("overwrite").save()
-
-        sec, iqr, best = measure(one)
-    finally:
-        msgs.unpersist()
+    (m,) = batch_ingest(spark, sf_dir)
     return {
-        "ingest_msgs": n_msgs,
-        "ingest_sec": sec,
-        "ingest_sec_iqr": iqr,
-        "ingest_sec_best": best,
-        "ingest_msgs_per_sec": round(n_msgs / sec),
-        "ingest_msgs_per_sec_best": round(n_msgs / best),
+        "ingest_msgs": m["msgs"],
+        "ingest_sec": m["sec"],
+        "ingest_sec_iqr": m["iqr"],
+        "ingest_sec_best": m["best"],
+        "ingest_msgs_per_sec": m["msgs_per_sec"],
+        "ingest_msgs_per_sec_best": m["msgs_per_sec_best"],
     }
 
 
@@ -199,18 +135,8 @@ def stream_ingest_throughput(spark, sf_dir: str) -> dict:
     checkpoints were within box noise (±15%%). On a real cluster this
     knob is spark.sql.shuffle.partitions at stream start — size it to
     total-state/partition-memory, not to cores."""
-    import tempfile
-
     from astarte_data_updater_plant_spark.operators.ingest import _time_sliced_files
-    from astarte_data_updater_plant_spark.sources.stream import (
-        events_as_messages,
-        telemetry_interface,
-    )
-    from astarte_data_updater_plant_spark.streaming.pipeline import (
-        MESSAGE_SCHEMA,
-        datastream_table,
-        run_stream,
-    )
+    from astarte_data_updater_plant_spark.sources.stream import events_as_messages
 
     msgs = events_as_messages(spark, sf_dir)
     n_msgs = msgs.count()
@@ -219,43 +145,14 @@ def stream_ingest_throughput(spark, sf_dir: str) -> dict:
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "16")
 
-    # checkpoint dirs are collected here and removed AFTER measure()
-    # returns: measure() times the whole callable externally, so any
+    # checkpoint dirs are collected here and removed AFTER timed()
+    # returns: timed() times the whole callable externally, so any
     # in-callable cleanup would ride inside the timed window and
     # inflate the r1-r8 continuity series (ADVICE r9)
     ckpts: list[str] = []
-
-    def one_run() -> None:
-        stream = (
-            spark.readStream.schema(MESSAGE_SCHEMA)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        ds = datastream_table(
-            run_stream(stream, interfaces=(telemetry_interface(),))
-        )
-        ckpt = tempfile.mkdtemp(prefix="bench_stream_ckpt_")
-        ckpts.append(ckpt)
-        q = (
-            ds.writeStream.outputMode("append")
-            .format("noop")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        # a hung query overlapping the next timed run would corrupt
-        # the number silently — fail loud instead (ADVICE r8). Raise,
-        # don't assert: asserts vanish under python -O (ADVICE r9).
-        # availableNow + awaitTermination(True) means the query is
-        # already terminated on the happy path, so no stop() is owed
-        # inside the timed window.
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError("stream run exceeded 600s")
-
     try:
-        sec, iqr, best = measure(one_run)
-        curve = _stream_batch_curve(spark, msgs, n_msgs)
+        m = timed(_stream_run(spark, src, 1, ckpts))
+        curve = _stream_batch_curve(spark, msgs, n_msgs, ckpts)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         shutil.rmtree(src, ignore_errors=True)
@@ -273,11 +170,11 @@ def stream_ingest_throughput(spark, sf_dir: str) -> dict:
     # precedent applied to streaming
     tuned_best = max(v["msgs_per_sec_best"] for v in curve.values())
     return {
-        "stream_ingest_sec": sec,
-        "stream_ingest_sec_iqr": iqr,
-        "stream_ingest_sec_best": best,
-        "stream_ingest_msgs_per_sec": round(n_msgs / sec),
-        "stream_ingest_msgs_per_sec_best": round(n_msgs / best),
+        "stream_ingest_sec": m["sec"],
+        "stream_ingest_sec_iqr": m["iqr"],
+        "stream_ingest_sec_best": m["best"],
+        "stream_ingest_msgs_per_sec": round(n_msgs / m["sec"]),
+        "stream_ingest_msgs_per_sec_best": round(n_msgs / m["best"]),
         # throughput vs micro-batch count at constant volume (VERDICT
         # r7 ask #2): the per-trigger coordination floor (planning,
         # WAL, offset log, state-store commit) is amortizable by
@@ -291,7 +188,34 @@ def stream_ingest_throughput(spark, sf_dir: str) -> dict:
     }
 
 
-def _stream_batch_curve(spark, msgs, n_msgs: int) -> dict:
+def _stream_run(spark, src: str, max_files: int, ckpts: list[str]):
+    """One run of the stream ingest over the time-sliced files in
+    ``src``, ``max_files`` files per micro-batch, into the noop sink;
+    each run's fresh checkpoint is appended to ``ckpts`` for the caller
+    to remove outside the timed window."""
+    from astarte_data_updater_plant_spark.sources.stream import telemetry_interface
+    from astarte_data_updater_plant_spark.streaming.pipeline import (
+        MESSAGE_SCHEMA,
+        datastream_table,
+        run_stream,
+    )
+
+    def run() -> None:
+        stream = (
+            spark.readStream.schema(MESSAGE_SCHEMA)
+            .option("maxFilesPerTrigger", str(max_files))
+            .parquet(src)
+        )
+        ckpts.append(tempfile.mkdtemp(prefix="bench_stream_ckpt_"))
+        noop(
+            datastream_table(run_stream(stream, interfaces=(telemetry_interface(),))),
+            ckpts[-1],
+        )
+
+    return run
+
+
+def _stream_batch_curve(spark, msgs, n_msgs: int, ckpts: list[str]) -> dict:
     """msgs/s vs micro-batch COUNT at constant total volume.
 
     One 8-slice time-ordered source consumed with maxFilesPerTrigger
@@ -305,59 +229,24 @@ def _stream_batch_curve(spark, msgs, n_msgs: int) -> dict:
     coordination, not the fold. RocksDB vs default state store and
     tmpfs vs disk checkpoints were probed in r7 at +-box-noise; batch
     count is the lever that matters."""
-    import tempfile
-
     from astarte_data_updater_plant_spark.operators.ingest import _time_sliced_files
-    from astarte_data_updater_plant_spark.sources.stream import telemetry_interface
-    from astarte_data_updater_plant_spark.streaming.pipeline import (
-        MESSAGE_SCHEMA,
-        datastream_table,
-        run_stream,
-    )
 
     src8 = _time_sliced_files(
         msgs, "reception_timestamp", n_slices=8, prefix="bench_stream_curve_"
     )
     curve: dict[str, dict] = {}
-    # cleanup deferred past the timed window, same as stream_ingest
-    # (ADVICE r9)
-    ckpts: list[str] = []
     try:
         for mft in (1, 2, 4, 8):
-            def one_run(mft=mft) -> None:
-                stream = (
-                    spark.readStream.schema(MESSAGE_SCHEMA)
-                    .option("maxFilesPerTrigger", str(mft))
-                    .parquet(src8)
-                )
-                ds = datastream_table(
-                    run_stream(stream, interfaces=(telemetry_interface(),))
-                )
-                ckpt = tempfile.mkdtemp(prefix="bench_stream_curve_ckpt_")
-                ckpts.append(ckpt)
-                q = (
-                    ds.writeStream.outputMode("append")
-                    .format("noop")
-                    .option("checkpointLocation", ckpt)
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                if not q.awaitTermination(600):
-                    q.stop()
-                    raise RuntimeError("curve run exceeded 600s")
-
-            sec, iqr, best = measure(one_run, runs=3)
+            m = timed(_stream_run(spark, src8, mft, ckpts), runs=3)
             curve[str(8 // mft)] = {
-                "sec": sec,
-                "sec_iqr": iqr,
-                "sec_best": best,
-                "msgs_per_sec": round(n_msgs / sec),
-                "msgs_per_sec_best": round(n_msgs / best),
+                "sec": m["sec"],
+                "sec_iqr": m["iqr"],
+                "sec_best": m["best"],
+                "msgs_per_sec": round(n_msgs / m["sec"]),
+                "msgs_per_sec_best": round(n_msgs / m["best"]),
             }
     finally:
         shutil.rmtree(src8, ignore_errors=True)
-        for ckpt in ckpts:
-            shutil.rmtree(ckpt, ignore_errors=True)
     return curve
 
 
@@ -368,25 +257,13 @@ def corpus_pipeline_throughput(spark, sf_dir: str) -> dict:
     documents table, reported as docs/sec. This is the corpus-assembly
     counterpart to the ingest number: how fast the engine turns a raw
     crawl into a deduplicated corpus."""
-    from astarte_data_updater_plant_spark.plans.fragments import clear_memos
-    from astarte_data_updater_plant_spark.sources.tables import load_table
-
-    n_docs = load_table(spark, sf_dir, "documents").count()
-    qmap = queries_map()
-
-    def one():
-        clear_memos()  # cold: rebuild every plan-time memo each run
-        qmap["q47_dedup_keep_best"](spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-
-    sec, iqr, best = measure(one)
+    m = corpus(spark, sf_dir)
     return {
-        "corpus_dedup_docs": n_docs,
-        "corpus_dedup_sec": sec,
-        "corpus_dedup_sec_iqr": iqr,
-        "corpus_dedup_sec_best": best,
-        "corpus_dedup_docs_per_sec": round(n_docs / sec),
+        "corpus_dedup_docs": m["docs"],
+        "corpus_dedup_sec": m["sec"],
+        "corpus_dedup_sec_iqr": m["iqr"],
+        "corpus_dedup_sec_best": m["best"],
+        "corpus_dedup_docs_per_sec": m["docs_per_sec"],
     }
 
 
@@ -436,46 +313,29 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     spark = get_spark("bench")
-    qmap = queries_map()
 
     for name in WARMUP:
-        qmap[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+        query_run(spark, sf_dir, name)()
 
     # median of RUNS timed executions per query, with per-query GC
-    # isolation + a dedicated warm-up pass (see measure()): single-shot
-    # numbers swing +-30% on a shared box (GC, page cache, co-tenant
-    # noise — round 4 measured the SAME commit at 8.3s and 10.7s an
-    # hour apart), and best-of-N hid dispersion entirely, making
-    # round-over-round drift unattributable (r5 verdict). The IQR is
-    # reported per query so a real regression (median moves, IQR
-    # small) reads differently from noise (IQR swallows the delta).
-    timings: dict[str, float] = {}
-    iqrs: dict[str, float] = {}
-    bests: dict[str, float] = {}
-    for name in HEADLINE:
-
-        def one(q=qmap[name]):
-            q(spark, sf_dir).write.format("noop").mode("overwrite").save()
-
-        timings[name], iqrs[name], bests[name] = measure(one)
+    # isolation + a dedicated warm-up pass (see harness.timed):
+    # single-shot numbers swing +-30% on a shared box (GC, page cache,
+    # co-tenant noise — round 4 measured the SAME commit at 8.3s and
+    # 10.7s an hour apart), and best-of-N hid dispersion entirely,
+    # making round-over-round drift unattributable (r5 verdict). The
+    # IQR is reported per query so a real regression (median moves,
+    # IQR small) reads differently from noise (IQR swallows the delta).
+    headline = {name: timed(query_run(spark, sf_dir, name)) for name in HEADLINE}
+    timings = {name: m["sec"] for name, m in headline.items()}
+    bests = {name: m["best"] for name, m in headline.items()}
 
     # heavy dedup family, COLD per run (every plan-time memo rebuilt
     # each time, the bench_scaling methodology) — warm-fragment
     # headline timings can't see a regression in these shapes.
-    from astarte_data_updater_plant_spark.plans.fragments import clear_memos
-
-    heavy: dict[str, float] = {}
-    heavy_iqrs: dict[str, float] = {}
-    heavy_bests: dict[str, float] = {}
-    for name in HEAVY:
-
-        def one_cold(q=qmap[name]):
-            clear_memos()
-            q(spark, sf_dir).write.format("noop").mode("overwrite").save()
-
-        heavy[name], heavy_iqrs[name], heavy_bests[name] = measure(
-            one_cold, runs=RUNS_HEAVY
-        )
+    heavy = {
+        name: timed(query_run(spark, sf_dir, name, cold=True), runs=RUNS_HEAVY)
+        for name in HEAVY
+    }
 
     total = round(sum(timings.values()), 3)
     total_best = round(sum(bests.values()), 3)
@@ -485,7 +345,7 @@ def main() -> None:
         "unit": "sec",
         "estimator": f"median_of_{RUNS}",
         "queries": timings,
-        "queries_iqr": iqrs,
+        "queries_iqr": {name: m["iqr"] for name, m in headline.items()},
         # best-of-N rides along for continuity with rounds 1-5,
         # whose headline WAS best-of-N — r6 discarded it and made
         # the r5->r6 delta an estimator change, not code (verdict
@@ -496,10 +356,10 @@ def main() -> None:
         "value_r1set": round(sum(timings[n] for n in R1_SET), 3),
         "value_r1set_best": round(sum(bests[n] for n in R1_SET), 3),
         # cold heavy dedup family (median/IQR/best of RUNS_HEAVY)
-        "queries_heavy": heavy,
-        "queries_heavy_iqr": heavy_iqrs,
-        "queries_heavy_best": heavy_bests,
-        "value_heavy": round(sum(heavy.values()), 3),
+        "queries_heavy": {name: m["sec"] for name, m in heavy.items()},
+        "queries_heavy_iqr": {name: m["iqr"] for name, m in heavy.items()},
+        "queries_heavy_best": {name: m["best"] for name, m in heavy.items()},
+        "value_heavy": round(sum(m["sec"] for m in heavy.values()), 3),
         "sf": float(sf),
         **_run_family_isolated("ingest"),
         **_run_family_isolated("stream"),

@@ -68,7 +68,6 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import statistics
 import subprocess
 import sys
 import tempfile
@@ -85,11 +84,14 @@ from pyspark.sql import functions as F
 # heap unless the caller overrides.
 os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "32g")
 
-from astarte_data_updater_plant_spark.plans.fragments import clear_memos
-from astarte_data_updater_plant_spark.plans.registry import queries_map
+from harness import batch_ingest, in_group, query_run, stages, summarize, timed
+
 from astarte_data_updater_plant_spark.session import get_spark
 
 RUNS = 2
+
+#: the keys of one timed scaling point in the BENCH_SCALING artifacts
+_POINT_KEYS = ("sec", "spread", "raw")
 
 #: VERDICT r10 ask #3: the dedup candidate family's cold wall clocks
 #: disperse +-30% under memory pressure (q47_variance, r10), so a
@@ -279,88 +281,15 @@ def build_hot_corpus(spark, scaled10: str, out: str) -> dict:
     return {"n_hot_docs": int(n_hot)}
 
 
-def _stage_stats(spark) -> dict[int, dict] | None:
-    """Per-stage shuffle/spill snapshot from the app status store,
-    keyed by stageId, or None if the py4j surface moved. Diffing two
-    snapshots around one run isolates that run's stages
-    (``_fresh_stages``); stage eviction (spark.ui.retainedStages) can
-    only UNDERSTATE a run's spill, never fake it, so a multi-GB reading
-    is trustworthy evidence of spill."""
-    try:
-        # core AppStatusStore (NOT sharedState().statusStore(), which is
-        # the SQL-plan store and has no stage metrics); Spark 4 removed
-        # the default args from stageList, so pass the full signature
-        gw = spark.sparkContext._gateway
-        store = spark.sparkContext._jsc.sc().statusStore()
-        sl = store.stageList(
-            gw.jvm.java.util.ArrayList(), False, False,
-            gw.new_array(gw.jvm.double, 0), gw.jvm.java.util.ArrayList(),
-        )
-        it = sl.iterator()
-        out: dict[int, dict] = {}
-        while it.hasNext():
-            s = it.next()
-            out[int(s.stageId())] = {
-                "tasks": int(s.numCompleteTasks()),
-                "spill_bytes": int(s.memoryBytesSpilled())
-                + int(s.diskBytesSpilled()),
-                "shuf_write_gb": round(int(s.shuffleWriteBytes()) / 1e9, 2),
-                "write_recs_m": round(int(s.shuffleWriteRecords()) / 1e6, 1),
-                "read_recs_m": round(int(s.shuffleReadRecords()) / 1e6, 1),
-            }
-        return out
-    except Exception:
-        return None
+def _point(m: dict, *extra: str) -> dict:
+    """``m``'s ``extra`` keys and the scaling point keys."""
+    return {k: m[k] for k in (*extra, *_POINT_KEYS)}
 
 
-def _fresh_stages(pre: dict | None, post: dict | None) -> list[dict] | None:
-    """The stages in ``post`` that ``pre`` did not hold, largest spill
-    first (then most written records), or None if either snapshot
-    failed."""
-    if pre is None or post is None:
-        return None
-    fresh = [v for k, v in post.items() if k not in pre]
-    fresh.sort(key=lambda v: (-v["spill_bytes"], -v["write_recs_m"]))
-    return fresh
-
-
-def timed_runs(run, *, warmups: int = 1, runs: int = RUNS) -> dict:
-    for _ in range(warmups):
-        clear_memos()
-        run()
-    ts = []
-    for _ in range(runs):
-        clear_memos()
-        t0 = time.perf_counter()
-        run()
-        ts.append(time.perf_counter() - t0)
-    return {
-        "sec": round(statistics.median(ts), 3),
-        "spread": round(max(ts) - min(ts), 3),
-        "raw": [round(t, 3) for t in ts],
-    }
-
-
-def ingest_point(spark, sf_dir: str) -> dict:
-    from astarte_data_updater_plant_spark.sources.stream import (
-        events_as_messages,
-        telemetry_interface,
-    )
-    from astarte_data_updater_plant_spark.streaming.pipeline import run_batch
-
-    msgs = events_as_messages(spark, sf_dir).persist()
-    try:
-        n = msgs.count()
-
-        def one():
-            run_batch(msgs, interfaces=(telemetry_interface(),)).write.format(
-                "noop"
-            ).mode("overwrite").save()
-
-        m = timed_runs(one)
-    finally:
-        msgs.unpersist()
-    return {"msgs": n, **m, "msgs_per_sec": round(n / m["sec"])}
+def _ingest(spark, sf_dir: str) -> dict:
+    """One batch-ingest scaling point: messages, timing, msgs/s."""
+    (m,) = batch_ingest(spark, sf_dir, runs=RUNS)
+    return _point(m, "msgs", "msgs_per_sec")
 
 
 def _round_artifact_path(rnd: str) -> str:
@@ -422,34 +351,25 @@ def decade3_point(name: str, scales: str) -> None:
     src = os.environ.get("SPARK_GRAFT_SCALE_SRC", "/root/testdata/sf0.1")
     root = os.environ.get("SPARK_GRAFT_SCALE_DIR", "/tmp/scaledata")
     spark = get_spark(f"decade3_{name}")
-    qmap = queries_map()
     out: dict = {"name": name, "scales": {}}
     for r in (int(x) for x in scales.split(",")):
         r_dir = f"{root}/r{r}"
         build_scaled(spark, src, r_dir, r)
         if name == "ingest":
-            out["scales"][f"r{r}"] = ingest_point(spark, r_dir)
+            out["scales"][f"r{r}"] = _ingest(spark, r_dir)
         else:
-            def one(q=qmap[name], d=r_dir):
-                q(spark, d).write.format("noop").mode("overwrite").save()
-
+            one = query_run(spark, r_dir, name, cold=True)
             # warmups=0 matches the in-session decade3 methodology;
             # a fresh process IS the cold condition under test
-            m = timed_runs(one, warmups=0, runs=RUNS)
+            m = timed(one, warmups=0, runs=RUNS)
             # VERDICT r12 ask #3 estimator fix: sub-5s points are
             # first-touch dominated (q40's r10 raws [7.695, 1.121] in
             # r12), so cheap points get a third raw run — the median
             # of 3 demotes the one-off first-touch outlier instead of
             # averaging it into a 2-run median
-            if min(m["raw"]) < 5.0:
-                extra = timed_runs(one, warmups=0, runs=1)
-                raw = m["raw"] + extra["raw"]
-                m = {
-                    "sec": round(statistics.median(raw), 3),
-                    "spread": round(max(raw) - min(raw), 3),
-                    "raw": raw,
-                }
-            out["scales"][f"r{r}"] = m
+            if m["best"] < 5.0:
+                m = summarize(m["raw"] + timed(one, warmups=0, runs=1)["raw"])
+            out["scales"][f"r{r}"] = _point(m)
         print(f"{name} r{r}: {out['scales'][f'r{r}']}", flush=True)
         print("PROBE_JSON " + json.dumps(out), flush=True)
 
@@ -621,7 +541,6 @@ def main() -> None:
     hot_meta = build_hot_corpus(spark, r10_dir, hot_dir)
     build_sec = round(time.perf_counter() - t0, 3)
 
-    qmap = queries_map()
     queries: dict[str, dict] = {}
     for name in SCALE_QUERIES:
         row: dict = {}
@@ -629,11 +548,7 @@ def main() -> None:
             # dedup-family dispersion: 4 runs at every scale (r10 ask
             # #3); everything else keeps 2 — their spreads are tight
             n_runs = DISPERSION_RUNS if name in DISPERSION_QUERIES else RUNS
-
-            def one(q=qmap[name], d=d):
-                q(spark, d).write.format("noop").mode("overwrite").save()
-
-            m = timed_runs(one, runs=n_runs)
+            m = timed(query_run(spark, d, name, cold=True), runs=n_runs)
             row[f"{label}_sec"] = m["sec"]
             row[f"{label}_spread"] = m["spread"]
             row[f"{label}_raw"] = m["raw"]
@@ -649,17 +564,13 @@ def main() -> None:
     build2_sec = round(time.perf_counter() - t0, 3)
     decade2: dict[str, dict] = {}
     for name in DECADE2_QUERIES:
-
-        def one2(q=qmap[name]):
-            q(spark, r2_dir).write.format("noop").mode("overwrite").save()
-
         # warmups=0: codegen/class-load for these exact plans is already
         # paid by the r1/r10 passes above; every timed run is still cold
         # (every plan-time memo cleared). The whole decade2 set is
         # dedup-family, so every point gets the 4-run dispersion
         # methodology (r10 ask #3).
         n2 = DISPERSION_RUNS if name in DISPERSION_QUERIES else RUNS
-        m = timed_runs(one2, warmups=0, runs=n2)
+        m = timed(query_run(spark, r2_dir, name, cold=True), warmups=0, runs=n2)
         d2 = {
             f"r{r2}_sec": m["sec"],
             f"r{r2}_spread": m["spread"],
@@ -691,58 +602,45 @@ def main() -> None:
     # decades are recorded alongside so the growth hypothesis is
     # checkable directly: candidate volume scaling ~3x for 3x data is
     # linear generation, ~9x is the quadratic pathology.
-    q204_raw, q204_spill = [], []
-    for _ in range(5):
-        clear_memos()
-        pre = _stage_stats(spark)
-        t0 = time.perf_counter()
-        qmap["q204_containment_pairs"](spark, r2_dir).write.format(
-            "noop"
-        ).mode("overwrite").save()
-        q204_raw.append(round(time.perf_counter() - t0, 3))
-        fresh = _fresh_stages(pre, _stage_stats(spark))
-        q204_spill.append(
-            None if fresh is None else sum(v["spill_bytes"] for v in fresh)
-        )
+    q204_jobs: list[list[int]] = []
+    q204 = query_run(spark, r2_dir, "q204_containment_pairs", cold=True)
+    q204_runs = timed(lambda: q204_jobs.append(in_group(spark, q204)), warmups=0, runs=5)
+    q204_spill = [
+        sum(v["spill_bytes"] for v in stages(spark, jobs)) for jobs in q204_jobs
+    ]
     # per-stage probe (one extra untimed cold run per decade): the
     # candidate stage's shuffle-write RECORD count is the quantity
     # that would grow superlinearly if the containment prefix filter
     # were degrading — candidate rows ~3x for 3x data is linear
     # generation, ~9x is the quadratic pathology. Top stages by spill
     # and by written records are both kept.
-    q204_stages = {}
-    for lbl, dd in (("r10", r10_dir), (f"r{r2}", r2_dir)):
-        clear_memos()
-        pre = _stage_stats(spark)
-        qmap["q204_containment_pairs"](spark, dd).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        fresh = _fresh_stages(pre, _stage_stats(spark))
-        q204_stages[lbl] = None if fresh is None else fresh[:6]
+    q204_stages = {
+        lbl: stages(
+            spark,
+            in_group(spark, query_run(spark, dd, "q204_containment_pairs", cold=True)),
+        )[:6]
+        for lbl, dd in (("r10", r10_dir), (f"r{r2}", r2_dir))
+    }
     q204_var = {
         "r": r2,
-        "r30_raw": q204_raw,
-        "r30_median": round(statistics.median(q204_raw), 3),
-        "r30_spread": round(max(q204_raw) - min(q204_raw), 3),
+        "r30_raw": q204_runs["raw"],
+        "r30_median": q204_runs["sec"],
+        "r30_spread": q204_runs["spread"],
         "r30_spill_bytes_per_run": q204_spill,
         "top_stages_by_decade": q204_stages,
         "r30_decade2_context": decade2["q204_containment_pairs"],
     }
     print("q204_variance", q204_var, flush=True)
 
-
     # --- adversarial hot-bucket q42 at the SECOND decade (ask #6):
     # the salting guard's "bounded, never quadratic" claim measured
     # where the data is 30x, not just 10x ---
     hot2_dir = f"{root}/hot{r2}"
     hot2_meta = build_hot_corpus(spark, r2_dir, hot2_dir)
-
-    def q42_hot2(d=hot2_dir):
-        qmap["q42_lsh_near_dup_pairs"](spark, d).write.format("noop").mode(
-            "overwrite"
-        ).save()
-
-    hot2 = timed_runs(q42_hot2, warmups=0, runs=RUNS)
+    hot2 = timed(
+        query_run(spark, hot2_dir, "q42_lsh_near_dup_pairs", cold=True),
+        warmups=0, runs=RUNS,
+    )
     adversarial2 = {
         **hot2_meta,
         f"q42_hot_r{r2}_sec": hot2["sec"],
@@ -756,8 +654,8 @@ def main() -> None:
     print("adversarial_decade2", adversarial2, flush=True)
 
     ing = {
-        "r1": ingest_point(spark, r1_dir),
-        "r10": ingest_point(spark, r10_dir),
+        "r1": _ingest(spark, r1_dir),
+        "r10": _ingest(spark, r10_dir),
     }
     ing["ratio"] = round(ing["r10"]["sec"] / ing["r1"]["sec"], 2)
     print("ingest", ing, flush=True)
@@ -776,11 +674,7 @@ def main() -> None:
     decade3: dict[str, dict] = {}
     for name in ("q40_exact_dedup", "q41_minhash_signatures",
                  "q42_lsh_near_dup_pairs", "q45_near_dup_components"):
-
-        def one3(q=qmap[name]):
-            q(spark, r3_dir).write.format("noop").mode("overwrite").save()
-
-        m = timed_runs(one3, warmups=0, runs=RUNS)
+        m = timed(query_run(spark, r3_dir, name, cold=True), warmups=0, runs=RUNS)
         d3 = {
             f"r{r3}_sec": m["sec"],
             f"r{r3}_spread": m["spread"],
@@ -798,19 +692,16 @@ def main() -> None:
             )
         decade3[name] = d3
         print("decade3", name, d3, flush=True)
-    ing3 = ingest_point(spark, r3_dir)
+    ing3 = _ingest(spark, r3_dir)
     ing3["ratio_over_r10_per_x"] = round(
         ing3["sec"] / ing["r10"]["sec"] / (r3 / 10.0), 3
     )
     decade3["ingest"] = ing3
     print("decade3 ingest", ing3, flush=True)
 
-    def q42_hot(d=hot_dir):
-        qmap["q42_lsh_near_dup_pairs"](spark, d).write.format("noop").mode(
-            "overwrite"
-        ).save()
-
-    hot = timed_runs(q42_hot)
+    hot = timed(
+        query_run(spark, hot_dir, "q42_lsh_near_dup_pairs", cold=True), runs=RUNS
+    )
     adversarial = {
         **hot_meta,
         "q42_hot_sec": hot["sec"],
@@ -833,10 +724,7 @@ def main() -> None:
         ("q199_prefix_filter_jaccard", "q199"),
         ("q204_containment_pairs", "q204"),
     ):
-        def one_hot(q=qmap[qname]):
-            q(spark, hot_dir).write.format("noop").mode("overwrite").save()
-
-        h = timed_runs(one_hot, warmups=0)
+        h = timed(query_run(spark, hot_dir, qname, cold=True), warmups=0, runs=RUNS)
         adversarial_pp[f"adversarial_{short}"] = {
             **hot_meta,
             f"{short}_hot_sec": h["sec"],

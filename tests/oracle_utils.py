@@ -148,9 +148,9 @@ def dtype_skews(spark_schema, oracle_sql: str, sf_dir: str) -> list[str]:
     wildcard — no value exists for the hash to distinguish.
 
     Columns present on only ONE side are reported as skews too: the
-    standalone ``type_audit.py`` sweep calls this without ``compare()``'s
-    column-name equality gate, and a name/case mismatch must not read
-    as zero-skew (ADVICE r7).
+    ``parity_full.py`` calls this before ``compare()``'s column-name
+    equality gate, and a name/case mismatch must not read as zero-skew
+    in its ``TYPE_AUDIT_r{N}.json`` (ADVICE r7).
     """
     o_schema = oracle_arrow_schema(oracle_sql, sf_dir)
     o_types = {f.name: arrow_canon(f.type) for f in o_schema}

@@ -10,9 +10,9 @@ are counted too.
 
 from __future__ import annotations
 
-import itertools
-
 from pyspark.sql import functions as F
+
+from harness import in_group
 
 from astarte_data_updater_plant_spark.storage.jobs import (
     compact_property_log,
@@ -35,21 +35,6 @@ JOB_BUDGETS = {
     # are observed during the writes, not read back
     "run_maintenance": 4,
 }
-
-_GROUPS = itertools.count()
-
-
-def _group_jobs(spark, action) -> list[int]:
-    """Ids of the jobs ``action`` runs, under a fresh job group."""
-    sc = spark.sparkContext
-    group = f"job_budget_{next(_GROUPS)}"
-    sc.setJobGroup(group, group)
-    try:
-        action()
-    finally:
-        sc.setJobGroup("other", "")
-    return list(sc.statusTracker().getJobIdsForGroup(group))
-
 
 def _fold_stages(spark, job_ids: list[int]) -> tuple[list, list]:
     """The completed stages of ``job_ids`` that ran the grouped-map fold,
@@ -83,9 +68,9 @@ def test_sink_and_maintenance_job_budgets(spark, tmp_path):
     # the fold's own jobs are not the sink's: run it outside the group
     outputs = run_batch(messages_frame(spark)).cache()
     outputs.count()
-    sink_jobs = _group_jobs(spark, lambda: write_outputs_batch(outputs, base))
+    sink_jobs = in_group(spark, lambda: write_outputs_batch(outputs, base))
     assert len(sink_jobs) <= JOB_BUDGETS["write_outputs_batch"], sink_jobs
-    maint_jobs = _group_jobs(
+    maint_jobs = in_group(
         spark, lambda: run_maintenance(spark, base, F.lit("2020-01-01").cast("timestamp"))
     )
     assert len(maint_jobs) <= JOB_BUDGETS["run_maintenance"], maint_jobs
@@ -96,7 +81,7 @@ def test_sink_runs_the_fold_once(spark, tmp_path):
     once, and it has finished before any of the six concurrent writes
     starts: they read its cached output rather than race to build it."""
     outputs = run_batch(messages_frame(spark))
-    jobs = _group_jobs(spark, lambda: write_outputs_batch(outputs, str(tmp_path / "tables")))
+    jobs = in_group(spark, lambda: write_outputs_batch(outputs, str(tmp_path / "tables")))
     folds, readers = _fold_stages(spark, jobs)
     assert len(folds) == 1
     fold_done = folds[0].completionTime().get().getTime()

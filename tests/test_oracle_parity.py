@@ -39,10 +39,9 @@ def test_entry_smoke(spark):
 
 
 def test_dtype_skews_reports_one_sided_columns(sf_dir):
-    """A column present on only one side must surface as a skew: the
-    standalone type_audit.py sweep calls dtype_skews without
-    compare()'s column-name gate, so a name mismatch must not read as
-    zero-skew (ADVICE r7)."""
+    """A column present on only one side must surface as a skew:
+    parity_full.py calls dtype_skews before compare()'s column-name
+    gate, so a name mismatch must not read as zero-skew (ADVICE r7)."""
     from pyspark.sql import types as T
 
     from .oracle_utils import dtype_skews

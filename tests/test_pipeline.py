@@ -196,6 +196,27 @@ def test_time_sliced_files_mtime_order(spark, sf_dir, writer):
             assert got.exceptAll(frame).count() == 0
 
 
+def test_time_sliced_files_evaluates_its_input_once(spark):
+    """The bounds action and the sliced write share one evaluation of
+    the input, which over events_as_messages BSON-encodes every event."""
+    from astarte_data_updater_plant_spark.operators.ingest import _time_sliced_files
+
+    evaluated = spark.sparkContext.accumulator(0)
+
+    def counted(batches):
+        for pdf in batches:
+            evaluated.add(len(pdf))
+            yield pdf
+
+    n = 200
+    df = spark.range(n).selectExpr("id", "timestamp_seconds(id) AS ts").mapInPandas(
+        counted, "id long, ts timestamp"
+    )
+    src = _time_sliced_files(df, "ts", prefix="test_evaluated_once_")
+    assert evaluated.value == n
+    assert spark.read.parquet(src).count() == n
+
+
 def test_stamp_ordered_rejects_out_of_range_idx(tmp_path):
     """The mtime-stamp invariant (strictly in the past) inverts for
     idx >= 1024; the guard must fail loudly instead of reordering
@@ -225,7 +246,8 @@ def test_await_stream_timeout_stops_the_query(spark, tmp_path):
         .option("rowsPerSecond", 1)
         .option("numPartitions", 1)
         .load()
-        .writeStream.format("noop")
+        .writeStream.format("memory")
+        .queryName("await_timeout_probe")
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .start()
     )

@@ -402,23 +402,20 @@ def test_global_order_inputs_pinned_single_evaluation(spark, qs, name):
     execution branch reads the pinned InMemoryTableScan instead of
     re-running the upstream lineage. After clear_memos() the next build
     fires the cold build's jobs, probe included, again."""
+    from harness import in_group
+
     from astarte_data_updater_plant_spark.plans.fragments import clear_memos
 
     clear_memos()
-    sc = spark.sparkContext
 
     # cold build: allowed its one bounded probe action per rank input
-    sc.setJobGroup(f"{name}_cold", "cold plan build")
-    df = qs[name](spark, SF_DIR)
-    sc.setJobGroup("other", "")
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    built = []
+    cold_jobs = in_group(spark, lambda: built.append(qs[name](spark, SF_DIR)))
+    plan = built[0]._jdf.queryExecution().executedPlan().toString()
     assert "InMemoryTableScan" in plan, "rank input is not fragment()-pinned"
 
     # warm rebuild: memoized boundaries + pinned fragments -> NO action
-    sc.setJobGroup(f"{name}_warm", "warm plan rebuild")
-    qs[name](spark, SF_DIR)
-    sc.setJobGroup("other", "")
-    warm_jobs = sc.statusTracker().getJobIdsForGroup(f"{name}_warm")
+    warm_jobs = in_group(spark, lambda: qs[name](spark, SF_DIR))
     assert len(warm_jobs) == 0, (
         f"{name}: plan rebuild fired {len(warm_jobs)} Spark job(s) — "
         "upstream re-evaluated per build"
@@ -426,11 +423,7 @@ def test_global_order_inputs_pinned_single_evaluation(spark, qs, name):
 
     # after clear_memos() the build is as cold as the first one
     clear_memos()
-    sc.setJobGroup(f"{name}_cleared", "plan build after clear_memos")
-    qs[name](spark, SF_DIR)
-    sc.setJobGroup("other", "")
-    cold_jobs = sc.statusTracker().getJobIdsForGroup(f"{name}_cold")
-    cleared_jobs = sc.statusTracker().getJobIdsForGroup(f"{name}_cleared")
+    cleared_jobs = in_group(spark, lambda: qs[name](spark, SF_DIR))
     assert len(cleared_jobs) == len(cold_jobs) > 0, (cold_jobs, cleared_jobs)
 
 
@@ -635,3 +628,44 @@ def test_streaming_scenarios_share_one_file_stream_harness():
                     hits[name].append(owner)
     for name, (_, helper) in mechanisms.items():
         assert hits[name] == [helper], f"{name}: {hits[name]}"
+
+
+def test_bench_scripts_share_one_measurement_harness():
+    """Across ``bench.py``, ``ab_bench.py``, ``bench_scaling.py`` and
+    the tests, three measurement mechanisms are spelled only in
+    ``harness.py``: the noop-sink run (``noop``), the job-group reads
+    (``in_group``) and the status store's stage list (``stages``). A
+    script or test that hand-copies one of them again fails here."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent
+
+    def is_call(*attrs, args=None):
+        def matches(node):
+            return (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in attrs
+                and (args is None or [getattr(a, "value", None) for a in node.args] == args)
+            )
+
+        return matches
+
+    mechanisms = {
+        "noop sink": is_call("format", args=["noop"]),
+        "job group": is_call("setJobGroup", "getJobIdsForGroup"),
+        "stage list": is_call("stageList"),
+    }
+    paths = [root / f"{n}.py" for n in ("harness", "bench", "ab_bench", "bench_scaling")]
+    paths += sorted((root / "tests").glob("*.py"))
+    hits = {name: [] for name in mechanisms}
+    for path in paths:
+        for top in ast.parse(path.read_text()).body:
+            owner = f"{path.name}:{getattr(top, 'name', top.lineno)}"
+            for node in ast.walk(top):
+                for name, matches in mechanisms.items():
+                    if matches(node):
+                        hits[name].append(owner)
+    for name, owners in hits.items():
+        assert owners and all(o.startswith("harness.py:") for o in owners), f"{name}: {owners}"
