@@ -21,7 +21,8 @@ from enum import Enum
 
 from pyspark.sql import types as T
 
-from .types import TYPED_COLUMNS, ValueType, db_column_name, spark_type
+from .sources.tables import local_rows
+from .types import TYPED_COLUMNS, ValueType, spark_type
 
 
 class InterfaceType(str, Enum):
@@ -83,11 +84,6 @@ def endpoint_regex(pattern: str) -> re.Pattern[str]:
         rx = re.compile("^" + "/".join(out) + "$")
         _ENDPOINT_REGEX_MEMO[pattern] = rx
     return rx
-
-
-def endpoint_regex_sql(pattern: str) -> str:
-    """Same regex as a string usable in F.regexp_like / rlike."""
-    return endpoint_regex(pattern).pattern
 
 
 @dataclass(frozen=True)
@@ -217,10 +213,6 @@ def object_table_schema(interface: Interface) -> T.StructType:
     return T.StructType(fields)
 
 
-def typed_column_for(vt: ValueType) -> str:
-    return db_column_name(vt)
-
-
 # ---------------------------------------------------------------------------
 # Reference test-keyspace fixtures (FIXTURES.md §A; database_test_helper.exs)
 # ---------------------------------------------------------------------------
@@ -332,10 +324,10 @@ def write_catalog(spark, interfaces: tuple[Interface, ...], base_dir: str) -> No
     """Persist the schema catalog as two small dimension tables — the
     broadcast side of the stream's metadata join (A8)."""
     irows, erows = catalog_to_rows(interfaces)
-    spark.createDataFrame(irows, INTERFACES_DIM_SCHEMA).coalesce(1).write.mode(
+    local_rows(spark, irows, INTERFACES_DIM_SCHEMA).coalesce(1).write.mode(
         "overwrite"
     ).parquet(f"{base_dir}/interfaces")
-    spark.createDataFrame(erows, ENDPOINTS_DIM_SCHEMA).coalesce(1).write.mode(
+    local_rows(spark, erows, ENDPOINTS_DIM_SCHEMA).coalesce(1).write.mode(
         "overwrite"
     ).parquet(f"{base_dir}/endpoints")
 

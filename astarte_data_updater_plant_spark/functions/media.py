@@ -17,10 +17,13 @@ from __future__ import annotations
 
 import io
 import struct
+import sys
 import wave
 
 import numpy as np
+from pyspark import cloudpickle
 
+from . import payloads
 from .payloads import safe_inflate
 
 
@@ -281,14 +284,5 @@ def decode_png(buf: bytes) -> tuple[int, int, int, int, np.ndarray]:
 # ship by value into mapInPandas closures (the workers may not have
 # the package on sys.path when the driver runs from another cwd);
 # payloads must ride along because decode_png calls its safe_inflate
-try:
-    import sys as _sys
-
-    from pyspark import cloudpickle as _cp
-
-    from . import payloads as _payloads_mod
-
-    _cp.register_pickle_by_value(_payloads_mod)
-    _cp.register_pickle_by_value(_sys.modules[__name__])
-except Exception:  # pragma: no cover
-    pass
+cloudpickle.register_pickle_by_value(payloads)
+cloudpickle.register_pickle_by_value(sys.modules[__name__])

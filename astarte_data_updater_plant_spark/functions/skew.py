@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.fragments import memo
+from ..sources.tables import local_rows
 
 DEFAULT_SALT = 16
 
@@ -164,9 +165,7 @@ def guarded_self_pairs(
         return pairs(bands, []).distinct()
 
     hot = F.broadcast(
-        bands.sparkSession.createDataFrame(
-            hot_keys, bands.select(*key_cols).schema
-        )
+        local_rows(bands.sparkSession, hot_keys, bands.select(*key_cols).schema)
     )
     cold = bands.join(hot, key_cols, "left_anti")
     cold_pairs = pairs(cold, [])

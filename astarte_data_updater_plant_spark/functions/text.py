@@ -81,24 +81,6 @@ def shingles(col: Column, k: int = 3) -> Column:
     return shingles_from_tokens(tokens(col), k)
 
 
-def shingle_hashes(col: Column, k: int = 3) -> Column:
-    return F.transform(shingles(col, k), lambda s: F.md5(s))
-
-
-def minhash_expr(token_col: Column, seed: int) -> Column:
-    """One MinHash coordinate: min(md5(seed || ':' || token)).
-
-    md5 is the shared deterministic hash family between Spark and the
-    DuckDB oracle; lexicographic min over hex digests is a valid
-    min-wise hash. Use as an aggregate: F.min(minhash_expr(...)).
-
-    NOTE: superseded in the LSH pipeline by shingle_h32 +
-    minhash_perm — one md5 per shingle instead of one per
-    (shingle, seed). Kept for ad-hoc single-coordinate use.
-    """
-    return F.md5(F.concat(F.lit(f"{seed}:"), token_col))
-
-
 #: Smallest prime above 2^32 — the universal-hash modulus shared with
 #: the DuckDB oracle. a*h32 < 2^30 * 2^32 = 2^62 never overflows a
 #: signed 64-bit in either engine.

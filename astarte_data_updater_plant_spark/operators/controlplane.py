@@ -26,12 +26,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType, StructField, StructType
+from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
 from ..functions.matchers import value_match_any_op
 from ..functions.timeutil import ts_micros
 from ..plans.registry import register
-from ..sources.tables import load_table
+from ..sources.tables import load_table, local_rows
 from .triggers import _TRIGGER_VALUES_SQL, trigger_dim
 
 #: Target dimension (trigger_id -> delivery target), the shape of the
@@ -74,7 +74,7 @@ _MATCH_PRED_SQL = """
 
 
 def target_dim(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(TARGET_ROWS, TARGET_SCHEMA)
+    return local_rows(spark, TARGET_ROWS, TARGET_SCHEMA)
 
 
 @register(
@@ -227,7 +227,18 @@ RETENTION_ROWS = [
     ("signup", 604800),
 ]
 
+RETENTION_SCHEMA = StructType(
+    [
+        StructField("event_type", StringType(), False),
+        StructField("retention_s", IntegerType(), False),
+    ]
+)
+
 _RETENTION_VALUES_SQL = ", ".join(f"('{et}', {s})" for et, s in RETENTION_ROWS)
+
+
+def retention_dim(spark: SparkSession) -> DataFrame:
+    return local_rows(spark, RETENTION_ROWS, RETENTION_SCHEMA)
 
 
 @register(
@@ -256,13 +267,8 @@ _RETENTION_VALUES_SQL = ", ".join(f"('{et}', {s})" for et, s in RETENTION_ROWS)
     "keeps both engines bit-identical.",
 )
 def q28_ttl_expiry(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.types import IntegerType, StructField as SF_, StructType as ST_
-
     ev = load_table(spark, sf_dir, "events")
-    ret = spark.createDataFrame(
-        RETENTION_ROWS,
-        ST_([SF_("event_type", StringType(), False), SF_("retention_s", IntegerType(), False)]),
-    )
+    ret = retention_dim(spark)
     cutoff = ev.agg(F.max("ts").alias("c"))
     expires_at = F.timestamp_micros(
         ts_micros("ts") + F.col("retention_s").cast("long") * 1_000_000
@@ -300,7 +306,7 @@ def kv_store_dim(spark: SparkSession) -> DataFrame:
             StructField("value", StringType(), False),
         ]
     )
-    return spark.createDataFrame(KV_STORE_ROWS, schema)
+    return local_rows(spark, KV_STORE_ROWS, schema)
 
 
 def realm_retention_cap(spark: SparkSession) -> DataFrame:
@@ -361,13 +367,8 @@ def realm_retention_cap(spark: SparkSession) -> DataFrame:
     "cutoff exactly like q28 — zero extra shuffles over the fact scan.",
 )
 def q100_retention_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.types import IntegerType, StructField as SF_, StructType as ST_
-
     ev = load_table(spark, sf_dir, "events")
-    ret = spark.createDataFrame(
-        RETENTION_ROWS,
-        ST_([SF_("event_type", StringType(), False), SF_("retention_s", IntegerType(), False)]),
-    )
+    ret = retention_dim(spark)
     eff = (
         ret.crossJoin(F.broadcast(realm_retention_cap(spark)))
         .select(

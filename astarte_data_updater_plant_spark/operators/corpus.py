@@ -46,7 +46,7 @@ from ..functions.ranks import with_global_order
 from ..functions.text import shingle_h32, shingles_from_tokens
 from ..plans.fragments import fragment
 from ..plans.registry import register
-from ..sources.tables import load_table
+from ..sources.tables import load_table, local_rows
 from .dedup import _SH_SQL, _SIG_SQL, _shingle_sets, minhash_signatures
 
 # ---------------------------------------------------------------------------
@@ -1351,7 +1351,8 @@ def q135_zorder_fileskip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     files = stats(lin, "linear").unionByName(stats(zo, "zorder"))
 
-    preds = spark.createDataFrame(
+    preds = local_rows(
+        spark,
         [("x_range", 40, 79, None, None),
          ("y_range", None, None, 64, 127),
          ("xy_box", 40, 79, 64, 127)],

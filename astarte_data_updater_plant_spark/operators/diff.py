@@ -21,14 +21,6 @@ from ..sources.tables import load_table
 _SPLIT = "TIMESTAMP '2024-01-16 00:00:00'"
 
 
-def _halves(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    ev = load_table(spark, sf_dir, "events")
-    split = F.lit("2024-01-16 00:00:00").cast("timestamp")
-    old = ev.filter(F.col("ts") < split).select("user_id", "event_type").distinct()
-    new = ev.filter(F.col("ts") >= split).select("user_id", "event_type").distinct()
-    return old, new
-
-
 @register(
     "q20_introspection_diff",
     f"""

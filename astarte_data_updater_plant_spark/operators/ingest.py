@@ -55,7 +55,7 @@ from ..functions.timeutil import ts_micros
 from ..plans.registry import register
 from ..storage.scratch import scratch_dir
 from ..sources.stream import events_as_messages, telemetry_interface
-from ..sources.tables import load_table
+from ..sources.tables import load_table, local_rows
 from ..streaming.pipeline import (
     datastream_table,
     device_snapshots_table,
@@ -141,8 +141,11 @@ def _time_sliced_files(df, ts_col: str, n_slices: int = 4, prefix: str = "slices
     recompute the upstream plan once per slice. The bounds and the
     write share one evaluation of df: it is cached for the two actions,
     which would otherwise each run its plan (over events_as_messages,
-    the BSON encoding of every event)."""
-    df = df.persist()
+    the BSON encoding of every event). A df the caller already cached
+    keeps its cache."""
+    owned = not df.is_cached
+    if owned:
+        df = df.persist()
     try:
         lo, hi = df.agg(F.min(ts_col), F.max(ts_col)).first()
         span = (hi - lo).total_seconds() + 1.0
@@ -162,7 +165,8 @@ def _time_sliced_files(df, ts_col: str, n_slices: int = 4, prefix: str = "slices
             .parquet(stage_dir)
         )
     finally:
-        df.unpersist()
+        if owned:
+            df.unpersist()
     moves = []
     for i in range(n_slices):
         parts = glob.glob(os.path.join(stage_dir, f"slice={i}", "part-*.parquet"))
@@ -1646,25 +1650,23 @@ def s92_dim_refresh_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     types = [r["event_type"] for r in ev.select("event_type").distinct().collect()]
 
     def write_dim(version: int) -> None:
-        spark.createDataFrame(
+        local_rows(
+            spark,
             [(t, f"{t}#v{version}") for t in sorted(types)],
             "event_type string, label string",
         ).coalesce(1).write.mode("overwrite").parquet(dim_dir)
 
     write_dim(1)
-    out_rows: list = []
+    out_dir = scratch_dir(prefix="s92_out_")
 
     def sink(batch, epoch_id: int) -> None:
         # re-read the CURRENT dim snapshot — the per-batch refresh that
         # subsumes the reference's cache TTL — then publish the next
         # version for the following batch
         dim = spark.read.parquet(dim_dir)
-        rows = (
-            batch.join(F.broadcast(dim), "event_type")
-            .select("event_id", "label")
-            .collect()
-        )
-        out_rows.extend((int(r["event_id"]), r["label"]) for r in rows)
+        batch.join(F.broadcast(dim), "event_type").select("event_id", "label").write.mode(
+            "append"
+        ).parquet(out_dir)
         write_dim(int(epoch_id) + 2)
 
     with _shuffle_width(spark):
@@ -1676,9 +1678,7 @@ def s92_dim_refresh_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         _await_stream(q)
-    return spark.createDataFrame(
-        sorted(out_rows), "event_id long, label string"
-    ).orderBy("event_id")
+    return spark.read.schema("event_id long, label string").parquet(out_dir).orderBy("event_id")
 
 
 # ---------------------------------------------------------------------------

@@ -30,7 +30,7 @@ from ..functions.ranks import with_global_order
 from ..functions.vectors import cosine, cosine_with_norms, dot, norm, to_double_array
 from ..plans.fragments import fragment
 from ..plans.registry import register
-from ..sources.tables import load_table
+from ..sources.tables import load_table, local_rows
 from .ann import _bucket_col, _bucket_sql
 
 N_CENTROIDS = 16
@@ -251,7 +251,8 @@ def kmeans_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
         .collect()
     )
     seed_rows.sort(key=lambda r: (r["hk"], r["vec_id"]))
-    cents = spark.createDataFrame(
+    cents = local_rows(
+        spark,
         [(i + 1, list(r["v"])) for i, r in enumerate(seed_rows)],
         "centroid_id int, cv array<double>",
     )
@@ -286,7 +287,8 @@ def kmeans_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .collect()
         )
-        cents = spark.createDataFrame(
+        cents = local_rows(
+            spark,
             [(r["centroid_id"], r["cv"]) for r in rows],
             "centroid_id int, cv array<double>",
         )
@@ -929,7 +931,8 @@ def q185_prototype_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .collect()
     )
-    protos = spark.createDataFrame(
+    protos = local_rows(
+        spark,
         [(int(r["label"]), list(r["pv"])) for r in rows],
         "proto_label int, pv array<double>",
     )

@@ -18,10 +18,12 @@ ingest layer.
 from __future__ import annotations
 
 import hashlib
+import sys
 from typing import Iterator
 
 import pandas as pd
 
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -439,14 +441,7 @@ def q106_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # keep the by-value shipping invariant for mapInPandas closures
-try:
-    import sys as _sys
-
-    from pyspark import cloudpickle as _cp
-
-    _cp.register_pickle_by_value(_sys.modules[__name__])
-except Exception:  # pragma: no cover
-    pass
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 
 # ---------------------------------------------------------------------------

@@ -21,7 +21,7 @@ from ..functions.ranks import with_global_order
 from ..functions.vectors import cosine_with_norms, norm, to_double_array
 from ..plans.fragments import fragment
 from ..plans.registry import register
-from ..sources.tables import load_table
+from ..sources.tables import load_table, local_rows
 
 TOP_K = 5
 QUERY_STRIDE = 100  # vec_id % stride == 0 -> query vector
@@ -453,7 +453,7 @@ def q145_roc_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("excl") + 1).alias("rank_min"),
         (F.col("excl") + F.col("cnt")).alias("rank_max"),
     )
-    tasks = spark.createDataFrame([(t,) for t in AUC_TASKS], "pos_min int")
+    tasks = local_rows(spark, [(t,) for t in AUC_TASKS], "pos_min int")
     pos = F.col("label") >= F.col("pos_min")
     n_pos = F.sum(F.when(pos, F.col("lcnt")).otherwise(0))
     n_neg = F.sum(F.when(~pos, F.col("lcnt")).otherwise(0))
@@ -720,8 +720,8 @@ def q168_logreg_gd(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("n_correct"),
         F.count(F.lit(1)).cast("long").alias("n_rows"),
     )
-    dims = spark.createDataFrame(
-        list(enumerate(w)), "dim bigint, w_raw double"
+    dims = local_rows(
+        spark, list(enumerate(w)), "dim bigint, w_raw double"
     )
     return (
         dims.crossJoin(F.broadcast(loss))

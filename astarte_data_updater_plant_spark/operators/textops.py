@@ -26,7 +26,7 @@ from ..functions.text import (
     tokens,
 )
 from ..plans.registry import register
-from ..sources.tables import load_table
+from ..sources.tables import load_table, local_rows
 
 _STOP_SQL = ", ".join(f"'{w}'" for w in STOPWORDS)
 
@@ -1163,7 +1163,7 @@ def q140_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     dfreq = tf.withColumn("df", F.count(F.lit(1)).over(Window.partitionBy("term")))
-    queries = spark.createDataFrame(BM25_QUERIES, "query string, term string")
+    queries = local_rows(spark, BM25_QUERIES, "query string, term string")
     contrib = (
         dfreq.join(F.broadcast(queries), "term")
         .join(dl, "doc_id")  # corpus-cardinality: keyed equi-join, never broadcast
@@ -1293,8 +1293,8 @@ def q161_retrieval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_terms_map = {}
     for q, _t in BM25_QUERIES:
         n_terms_map[q] = n_terms_map.get(q, 0) + 1
-    qterms = spark.createDataFrame(
-        sorted(n_terms_map.items()), "query string, n_terms int"
+    qterms = local_rows(
+        spark, sorted(n_terms_map.items()), "query string, n_terms int"
     )
     retrieved = q140_bm25_topk(spark, sf_dir).withColumn(
         "rnk",
@@ -1324,8 +1324,8 @@ def q161_retrieval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("term").isin(_BM25_TERMS))
         .distinct()
     )
-    qt_pairs = spark.createDataFrame(
-        sorted(set(BM25_QUERIES)), "query string, term string"
+    qt_pairs = local_rows(
+        spark, sorted(set(BM25_QUERIES)), "query string, term string"
     )
     rel_corpus = (
         tf.join(F.broadcast(qt_pairs), "term")
@@ -1779,8 +1779,8 @@ def q189_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_terms_map = {}
     for q, _t in BM25_QUERIES:
         n_terms_map[q] = n_terms_map.get(q, 0) + 1
-    qterms = spark.createDataFrame(
-        sorted(n_terms_map.items()), "query string, n_terms int"
+    qterms = local_rows(
+        spark, sorted(n_terms_map.items()), "query string, n_terms int"
     )
     retrieved = q140_bm25_topk(spark, sf_dir).withColumn(
         "rnk",

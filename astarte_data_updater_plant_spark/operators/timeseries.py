@@ -26,6 +26,9 @@ arithmetic, so bits match the DuckDB oracle exactly.
 
 from __future__ import annotations
 
+import sys
+
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -477,14 +480,7 @@ def q99_asof_cogroup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # keep the by-value shipping invariant for applyInPandas closures: the
 # driver process may not have this package on the executors' PYTHONPATH
-try:
-    import sys as _sys
-
-    from pyspark import cloudpickle as _cp
-
-    _cp.register_pickle_by_value(_sys.modules[__name__])
-except Exception:  # pragma: no cover
-    pass
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 
 #: retention tiers: rows older than this cutoff (fraction of the data

@@ -21,7 +21,7 @@ from pyspark.sql.types import (
 
 from ..functions.matchers import value_match_any_op
 from ..plans.registry import register
-from ..sources.tables import load_table
+from ..sources.tables import load_table, local_rows
 
 #: Demo trigger dimension (shape of the simple_triggers fixture rows,
 #: database_test_helper.exs:427-594): id, interface filter ('*' = any),
@@ -50,7 +50,7 @@ _TRIGGER_VALUES_SQL = ", ".join(
 
 
 def trigger_dim(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(TRIGGER_ROWS, TRIGGER_SCHEMA)
+    return local_rows(spark, TRIGGER_ROWS, TRIGGER_SCHEMA)
 
 
 @register(

@@ -10,14 +10,18 @@ typed storage) can be exercised and oracle-checked on shared data.
 
 from __future__ import annotations
 
+import sys
 from typing import Iterator
 
 import pandas as pd
 
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import Aggregation, Interface, InterfaceType, Mapping, Ownership
+from ..functions import payloads
+from ..streaming import wire
 from ..types import ValueType
 from .tables import load_table
 
@@ -219,18 +223,8 @@ def rpc_trigger_messages(
 
 # self-ship for the mapInPandas closures (wire + its payloads import
 # ride along: rpc_trigger_messages round-trips the codec worker-side)
-try:
-    import sys as _sys
-
-    from pyspark import cloudpickle as _cp
-
-    from ..functions import payloads as _payloads_mod_ship
-    from ..streaming import wire as _wire_mod_ship
-
-    for _m_ship in (_sys.modules[__name__], _wire_mod_ship, _payloads_mod_ship):
-        _cp.register_pickle_by_value(_m_ship)
-except Exception:  # pragma: no cover
-    pass
+for _m in (sys.modules[__name__], wire, payloads):
+    cloudpickle.register_pickle_by_value(_m)
 
 
 OBJECT_INTERFACE = "com.iot.ObjectTelemetry"

@@ -8,10 +8,21 @@ pushdown, column pruning and partition pruning for free.
 
 from __future__ import annotations
 
+import math
 import os
+from collections.abc import Iterable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    BooleanType,
+    DataType,
+    DoubleType,
+    IntegralType,
+    StringType,
+    StructType,
+)
 
 from ..plans.fragments import memo
 
@@ -93,6 +104,84 @@ def _load_table_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFra
         if dtype == "timestamp_ntz":
             df = df.withColumn(col, F.col(col).cast("timestamp"))
     return df
+
+
+def local_rows(
+    spark: SparkSession, rows: Iterable[Sequence], schema: StructType | str
+) -> DataFrame:
+    """``spark.createDataFrame(rows, schema)`` for bounded driver-side
+    literal rows, planned as a JVM ``LocalTableScan``.
+
+    ``createDataFrame`` plans a list of tuples as ``Scan ExistingRDD``
+    whose rows are unpickled in Python workers: a handful of trigger or
+    retention rows cost a Python round trip per query (probe: a first
+    ``collect()`` of one row took 1.41 s over 4 Python tasks, the same
+    row as ``VALUES`` 0.17 s). Here the rows are rendered as one SQL
+    ``VALUES`` list, which Catalyst folds into a ``LocalRelation``, and
+    one cast to ``schema`` gives the frame exactly the declared names,
+    types and nullability (``VALUES`` alone infers nullability from the
+    data). A null in a non-nullable field fails that cast at analysis,
+    as ``createDataFrame`` fails its verification.
+
+    Cells may be None, strings, booleans, integers, finite doubles, or
+    arrays of numbers. A numeric array travels as one delimited string
+    split and cast in the JVM, not one literal per element: a 100 x 64
+    ``array<double>`` codebook built in 1.94 s as element literals and
+    in 0.13 s this way (4 vCPUs)."""
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    fields = schema.fields
+    rows = [tuple(r) for r in rows]
+    for r in rows:
+        if len(r) != len(fields):
+            raise ValueError(f"row {r!r} does not match {schema.simpleString()}")
+    # VALUES needs one row; an empty frame limits a row of zeros away
+    body = rows or [tuple(_zero(f.dataType) for f in fields)]
+    values = ", ".join(
+        "(" + ", ".join(_sql_cell(v, f.dataType) for v, f in zip(r, fields)) + ")" for r in body
+    )
+    rel = spark.sql(f"SELECT struct(*) AS r FROM VALUES {values}" + ("" if rows else " LIMIT 0"))
+    return rel.select(F.col("r").cast(schema).alias("r")).select("r.*")
+
+
+def _zero(dtype: DataType):
+    if isinstance(dtype, ArrayType):
+        return []
+    if isinstance(dtype, StringType):
+        return ""
+    return False if isinstance(dtype, BooleanType) else 0
+
+
+def _sql_cell(value, dtype: DataType) -> str:
+    """One cell as a SQL literal whose type casts to ``dtype`` without
+    becoming nullable."""
+    if value is None:
+        return "NULL"
+    if isinstance(dtype, ArrayType):
+        if len(value) == 0:
+            return "array()"
+        text = ",".join(_number_text(x, dtype.elementType) for x in value)
+        return f"split('{text}', ',')"
+    if isinstance(dtype, StringType):
+        # hex, so no quote, backslash or escape setting can alter it
+        return f"CAST(X'{value.encode().hex()}' AS STRING)"
+    if isinstance(dtype, BooleanType):
+        return "TRUE" if value else "FALSE"
+    if isinstance(dtype, IntegralType):
+        return str(int(value))
+    if isinstance(dtype, DoubleType) and math.isfinite(value):
+        return repr(float(value)).upper() + "D"
+    raise TypeError(f"local_rows has no literal for {value!r} as {dtype.simpleString()}")
+
+
+def _number_text(x, dtype: DataType) -> str:
+    if x is None:
+        raise ValueError("local_rows arrays carry no null elements")
+    if isinstance(dtype, IntegralType):
+        return str(int(x))
+    if isinstance(dtype, DoubleType):
+        return repr(float(x))
+    raise TypeError(f"local_rows has no array literal for {dtype.simpleString()}")
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

@@ -217,6 +217,37 @@ def test_time_sliced_files_evaluates_its_input_once(spark):
     assert spark.read.parquet(src).count() == n
 
 
+def test_time_sliced_files_keeps_a_callers_cache(spark):
+    """An input the caller persisted stays cached across slicings, so
+    bench.py's stream family, which slices its messages into 4 and
+    then 8 files after counting them, encodes every event once."""
+    from astarte_data_updater_plant_spark.operators.ingest import _time_sliced_files
+
+    evaluated = spark.sparkContext.accumulator(0)
+
+    def counted(batches):
+        for pdf in batches:
+            evaluated.add(len(pdf))
+            yield pdf
+
+    n = 200
+    df = (
+        spark.range(n)
+        .selectExpr("id", "timestamp_seconds(id) AS ts")
+        .mapInPandas(counted, "id long, ts timestamp")
+        .persist()
+    )
+    try:
+        assert df.count() == n
+        for slices in (4, 8):
+            src = _time_sliced_files(df, "ts", n_slices=slices, prefix="test_callers_cache_")
+            assert spark.read.parquet(src).count() == n
+        assert df.is_cached
+        assert evaluated.value == n
+    finally:
+        df.unpersist()
+
+
 def test_stamp_ordered_rejects_out_of_range_idx(tmp_path):
     """The mtime-stamp invariant (strictly in the past) inverts for
     idx >= 1024; the guard must fail loudly instead of reordering

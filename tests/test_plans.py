@@ -669,3 +669,186 @@ def test_bench_scripts_share_one_measurement_harness():
                         hits[name].append(owner)
     for name, owners in hits.items():
         assert owners and all(o.startswith("harness.py:") for o in owners), f"{name}: {owners}"
+
+
+#: ``createDataFrame`` calls the package may keep, each with its reason.
+#: Every other driver-side literal table goes through
+#: ``sources.tables.local_rows``, which plans as a JVM LocalTableScan;
+#: ``createDataFrame`` plans as ``Scan ExistingRDD`` and unpickles its
+#: rows in Python workers. No call needs the exemption today: s92's
+#: per-batch output, the one frame whose rows grow with the data, is
+#: appended to parquet by its sink and read back.
+CREATE_DATAFRAME_ALLOWLIST: dict[str, str] = {}
+
+
+def test_literal_tables_go_through_local_rows():
+    """An AST scan of the package: ``createDataFrame`` is called nowhere
+    outside ``CREATE_DATAFRAME_ALLOWLIST`` (keys ``path:function``)."""
+    import ast
+    import pathlib
+
+    import astarte_data_updater_plant_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    hits = []
+    for path in sorted(root.rglob("*.py")):
+        for top in ast.parse(path.read_text()).body:
+            owner = f"{path.relative_to(root)}:{getattr(top, 'name', top.lineno)}"
+            for node in ast.walk(top):
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "createDataFrame"
+                    and owner not in CREATE_DATAFRAME_ALLOWLIST
+                ):
+                    hits.append(f"{owner} line {node.lineno}")
+    assert not hits, hits
+
+
+def test_iot_queries_run_no_python(spark, qs):
+    """The 16 IoT read queries of the benchmark's ``iot_queries``
+    workload: their executed plans hold no Python stage and no RDD
+    scan, because their literal dimensions (triggers, targets,
+    retention, kv_store) are LocalTableScans."""
+    from perfbench.workloads import IOT_QUERY_RE
+
+    from astarte_data_updater_plant_spark.plans.fragments import clear_memos
+
+    clear_memos()
+    names = sorted(n for n in qs if IOT_QUERY_RE.match(n))
+    assert len(names) == 16, names
+    found = {}
+    for name in names:
+        df = qs[name](spark, SF_DIR)
+        df.collect()
+        plan = formatted_plan(df)
+        assert "isFinalPlan=true" in plan or "AdaptiveSparkPlan" not in plan, name
+        bad = [op for op in ("ExistingRDD", "BatchEvalPython", "ArrowEvalPython") if op in plan]
+        if bad:
+            found[name] = bad
+    assert not found, found
+
+
+def _self_pair_bands(spark):
+    from pyspark.sql import functions as F
+
+    return spark.range(200).select(
+        F.col("id").alias("doc_id"),
+        F.lit(0).alias("band"),
+        F.when(F.col("id") < 100, F.lit("HOT")).otherwise(F.col("id").cast("string")).alias("bkey"),
+    )
+
+
+def _build_site(spark, site, tmp_path):
+    from astarte_data_updater_plant_spark import catalog
+    from astarte_data_updater_plant_spark.functions import skew
+    from astarte_data_updater_plant_spark.operators import controlplane, ivf, triggers
+    from astarte_data_updater_plant_spark.plans.registry import queries_map
+
+    builders = {
+        "triggers:trigger_dim": lambda: triggers.trigger_dim(spark),
+        "controlplane:target_dim": lambda: controlplane.target_dim(spark),
+        "controlplane:kv_store_dim": lambda: controlplane.kv_store_dim(spark),
+        "controlplane:retention_dim": lambda: controlplane.retention_dim(spark),
+        "ivf:kmeans_centroids": lambda: ivf.kmeans_centroids(spark, SF_DIR),
+        "skew:guarded_self_pairs": lambda: skew.guarded_self_pairs(
+            _self_pair_bands(spark), ["band", "bkey"], "doc_id", cap=16
+        ),
+        "catalog:write_catalog": lambda: catalog.write_catalog(
+            spark, catalog.fixture_interfaces(), str(tmp_path)
+        ),
+    }
+    if site in builders:
+        builders[site]()
+    else:
+        queries_map()[site](spark, SF_DIR)
+
+
+#: every routed site, by the builder that reaches it, with the number
+#: of ``local_rows`` calls that builder makes at least
+LOCAL_ROWS_SITES = {
+    "triggers:trigger_dim": 1,
+    "controlplane:target_dim": 1,
+    "controlplane:kv_store_dim": 1,
+    "controlplane:retention_dim": 1,
+    "q140_bm25_topk": 1,
+    "q161_retrieval_metrics": 3,
+    "q189_hard_negatives": 2,
+    "q145_roc_auc": 1,
+    "q168_logreg_gd": 1,
+    "q135_zorder_fileskip": 1,
+    "ivf:kmeans_centroids": 2,
+    "q185_prototype_classifier": 1,
+    "skew:guarded_self_pairs": 1,
+    "catalog:write_catalog": 2,
+    "s92_dim_refresh_join": 2,
+}
+
+
+@pytest.mark.parametrize("site", sorted(LOCAL_ROWS_SITES))
+def test_local_rows_sites_keep_the_create_dataframe_schema(spark, site, monkeypatch, tmp_path):
+    """Each routed site's frame has exactly the schema (names, types,
+    nullability) ``createDataFrame`` gave the same rows and schema."""
+    import importlib
+
+    from astarte_data_updater_plant_spark.plans.fragments import clear_memos
+    from astarte_data_updater_plant_spark.sources.tables import local_rows
+
+    calls = []
+
+    def spy(spark_, rows, schema):
+        rows = list(rows)
+        df = local_rows(spark_, rows, schema)
+        calls.append((rows, schema, df))
+        return df
+
+    for mod in ("catalog", "functions.skew", "operators.controlplane", "operators.corpus",
+                "operators.ingest", "operators.ivf", "operators.similarity",
+                "operators.textops", "operators.triggers"):
+        module = importlib.import_module(f"astarte_data_updater_plant_spark.{mod}")
+        monkeypatch.setattr(module, "local_rows", spy)
+    clear_memos()
+    _build_site(spark, site, tmp_path)
+    assert len(calls) >= LOCAL_ROWS_SITES[site], len(calls)
+    for rows, schema, df in calls:
+        assert df.schema == spark.createDataFrame(rows, schema).schema, schema
+
+
+def test_local_rows_matches_create_dataframe_on_edge_cells(spark):
+    """Nulls, quotes, backslashes, non-ASCII text, negative zero, tiny
+    and huge doubles, empty and non-finite array cells and an empty row
+    list: the same rows and schema as ``createDataFrame``, in ANSI and
+    legacy cast mode, planned as one LocalTableScan."""
+    from pyspark.sql.types import (
+        ArrayType, BooleanType, DoubleType, LongType, StringType, StructField, StructType,
+    )
+
+    from astarte_data_updater_plant_spark.sources.tables import local_rows
+
+    rows = [
+        ("it's a \\ path", 2**40, -0.0, [0.1, float("nan"), float("-inf")], True),
+        ("ünï 'q' \\n", None, 1e-300, [], None),
+        ("", -3, 1.7976931348623157e308, None, False),
+    ]
+    schema = StructType([
+        StructField("s", StringType(), False),
+        StructField("n", LongType(), True),
+        StructField("x", DoubleType(), False),
+        StructField("v", ArrayType(DoubleType()), True),
+        StructField("b", BooleanType(), True),
+    ])
+    ddl = "s string, n bigint, x double, v array<double>, b boolean"
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    try:
+        for ansi in ("true", "false"):
+            spark.conf.set("spark.sql.ansi.enabled", ansi)
+            for sch in (schema, ddl):
+                for body in (rows, []):
+                    got = local_rows(spark, body, sch)
+                    exp = spark.createDataFrame(body, sch)
+                    assert got.schema == exp.schema, (ansi, sch)
+                    assert repr(got.collect()) == repr(exp.collect()), (ansi, sch)
+                    plan = formatted_plan(got)
+                    assert count_op(plan, "LocalTableScan") == 1, plan
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
