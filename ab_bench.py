@@ -36,6 +36,12 @@ cycle, the first run of that code in the JVM, then warm ones, with the
 Spark jobs of each step and the parquet files the sink and maintenance
 wrote. A sink or storage layout change is A/B'd with it as two trees.
 
+The ``cold_start`` probe is one cold set-up per fresh process, timed
+from process start to a session and a loaded registry, the way
+perfbench's ``setup_s`` is, and records whether the driver JVM started
+from a class-data-sharing archive. An arm whose engine builds that
+archive at exit builds it in its first probe; its later probes map it.
+
 The probes run ``harness.py``'s family code (batch ingest, the corpus
 q47 run, the cold or warm per-query run), loaded by path from this
 file's directory, against the arm's engine: each probe process puts
@@ -51,22 +57,25 @@ with and without its verify pin), check out a copy whose
 
 Usage:
   python ab_bench.py <labelA>=<treeA> <labelB>=<treeB> [reps] [out.json] [probes]
-    probes: comma list from {main, corpus, heavy, rank, ingest_cycle};
-    default main
+    probes: comma list from {main, corpus, heavy, rank, ingest_cycle,
+    cold_start}; default main
   python ab_bench.py --probe <tree> [kind]   # internal, one subprocess
 """
 
 from __future__ import annotations
 
-import importlib.util
-import json
-import os
-import shutil
-import statistics
-import subprocess
-import sys
-import tempfile
 import time
+
+PROCESS_START = time.perf_counter()
+
+import importlib.util  # noqa: E402
+import json  # noqa: E402
+import os  # noqa: E402
+import shutil  # noqa: E402
+import statistics  # noqa: E402
+import subprocess  # noqa: E402
+import sys  # noqa: E402
+import tempfile  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -195,6 +204,29 @@ def probe_ingest_cycle(spark) -> dict:
     }
 
 
+def probe_cold_start(spark) -> dict:
+    """One cold set-up as perfbench's ``setup_s`` times it: from this
+    process's start, through engine import and ``get_spark`` (run just
+    before this), to a loaded registry (``queries_map``); with whether
+    the driver JVM started from a start-up archive. ``reps`` fresh
+    processes per arm, alternating arms, give the A/B without
+    perfbench."""
+    from astarte_data_updater_plant_spark.plans.registry import queries_map
+
+    start_s = time.perf_counter() - PROCESS_START
+    t = time.perf_counter()
+    queries_map()
+    load_s = time.perf_counter() - t
+    return {
+        "cold_start": {
+            "setup_s": round(start_s + load_s, 3),
+            "session_start_s": round(start_s, 3),
+            "registry_load_s": round(load_s, 3),
+            "archive_mapped": int(harness.startup_archive(spark) is not None),
+        }
+    }
+
+
 def run_probe(tree: str, kind: str) -> None:
     """One probe in this process: ``tree``'s engine and session, this
     file's harness; prints the probe's record as a PROBE_JSON line."""
@@ -246,6 +278,14 @@ PROBES = {
                 "fold_s", "sink_s", "maintenance_s",
                 "sink_jobs", "maintenance_jobs", "sink_files", "maintenance_files",
             )
+        ),
+    ),
+    "cold_start": (
+        probe_cold_start,
+        (
+            ("cold_setup_s", "cold_start", "setup_s"),
+            ("cold_session_start_s", "cold_start", "session_start_s"),
+            ("cold_archive_mapped", "cold_start", "archive_mapped"),
         ),
     ),
     "rank": (

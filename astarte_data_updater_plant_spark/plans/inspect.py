@@ -17,6 +17,7 @@ Usage:
 
 from __future__ import annotations
 
+import os
 import re
 
 from pyspark.sql import DataFrame
@@ -152,10 +153,18 @@ def plan_summary(df: DataFrame) -> dict:
     }
 
 
+#: the parallelism ``PLANS.md`` is generated under, whatever the box:
+#: shuffle widths follow ``SPARK_GRAFT_CPUS``, and a snapshot taken on a
+#: box with another core count would differ in every exchange
+SNAPSHOT_CPUS = "4"
+
+
 def _main(argv: list[str]) -> None:
     from ..session import get_spark
     from .registry import queries_map
 
+    if argv and argv[0] == "--all":
+        os.environ["SPARK_GRAFT_CPUS"] = SNAPSHOT_CPUS
     spark = get_spark()
     sf_dir = "/root/testdata/sf0.001"
     qs = queries_map()
@@ -171,7 +180,9 @@ def _main(argv: list[str]) -> None:
             "Per-query scale profile — shuffle count, join strategy, "
             "pushdown reach, Python stages — then full formatted plans "
             "for the benchmark headline set. Regenerate with\n"
-            "`python -m astarte_data_updater_plant_spark.plans.inspect --all`.\n\n",
+            "`python -m astarte_data_updater_plant_spark.plans.inspect --all`, "
+            f"which plans at {SNAPSHOT_CPUS} cores on any box and drops expression "
+            "and exchange ids, so a regeneration diffs only where a plan changed.\n\n",
             "| query | exchanges | bcast joins | shuffle joins | nl joins "
             "| pushed filters | scans | python stages |\n|---|---|---|---|---|---|---|---|\n",
         ]
@@ -189,7 +200,12 @@ def _main(argv: list[str]) -> None:
             )
         for name in bench.HEADLINE:
             lines.append(f"\n## {name}\n")
-            lines.append("```\n" + formatted_plan(dfs[name]) + "\n```\n")
+            # expression ids (``col#123``) and exchange ids
+            # (``[plan_id=45]``) count up across everything the session
+            # planned before, so they say nothing about a plan
+            plan = re.sub(r"#\d+", "#", formatted_plan(dfs[name]))
+            plan = re.sub(r"plan_id=\d+", "plan_id", plan)
+            lines.append("```\n" + plan + "\n```\n")
         with open(out_path, "w") as f:
             f.writelines(lines)
         print(f"wrote {out_path}")

@@ -4,6 +4,8 @@
 - ``noop``: the one run of a frame into Spark's noop sink;
 - ``in_group``: the jobs one action ran, read through a fresh job group;
 - ``stages``: per-stage records of those jobs from the core status store;
+- ``startup_archive``: the class-data-sharing archive the driver JVM
+  started from, if any;
 - the family bodies the scripts time: ``batch_ingest`` (events ->
   messages -> ``run_batch``), ``corpus`` (q47's cold election over the
   documents table) and ``query_run`` (one declared query, cold or warm).
@@ -160,6 +162,17 @@ def stages(spark, job_ids: list[int]) -> list[dict]:
         })
     out.sort(key=lambda v: (-v["spill_bytes"], -v["write_recs_m"]))
     return out
+
+
+def startup_archive(spark) -> str | None:
+    """The class-data-sharing archive the driver JVM started from, read
+    from its ``/proc/<pid>/maps``; None when it mapped only the JDK's
+    own base archive."""
+    jvm = spark._jvm.java.lang
+    java_home = jvm.System.getProperty("java.home")
+    with open(f"/proc/{jvm.ProcessHandle.current().pid()}/maps") as fh:
+        paths = {line.split()[-1] for line in fh if line.rstrip().endswith(".jsa")}
+    return next((p for p in sorted(paths) if not p.startswith(java_home + "/")), None)
 
 
 def query_run(spark, sf_dir: str, name: str, *, cold: bool = False):
