@@ -22,7 +22,7 @@ from enum import Enum
 from pyspark.sql import types as T
 
 from .sources.tables import local_rows
-from .types import TYPED_COLUMNS, ValueType, spark_type
+from .types import ValueType
 
 
 class InterfaceType(str, Enum):
@@ -158,59 +158,6 @@ def object_column_name(endpoint: str) -> str:
     leaf, lowercased, prefixed v_ (queries.ex:199-297 assembly;
     fixture columns v_string/v_value database_test_helper.exs:243-254)."""
     return "v_" + endpoint.rsplit("/", 1)[-1].lower()
-
-
-# ---------------------------------------------------------------------------
-# StructType derivation — one per storage layout (SURVEY §1.1)
-# ---------------------------------------------------------------------------
-
-_KEY_FIELDS = [
-    T.StructField("device_id", T.StringType(), False),
-    T.StructField("interface_id", T.StringType(), False),
-    T.StructField("endpoint_id", T.StringType(), False),
-    T.StructField("path", T.StringType(), False),
-]
-
-
-def individual_datastreams_schema() -> T.StructType:
-    """Append-only time series (database_test_helper.exs:214-241) plus
-    the engine's expires_at column for TTL emulation."""
-    fields = list(_KEY_FIELDS) + [
-        T.StructField("value_timestamp", T.TimestampType(), False),
-        T.StructField("reception_timestamp", T.TimestampType(), False),
-        T.StructField("reception_timestamp_submillis", T.ShortType(), True),
-    ]
-    fields += [T.StructField(c, t, True) for c, t in TYPED_COLUMNS]
-    fields.append(T.StructField("expires_at", T.TimestampType(), True))
-    return T.StructType(fields)
-
-
-def individual_properties_schema() -> T.StructType:
-    """Last-write-wins key/value store (database_test_helper.exs:186-212).
-    Also doubles as the datastream path registry (queries.ex:353-393)."""
-    fields = list(_KEY_FIELDS) + [
-        T.StructField("reception_timestamp", T.TimestampType(), False),
-        T.StructField("reception_timestamp_submillis", T.ShortType(), True),
-    ]
-    fields += [T.StructField(c, t, True) for c, t in TYPED_COLUMNS]
-    fields.append(T.StructField("expires_at", T.TimestampType(), True))
-    return T.StructType(fields)
-
-
-def object_table_schema(interface: Interface) -> T.StructType:
-    """Wide per-interface table: one typed column per endpoint leaf
-    (queries.ex:199-297; fixture database_test_helper.exs:243-254)."""
-    fields = [
-        T.StructField("device_id", T.StringType(), False),
-        T.StructField("path", T.StringType(), False),
-        T.StructField("reception_timestamp", T.TimestampType(), False),
-        T.StructField("reception_timestamp_submillis", T.ShortType(), True),
-    ]
-    for m in interface.mappings:
-        fields.append(
-            T.StructField(object_column_name(m.endpoint), spark_type(m.value_type), True)
-        )
-    return T.StructType(fields)
 
 
 # ---------------------------------------------------------------------------

@@ -32,7 +32,7 @@ from ..functions.matchers import value_match_any_op
 from ..functions.timeutil import ts_micros
 from ..plans.registry import register
 from ..sources.tables import load_table, local_rows
-from .triggers import _TRIGGER_VALUES_SQL, trigger_dim
+from .triggers import _MATCH_PRED_SQL, _TRIGGER_VALUES_SQL, trigger_dim
 
 #: Target dimension (trigger_id -> delivery target), the shape of the
 #: reference's per-trigger target lists (triggers_handler.ex:396-402).
@@ -59,20 +59,6 @@ _TARGET_VALUES_SQL = ", ".join(
     f"('{tid}', '{tt}', '{dest}')" for tid, tt, dest in TARGET_ROWS
 )
 
-_MATCH_PRED_SQL = """
-     AND CASE t.op
-           WHEN 'ANY' THEN TRUE
-           WHEN 'EQUAL_TO' THEN COALESCE(e.value = t.known_value, FALSE)
-           WHEN 'NOT_EQUAL_TO' THEN COALESCE(e.value <> t.known_value, FALSE)
-           WHEN 'GREATER_THAN' THEN COALESCE(e.value > t.known_value, FALSE)
-           WHEN 'GREATER_OR_EQUAL_TO' THEN COALESCE(e.value >= t.known_value, FALSE)
-           WHEN 'LESS_THAN' THEN COALESCE(e.value < t.known_value, FALSE)
-           WHEN 'LESS_OR_EQUAL_TO' THEN COALESCE(e.value <= t.known_value, FALSE)
-           ELSE FALSE
-         END
-"""
-
-
 def target_dim(spark: SparkSession) -> DataFrame:
     return local_rows(spark, TARGET_ROWS, TARGET_SCHEMA)
 
@@ -91,7 +77,7 @@ def target_dim(spark: SparkSession) -> DataFrame:
       FROM events e
       JOIN triggers t
         ON (t.t_event_type = e.event_type OR t.t_event_type = '*')
-       {_MATCH_PRED_SQL}
+       AND {_MATCH_PRED_SQL}
     )
     SELECT m.trigger_id, g.target_type, g.destination,
            COUNT(*) AS n_published,

@@ -48,6 +48,19 @@ _TRIGGER_VALUES_SQL = ", ".join(
     f"('{tid}', '{et}', '{op}', {kv})" for tid, et, op, kv in TRIGGER_ROWS
 )
 
+#: ``matchers.value_match_any_op`` in the oracles' SQL, over the event
+#: ``e`` and the trigger row ``t``
+_MATCH_PRED_SQL = """CASE t.op
+           WHEN 'ANY' THEN TRUE
+           WHEN 'EQUAL_TO' THEN COALESCE(e.value = t.known_value, FALSE)
+           WHEN 'NOT_EQUAL_TO' THEN COALESCE(e.value <> t.known_value, FALSE)
+           WHEN 'GREATER_THAN' THEN COALESCE(e.value > t.known_value, FALSE)
+           WHEN 'GREATER_OR_EQUAL_TO' THEN COALESCE(e.value >= t.known_value, FALSE)
+           WHEN 'LESS_THAN' THEN COALESCE(e.value < t.known_value, FALSE)
+           WHEN 'LESS_OR_EQUAL_TO' THEN COALESCE(e.value <= t.known_value, FALSE)
+           ELSE FALSE
+         END"""
+
 
 def trigger_dim(spark: SparkSession) -> DataFrame:
     return local_rows(spark, TRIGGER_ROWS, TRIGGER_SCHEMA)
@@ -63,16 +76,7 @@ def trigger_dim(spark: SparkSession) -> DataFrame:
     FROM events e
     JOIN triggers t
       ON (t.t_event_type = e.event_type OR t.t_event_type = '*')
-     AND CASE t.op
-           WHEN 'ANY' THEN TRUE
-           WHEN 'EQUAL_TO' THEN COALESCE(e.value = t.known_value, FALSE)
-           WHEN 'NOT_EQUAL_TO' THEN COALESCE(e.value <> t.known_value, FALSE)
-           WHEN 'GREATER_THAN' THEN COALESCE(e.value > t.known_value, FALSE)
-           WHEN 'GREATER_OR_EQUAL_TO' THEN COALESCE(e.value >= t.known_value, FALSE)
-           WHEN 'LESS_THAN' THEN COALESCE(e.value < t.known_value, FALSE)
-           WHEN 'LESS_OR_EQUAL_TO' THEN COALESCE(e.value <= t.known_value, FALSE)
-           ELSE FALSE
-         END
+     AND {_MATCH_PRED_SQL}
     ORDER BY trigger_id, event_id
     """,
     doc="incoming_data trigger evaluation (impl.ex:1431-1469 + "
@@ -102,16 +106,7 @@ def q23_trigger_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM triggers t
     LEFT JOIN events e
       ON (t.t_event_type = e.event_type OR t.t_event_type = '*')
-     AND CASE t.op
-           WHEN 'GREATER_THAN' THEN COALESCE(e.value > t.known_value, FALSE)
-           WHEN 'GREATER_OR_EQUAL_TO' THEN COALESCE(e.value >= t.known_value, FALSE)
-           WHEN 'LESS_THAN' THEN COALESCE(e.value < t.known_value, FALSE)
-           WHEN 'LESS_OR_EQUAL_TO' THEN COALESCE(e.value <= t.known_value, FALSE)
-           WHEN 'NOT_EQUAL_TO' THEN COALESCE(e.value <> t.known_value, FALSE)
-           WHEN 'EQUAL_TO' THEN COALESCE(e.value = t.known_value, FALSE)
-           WHEN 'ANY' THEN TRUE
-           ELSE FALSE
-         END
+     AND {_MATCH_PRED_SQL}
     GROUP BY t.trigger_id
     ORDER BY t.trigger_id
     """,

@@ -10,6 +10,7 @@ typed storage) can be exercised and oracle-checked on shared data.
 
 from __future__ import annotations
 
+import json
 import sys
 from typing import Iterator
 
@@ -46,32 +47,46 @@ def telemetry_interface() -> Interface:
     )
 
 
-def events_as_messages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events -> message_stream rows (MESSAGE_SCHEMA).
+def _event_messages(
+    spark: SparkSession,
+    sf_dir: str,
+    ids: tuple[str, str],
+    interface: str,
+    introspection: bytes,
+    path_of,
+    value_of,
+) -> DataFrame:
+    """events -> message_stream rows (MESSAGE_SCHEMA) for ``interface``.
 
-    Data messages carry real BSON payloads built in an Arrow-batched
-    mapInPandas stage; one introspection message per device precedes
-    its data (reception = min(ts) - 1s). Both branches stay
-    partition-parallel; the only shuffle is the introspection groupBy
-    on device.
+    Data messages, ids ``ids[0] + event_id``, sit at
+    ``path_of(event_type)`` and carry real BSON ``{v: value_of(event_type,
+    value)}`` payloads built in an Arrow-batched mapInPandas stage; one
+    introspection message per device, id ``ids[1] + user_id``, announces
+    ``introspection`` before its data (reception = min(ts) - 1s). Both
+    branches stay partition-parallel; the only shuffle is the
+    introspection groupBy on device.
     """
     from ..functions.payloads import encode_document
     from ..streaming.pipeline import MESSAGE_SCHEMA
 
     ev = load_table(spark, sf_dir, "events")
+    data_id, intro_id = ids
 
     def to_msgs(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             yield pd.DataFrame(
                 {
-                    "message_id": pdf["event_id"].map(lambda i: f"ev-{i}"),
+                    "message_id": pdf["event_id"].map(lambda i: f"{data_id}{i}"),
                     "reception_timestamp": pdf["ts"],
                     "realm": TELEMETRY_REALM,
                     "device_id": pdf["user_id"].astype(str),
                     "msg_type": "data",
-                    "interface": TELEMETRY_INTERFACE,
-                    "path": pdf["event_type"].map(lambda t: f"/{t}/value"),
-                    "payload": pdf["value"].map(lambda v: encode_document({"v": float(v)})),
+                    "interface": interface,
+                    "path": pdf["event_type"].map(path_of),
+                    "payload": [
+                        encode_document({"v": value_of(t, v)})
+                        for t, v in zip(pdf["event_type"], pdf["value"])
+                    ],
                     "ip_address": None,
                 }
             )
@@ -83,18 +98,27 @@ def events_as_messages(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.groupBy("user_id")
         .agg(F.min("ts").alias("first_ts"))
         .select(
-            F.concat(F.lit("intro-"), F.col("user_id").cast("string")).alias("message_id"),
+            F.concat(F.lit(intro_id), F.col("user_id").cast("string")).alias("message_id"),
             (F.col("first_ts") - F.expr("INTERVAL 1 SECOND")).alias("reception_timestamp"),
             F.lit(TELEMETRY_REALM).alias("realm"),
             F.col("user_id").cast("string").alias("device_id"),
             F.lit("introspection").alias("msg_type"),
             F.lit(None).cast("string").alias("interface"),
             F.lit(None).cast("string").alias("path"),
-            F.lit(TELEMETRY_INTROSPECTION).alias("payload"),
+            F.lit(introspection).alias("payload"),
             F.lit(None).cast("string").alias("ip_address"),
         )
     )
     return data_msgs.unionByName(intro_msgs)
+
+
+def events_as_messages(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """events -> telemetry data messages: BSON {v: value} at
+    ``/<event_type>/value``."""
+    return _event_messages(
+        spark, sf_dir, ("ev-", "intro-"), TELEMETRY_INTERFACE, TELEMETRY_INTROSPECTION,
+        lambda t: f"/{t}/value", lambda t, v: float(v),
+    )
 
 
 def rpc_trigger_messages(
@@ -110,39 +134,34 @@ def rpc_trigger_messages(
     ``marks`` is one row per target device: (user_id, install_ts,
     delete_ts). For each device an InstallVolatileTrigger Call is
     protobuf-ENCODED and then DECODED with the same codec a real RPC
-    client would hit, and the state-machine message is built from the
-    DECODED fields only (realm/device/trigger id/spec) — so the wire
-    format is load-bearing, not decorative. Devices with
+    client would hit: ``wire.rpc_call_to_message`` builds the
+    state-machine message from the DECODED fields only (realm/device/
+    trigger id/spec), so the wire format is load-bearing, not
+    decorative. Devices with
     ``user_id % delete_mod == 0`` additionally get a
     DeleteVolatileTrigger at ``delete_ts``, also round-tripped.
     Message ids start with ``a-`` so at an equal reception timestamp
     the control message sorts (and is processed) before any ``ev-``
     data message — the deterministic install/fire boundary the oracle
     states as ``ts >= install_ts``."""
-    from ..streaming import wire as _wire
     from ..streaming.pipeline import MESSAGE_SCHEMA
 
+    def install(uid, dev: str, tag: str, spec: dict) -> bytes:
+        return wire.encode_install_volatile_trigger_call(
+            realm_name=TELEMETRY_REALM,
+            device_id=dev,
+            object_id=b"\x00" * 16,
+            object_type=2,
+            parent_id=wire.PARENT_TRIGGER_ID,
+            simple_trigger_id=wire.trigger_uuid(f"{tag}-{uid}"),
+            simple_trigger=json.dumps(spec).encode(),
+            trigger_target=b"amqp:vt",
+        )
+
     def to_msgs(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import json as _json
-        import uuid as _uuid
-
         for pdf in it:
-            out: dict[str, list] = {c.name: [] for c in MESSAGE_SCHEMA.fields}
-
-            def push(mid, ts, dev, mtype, payload):
-                out["message_id"].append(mid)
-                out["reception_timestamp"].append(ts)
-                out["realm"].append(TELEMETRY_REALM)
-                out["device_id"].append(dev)
-                out["msg_type"].append(mtype)
-                out["interface"].append(None)
-                out["path"].append(None)
-                out["payload"].append(payload)
-                out["ip_address"].append(None)
-
-            for uid, its, dts in zip(
-                pdf["user_id"], pdf["install_ts"], pdf["delete_ts"]
-            ):
+            rows = []
+            for uid, its, dts in zip(pdf["user_id"], pdf["install_ts"], pdf["delete_ts"]):
                 dev = str(uid)
                 spec = {
                     "interface": TELEMETRY_INTERFACE,
@@ -150,73 +169,30 @@ def rpc_trigger_messages(
                     "op": "GREATER_THAN",
                     "known_value": threshold,
                 }
-                buf = _wire.encode_install_volatile_trigger_call(
-                    realm_name=TELEMETRY_REALM,
-                    device_id=dev,
-                    object_id=b"\x00" * 16,
-                    object_type=2,
-                    parent_id=_wire.PARENT_TRIGGER_ID,
-                    simple_trigger_id=_wire.trigger_uuid(f"vt-{uid}"),
-                    simple_trigger=_json.dumps(spec).encode(),
-                    trigger_target=b"amqp:vt",
-                )
-                name, f = _wire.decode_call(buf)
-                assert name == "install_volatile_trigger"
-                tid = str(_uuid.UUID(bytes=f["simple_trigger_id"]))
-                payload_spec = _json.loads(f["simple_trigger"].decode())
-                payload_spec["trigger_id"] = tid
-                push(
-                    f"a-install-{uid}", its, f["device_id"],
-                    "install_volatile_trigger",
-                    _json.dumps(payload_spec).encode(),
-                )
+                rows.append(wire.rpc_call_to_message(
+                    install(uid, dev, "vt", spec),
+                    message_id=f"a-install-{uid}", timestamp=its,
+                ))
                 if object_iface_name is not None:
                     # negative path: a volatile DATA trigger aimed at an
                     # object-aggregated interface — the reference rejects
                     # these (impl.ex:976-980) and the engine must reply
                     # with an error on the wire, not install silently
-                    ospec = {
-                        "interface": object_iface_name,
-                        "path": "/kind",
-                        "op": "ANY",
-                    }
-                    obuf = _wire.encode_install_volatile_trigger_call(
-                        realm_name=TELEMETRY_REALM,
-                        device_id=dev,
-                        object_id=b"\x00" * 16,
-                        object_type=2,
-                        parent_id=_wire.PARENT_TRIGGER_ID,
-                        simple_trigger_id=_wire.trigger_uuid(f"vt-obj-{uid}"),
-                        simple_trigger=_json.dumps(ospec).encode(),
-                        trigger_target=b"amqp:vt",
-                    )
-                    oname, of = _wire.decode_call(obuf)
-                    assert oname == "install_volatile_trigger"
-                    opayload = _json.loads(of["simple_trigger"].decode())
-                    opayload["trigger_id"] = str(
-                        _uuid.UUID(bytes=of["simple_trigger_id"])
-                    )
-                    push(
-                        f"a-objinstall-{uid}", its, of["device_id"],
-                        "install_volatile_trigger",
-                        _json.dumps(opayload).encode(),
-                    )
+                    ospec = {"interface": object_iface_name, "path": "/kind", "op": "ANY"}
+                    rows.append(wire.rpc_call_to_message(
+                        install(uid, dev, "vt-obj", ospec),
+                        message_id=f"a-objinstall-{uid}", timestamp=its,
+                    ))
                 if int(uid) % delete_mod == 0:
-                    dbuf = _wire.encode_delete_volatile_trigger_call(
+                    dbuf = wire.encode_delete_volatile_trigger_call(
                         realm_name=TELEMETRY_REALM,
                         device_id=dev,
-                        trigger_id=_wire.trigger_uuid(f"vt-{uid}"),
+                        trigger_id=wire.trigger_uuid(f"vt-{uid}"),
                     )
-                    dname, df_ = _wire.decode_call(dbuf)
-                    assert dname == "delete_volatile_trigger"
-                    push(
-                        f"a-delete-{uid}", dts, df_["device_id"],
-                        "delete_volatile_trigger",
-                        _json.dumps(
-                            {"trigger_id": str(_uuid.UUID(bytes=df_["trigger_id"]))}
-                        ).encode(),
-                    )
-            yield pd.DataFrame(out)
+                    rows.append(wire.rpc_call_to_message(
+                        dbuf, message_id=f"a-delete-{uid}", timestamp=dts
+                    ))
+            yield pd.DataFrame(rows, columns=MESSAGE_SCHEMA.fieldNames())
 
     return marks.mapInPandas(to_msgs, schema=MESSAGE_SCHEMA)
 
@@ -254,46 +230,7 @@ def events_as_object_messages(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events -> object-aggregated data messages: BSON
     {v: {kind, reading}} at path '/' (one wide row per message,
     queries.ex:199-297)."""
-    from ..functions.payloads import encode_document
-    from ..streaming.pipeline import MESSAGE_SCHEMA
-
-    ev = load_table(spark, sf_dir, "events")
-
-    def to_msgs(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "message_id": pdf["event_id"].map(lambda i: f"ob-{i}"),
-                    "reception_timestamp": pdf["ts"],
-                    "realm": TELEMETRY_REALM,
-                    "device_id": pdf["user_id"].astype(str),
-                    "msg_type": "data",
-                    "interface": OBJECT_INTERFACE,
-                    "path": "/",
-                    "payload": [
-                        encode_document({"v": {"kind": k, "reading": float(v)}})
-                        for k, v in zip(pdf["event_type"], pdf["value"])
-                    ],
-                    "ip_address": None,
-                }
-            )
-
-    data_msgs = ev.select("event_id", "ts", "user_id", "event_type", "value").mapInPandas(
-        to_msgs, schema=MESSAGE_SCHEMA
+    return _event_messages(
+        spark, sf_dir, ("ob-", "ob-intro-"), OBJECT_INTERFACE, OBJECT_INTROSPECTION,
+        lambda t: "/", lambda t, v: {"kind": t, "reading": float(v)},
     )
-    intro_msgs = (
-        ev.groupBy("user_id")
-        .agg(F.min("ts").alias("first_ts"))
-        .select(
-            F.concat(F.lit("ob-intro-"), F.col("user_id").cast("string")).alias("message_id"),
-            (F.col("first_ts") - F.expr("INTERVAL 1 SECOND")).alias("reception_timestamp"),
-            F.lit(TELEMETRY_REALM).alias("realm"),
-            F.col("user_id").cast("string").alias("device_id"),
-            F.lit("introspection").alias("msg_type"),
-            F.lit(None).cast("string").alias("interface"),
-            F.lit(None).cast("string").alias("path"),
-            F.lit(OBJECT_INTROSPECTION).alias("payload"),
-            F.lit(None).cast("string").alias("ip_address"),
-        )
-    )
-    return data_msgs.unionByName(intro_msgs)

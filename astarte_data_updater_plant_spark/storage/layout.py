@@ -64,35 +64,37 @@ def device_bucket(device_id: Column, n_buckets: int = N_BUCKETS) -> Column:
 #: In-file order of the device tables: per-device slices are contiguous.
 DEVICE_ORDER = ("device_id", "interface", "path", "reception_timestamp")
 
+_S, _TS = T.StringType(), T.TimestampType()
+#: The key of a typed device row (database_test_helper.exs:186-241).
+_DEVICE_ROW_KEY = (
+    ("realm", _S), ("device_id", _S), ("interface_id", _S),
+    ("interface", _S), ("endpoint_id", _S), ("path", _S),
+)
+
 #: The two logs as ``append_device_log`` writes them for the sink,
 #: declared once so maintenance reads them without schema inference
 #: (which costs a footer job, and fails on a log that only ever got
-#: empty appends).
+#: empty appends). Both store the reference's typed row: every value
+#: in one of the 14 ``TYPED_COLUMNS``. The sink's producers
+#: (``streaming.pipeline.datastream_table``/``property_log``) select
+#: these fields, ``bucket`` aside, in this order.
 DATASTREAM_LOG_SCHEMA = T.StructType(
     [
-        T.StructField("realm", T.StringType(), True),
-        T.StructField("device_id", T.StringType(), True),
-        T.StructField("interface_id", T.StringType(), True),
-        T.StructField("interface", T.StringType(), True),
-        T.StructField("endpoint_id", T.StringType(), True),
-        T.StructField("path", T.StringType(), True),
-        T.StructField("value_timestamp", T.TimestampType(), True),
-        T.StructField("reception_timestamp", T.TimestampType(), True),
-        T.StructField("expires_at", T.TimestampType(), True),
-        *[T.StructField(c, t, True) for c, t in TYPED_COLUMNS],
-        T.StructField("bucket", T.IntegerType(), True),
+        T.StructField(c, t)
+        for c, t in (
+            *_DEVICE_ROW_KEY, ("value_timestamp", _TS),
+            ("reception_timestamp", _TS), ("expires_at", _TS),
+            *TYPED_COLUMNS, ("bucket", T.IntegerType()),
+        )
     ]
 )
 PROPERTY_LOG_SCHEMA = T.StructType(
     [
-        T.StructField("realm", T.StringType(), True),
-        T.StructField("device_id", T.StringType(), True),
-        T.StructField("interface", T.StringType(), True),
-        T.StructField("path", T.StringType(), True),
-        T.StructField("reception_timestamp", T.TimestampType(), True),
-        T.StructField("typed_json", T.StringType(), True),
-        T.StructField("is_delete", T.BooleanType(), True),
-        T.StructField("bucket", T.IntegerType(), True),
+        T.StructField(c, t)
+        for c, t in (
+            *_DEVICE_ROW_KEY, ("reception_timestamp", _TS), *TYPED_COLUMNS,
+            ("is_delete", T.BooleanType()), ("bucket", T.IntegerType()),
+        )
     ]
 )
 

@@ -28,18 +28,17 @@ from typing import Any, Iterator
 import pandas as pd
 
 from pyspark import cloudpickle
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import catalog as _catalog_mod
 from .. import types as _types_mod
-from ..catalog import Interface, fixture_interfaces
+from ..catalog import Interface, fixture_interfaces, object_column_name, object_table_name
 from ..functions import matchers as _matchers_mod
 from ..functions import payloads as _payloads_mod
-from ..functions import text as _text_mod
-from ..storage.layout import PROPERTY_KEY, compact_properties
-from ..types import TYPED_COLUMNS
+from ..storage.layout import DATASTREAM_LOG_SCHEMA, PROPERTY_LOG_SCHEMA, compact_properties
+from ..types import spark_type
 from . import state_machine as _sm_mod
 from .state_machine import Catalog, DeviceState, process_device_messages
 
@@ -50,7 +49,7 @@ from .state_machine import Catalog, DeviceState, process_device_messages
 # registration makes cloudpickle embed the definitions in the task
 # payload — the same mechanism spark-submit users get from --py-files,
 # without requiring deploy-time configuration.
-for _m in (_types_mod, _catalog_mod, _payloads_mod, _matchers_mod, _text_mod, _sm_mod):
+for _m in (_types_mod, _catalog_mod, _payloads_mod, _matchers_mod, _sm_mod):
     cloudpickle.register_pickle_by_value(_m)
 _state_dumps = cloudpickle.dumps
 _state_loads = cloudpickle.loads
@@ -529,46 +528,53 @@ def run_stream(
 # Materializers: union frame -> typed storage tables
 # ---------------------------------------------------------------------------
 
-_TYPED_JSON_FIELDS = [T.StructField(c, t, True) for c, t in TYPED_COLUMNS]
+#: Top-level OUTPUT_SCHEMA columns of a typed device row; the rest of
+#: the row rides in ``payload_json``.
+_ROW_KEY = ("realm", "device_id", "interface", "path")
 
-DATASTREAM_JSON_SCHEMA = T.StructType(
-    [
-        T.StructField("interface_id", T.StringType(), True),
-        T.StructField("endpoint_id", T.StringType(), True),
-        T.StructField("value_timestamp", T.TimestampType(), True),
-        T.StructField("reception_timestamp", T.TimestampType(), True),
-        T.StructField("expires_at", T.TimestampType(), True),
-        *_TYPED_JSON_FIELDS,
-    ]
+#: The one parse schema of the fold's typed device rows: datastream
+#: values, property upserts and tombstones, path-registry rows.
+#: ``from_json`` reads a key a row lacks as null, so each materializer
+#: parses with it and selects what it stores.
+TYPED_ROW_JSON_SCHEMA = T.StructType(
+    [f for f in DATASTREAM_LOG_SCHEMA if f.name not in (*_ROW_KEY, "bucket")]
+    + [T.StructField("is_path_registry", T.BooleanType())]
 )
 
-PROPERTY_JSON_SCHEMA = T.StructType(
-    [
-        T.StructField("interface_id", T.StringType(), True),
-        T.StructField("endpoint_id", T.StringType(), True),
-        T.StructField("reception_timestamp", T.TimestampType(), True),
-        T.StructField("expires_at", T.TimestampType(), True),
-        T.StructField("is_path_registry", T.BooleanType(), True),
-        *_TYPED_JSON_FIELDS,
-    ]
-)
+
+def _typed_rows(outputs: DataFrame, *kinds: str) -> DataFrame:
+    """Output rows of ``kinds`` with their payload parsed into columns."""
+    return (
+        outputs.filter(F.col("kind").isin(*kinds))
+        .withColumn("p", F.from_json("payload_json", TYPED_ROW_JSON_SCHEMA))
+        .select("kind", *_ROW_KEY, "p.*")
+    )
+
+
+def _log_fields(schema: T.StructType) -> list[str]:
+    return [c for c in schema.fieldNames() if c != "bucket"]
+
+
+def _is_registry() -> Column:
+    return F.coalesce(F.col("is_path_registry"), F.lit(False))
 
 
 def datastream_table(outputs: DataFrame) -> DataFrame:
     """individual_datastreams rows (database_test_helper.exs:214-241)."""
-    parsed = outputs.filter(F.col("kind") == "datastream").withColumn(
-        "p", F.from_json("payload_json", DATASTREAM_JSON_SCHEMA)
-    )
-    return parsed.select(
-        "realm", "device_id",
-        F.col("p.interface_id").alias("interface_id"),
-        "interface",
-        F.col("p.endpoint_id").alias("endpoint_id"),
-        "path",
-        F.col("p.value_timestamp").alias("value_timestamp"),
-        F.col("p.reception_timestamp").alias("reception_timestamp"),
-        F.col("p.expires_at").alias("expires_at"),
-        *[F.col(f"p.{c}").alias(c) for c, _ in TYPED_COLUMNS],
+    return _typed_rows(outputs, "datastream").select(*_log_fields(DATASTREAM_LOG_SCHEMA))
+
+
+def property_log(outputs: DataFrame) -> DataFrame:
+    """Property upserts and tombstones as one append-only log of typed
+    rows with an ``is_delete`` flag (queries.ex:87-155): the rows the
+    sink appends to ``property_log``, and the input of
+    storage.layout.compact_properties. Path-registry rows are not
+    property writes and are dropped."""
+    return (
+        _typed_rows(outputs, "property_upsert", "property_delete")
+        .filter(~_is_registry())
+        .withColumn("is_delete", F.col("kind") == "property_delete")
+        .select(*_log_fields(PROPERTY_LOG_SCHEMA))
     )
 
 
@@ -581,43 +587,15 @@ def properties_table(outputs: DataFrame) -> DataFrame:
     resurrects the key, exactly like consecutive CQL DELETE + INSERT.
     The fold is storage.layout.compact_properties, the one LWW window
     the maintenance job also runs over the sunk property log."""
-    log = (
-        outputs.filter(F.col("kind").isin("property_upsert", "property_delete"))
-        .withColumn("p", F.from_json("payload_json", PROPERTY_JSON_SCHEMA))
-        .filter(
-            (F.col("kind") == "property_delete")
-            | ~F.coalesce(F.col("p.is_path_registry"), F.lit(False))
-        )
-        .select(
-            *PROPERTY_KEY, "p",
-            F.coalesce(F.col("p.reception_timestamp"), F.col("timestamp"))
-            .alias("reception_timestamp"),
-            (F.col("kind") == "property_delete").alias("is_delete"),
-        )
-    )
-    return compact_properties(log).select(
-        "realm", "device_id",
-        F.col("p.interface_id").alias("interface_id"),
-        "interface",
-        F.col("p.endpoint_id").alias("endpoint_id"),
-        "path",
-        F.col("p.reception_timestamp").alias("reception_timestamp"),
-        *[F.col(f"p.{c}").alias(c) for c, _ in TYPED_COLUMNS],
-    )
+    return compact_properties(property_log(outputs))
 
 
 def path_registry_table(outputs: DataFrame) -> DataFrame:
     """Datastream path registry rows (queries.ex:353-393)."""
-    parsed = (
-        outputs.filter(F.col("kind") == "property_upsert")
-        .withColumn("p", F.from_json("payload_json", PROPERTY_JSON_SCHEMA))
-        .filter(F.coalesce(F.col("p.is_path_registry"), F.lit(False)))
-    )
-    return parsed.select(
-        "realm", "device_id", "interface", "path",
-        F.col("p.reception_timestamp").alias("reception_timestamp"),
-        F.col("p.datetime_value").alias("datetime_value"),
-        F.col("p.expires_at").alias("expires_at"),
+    return (
+        _typed_rows(outputs, "property_upsert")
+        .filter(_is_registry())
+        .select(*_ROW_KEY, "reception_timestamp", "datetime_value", "expires_at")
     )
 
 
@@ -636,12 +614,7 @@ def events_table(outputs: DataFrame) -> DataFrame:
         "p", F.from_json("payload_json", payload_schema)
     )
     return parsed.select(
-        "realm", "device_id", "event_type", "timestamp", "interface", "path",
-        F.col("p.value").alias("value"),
-        F.col("p.old_value").alias("old_value"),
-        F.col("p.new_value").alias("new_value"),
-        F.col("p.ip_address").alias("ip_address"),
-        F.col("p.introspection").alias("introspection"),
+        "realm", "device_id", "event_type", "timestamp", "interface", "path", "p.*",
         # the original typed payload: the string-cast columns above are
         # for tabular consumers; the wire encoder needs number/bool
         # types preserved (the reference publishes typed BSON values,
@@ -687,17 +660,11 @@ def device_snapshots_table(outputs: DataFrame) -> DataFrame:
     parsed = outputs.filter(F.col("kind") == "device_snapshot").withColumn(
         "p", F.from_json("payload_json", schema)
     )
-    return parsed.select(
-        "realm", "device_id",
-        *[F.col(f"p.{f.name}").alias(f.name) for f in schema.fields],
-    )
+    return parsed.select("realm", "device_id", "p.*")
 
 
 def object_table(outputs: DataFrame, interface: Interface) -> DataFrame:
     """Per-interface wide table (queries.ex:199-297)."""
-    from ..catalog import object_column_name, object_table_name
-
-    cols = [object_column_name(m.endpoint) for m in interface.mappings]
     schema = T.StructType(
         [
             T.StructField("reception_timestamp", T.TimestampType(), True),
@@ -707,7 +674,7 @@ def object_table(outputs: DataFrame, interface: Interface) -> DataFrame:
             T.StructField("expires_at", T.TimestampType(), True),
         ]
         + [
-            T.StructField(object_column_name(m.endpoint), _spark_type_of(m), True)
+            T.StructField(object_column_name(m.endpoint), spark_type(m.value_type), True)
             for m in interface.mappings
         ]
     )
@@ -715,19 +682,7 @@ def object_table(outputs: DataFrame, interface: Interface) -> DataFrame:
         (F.col("kind") == "object_row")
         & (F.col("interface") == object_table_name(interface.name, interface.major))
     ).withColumn("p", F.from_json("payload_json", schema))
-    return parsed.select(
-        "realm", "device_id", "path",
-        F.col("p.reception_timestamp").alias("reception_timestamp"),
-        F.col("p.value_timestamp").alias("value_timestamp"),
-        F.col("p.expires_at").alias("expires_at"),
-        *[F.col(f"p.{c}").alias(c) for c in cols],
-    )
-
-
-def _spark_type_of(mapping) -> T.DataType:
-    from ..types import spark_type
-
-    return spark_type(mapping.value_type)
+    return parsed.select("realm", "device_id", "path", "p.*")
 
 
 # The grouped-map closures also reference THIS module's helpers

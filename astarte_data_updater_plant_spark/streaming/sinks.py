@@ -6,9 +6,9 @@ fans out to:
 
 - ``individual_datastreams`` — append-only device log
   (queries.ex:157-197).
-- ``property_log`` — append-only upsert/tombstone log
+- ``property_log`` — append-only log of typed upserts and tombstones
   (queries.ex:87-155); ``storage.jobs.compact_property_log`` folds it
-  into the LWW state.
+  into the LWW state, ``individual_properties``.
 - ``events_log`` — the AMQP events exchange stand-in
   (triggers_handler.ex:377-459): one row per SimpleEvent, partitioned
   by event_type for consumer-side pruning.
@@ -46,17 +46,16 @@ from typing import Callable
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..storage.jobs import run_concurrently
 from ..storage.layout import append_device_log
 from .pipeline import (
-    PROPERTY_JSON_SCHEMA,
     commands_table,
     datastream_table,
     device_snapshots_table,
     errors_table,
     events_table,
+    property_log,
 )
 
 #: triggers_handler.ex:28 — max backoff exponent
@@ -86,29 +85,6 @@ def with_retry(
             time.sleep((2**attempt) * base_sleep_s)
 
 
-def property_log_table(outputs: DataFrame) -> DataFrame:
-    """Upserts + tombstones as one append-only log with an is_delete
-    flag — input shape for storage.layout.compact_properties."""
-    ups = (
-        outputs.filter(F.col("kind") == "property_upsert")
-        .withColumn("p", F.from_json("payload_json", PROPERTY_JSON_SCHEMA))
-        .filter(~F.coalesce(F.col("p.is_path_registry"), F.lit(False)))
-        .select(
-            "realm", "device_id", "interface", "path",
-            F.col("p.reception_timestamp").alias("reception_timestamp"),
-            F.to_json("p").alias("typed_json"),
-            F.lit(False).alias("is_delete"),
-        )
-    )
-    dels = outputs.filter(F.col("kind") == "property_delete").select(
-        "realm", "device_id", "interface", "path",
-        F.col("timestamp").alias("reception_timestamp"),
-        F.lit(None).cast("string").alias("typed_json"),
-        F.lit(True).alias("is_delete"),
-    )
-    return ups.unionByName(dels)
-
-
 def write_outputs_batch(outputs: DataFrame, base_dir: str) -> None:
     """Materialize one micro-batch into the storage layout.
 
@@ -127,9 +103,7 @@ def write_outputs_batch(outputs: DataFrame, base_dir: str) -> None:
             lambda: append_device_log(
                 datastream_table(outputs), f"{base_dir}/individual_datastreams"
             ),
-            lambda: append_device_log(
-                property_log_table(outputs), f"{base_dir}/property_log"
-            ),
+            lambda: append_device_log(property_log(outputs), f"{base_dir}/property_log"),
             lambda: events_table(outputs)
             .repartition("event_type")
             .write.partitionBy("event_type")

@@ -77,13 +77,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F
 
-# One long session processes 30x-replicated shuffles, thousands of
-# stages, and accumulated broadcasts: the r4-era 12g default (sized for
-# sf0.1 benches) OOMed the r8 run at the q199-variance block. The box
-# has 128 GiB for 32 cores; give the scaling harness a scale-matched
-# heap unless the caller overrides.
-os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "32g")
-
 from harness import batch_ingest, in_group, query_run, stages, summarize, timed
 
 from astarte_data_updater_plant_spark.session import get_spark
@@ -770,4 +763,11 @@ def main() -> None:
 
 
 if __name__ == "__main__":
+    # One long session processes 30x-replicated shuffles, thousands of
+    # stages, and accumulated broadcasts: the 12g default of get_spark
+    # (sized for sf0.1 benches) ran out of heap at the q199-variance
+    # block. Give the scaling harness and its child processes a
+    # scale-matched heap unless the caller overrides; importing this
+    # module (its tests do) leaves the session default alone.
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "32g")
     main()

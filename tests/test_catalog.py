@@ -1,16 +1,13 @@
 """Catalog: endpoint pattern matching (the automaton replacement),
-storage naming, schema derivation."""
+storage naming."""
 
 from __future__ import annotations
 
 from astarte_data_updater_plant_spark.catalog import (
     endpoint_regex,
     fixture_interfaces,
-    individual_datastreams_schema,
-    individual_properties_schema,
     object_column_name,
     object_table_name,
-    object_table_schema,
 )
 
 
@@ -57,22 +54,6 @@ def test_storage_dispatch():
     assert lcd.storage == "individual_properties"
     assert stream.storage == "individual_datastreams"
     assert obj.storage == "com_example_testobject_v1"
-
-
-def test_schemas_have_all_typed_columns():
-    ds = individual_datastreams_schema()
-    names = set(ds.fieldNames())
-    for c in ("double_value", "longintegerarray_value", "datetime_value", "expires_at",
-              "value_timestamp"):
-        assert c in names
-    props = individual_properties_schema()
-    assert "value_timestamp" not in props.fieldNames()
-
-
-def test_object_schema_columns():
-    _, _, obj = fixture_interfaces()
-    sch = object_table_schema(obj)
-    assert "v_string" in sch.fieldNames() and "v_value" in sch.fieldNames()
 
 
 def test_catalog_dimension_roundtrip(spark, tmp_path):

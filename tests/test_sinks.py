@@ -149,21 +149,25 @@ def test_logs_land_with_their_declared_schema(spark, sunk_dir, table, schema):
     }
 
 
+def _batch_messages(spark):
+    """The simple flow and the sf0.001 telemetry, two realms."""
+    from astarte_data_updater_plant_spark.sources.stream import events_as_messages
+
+    return messages_frame(spark).unionByName(
+        events_as_messages(spark, "/root/testdata/sf0.001")
+    )
+
+
 @pytest.fixture(scope="module")
 def batch_tree(spark, tmp_path_factory):
     """The simple flow and the sf0.001 telemetry, two realms, through
     one sink batch and one maintenance cycle. Returns the tree and the
     sink input's partition count."""
     from astarte_data_updater_plant_spark.catalog import fixture_interfaces
-    from astarte_data_updater_plant_spark.sources.stream import (
-        events_as_messages,
-        telemetry_interface,
-    )
+    from astarte_data_updater_plant_spark.sources.stream import telemetry_interface
 
     base = str(tmp_path_factory.mktemp("batch") / "tables")
-    msgs = messages_frame(spark).unionByName(
-        events_as_messages(spark, "/root/testdata/sf0.001")
-    )
+    msgs = _batch_messages(spark)
     interfaces = (*fixture_interfaces(), telemetry_interface())
     outputs = run_batch(msgs, interfaces=interfaces).cache()
     outputs.count()
@@ -220,9 +224,15 @@ def test_dead_letters_written(spark, sunk_dir):
     assert os.path.isdir(f"{sunk_dir}/dead_letters")
 
 
-def test_device_snapshots(spark, sunk_dir):
-    snaps = spark.read.parquet(f"{sunk_dir}/devices")
-    assert snaps.count() == 0 or "connected" in snaps.columns
+def test_device_snapshots(spark, batch_tree):
+    """The batch fold lands one devices snapshot per device it folded,
+    each counting that device's messages."""
+    base, _ = batch_tree
+    folded = _batch_messages(spark).select("realm", "device_id").distinct().collect()
+    snaps = spark.read.parquet(f"{base}/devices").collect()
+    assert len(folded) > 1
+    assert sorted((r.realm, r.device_id) for r in snaps) == sorted(map(tuple, folded))
+    assert all(r.total_received_msgs > 0 for r in snaps)
 
 
 def test_maintenance_on_telemetry_only_tree(spark, tmp_path):

@@ -162,3 +162,6 @@ def test_maintenance_jobs(spark, tmp_path):
     assert [r.path for r in props.select("path").collect()] == [
         "/weekSchedule/2/start"
     ]
+    # the maintained table stores the reference's typed value column
+    (row,) = props.collect()
+    assert row.longinteger_value == 12
